@@ -42,9 +42,12 @@ Scale notes:
   conversations (thousands of turns) do not skew it because turn_idx
   spreads them.
 - The write repartitions on (bucket, salt(key)) with an explicit partition
-  count, so a hot conversation's bucket is written by `files_per_bucket`
-  parallel tasks (salted skew mitigation, per the north rule) and file
-  counts stay bounded; compaction keeps segments-per-bucket bounded.
+  count, so a hot conversation's bucket is spread over up to
+  `files_per_bucket` salted combos (skew mitigation, per the north rule)
+  and file counts stay bounded; compaction keeps segments-per-bucket
+  bounded. The partition count is sized from the batch's input bytes
+  (whole combos per task), so a small microbatch runs a few write tasks,
+  not one per combo.
 - Zero driver-side Spark jobs besides the segment write itself: schema
   evolution and all lineage stats come from the just-written parquet
   footers (read in parallel threads), the ledger check is an O(1) lookup
@@ -63,7 +66,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datachain_spark.cdc.normalize import normalize_text_expr, normalize_text_udf
-from datachain_spark.lake.table import DELETED_COL, LSN_COL, LakeTable
+from datachain_spark.lake.table import (
+    DELETED_COL,
+    LSN_COL,
+    LakeTable,
+    input_bytes,
+    write_tasks,
+)
 
 KEY_COLS = ["conv_id", "turn_idx"]
 META_COLS = {"lsn", "batch_id", "op", "batch"}
@@ -81,8 +90,10 @@ def _perfect_partition_keys(spark: SparkSession, n: int) -> list[int] | None:
     the stage time (at N cores, 8 waves amortize it) — it was a visible
     share of the 8->32 scaling gap. Fix: pick, once per session, integer
     literals k_p with pmod(hash(k_p), n) == p (F.hash IS the partitioner's
-    Murmur3, seed 42); mapping combo c -> k_c makes partition == combo,
-    one combo per task. O(64n)-row driver probe, cached per n."""
+    Murmur3, seed 42); mapping combo c -> k_(c mod n) makes partition ==
+    combo mod n, whole combos per task. O(64n)-row driver probe, cached
+    per n (n divides the combo count, so a 32-combo layout probes at most
+    6 values of n per session)."""
     if n not in _PKEY_CACHE:
         rows = (
             spark.range(64 * n)
@@ -285,14 +296,20 @@ def apply_batch(
     # exactly what bounds the sub-knee N->4N scaling pairs at small
     # batch sizes. Other alternatives previously measured slower: max_by
     # hash-agg (2.5x with the normalize stage), mapInPandas dedup (1.5x).
-    # combo id = bucket * fpb + salt — a pure function of the key; the
-    # partition count is a function of the TABLE LAYOUT ONLY (buckets x
-    # files_per_bucket), never of the session's parallelism: the plan is
-    # identical at every cluster size (capping by defaultParallelism
-    # handed small clusters a cheaper plan and corrupted N-vs-4N scaling
-    # measurements), and at 10^10 scale the layout, not the executor
-    # count, bounds file counts.
-    n_parts = max(1, table.num_buckets * files_per_bucket)
+    # combo id = bucket * fpb + salt — a pure function of the key. The
+    # layout (buckets x files_per_bucket combos) bounds the files per
+    # bucket; the TASK count is sized from the batch's input bytes, read
+    # from the file index before any job (lake/table.py write_tasks): a
+    # small microbatch is written by P tasks holding whole combos (combo c
+    # -> task c mod P) instead of one task per combo, so it stops paying
+    # n_parts task launches for a few hundred KB, and an input of
+    # n_parts * WRITE_TASK_TARGET_BYTES or more keeps one task per combo.
+    # P depends on the layout and the input bytes, never on the session's
+    # parallelism: the plan is identical at every cluster size (capping by
+    # defaultParallelism handed small clusters a cheaper plan and
+    # corrupted N-vs-4N scaling measurements).
+    n_combos = max(1, table.num_buckets * files_per_bucket)
+    n_parts = write_tasks(n_combos, input_bytes(events))
     keys_sql = ",".join(f"`{c}`" for c in key_cols)
     combo_sql = (
         f"cast((cast(bucket as bigint) * {int(files_per_bucket)} "
@@ -300,11 +317,11 @@ def apply_batch(
     )
     pkeys = _perfect_partition_keys(spark, n_parts)
     if pkeys is not None:
-        # partition == combo exactly (no balls-in-bins skew; see
-        # _perfect_partition_keys). One parsed F.expr string: the
-        # F.array(*[F.lit(k) x n_parts]) form cost ~36ms of py4j round
+        # partition == combo mod n_parts exactly (no balls-in-bins skew;
+        # see _perfect_partition_keys). One parsed F.expr string: the
+        # F.array(*[F.lit(k) x n_combos]) form cost ~36ms of py4j round
         # trips per batch at 64 partitions for the identical expression.
-        arr = ",".join(str(int(k)) for k in pkeys)
+        arr = ",".join(str(int(pkeys[c % n_parts])) for c in range(n_combos))
         ev = ev.withColumn(
             "_pkey", F.expr(f"element_at(array({arr}), {combo_sql} + 1)")
         )
@@ -365,8 +382,8 @@ def apply_batch(
     # the segment is ALREADY partitioned on (bucket, _salt) from the dedup
     # shuffle above (the projection is narrow), so the write reuses it:
     # partitionBy routes each task's rows to its bucket dir, a hot
-    # conversation's bucket is written by `files_per_bucket` salted tasks,
-    # and file counts stay bounded by the layout
+    # conversation's bucket is written by up to `files_per_bucket` salted
+    # tasks, and file counts stay bounded by the layout
     out_dir = table.data_dir(f"job={job_id}", f"batch={batch_id:09d}")
     # crash-recovery fast path (the reference's continue-from-partial,
     # query/dataset.py:1221-1360, at segment granularity): if a previous

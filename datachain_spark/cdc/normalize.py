@@ -41,11 +41,11 @@ def normalize_text_udf(s: pd.Series) -> pd.Series:
 
 
 def normalize_text_expr(col):
-    """Whole-stage-codegen normalization: whitespace collapse + trim as a
+    r"""Whole-stage-codegen normalization: whitespace collapse + trim as a
     Catalyst expression — no Python worker in the hot path at all.
 
     The `(?U)` flag (java.util.regex UNICODE_CHARACTER_CLASS) makes Java's
-    `\\s` match unicode whitespace exactly like Python's `\\s` in
+    `\s` match unicode whitespace exactly like Python's `\s` in
     `normalize_text` (U+00A0, U+2028, ... collapse identically; every
     leading/trailing run becomes a single ASCII space, which trim then
     removes — so strip parity holds too). The ONE remaining divergence

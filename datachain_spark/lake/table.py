@@ -18,6 +18,16 @@ amortized, like Iceberg data compaction — after which reads are
 window-free again (per-bucket `dirty` flags track which buckets need
 resolution).
 
+Write-stage width: the layout (buckets x files_per_bucket) bounds the
+files a batch or compaction writes per bucket; the number of TASKS that
+write them is sized from the input's bytes, known from the file index
+before any job runs (`write_tasks`). A small microbatch is written by a
+few tasks that each hold whole (bucket, salt) combos instead of one task
+per combo, so the per-task launch cost stops dominating small batches,
+while an input of `n_parts * WRITE_TASK_TARGET_BYTES` or more keeps one
+task per combo. Neither the file layout nor the plan depends on the
+session's parallelism.
+
 This reproduces the reference's dataset-versioning pillar
 (/root/reference/src/datachain/dataset.py:240-360 — per-version physical
 tables; /root/reference/src/datachain/catalog/catalog.py:796-890 — version
@@ -28,7 +38,9 @@ an explicit schema), mirroring Iceberg semantics rather than the reference's
 SchemaDriftError (/root/reference/src/datachain/delta.py:58-97).
 
 Scale notes (100 TB / 1000 executors):
-- Data paths are listed in the manifest, so reads never list directories.
+- Data paths are listed in the manifest, so reads never list directories
+  (and never start Spark's parallel file-listing job: see the listing
+  threshold in session.get_spark).
 - Bucket pruning: reads of K of B buckets scan only those buckets' files.
 - Apply is O(batch); compaction is O(dirty-bucket data), amortized across
   batches and parallel over buckets.
@@ -72,6 +84,62 @@ META_FIELDS = [
     T.StructField(LSN_COL, T.LongType(), True),
     T.StructField(DELETED_COL, T.BooleanType(), True),
 ]
+
+# Input bytes per write task (write_tasks). Measured at local[4] on a
+# 4-core VM, applying 0.27-1.36 MB of cdc_replay-shaped parquet into 32
+# buckets at 1-32 write tasks (72 applies): a write task costs 16 ms of
+# executor CPU fixed (12 ms of it deserializing the task) plus 0.15 s per
+# MB of input, so fixed and per-byte cost break even at ~105 KB. 256 KiB,
+# ~2.5x that, keeps the fixed part under ~30% of a task's CPU. At 268 KB
+# (one microbatch) the apply's process CPU fell 1.06 -> 0.48 s and its
+# wall time 0.46 -> 0.31 s going from 32 tasks to 2; one task used the
+# least CPU (0.36 s) but the most wall time (0.42 s).
+WRITE_TASK_TARGET_BYTES = 256 * 1024
+
+
+def input_bytes(df: DataFrame) -> int | None:
+    """Bytes of the files `df` reads, from the file indexes Spark built
+    when the frame was created — no job, no listing. None when any leaf of
+    the plan is not a file scan (in-memory frames, RDD-backed
+    `foreachBatch` sources): their size is unknown before a job runs."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            return None
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation":
+            return None
+        total += int(rel.sizeInBytes())
+    return total
+
+
+def _local_frame(
+    spark: SparkSession, schema: T.StructType, columns: dict[str, list] | None = None
+) -> DataFrame:
+    """A driver-local frame built from an Arrow table (empty unless
+    `columns` are given). Spark plans it as a LocalRelation, so collecting
+    an expression over it is a LocalTableScan: no job and no Python worker.
+    A list of tuples would go through `parallelize` — a 4-task job through
+    pyspark.daemon on every call."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    data = columns or {f.name: [] for f in schema.fields}
+    return spark.createDataFrame(pa.Table.from_pydict(data, schema=to_arrow_schema(schema)), schema)
+
+
+def write_tasks(n_parts: int, nbytes: int | None) -> int:
+    """Task count of a write stage laid out as `n_parts` (bucket, salt)
+    combos: the smallest divisor P of n_parts with
+    P * WRITE_TASK_TARGET_BYTES >= nbytes, so every task holds whole combos
+    (combo c -> task c mod P) and a bucket's files still number at most
+    its salts. `n_parts` when the size is unknown or large."""
+    if nbytes is None:
+        return n_parts
+    fits = (p for p in range(1, n_parts) if p * WRITE_TASK_TARGET_BYTES >= nbytes)
+    return next((p for p in fits if n_parts % p == 0), n_parts)
 
 
 def _add_committed(committed: dict[str, list[list[int]]], job_id: str, batch_id: int) -> None:
@@ -339,7 +407,7 @@ class LakeTable:
         read_schema = T.StructType(list(snap.schema.fields) + META_FIELDS)
         files = self._files(snap, buckets)
         if not files:
-            return spark.createDataFrame([], read_schema)
+            return _local_frame(spark, read_schema)
         return spark.read.schema(read_schema).parquet(*files)
 
     def _resolve(
@@ -408,14 +476,13 @@ class LakeTable:
 
     def buckets_for(self, spark: SparkSession, values: list) -> dict:
         """Bucket id per bucketing-key value (the table buckets on its
-        first key column). ONE tiny local-DF job that evaluates the SAME
-        JVM xxhash64 expression the writer used — no Python reimplementation
-        to drift. O(len(values)) driver metadata."""
+        first key column). Evaluates the SAME JVM xxhash64 expression the
+        writer used — no Python reimplementation to drift — over a
+        driver-local Arrow frame, so it runs no Spark job.
+        O(len(values)) driver metadata."""
         kcol = self.snapshot().key_cols[0]
         ktype = next(f.dataType for f in self.snapshot().schema.fields if f.name == kcol)
-        df = spark.createDataFrame(
-            [(v,) for v in values], T.StructType([T.StructField(kcol, ktype)])
-        )
+        df = _local_frame(spark, T.StructType([T.StructField(kcol, ktype)]), {kcol: list(values)})
         rows = df.select(F.col(kcol), self.bucket_expr().alias("__b")).collect()
         return {r[kcol]: int(r["__b"]) for r in rows}
 
@@ -427,8 +494,8 @@ class LakeTable:
         with_meta: bool = False,
         as_of=None,
     ) -> DataFrame:
-        """Point lookups at table scale: resolve the values' buckets with
-        one tiny local job, read ONLY those buckets (1/num_buckets of the
+        """Point lookups at table scale: resolve the values' buckets
+        driver-side (no job), read ONLY those buckets (1/num_buckets of the
         table per distinct key), and push the key equality into the scan —
         with a zorder_by compaction layout the parquet row-group stats
         prune inside the bucket too, so a one-conversation read touches a
@@ -516,7 +583,7 @@ class LakeTable:
                 + META_FIELDS
                 + [T.StructField("_commit_version", T.IntegerType(), False)]
             )
-            out = spark.createDataFrame([], schema)
+            out = _local_frame(spark, schema)
         else:
             out = parts[0]
             for p in parts[1:]:
@@ -782,7 +849,9 @@ class LakeTable:
         )
         resolved = resolved.withColumn("bucket", self.bucket_expr())
         out_dir = self.data_dir(f"compact={snap.version + 1}")
-        n_parts = max(1, len(todo) * files_per_bucket)
+        # sized from the rewritten files' bytes (write_tasks); a bucket
+        # hashes to exactly one task, so it is still one output file
+        n_parts = write_tasks(max(1, len(todo) * files_per_bucket), input_bytes(raw))
         out = resolved.repartition(n_parts, "bucket")
         if zorder_by:
             from datachain_spark.operators.zorder import zorder_code

@@ -55,16 +55,16 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def sliding_ngrams(toks: Column, n: int, k: Column) -> Column:
-    """Space-joined word n-grams of a token array (`k` = size(toks)-(n-1),
-    must be >= 1), extracted by ONE codegen regex pass over the
-    space-joined token string: the lookahead captures each overlapping
-    n-token window while consuming a single token per match, yielding
-    exactly the size-n+1 n-grams in order. PRECONDITION: tokens are
-    non-empty and whitespace-free — true of every construction path in
-    this package (regex token classes exclude ``\\s``; the split paths
-    split a trimmed single-space-collapsed string), making
-    ``array_join(toks, ' ')`` a reversible encoding.
+def sliding_ngrams(toks: Column, n: int) -> Column:
+    """Space-joined word n-grams of a token array (callers guard
+    size(toks) >= n; n == 1 is the tokens themselves), extracted by ONE
+    codegen regex pass over the space-joined token string: the lookahead
+    captures each overlapping n-token window while consuming a single
+    token per match, yielding exactly the size-n+1 n-grams in order.
+    PRECONDITION: tokens are non-empty and whitespace-free — true of every
+    construction path in this package (regex token classes exclude
+    ``\\s``; the split paths split a trimmed single-space-collapsed
+    string), making ``array_join(toks, ' ')`` a reversible encoding.
 
     This replaces a chain of n zip_with over shifted slices: higher-order
     functions are CodegenFallback, so the chain ran its concat lambda
@@ -77,7 +77,7 @@ def sliding_ngrams(toks: Column, n: int, k: Column) -> Column:
     lambda — an outer expression captured in a higher-order-function
     lambda is re-evaluated PER ELEMENT, measured 6.7x slower.)"""
     if n == 1:
-        return F.slice(toks, 1, k)
+        return toks
     pat = r"(?=((?:\S+ ){%d}\S+))\S+" % (n - 1)
     return F.regexp_extract_all(F.array_join(toks, " "), F.lit(pat), 1)
 
@@ -90,7 +90,7 @@ def shingles(text: Column, n: int = 3) -> Column:
     toks = F.split(normalize_for_dedup(text), " ")
     k = F.size(toks) - (n - 1)
     empty = F.array().cast("array<string>")
-    return F.when(k >= 1, F.array_distinct(sliding_ngrams(toks, n, k))).otherwise(empty)
+    return F.when(k >= 1, F.array_distinct(sliding_ngrams(toks, n))).otherwise(empty)
 
 
 def _base_hash(s: Column, hash_mode: str) -> Column:
@@ -780,7 +780,7 @@ def dedup_spans(
     whashes = F.when(
         F.col("__n") >= k,
         F.transform(
-            sliding_ngrams(F.col("__t"), k, F.col("__n") - k + 1),
+            sliding_ngrams(F.col("__t"), k),
             lambda s: F.xxhash64(s),
         ),
     ).otherwise(F.array().cast("array<bigint>"))
@@ -848,7 +848,7 @@ def winnow_fingerprints(
         raise ValueError("k and w must be >= 1")
     toks = F.split(normalize_for_dedup(F.col(text_col)), " ")
     n_grams = F.size(toks) - (k - 1)
-    grams = F.when(n_grams >= 1, sliding_ngrams(toks, k, n_grams)).otherwise(
+    grams = F.when(n_grams >= 1, sliding_ngrams(toks, k)).otherwise(
         F.array().cast("array<string>")
     )
     hashes = F.transform(grams, lambda g: _base_hash(g, hash_mode))

@@ -82,7 +82,7 @@ def fit_bigram_lm(
     )
     k = F.size("__ts") - F.lit(1)
     empty = F.array().cast("array<string>")
-    bi_arr = F.when(k >= 1, sliding_ngrams(F.col("__ts"), 2, k)).otherwise(empty)
+    bi_arr = F.when(k >= 1, sliding_ngrams(F.col("__ts"), 2)).otherwise(empty)
     bi = (
         t.select(F.explode(bi_arr).alias("bg"))
         .groupBy("bg")

@@ -102,7 +102,7 @@ def gram_occurrences(text: Column, n: int) -> Column:
 
     toks = F.split(F.regexp_replace(F.trim(F.lower(text)), r"\s+", " "), " ")
     k = F.size(toks) - (n - 1)
-    return F.when(k >= 1, sliding_ngrams(toks, n, k)).otherwise(
+    return F.when(k >= 1, sliding_ngrams(toks, n)).otherwise(
         F.array().cast("array<string>")
     )
 

@@ -68,6 +68,26 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # LakeTable reads pass exact segment paths from the manifest, yet
+        # Spark's file index still lists each one, and above this threshold
+        # (default 32) it does so in a Spark job with one task per path: a
+        # 64-80 task job per full scan of a 32-bucket table. The largest
+        # layout here, 64 buckets x max_segments 8, passes 512 paths.
+        # Measured at local[4] on local disk: serial driver-side listing of
+        # 512 / 1024 / 2048 files took 50-80 / 110-120 / 180-210 ms, the
+        # listing job 1.3 / 2.2 / 4.2 s. 1024 leaves 2x headroom for
+        # buckets waiting on staggered compaction. On an object store,
+        # where one listing call costs tens of ms, lower it via extra_conf.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+        # Generated-class cache (default 100 entries). One pass of the
+        # 80-query registry at sf0.01 compiled 1080 distinct classes (the
+        # CodegenMetrics compilation count with an unbounded cache; a
+        # second pass compiled 4 more). At 100 entries every pass evicts
+        # and recompiles them: three consecutive passes of the 27 headline
+        # queries compiled 533, 511 and 509 classes (each then JIT-compiled
+        # again); at 2000, 446, 4 and 0. 2000 holds the registry's working
+        # set with ~85% headroom.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # Spark 4.1's ChecksumCheckpointFileManager deadlocks committing
         # HDFSBackedStateStore deltas on local filesystems (awaitResult
         # hang observed in applyInPandasWithState) — checksums off

@@ -178,6 +178,15 @@ def test_read_keys_prunes_buckets(spark, table3):
     # multi-key form spans both keys' buckets
     both = table3.read_keys(spark, ["c1", "c2"])
     assert both.count() == 5
+    # bucket resolution evaluates the JVM hash over a driver-local frame:
+    # no Spark job (and so no Python worker) per point read
+    sc = spark.sparkContext
+    sc.setJobGroup("buckets-for", "zero-job bucket lookup")
+    try:
+        assert set(table3.buckets_for(spark, ["c1", "c2"])) == {"c1", "c2"}
+    finally:
+        sc.setJobGroup(None, None)  # type: ignore[arg-type]
+    assert sc.statusTracker().getJobIdsForGroup("buckets-for") == []
 
 
 def test_read_dataset_as_of(spark, tmp_path):

@@ -14,7 +14,9 @@ are under test, and a query's plan shape is scale-invariant):
     exchange);
   - the CDC apply is ONE shuffle end-to-end: its widest Spark job has at
     most two stages (map + reduce/write) — counted from the status
-    tracker on a real apply, so a reintroduced second exchange fails.
+    tracker on a real apply, so a reintroduced second exchange fails;
+    its write stage is sized from the batch's input bytes;
+  - a full LakeTable read of many segment files starts no listing job.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ import os
 import re
 
 import pytest
+from pyspark.sql import types as T
 
 import __spark_entry__ as entrymod
 
@@ -113,35 +116,89 @@ def test_no_scale_killers_in_any_query_plan(spark):
 
 def test_cdc_apply_is_one_shuffle(spark, tmp_path):
     """The engine claim behind the r4 throughput win: apply_batch's widest
-    job runs in at most TWO stages (one exchange). Counted on a real
-    apply via the status tracker, so a second shuffle fails loudly."""
+    job runs in at most TWO stages (one exchange). Counted on real applies
+    via the status tracker, so a second shuffle fails loudly.
+
+    The write stage is sized from the batch's input bytes: a small batch
+    runs fewer tasks than the layout's combos and still writes at most
+    one file per touched bucket; a batch of n_parts *
+    WRITE_TASK_TARGET_BYTES or more runs exactly n_parts tasks. Both
+    tables equal the LWW replay. A full read() of a table with more than
+    32 segment files runs no Spark job (no parallel file-listing job)."""
+    import functools
+
     from datachain_spark.cdc import FeedSpec, write_feed
     from datachain_spark.cdc.apply import KEY_COLS, apply_batch, transcripts_schema_v1
     from datachain_spark.cdc.feed import feed_batch_dirs
-    from datachain_spark.lake.table import LakeTable
+    from datachain_spark.cdc.normalize import normalize_text
+    from datachain_spark.cdc.oracle import oracle_replay
+    from datachain_spark.cdc.stream import event_stream_schema
+    from datachain_spark.lake.table import WRITE_TASK_TARGET_BYTES, LakeTable, input_bytes
 
     feed = str(tmp_path / "feed")
-    spec = FeedSpec(n_convs=20, batch_size=200)
+    # ~32k events in 15 batches (8 hot conversations keep the Python
+    # oracle quick): the whole feed is over 1 MiB of parquet
+    spec = FeedSpec(n_convs=16, hot_every=2, batch_size=2500, text_scale=25)
     write_feed(spark, spec, feed)
-    table = LakeTable.create(
-        str(tmp_path / "table"), transcripts_schema_v1(), list(KEY_COLS), num_buckets=4
-    )
-    _, d0 = next(iter(feed_batch_dirs(feed)))
-    events = spark.read.parquet(d0)
-
+    v2 = event_stream_schema()
+    v1 = T.StructType([f for f in v2.fields if f.name != "tool"])
+    frames = [
+        spark.read.schema(v1 if f"{os.sep}v1{os.sep}" in d else v2).parquet(d)
+        for _, d in feed_batch_dirs(feed)
+    ]
     sc = spark.sparkContext
-    sc.setJobGroup("plan-audit-apply", "one-shuffle assertion")
-    try:
-        apply_batch(spark, table, events, "plan-audit", 0, compaction="off")
-    finally:
-        sc.setJobGroup(None, None)  # type: ignore[arg-type]
-
     tracker = sc.statusTracker()
-    job_ids = tracker.getJobIdsForGroup("plan-audit-apply")
-    assert job_ids, "apply must run under the job group"
-    widest = 0
-    for jid in job_ids:
-        info = tracker.getJobInfo(jid)
-        if info is not None:
-            widest = max(widest, len(info.stageIds))
-    assert widest <= 2, f"apply's widest job ran {widest} stages (>1 shuffle)"
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, "plan audit")
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(None, None)  # type: ignore[arg-type]
+        return [tracker.getJobInfo(j) for j in sorted(tracker.getJobIdsForGroup(group))]
+
+    def apply_tasks(table, events, batch_id):
+        """Write-stage task count of one apply, after the one-shuffle check."""
+        jobs = jobs_of(
+            f"plan-audit-apply-{table.root}-{batch_id}",
+            lambda: apply_batch(spark, table, events, "plan-audit", batch_id, compaction="off"),
+        )
+        assert jobs, "apply must run under the job group"
+        widest = max(len(j.stageIds) for j in jobs)
+        assert widest <= 2, f"apply's widest job ran {widest} stages (>1 shuffle)"
+        return tracker.getStageInfo(max(jobs[-1].stageIds)).numTasks
+
+    def table_rows(table):
+        return sorted(
+            (r["conv_id"], r["turn_idx"], r["role"], r["text"], r.asDict().get("tool"))
+            for r in table.read(spark).collect()
+        )
+
+    def replay(upto=None):
+        return [
+            (c, t, r, normalize_text(x), tool) for c, t, r, x, tool in oracle_replay(spec, upto)
+        ]
+
+    def new_table(name, num_buckets):
+        return LakeTable.create(
+            str(tmp_path / name), transcripts_schema_v1(), list(KEY_COLS), num_buckets
+        )
+
+    small = new_table("small", 8)
+    assert input_bytes(frames[0]) < WRITE_TASK_TARGET_BYTES
+    assert apply_tasks(small, frames[0], 0) < 8  # n_parts = num_buckets x files_per_bucket
+    assert all(len(fl) <= 1 for fl in small.snapshot().buckets.values())
+    assert table_rows(small) == replay(0)
+
+    whole = functools.reduce(lambda x, y: x.unionByName(y, allowMissingColumns=True), frames)
+    assert input_bytes(whole) >= 4 * WRITE_TASK_TARGET_BYTES
+    big = new_table("big", 4)
+    assert apply_tasks(big, whole, 0) == 4
+    assert table_rows(big) == replay()
+
+    # the rest of the feed batch by batch: a table of many segment files
+    for b, events in enumerate(frames[1:], start=1):
+        apply_batch(spark, small, events, "plan-audit", b, compaction="off")
+    assert len(small.read(spark).inputFiles()) > 32
+    assert jobs_of("plan-audit-read", lambda: small.read(spark)) == []
+    assert table_rows(small) == replay()
