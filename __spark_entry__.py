@@ -20,30 +20,24 @@ from pyspark.sql import types as T
 # module-level so `file: File` UDF hints resolve under postponed
 # annotations (udf.input_converters resolves via the fn's module globals)
 from datachain_spark.fileobj import File
+from datachain_spark.frames import local_frame, spread
+
+
+# (path, size, mtime_ns) -> the StructType Spark inferred from the file's
+# footer. Without a schema, every read runs a one-task job to read the
+# footer; with one, none.
+_SCHEMAS: dict[tuple[str, int, int], T.StructType] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Scale-adaptive scan parallelization (guide §2.5 'input skew: one
-    huge unsplittable file ... repartition immediately after the read').
-    The sf tables are single-file single-ROW-GROUP parquet, so the scan
-    plans ONE task no matter the cluster size — and every scan-stage-fused
-    per-row expression (tokenization, gram hashing, window partial
-    aggregation) serializes onto one core; a parquet byte-range split
-    cannot help because a lone row group is indivisible. When the planned
-    scan has fewer partitions than the session's parallelism,
-    hash-repartition on the row key (deterministic — never round-robin
-    from rand, per guide §2.5): a tiny shuffle of the raw rows that
-    unlocks N-way compute. At real corpus scale the input already has
-    >= cores splits and this is a NO-OP — the partitioning stays
-    input-derived, never a constant tuned to this host."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n, F.col(key))
-    return df
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    st = os.stat(path)
+    key = (path, st.st_size, st.st_mtime_ns)
+    if key not in _SCHEMAS:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(_SCHEMAS[key]).parquet(path)
 
 
 # --------------------------------------------------------------------------
@@ -334,7 +328,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datachain_spark.operators.similarity import brute_force_topk
 
-    emb = _spread(_t(spark, sf_dir, "embeddings"), "vec_id").withColumn(
+    emb = spread(_t(spark, sf_dir, "embeddings"), "vec_id").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
     queries = emb.filter(F.col("vec_id") < 5).select(
@@ -354,7 +348,7 @@ def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH output EQUALS brute-force all-pairs (operators/dedup.py)."""
     from datachain_spark.operators.dedup import minhash_lsh_pairs
 
-    docs = _spread(_t(spark, sf_dir, "documents"), "doc_id").filter(F.col("doc_id") < 2000)
+    docs = spread(_t(spark, sf_dir, "documents"), "doc_id").filter(F.col("doc_id") < 2000)
     return (
         minhash_lsh_pairs(docs, threshold=0.9, hash_mode="md5")
         .select("id_a", "id_b", "n_match")
@@ -420,7 +414,7 @@ def ngram_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold, so the inner join loses nothing vs all-pairs."""
     from datachain_spark.operators.dedup import ngram_jaccard_pairs
 
-    docs = _spread(_t(spark, sf_dir, "documents"), "doc_id").filter(F.col("doc_id") < 2000)
+    docs = spread(_t(spark, sf_dir, "documents"), "doc_id").filter(F.col("doc_id") < 2000)
     out = ngram_jaccard_pairs(docs, threshold=0.5, max_df=None)
     return out.select(
         "id_a", "id_b", F.round("jaccard", 3).alias("jaccard")
@@ -436,7 +430,7 @@ def lsh_topk_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datachain_spark.operators.similarity import lsh_topk
 
     emb = (
-        _spread(_t(spark, sf_dir, "embeddings"), "vec_id")
+        spread(_t(spark, sf_dir, "embeddings"), "vec_id")
         .filter(F.col("vec_id") < 500)
         .select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding"))
     )
@@ -968,7 +962,7 @@ def document_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datachain_spark.operators.dedup import exact_dedup
     from datachain_spark.operators.text import lang_id, quality_features
 
-    docs = _spread(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = spread(_t(spark, sf_dir, "documents"), "doc_id")
     scored = lang_id(quality_features(docs))
     kept = scored.filter(
         (F.col("n_tokens") >= 20)
@@ -1339,7 +1333,7 @@ def bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-k set is order-deterministic in both engines."""
     from datachain_spark.operators.retrieval import bm25_topk
 
-    docs = _spread(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = spread(_t(spark, sf_dir, "documents"), "doc_id")
     return bm25_topk(docs, "spark window merge", k=10)
 
 
@@ -1354,7 +1348,7 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     first principles in SQL (same md5 bucket hash, same glibc ln)."""
     from datachain_spark.operators.sampling import dsir_select
 
-    docs = _spread(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = spread(_t(spark, sf_dir, "documents"), "doc_id")
     target = docs.filter(F.col("lang") == "es")
     out = dsir_select(docs, target, 60, n_buckets=64)
     return out.select("doc_id", "lang", "dsir_score")
@@ -1419,34 +1413,31 @@ def dedup_event_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """operators/bpe.fit_bpe: distributed BPE tokenizer training (Sennrich
-    et al. 2016) — 5 merges learned from the documents corpus, char-level
-    over the word-frequency vocabulary. One corpus-scale shuffle builds
-    the vocab; each merge is a vocab-sized pair-count aggregation plus an
-    O(1) argmax collect, and the merge itself is a codegen greedy fold.
-    The reference has no tokenizer surface (nearest: scalar string funcs,
-    src/datachain/func/string.py). Oracle: the same 5 steps unrolled as
-    CTE chains — greedy merges via the parity-of-consecutive-match-runs
-    formulation, which equals the left-to-right greedy scan (overlaps only
-    arise when left==right, where runs of matches merge at odd offsets)."""
+    """operators/bpe.fit_bpe: BPE tokenizer training (Sennrich et al. 2016)
+    — 5 merges learned from the documents corpus, char-level over the
+    word-frequency vocabulary. One Spark aggregation builds the vocab,
+    which is collected; the merges are learned on the driver with an
+    incremental pair index. The reference has no tokenizer surface
+    (nearest: scalar string funcs, src/datachain/func/string.py). Oracle:
+    the same 5 steps unrolled as CTE chains — greedy merges via the
+    parity-of-consecutive-match-runs formulation, which equals the
+    left-to-right greedy scan (overlaps only arise when left==right, where
+    runs of matches merge at odd offsets)."""
     from datachain_spark.operators.bpe import fit_bpe
 
-    docs = _t(spark, sf_dir, "documents")
-    merges = fit_bpe(docs, num_merges=5)
-    schema = "step int, left_sym string, right_sym string, pair_count bigint"
-    # repartition(1)+sortWithinPartitions, not orderBy: a global sort
-    # range-partitions, which runs a separate SAMPLING job plus a
-    # shuffle_partitions-wide reduce — pure scheduling overhead for a
-    # 5-row local frame (measured ~0.3s of the query's 0.54s). A single
-    # sorted partition is the identical row order.
-    return (
-        spark.createDataFrame(
-            [(m["step"], m["left_sym"], m["right_sym"], m["pair_count"]) for m in merges],
-            schema,
-        )
-        .repartition(1)
-        .sortWithinPartitions("step")
+    merges = fit_bpe(_t(spark, sf_dir, "documents"), num_merges=5)
+    schema = T.StructType(
+        [
+            T.StructField("step", T.IntegerType()),
+            T.StructField("left_sym", T.StringType()),
+            T.StructField("right_sym", T.StringType()),
+            T.StructField("pair_count", T.LongType()),
+        ]
     )
+    # the local frame holds the rows in step order; coalesce(1) keeps that
+    # order through the sort without an exchange
+    cols = {f.name: [m[f.name] for m in merges] for f in schema.fields}
+    return local_frame(spark, schema, cols).coalesce(1).sortWithinPartitions("step")
 
 
 def sft_render_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1633,7 +1624,8 @@ def _bpe_oracle(num_merges: int) -> str:
     match positions i where (syms[i], syms[i+1]) = (l, r); consecutive
     match positions form runs (only possible when l = r); keep every other
     position per run starting at the first — identical to the left-to-
-    right greedy scan fit_bpe's codegen fold implements."""
+    right greedy scan of operators/bpe.merge_pair_py, which fit_bpe
+    applies on the driver."""
     parts = [
         r"""
         WITH tok AS (
@@ -1701,8 +1693,8 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL."""
     from datachain_spark.operators.retrieval import hybrid_search
 
-    docs = _spread(_t(spark, sf_dir, "documents"), "doc_id")
-    emb = _spread(_t(spark, sf_dir, "embeddings"), "vec_id")
+    docs = spread(_t(spark, sf_dir, "documents"), "doc_id")
+    emb = spread(_t(spark, sf_dir, "embeddings"), "vec_id")
     qv = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     return hybrid_search(
         docs,
@@ -1728,7 +1720,7 @@ def lm_perplexity_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic in SQL (same glibc ln, same round-6 discipline)."""
     from datachain_spark.operators.lm import fit_bigram_lm, lm_logprob
 
-    docs = _spread(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = spread(_t(spark, sf_dir, "documents"), "doc_id")
     lm = fit_bigram_lm(docs.filter(F.col("lang") == "en"))
     scores = lm_logprob(docs, lm, keep_cols=("lang",))
     return scores.orderBy(F.col("lm_logprob").asc(), F.col("doc_id").asc()).limit(80)

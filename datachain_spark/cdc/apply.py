@@ -66,13 +66,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datachain_spark.cdc.normalize import normalize_text_expr, normalize_text_udf
-from datachain_spark.lake.table import (
-    DELETED_COL,
-    LSN_COL,
-    LakeTable,
-    input_bytes,
-    write_tasks,
-)
+from datachain_spark.frames import input_bytes
+from datachain_spark.lake.table import DELETED_COL, LSN_COL, LakeTable, write_tasks
 
 KEY_COLS = ["conv_id", "turn_idx"]
 META_COLS = {"lsn", "batch_id", "op", "batch"}

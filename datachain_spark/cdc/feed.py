@@ -24,6 +24,7 @@ golden-value generation style (/root/reference/tests/func/test_delta.py).
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 from dataclasses import dataclass
@@ -42,6 +43,8 @@ TS0 = datetime(2025, 1, 1, tzinfo=timezone.utc)
 DUP_MOD = 101  # events with lsn % 101 == 0 are re-delivered in the next batch
 
 
+# lsn_domain reads this for every generated event; feeds use few sizes
+@functools.lru_cache(maxsize=64)
 def _next_prime(n: int) -> int:
     def is_prime(x: int) -> bool:
         if x < 2:

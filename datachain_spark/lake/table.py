@@ -76,6 +76,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datachain_spark.frames import input_bytes, local_frame
+
 # Internal per-row metadata columns: LSN of the producing event, and the
 # delete-tombstone marker (merge-on-read).
 LSN_COL = "_lsn"
@@ -95,39 +97,6 @@ META_FIELDS = [
 # wall time 0.46 -> 0.31 s going from 32 tasks to 2; one task used the
 # least CPU (0.36 s) but the most wall time (0.42 s).
 WRITE_TASK_TARGET_BYTES = 256 * 1024
-
-
-def input_bytes(df: DataFrame) -> int | None:
-    """Bytes of the files `df` reads, from the file indexes Spark built
-    when the frame was created — no job, no listing. None when any leaf of
-    the plan is not a file scan (in-memory frames, RDD-backed
-    `foreachBatch` sources): their size is unknown before a job runs."""
-    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-    total = 0
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if leaf.getClass().getSimpleName() != "LogicalRelation":
-            return None
-        rel = leaf.relation()
-        if rel.getClass().getSimpleName() != "HadoopFsRelation":
-            return None
-        total += int(rel.sizeInBytes())
-    return total
-
-
-def _local_frame(
-    spark: SparkSession, schema: T.StructType, columns: dict[str, list] | None = None
-) -> DataFrame:
-    """A driver-local frame built from an Arrow table (empty unless
-    `columns` are given). Spark plans it as a LocalRelation, so collecting
-    an expression over it is a LocalTableScan: no job and no Python worker.
-    A list of tuples would go through `parallelize` — a 4-task job through
-    pyspark.daemon on every call."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    data = columns or {f.name: [] for f in schema.fields}
-    return spark.createDataFrame(pa.Table.from_pydict(data, schema=to_arrow_schema(schema)), schema)
 
 
 def write_tasks(n_parts: int, nbytes: int | None) -> int:
@@ -407,7 +376,7 @@ class LakeTable:
         read_schema = T.StructType(list(snap.schema.fields) + META_FIELDS)
         files = self._files(snap, buckets)
         if not files:
-            return _local_frame(spark, read_schema)
+            return local_frame(spark, read_schema)
         return spark.read.schema(read_schema).parquet(*files)
 
     def _resolve(
@@ -482,7 +451,7 @@ class LakeTable:
         O(len(values)) driver metadata."""
         kcol = self.snapshot().key_cols[0]
         ktype = next(f.dataType for f in self.snapshot().schema.fields if f.name == kcol)
-        df = _local_frame(spark, T.StructType([T.StructField(kcol, ktype)]), {kcol: list(values)})
+        df = local_frame(spark, T.StructType([T.StructField(kcol, ktype)]), {kcol: list(values)})
         rows = df.select(F.col(kcol), self.bucket_expr().alias("__b")).collect()
         return {r[kcol]: int(r["__b"]) for r in rows}
 
@@ -583,7 +552,7 @@ class LakeTable:
                 + META_FIELDS
                 + [T.StructField("_commit_version", T.IntegerType(), False)]
             )
-            out = _local_frame(spark, schema)
+            out = local_frame(spark, schema)
         else:
             out = parts[0]
             for p in parts[1:]:

@@ -1,26 +1,26 @@
-"""Distributed BPE tokenizer training — byte-pair-encoding merges learned
-from a corpus (Sennrich, Haddow & Birch 2016, "Neural Machine Translation
-of Rare Words with Subword Units", ACL — public algorithm; the counting
-recipe follows the paper's reference `get_stats`/`merge_vocab`).
+"""BPE tokenizer training — byte-pair-encoding merges learned from a
+corpus (Sennrich, Haddow & Birch 2016, "Neural Machine Translation of Rare
+Words with Subword Units", ACL — public algorithm; the counting recipe
+follows the paper's reference `get_stats`/`merge_vocab`).
 
 The reference has no tokenizer-training surface (its nearest is scalar
 string funcs, /root/reference/src/datachain/func/string.py); training a
 subword vocabulary over the corpus is a standard stage of a large-scale
-training-data pipeline, so it is implemented here Spark-first:
+training-data pipeline. The work splits by size:
 
-- The corpus is touched ONCE: one explode -> hash-agg shuffle builds the
-  (word, freq) vocabulary. Every subsequent merge step runs on the VOCAB
-  table — at 100 TB corpus scale the distinct-word vocabulary is orders of
-  magnitude smaller than the corpus, and it SHRINKS as merges apply.
-- Each merge step is one vocab-sized aggregation (adjacent-pair counts,
-  partial-combined map-side) plus an O(1) driver collect of the argmax
-  pair — the classic iterative-algorithm shape (compare the k-means loop,
-  operators/similarity.py): per-step driver state is one (left, right)
-  pair, never data.
-- The merge application is a whole-stage-codegen fold (F.aggregate) —
-  greedy left-to-right, exactly Sennrich's merge semantics — zero Python
-  in the vocab path. Plan-depth is truncated by persisting each step's
-  vocab and unpersisting the previous one.
+- The corpus is touched ONCE, by Spark: one explode -> hash-agg shuffle
+  builds the (syms, freq) vocabulary of distinct words (`word_vocab`).
+  At corpus scale the distinct-word vocabulary is orders of magnitude
+  smaller than the corpus.
+- The vocabulary is collected once and every merge is learned on the
+  driver, with an incremental pair index (pair -> count, pair -> the
+  words holding it): a merge rewrites only the words that hold its pair
+  and adjusts only their pairs' counts, and a lazy max-heap yields the
+  next argmax. The fit runs a fixed number of Spark jobs whatever the
+  merge count; a job per merge (pair-count aggregation + argmax collect)
+  costs more in scheduling than the whole driver fit. Only the
+  vocabulary, not the corpus, must fit in driver memory — the regime of
+  single-process trainers (SentencePiece, Hugging Face tokenizers).
 - Pair counting counts EVERY adjacent occurrence including overlaps
   ('aaaa' contributes 3 occurrences of (a,a)), matching the paper's
   get_stats; the merge then applies greedily left-to-right ('aaaa' ->
@@ -35,75 +35,22 @@ training-data pipeline, so it is implemented here Spark-first:
 
 from __future__ import annotations
 
+import heapq
+from collections import defaultdict
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["fit_bpe", "bpe_encode", "merge_pair_expr", "merge_pair_py"]
-
-
-def _adjacent_pairs(syms: Column) -> Column:
-    """struct(l, r) array of ALL adjacent symbol pairs (with duplicates —
-    get_stats counts every occurrence, overlaps included). `syms` must be
-    a materialized column attribute, not a computed expression: a captured
-    outer expression inside a higher-order-function lambda re-evaluates
-    per element (see dedup.sliding_ngrams)."""
-    k = F.size(syms) - 1
-    pairs = F.zip_with(
-        F.slice(syms, 1, k),
-        F.slice(syms, 2, k),
-        lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-    )
-    empty = F.array().cast("array<struct<l:string,r:string>>")
-    # sequence/slice guard: size-1 words have no pairs (slice(_, _, 0) is
-    # fine but keep the shape explicit and null-safe)
-    return F.when(k >= 1, pairs).otherwise(empty)
-
-
-def merge_pair_expr(syms: Column, left: str, right: str) -> Column:
-    """Greedy left-to-right merge of adjacent (left, right) symbols into
-    one `left+right` symbol — Sennrich's merge_vocab as a whole-stage-
-    codegen F.aggregate fold over positions. 'aaaa' with ('a','a') ->
-    ['aa','aa'] (a consumed position cannot start a second merge). O(n^2)
-    array-append per word is fine: n is a word's symbol count (tiny) and
-    this runs on the vocab table, not the corpus."""
-    n = F.size(syms)
-    init = F.struct(
-        F.array().cast("array<string>").alias("out"), F.lit(False).alias("skip")
-    )
-
-    def step(acc: Column, i: Column) -> Column:
-        cur = F.element_at(syms, i)
-        # try_: plain element_at THROWS out-of-bounds under ANSI mode
-        nxt = F.try_element_at(syms, i + 1)  # NULL at the last position
-        do_merge = (cur == F.lit(left)) & (nxt == F.lit(right))  # NULL-safe: NULL falls through
-        return (
-            F.when(
-                acc["skip"],
-                F.struct(acc["out"].alias("out"), F.lit(False).alias("skip")),
-            )
-            .when(
-                do_merge,
-                F.struct(
-                    F.concat(acc["out"], F.array(F.lit(left + right))).alias("out"),
-                    F.lit(True).alias("skip"),
-                ),
-            )
-            .otherwise(
-                F.struct(
-                    F.concat(acc["out"], F.array(cur)).alias("out"),
-                    F.lit(False).alias("skip"),
-                )
-            )
-        )
-
-    return F.aggregate(F.sequence(F.lit(1), n), init, step, lambda acc: acc["out"])
+__all__ = ["fit_bpe", "bpe_encode", "merge_pair_py"]
 
 
 def merge_pair_py(syms: list[str], left: str, right: str) -> list[str]:
-    """Pure-Python twin of merge_pair_expr (test reference + encode path)."""
+    """Greedy left-to-right merge of adjacent (left, right) symbols into
+    one `left+right` symbol (Sennrich's merge_vocab): 'aaaa' with
+    ('a','a') -> ['aa','aa'], a consumed position cannot start a second
+    merge."""
     out: list[str] = []
     i = 0
     while i < len(syms):
@@ -119,7 +66,7 @@ def merge_pair_py(syms: list[str], left: str, right: str) -> list[str]:
 def word_vocab(
     docs: DataFrame, text_col: str = "text", lowercase: bool = True
 ) -> DataFrame:
-    """(w, freq, syms) vocabulary — the single corpus-scale pass: one
+    """(freq, syms) vocabulary — the single corpus-scale pass: one
     explode -> hash-agg shuffle (partial-combined), then a char split on
     the already-aggregated distinct words."""
     t = F.col(text_col)
@@ -132,6 +79,52 @@ def word_vocab(
     return vocab.withColumn("syms", F.split(F.col("w"), "")).drop("w")
 
 
+def _learn_merges(vocab: list[tuple[list[str], int]], num_merges: int) -> list[dict[str, Any]]:
+    """Sequential BPE over a (syms, freq) vocabulary, kept incremental:
+    `counts` holds every adjacent pair's frequency-weighted count and
+    `holders` the words containing it, so a merge touches only the words
+    that hold its pair. `heap` holds (-count, left, right) entries; one
+    whose count no longer matches `counts` is stale and skipped."""
+    words = [syms for syms, _ in vocab]
+    freqs = [f for _, f in vocab]
+    counts: dict[tuple[str, str], int] = defaultdict(int)
+    holders: dict[tuple[str, str], set[int]] = defaultdict(set)
+    for i, syms in enumerate(words):
+        for p in zip(syms, syms[1:]):
+            counts[p] += freqs[i]
+            holders[p].add(i)
+    heap = [(-c, l, r) for (l, r), c in counts.items()]
+    heapq.heapify(heap)
+    merges: list[dict[str, Any]] = []
+    while heap and len(merges) < num_merges:
+        neg, left, right = heapq.heappop(heap)
+        if counts.get((left, right)) != -neg:
+            continue
+        merges.append(
+            {"step": len(merges) + 1, "left_sym": left, "right_sym": right, "pair_count": -neg}
+        )
+        touched: set[tuple[str, str]] = set()
+        for i in holders.pop((left, right)):
+            old, f = words[i], freqs[i]
+            new = words[i] = merge_pair_py(old, left, right)
+            old_pairs, new_pairs = list(zip(old, old[1:])), list(zip(new, new[1:]))
+            for p in old_pairs:
+                counts[p] -= f
+            for p in new_pairs:
+                counts[p] += f
+                holders[p].add(i)
+            for p in set(old_pairs) - set(new_pairs):
+                holders[p].discard(i)
+            touched.update(old_pairs, new_pairs)
+        for p in touched:
+            if counts[p]:
+                heapq.heappush(heap, (-counts[p], *p))
+            else:
+                del counts[p]
+                holders.pop(p, None)
+    return merges
+
+
 def fit_bpe(
     docs: DataFrame,
     num_merges: int,
@@ -140,41 +133,16 @@ def fit_bpe(
 ) -> list[dict[str, Any]]:
     """Learn `num_merges` BPE merges from the corpus. Returns the ordered
     merge table [{step, left_sym, right_sym, pair_count}, ...] — O(K)
-    driver metadata. Stops early when no adjacent pair remains."""
+    driver metadata. Stops early when no adjacent pair remains. One Spark
+    aggregation builds the word vocabulary, which is collected; the merges
+    are learned on the driver (`_learn_merges`)."""
     if num_merges < 1:
         raise ValueError("num_merges must be >= 1")
-    cur = word_vocab(docs, text_col=text_col, lowercase=lowercase).persist()
-    merges: list[dict[str, Any]] = []
-    try:
-        for step_i in range(1, num_merges + 1):
-            top = (
-                cur.select(F.explode(_adjacent_pairs(F.col("syms"))).alias("p"), "freq")
-                .groupBy("p.l", "p.r")
-                .agg(F.sum("freq").alias("c"))
-                .orderBy(F.col("c").desc(), "l", "r")
-                .limit(1)
-                .collect()
-            )
-            if not top:
-                break  # every word fully merged
-            left, right, c = top[0]["l"], top[0]["r"], int(top[0]["c"])
-            merges.append(
-                {
-                    "step": step_i,
-                    "left_sym": left,
-                    "right_sym": right,
-                    "pair_count": c,
-                }
-            )
-            nxt = cur.withColumn(
-                "syms", merge_pair_expr(F.col("syms"), left, right)
-            ).persist()
-            nxt.count()  # materialize before dropping the parent (lineage cut)
-            cur.unpersist()
-            cur = nxt
-    finally:
-        cur.unpersist()
-    return merges
+    vocab = word_vocab(docs, text_col=text_col, lowercase=lowercase).toArrow()
+    return _learn_merges(
+        list(zip(vocab.column("syms").to_pylist(), vocab.column("freq").to_pylist())),
+        num_merges,
+    )
 
 
 def bpe_encode(

@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datachain_spark.frames import spread
+
 # 2^31-1: keeps a*h+b far below int64 overflow under ANSI mode while
 # leaving minhash collision probability ~1/2^31 per permutation
 MERSENNE = (1 << 31) - 1
@@ -26,20 +28,6 @@ MERSENNE = (1 << 31) - 1
 
 def normalize_for_dedup(text: Column) -> Column:
     return F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")
-
-
-def _spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Signature computation is CPU-bound, and Spark gives a scan only as
-    many tasks as input splits — a small corpus in one parquet file would
-    run the whole shingling/hashing stage on ONE core. Spread by key when
-    the scan has fewer partitions than the cluster's parallelism; the one
-    extra shuffle of raw text is noise next to per-shingle hashing (and at
-    real scale the scan already has thousands of splits, so this is a
-    no-op: the condition is partition-count metadata, no job)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, *cols)
-    return df
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -166,7 +154,7 @@ def minhash_lsh_pairs(
     # then take the 32 permutation-mins over that array — Catalyst does not
     # CSE subexpressions across higher-order functions, so a single-stage
     # formulation recomputes shingling per permutation (measured 10x slower)
-    base = _spread(df, id_col).select(
+    base = spread(df, id_col).select(
         F.col(id_col).alias("id"),
         F.transform(shingles(F.col(text_col), n), lambda s: _base_hash(s, hash_mode)).alias("_base"),
     )
@@ -264,7 +252,7 @@ def simhash_near_dups(
     (DuckDB all-pairs over the same signatures, hash_mode='md5') matches
     value-for-value."""
     bits = 60 if hash_mode == "md5" else 64
-    df = _spread(df, id_col)
+    df = spread(df, id_col)
     h = df.select(
         F.col(id_col).alias("id"),
         simhash(F.col(text_col), bits=bits, hash_mode=hash_mode).alias("sh"),
@@ -454,7 +442,7 @@ def ngram_jaccard_pairs(
     #   the interpreted shingle expr per output row, 3.3s) and window
     #   count-by-g doc freq (one viral shingle's rows land on one task —
     #   skew-unsafe at corpus scale).
-    sh0 = _spread(df, id_col).select(
+    sh0 = spread(df, id_col).select(
         F.col(id_col).alias("id"), F.explode(shingles(F.col(text_col), n)).alias("g")
     ).select("id", F.xxhash64("g").alias("g"))
     sizes = sh0.groupBy("id").agg(F.count("*").alias("sz"))

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -266,7 +267,7 @@ def hybrid_search(
     w = Window.orderBy(F.desc("score"), F.asc(id_col))
     bm_rk = bm.select(F.col(id_col), F.row_number().over(w).alias("bm25_rk"))
 
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
+    qv = F.lit(np.asarray(query_vec, np.float64))
     sims = emb.select(
         F.col(vec_id_col).alias(id_col),
         cosine_similarity(F.transform(vec_col, lambda x: x.cast("double")), qv).alias(

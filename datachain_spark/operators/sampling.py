@@ -28,6 +28,7 @@ from __future__ import annotations
 import math
 from collections.abc import Mapping
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -264,7 +265,7 @@ def dsir_select(
     t_counts, t_total = dsir_bucket_counts(target, text_col, n_buckets)
     r_counts, r_total = dsir_bucket_counts(raw, text_col, n_buckets)
     lam = dsir_log_ratios(t_counts, t_total, r_counts, r_total, n_buckets, alpha)
-    lam_arr = F.array(*[F.lit(v) for v in lam])
+    lam_arr = F.lit(np.asarray(lam, np.float64))
     per_gram = raw.select(
         F.col(id_col).alias("__dsir_id"),
         F.explode(dsir_grams(F.col(text_col))).alias("__g"),

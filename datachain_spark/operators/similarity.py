@@ -14,6 +14,7 @@ sql/sqlite/base.py:238-253); here distances are Catalyst expressions.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -159,7 +160,7 @@ def ivf_assign(
         *[
             F.struct(
                 F.lit(i).alias("cell"),
-                cosine_distance(F.col(vec_col), F.array(*[F.lit(x) for x in c])).alias("d"),
+                cosine_distance(F.col(vec_col), F.lit(np.asarray(c, np.float64))).alias("d"),
             )
             for i, c in enumerate(centroids)
         ]
@@ -322,7 +323,7 @@ def semantic_dedup(
     assigned = ivf_assign(df, centroids, vec_col, nprobe=1).withColumn(
         "__cell", F.element_at("__cell", 1)
     )
-    cent_arr = F.array(*[F.array(*[F.lit(x) for x in c]) for c in centroids])
+    cent_arr = F.array(*[F.lit(np.asarray(c, np.float64)) for c in centroids])
     own = F.element_at(cent_arr, F.col("__cell") + 1)
     assigned = assigned.withColumn(
         "__cdist", F.round(cosine_distance(F.col(vec_col), own), round_to)

@@ -3,23 +3,19 @@
 The merge semantics are Sennrich et al. 2016's reference implementation:
 get_stats counts EVERY adjacent pair occurrence (overlaps included), the
 argmax pair is merged greedily left-to-right in every word, ties break
-(count desc, left asc, right asc). The Spark codegen fold, the pure-Python
-twin, and the DuckDB oracle's parity-run formulation must all agree.
+(count desc, left asc, right asc). fit_bpe's incremental driver fit, the
+from-scratch reference fit below, and the DuckDB oracle's parity-run
+formulation must all agree.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
-from datachain_spark.operators.bpe import (
-    bpe_encode,
-    fit_bpe,
-    merge_pair_expr,
-    merge_pair_py,
-)
+from datachain_spark.operators.bpe import bpe_encode, fit_bpe, merge_pair_py
 
 SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -44,27 +40,70 @@ def _fit_bpe_py(word_freqs: dict[str, int], num_merges: int) -> list[tuple]:
     return merges
 
 
-# ---------- merge_pair_expr == merge_pair_py (greedy semantics) ----------
+def _corpus(spark, word_freqs: dict[str, int]):
+    return spark.createDataFrame([((w + " ") * f,) for w, f in word_freqs.items()], "text: string")
+
+
+def _table(merges) -> list[tuple]:
+    return [(m["step"], m["left_sym"], m["right_sym"], m["pair_count"]) for m in merges]
+
+
+# ---------- one-word corpora: greedy overlap semantics, fit to exhaustion ----
 
 MERGE_CASES = [
-    (["a", "a", "a", "a"], "a", "a"),  # overlap run, even
-    (["a", "a", "a"], "a", "a"),  # overlap run, odd
-    (["a", "a", "a", "b"], "a", "a"),
-    (["a", "b", "a", "b"], "a", "b"),
-    (["b", "a", "b", "a"], "a", "b"),
-    (["a"], "a", "a"),  # single symbol, no pairs
-    (["x", "y"], "a", "b"),  # no match
-    (["a", "b"], "a", "b"),  # exact whole word
-    (["a", "a", "b", "a", "a", "b", "a"], "a", "a"),
+    "aaaa",  # overlap run, even
+    "aaa",  # overlap run, odd
+    "aaab",
+    "abab",
+    "baba",
+    "a",  # single symbol, no pairs
+    "ab",  # exact whole word
+    "xy",
+    "aabaaba",
 ]
 
 
-def test_merge_pair_expr_matches_python_greedy(spark):
-    rows = [(i, syms, l, r) for i, (syms, l, r) in enumerate(MERGE_CASES)]
-    for i, syms, l, r in rows:
-        df = spark.createDataFrame([(syms,)], "syms: array<string>")
-        got = df.select(merge_pair_expr(F.col("syms"), l, r).alias("m")).collect()[0]["m"]
-        assert got == merge_pair_py(syms, l, r), (syms, l, r, got)
+def test_fit_bpe_one_word_corpora(spark):
+    for w in MERGE_CASES:
+        got = _table(fit_bpe(_corpus(spark, {w: 1}), num_merges=20))
+        assert got == _fit_bpe_py({w: 1}, 20), w
+
+
+def _tie_vocab() -> dict[str, int]:
+    """Deterministic vocabulary over a 3-letter alphabet: every word of
+    length 1-6 with a run-heavy share (many 'aa'/'bb' overlaps) and
+    frequencies from a short cycle, so equal pair counts are common."""
+    out = {}
+    for n in range(1, 7):
+        for i, t in enumerate(itertools.product("abc", repeat=n)):
+            if i % 3 == 0 or n <= 3:
+                out["".join(t)] = 1 + (i * 7 + n) % 4
+    return out
+
+
+def test_fit_bpe_tie_vocab_to_exhaustion(spark):
+    freqs = _tie_vocab()
+    got = _table(fit_bpe(_corpus(spark, freqs), num_merges=100_000))
+    expect = _fit_bpe_py(freqs, 100_000)
+    assert got == expect
+    assert len({m[3] for m in expect}) < len(expect)  # the fit met ties
+
+
+def test_fit_bpe_job_count_is_independent_of_merges(spark):
+    docs = _corpus(spark, _tie_vocab())
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(num_merges):
+        group = f"bpe-jobs-{num_merges}"
+        sc.setJobGroup(group, "bpe job count")
+        try:
+            assert len(fit_bpe(docs, num_merges)) == num_merges
+        finally:
+            sc.setJobGroup(None, None)  # type: ignore[arg-type]
+        return len(tracker.getJobIdsForGroup(group))
+
+    assert jobs(2) == jobs(40)
 
 
 # ---------- fit on a crafted corpus: merge sequence == reference ----------
@@ -78,7 +117,7 @@ def test_fit_bpe_hand_corpus(spark):
     freqs = {"low": 5, "lowest": 2, "newer": 6, "wider": 3}
     expect = _fit_bpe_py(freqs, 6)
     got = fit_bpe(docs, num_merges=6)
-    assert [(m["step"], m["left_sym"], m["right_sym"], m["pair_count"]) for m in got] == expect
+    assert _table(got) == expect
     # first merge is the most frequent pair: 'e'+'r' appears in newer(x6,
     # twice? no - once) + wider(x3) = 9; 'n'+'e' in newer = 6+6=12? newer
     # has n-e and e-w and w-e and e-r: ne(6), ew(6), we(6), er(6); wider:

@@ -16,7 +16,9 @@ are under test, and a query's plan shape is scale-invariant):
     most two stages (map + reduce/write) — counted from the status
     tracker on a real apply, so a reintroduced second exchange fails;
     its write stage is sized from the batch's input bytes;
-  - a full LakeTable read of many segment files starts no listing job.
+  - a full LakeTable read of many segment files starts no listing job;
+  - the scan spread adds an exchange only to inputs of several task
+    targets, and a repeated table read starts no schema-inference job.
 """
 
 from __future__ import annotations
@@ -39,6 +41,18 @@ def plan_of(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain(mode="formatted")
     return buf.getvalue()
+
+
+def jobs_of(spark, group, fn):
+    """JobInfo of every Spark job `fn()` runs, via the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "plan audit")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)  # type: ignore[arg-type]
+    tracker = sc.statusTracker()
+    return [tracker.getJobInfo(j) for j in sorted(tracker.getJobIdsForGroup(group))]
 
 
 def test_q1_pushdown_and_pruning(spark):
@@ -114,6 +128,40 @@ def test_no_scale_killers_in_any_query_plan(spark):
     assert not bad, bad
 
 
+def test_table_reads_infer_the_schema_once(spark):
+    """The driver's table reads cache the footer schema: a second read of
+    the same file starts no schema-inference job."""
+    entrymod._t(spark, SF_DIR, "orders")
+    assert jobs_of(spark, "plan-audit-t", lambda: entrymod._t(spark, SF_DIR, "orders")) == []
+
+
+def test_spread_is_size_aware(spark, tmp_path):
+    """A scan below SPREAD_TASK_TARGET_BYTES keeps its plan (no exchange);
+    a single-file scan of several targets is hash-repartitioned to
+    ceil(bytes / target) tasks, at most defaultParallelism. Both return
+    the scan's rows."""
+    from pyspark.sql import functions as F
+
+    from datachain_spark.frames import SPREAD_TASK_TARGET_BYTES, input_bytes, spread
+
+    small = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    assert input_bytes(small) < SPREAD_TASK_TARGET_BYTES
+    assert "Exchange" not in plan_of(spread(small, "doc_id"))
+
+    path = str(tmp_path / "big")
+    spark.range(30_000).select(
+        F.col("id").alias("doc_id"), F.sha2(F.col("id").cast("string"), 512).alias("text")
+    ).coalesce(1).write.parquet(path)
+    big = spark.read.parquet(path)
+    nbytes = input_bytes(big)
+    p = min(spark.sparkContext.defaultParallelism, -(-nbytes // SPREAD_TASK_TARGET_BYTES))
+    assert big.rdd.getNumPartitions() == 1 and p > 1
+    spread_big = spread(big, "doc_id")
+    assert re.search(rf"hashpartitioning\(doc_id#\d+L, {p}\)", plan_of(spread_big))
+    for df in (small, big):
+        assert sorted(spread(df, "doc_id").collect()) == sorted(df.collect())
+
+
 def test_cdc_apply_is_one_shuffle(spark, tmp_path):
     """The engine claim behind the r4 throughput win: apply_batch's widest
     job runs in at most TWO stages (one exchange). Counted on real applies
@@ -133,7 +181,8 @@ def test_cdc_apply_is_one_shuffle(spark, tmp_path):
     from datachain_spark.cdc.normalize import normalize_text
     from datachain_spark.cdc.oracle import oracle_replay
     from datachain_spark.cdc.stream import event_stream_schema
-    from datachain_spark.lake.table import WRITE_TASK_TARGET_BYTES, LakeTable, input_bytes
+    from datachain_spark.frames import input_bytes
+    from datachain_spark.lake.table import WRITE_TASK_TARGET_BYTES, LakeTable
 
     feed = str(tmp_path / "feed")
     # ~32k events in 15 batches (8 hot conversations keep the Python
@@ -146,20 +195,12 @@ def test_cdc_apply_is_one_shuffle(spark, tmp_path):
         spark.read.schema(v1 if f"{os.sep}v1{os.sep}" in d else v2).parquet(d)
         for _, d in feed_batch_dirs(feed)
     ]
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def jobs_of(group, fn):
-        sc.setJobGroup(group, "plan audit")
-        try:
-            fn()
-        finally:
-            sc.setJobGroup(None, None)  # type: ignore[arg-type]
-        return [tracker.getJobInfo(j) for j in sorted(tracker.getJobIdsForGroup(group))]
+    tracker = spark.sparkContext.statusTracker()
 
     def apply_tasks(table, events, batch_id):
         """Write-stage task count of one apply, after the one-shuffle check."""
         jobs = jobs_of(
+            spark,
             f"plan-audit-apply-{table.root}-{batch_id}",
             lambda: apply_batch(spark, table, events, "plan-audit", batch_id, compaction="off"),
         )
@@ -200,5 +241,5 @@ def test_cdc_apply_is_one_shuffle(spark, tmp_path):
     for b, events in enumerate(frames[1:], start=1):
         apply_batch(spark, small, events, "plan-audit", b, compaction="off")
     assert len(small.read(spark).inputFiles()) > 32
-    assert jobs_of("plan-audit-read", lambda: small.read(spark)) == []
+    assert jobs_of(spark, "plan-audit-read", lambda: small.read(spark)) == []
     assert table_rows(small) == replay()
