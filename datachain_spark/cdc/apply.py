@@ -67,7 +67,7 @@ from pyspark.sql import types as T
 
 from datachain_spark.cdc.normalize import normalize_text_expr, normalize_text_udf
 from datachain_spark.frames import input_bytes
-from datachain_spark.lake.table import DELETED_COL, LSN_COL, LakeTable, write_tasks
+from datachain_spark.lake.table import BUCKET_COL, DELETED_COL, LSN_COL, LakeTable, write_tasks
 
 KEY_COLS = ["conv_id", "turn_idx"]
 META_COLS = {"lsn", "batch_id", "op", "batch"}
@@ -130,6 +130,16 @@ def transcripts_schema_v1() -> T.StructType:
     )
 
 
+def open_transcripts_table(table_root: str, num_buckets: int = 32) -> LakeTable:
+    """The transcripts table at `table_root`, created empty (schema v1,
+    keyed on KEY_COLS, `num_buckets` buckets) if none exists there yet."""
+    if LakeTable.exists(table_root):
+        return LakeTable(table_root)
+    return LakeTable.create(
+        table_root, transcripts_schema_v1(), key_cols=KEY_COLS, num_buckets=num_buckets
+    )
+
+
 def _payload_fields(events: DataFrame) -> list[T.StructField]:
     return [f for f in events.schema.fields if f.name not in META_COLS]
 
@@ -166,33 +176,22 @@ def _one_file_stats(path: str, cand_cols: list[str]) -> dict[str, Any]:
 
 
 def _segment_footer_stats(
-    table_root: str, out_dir: str, cand_cols: list[str] | None = None
-) -> tuple[dict[int, list[str]], dict[int, dict[str, Any]]]:
-    """Per-bucket (files, {n, n_del, hwm, cand}) from parquet footer
-    metadata — driver-side, parallel over files (footer reads release the
-    GIL in pyarrow). At 10^10 scale this is O(files) footer reads of the
-    just-written segment (page-cache-hot), the same trick Iceberg uses for
-    its manifest column stats; on a real cluster the equivalent is a tiny
-    stats job or Iceberg's write-time metrics."""
+    table_root: str, files: dict[int, list[str]], cand_cols: list[str] | None = None
+) -> dict[int, dict[str, Any]]:
+    """Per-bucket {n, n_del, hwm, cand} of a segment's files (bucket ->
+    table-relative paths, as LakeTable.write_segment returns them) from
+    parquet footer metadata — driver-side, parallel over files (footer reads
+    release the GIL in pyarrow). At 10^10 scale this is O(files) footer
+    reads of the just-written segment (page-cache-hot), the same trick
+    Iceberg uses for its manifest column stats; on a real cluster the
+    equivalent is a tiny stats job or Iceberg's write-time metrics."""
     cand_cols = cand_cols or []
-    files: dict[int, list[str]] = {}
-    stats: dict[int, dict[str, Any]] = {}
-    if not os.path.isdir(out_dir):
-        return files, stats
-    work: list[tuple[int, str]] = []
-    for entry in os.listdir(out_dir):
-        if not entry.startswith("bucket="):
-            continue
-        b = int(entry.split("=", 1)[1])
-        bdir = os.path.join(out_dir, entry)
-        bfiles = sorted(f for f in os.listdir(bdir) if f.endswith(".parquet"))
-        if not bfiles:
-            continue
-        files[b] = [os.path.relpath(os.path.join(bdir, f), table_root) for f in bfiles]
-        stats[b] = {"n": 0, "n_del": 0, "hwm": -1, "cand": dict.fromkeys(cand_cols, 0)}
-        work += [(b, os.path.join(bdir, f)) for f in bfiles]
+    stats = {
+        b: {"n": 0, "n_del": 0, "hwm": -1, "cand": dict.fromkeys(cand_cols, 0)} for b in files
+    }
+    work = [(b, os.path.join(table_root, p)) for b, fl in files.items() for p in fl]
     if not work:
-        return files, stats
+        return stats
     with ThreadPoolExecutor(max_workers=min(16, len(work))) as ex:
         for (b, _), st in zip(work, ex.map(lambda w: _one_file_stats(w[1], cand_cols), work)):
             s = stats[b]
@@ -201,7 +200,7 @@ def _segment_footer_stats(
             s["hwm"] = max(s["hwm"], st["hwm"])
             for c in cand_cols:
                 s["cand"][c] += st["cand"][c]
-    return files, stats
+    return stats
 
 
 def apply_batch(
@@ -256,7 +255,7 @@ def apply_batch(
     cand_names = [f.name for f in cand_fields]
 
     # ---- bucket assignment (+ optional ordered-delivery stale filter) ----
-    ev = events.withColumn("bucket", table.bucket_expr())
+    ev = events.withColumn(BUCKET_COL, table.bucket_expr())
     if lsn_ordered and snap.watermarks:
         # watermarks are O(num_buckets) driver-side metadata -> a literal
         # map expression beats a per-batch broadcast-join (no exchange,
@@ -267,7 +266,7 @@ def apply_batch(
         pairs = ",".join(
             f"{int(b)},{int(lsn)}L" for b, lsn in sorted(snap.watermarks.items())
         )
-        wm = F.expr(f"element_at(map({pairs}), bucket)")
+        wm = F.expr(f"element_at(map({pairs}), {BUCKET_COL})")
         ev = ev.filter(F.col("lsn") > F.coalesce(wm, F.lit(-1)))
 
     # ---- last-writer-wins per key over lsn (fused with the write layout) ----
@@ -307,7 +306,7 @@ def apply_batch(
     n_parts = write_tasks(n_combos, input_bytes(events))
     keys_sql = ",".join(f"`{c}`" for c in key_cols)
     combo_sql = (
-        f"cast((cast(bucket as bigint) * {int(files_per_bucket)} "
+        f"cast((cast({BUCKET_COL} as bigint) * {int(files_per_bucket)} "
         f"+ pmod(xxhash64({keys_sql}), {int(files_per_bucket)})) as int)"
     )
     pkeys = _perfect_partition_keys(spark, n_parts)
@@ -370,33 +369,29 @@ def apply_batch(
     # the parquet footer null_count yields the delete count without a scan
     deleted_marker = F.when(is_del, F.lit(True)).otherwise(F.lit(None).cast("boolean"))
     segment = dedup.select(
-        *payload, F.col("lsn").alias(LSN_COL), deleted_marker.alias(DELETED_COL), "bucket"
+        *payload, F.col("lsn").alias(LSN_COL), deleted_marker.alias(DELETED_COL), BUCKET_COL
     )
 
     # ---- salted bucket-partitioned append (bounded files, skew-spread) ----
     # the segment is ALREADY partitioned on (bucket, _salt) from the dedup
     # shuffle above (the projection is narrow), so the write reuses it:
-    # partitionBy routes each task's rows to its bucket dir, a hot
-    # conversation's bucket is written by up to `files_per_bucket` salted
-    # tasks, and file counts stay bounded by the layout
-    out_dir = table.data_dir(f"job={job_id}", f"batch={batch_id:09d}")
+    # each task writes one file per bucket it holds, a hot conversation's
+    # bucket is written by up to `files_per_bucket` salted tasks, and file
+    # counts stay bounded by the layout.
     # crash-recovery fast path (the reference's continue-from-partial,
     # query/dataset.py:1221-1360, at segment granularity): if a previous
     # attempt crashed AFTER fully writing this (job,batch) segment but
     # BEFORE the manifest commit, reuse the files instead of recomputing —
     # inputs are identical because the parent snapshot never advanced.
-    if not os.path.exists(os.path.join(out_dir, "_SUCCESS")):
-        (
-            segment.write.mode("overwrite")
-            .options(**table.parquet_write_options())
-            .partitionBy("bucket")
-            .parquet(out_dir)
-        )
+    unit = f"job={job_id}/batch={batch_id:09d}"
+    new_bucket_files = table.segment_files(unit)
+    if new_bucket_files is None:
+        new_bucket_files = table.write_segment(segment, unit)
 
     # ---- lineage + evolution from parquet footers (driver-side, zero
     # Spark jobs): rows_in = num_rows, per-bucket hwm = max(_lsn) column
     # stat, deletes and candidate-column data = non-null counts ----
-    new_bucket_files, bstats = _segment_footer_stats(table.root, out_dir, cand_names)
+    bstats = _segment_footer_stats(table.root, new_bucket_files, cand_names)
     if not bstats:
         return {"batch_id": batch_id, "skipped": "stale"}  # no-change short-circuit
 
@@ -451,7 +446,6 @@ def apply_batch(
         compacted = table.compact_async(
             spark,
             max_segments=max_segments,
-            files_per_bucket=files_per_bucket,
             max_buckets=max(1, table.num_buckets // 4),
             retain_tombstones=retain_tombstones,
         )
@@ -461,7 +455,6 @@ def apply_batch(
         compacted = table.compact(
             spark,
             max_segments=max_segments,
-            files_per_bucket=files_per_bucket,
             max_buckets=max(1, table.num_buckets // 4),
             retain_tombstones=retain_tombstones,
         )
@@ -498,12 +491,7 @@ def replay_feed_dir(
     drained before returning, so the returned table is quiescent."""
     from datachain_spark.cdc.feed import feed_batch_dirs
 
-    if LakeTable.exists(table_root):
-        table = LakeTable(table_root)
-    else:
-        table = LakeTable.create(
-            table_root, transcripts_schema_v1(), key_cols=KEY_COLS, num_buckets=num_buckets
-        )
+    table = open_transcripts_table(table_root, num_buckets)
     from datachain_spark.cdc.stream import event_stream_schema
 
     # explicit per-phase schemas skip a schema-inference job per batch

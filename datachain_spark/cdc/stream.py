@@ -22,8 +22,9 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
-from datachain_spark.cdc.apply import apply_batch, transcripts_schema_v1
+from datachain_spark.cdc.apply import apply_batch, open_transcripts_table
 from datachain_spark.lake.table import LakeTable
 
 
@@ -57,6 +58,28 @@ def event_stream_schema() -> T.StructType:
     )
 
 
+def _start_feed_stream(
+    spark: SparkSession,
+    feed_dir: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+    handle: Callable[[DataFrame, int], None],
+    **trigger: Any,
+) -> StreamingQuery:
+    """Start the file-streaming tail of a write_feed directory: every
+    microbatch of events goes to `handle(batch_df, epoch_id)`; `trigger`
+    is DataStreamWriter.trigger's keyword (processingTime / availableNow)."""
+    return (
+        spark.readStream.schema(event_stream_schema())
+        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .parquet(os.path.join(feed_dir, "v*", "batch=*"))
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(**trigger)
+        .start()
+    )
+
+
 def tail_stream(
     spark: SparkSession,
     table_root: str,
@@ -74,15 +97,7 @@ def tail_stream(
     the caller owns query.stop(). Exactly-once semantics are identical —
     same apply_batch, same ledger — because the trigger mode only changes
     WHEN microbatches fire, not what they contain."""
-    if LakeTable.exists(table_root):
-        table = LakeTable(table_root)
-    else:
-        table = LakeTable.create(
-            table_root,
-            transcripts_schema_v1(),
-            key_cols=["conv_id", "turn_idx"],
-            num_buckets=num_buckets,
-        )
+    table = open_transcripts_table(table_root, num_buckets)
     metrics: list[dict[str, Any]] = []
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
@@ -97,16 +112,8 @@ def tail_stream(
         m["epoch_id"] = epoch_id
         metrics.append(m)
 
-    stream = (
-        spark.readStream.schema(event_stream_schema())
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(os.path.join(feed_dir, "v*", "batch=*"))
-    )
-    query = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=interval)
-        .start()
+    query = _start_feed_stream(
+        spark, feed_dir, checkpoint_dir, max_files_per_trigger, handle, processingTime=interval
     )
     return table, query, metrics
 
@@ -126,15 +133,7 @@ def run_stream(
     """Run the feed to exhaustion (Trigger.AvailableNow). Returns the table
     and per-microbatch metrics. `fail_before_epoch` injects a crash before
     that epoch's merge commits — the resume test's kill switch."""
-    if LakeTable.exists(table_root):
-        table = LakeTable(table_root)
-    else:
-        table = LakeTable.create(
-            table_root,
-            transcripts_schema_v1(),
-            key_cols=["conv_id", "turn_idx"],
-            num_buckets=num_buckets,
-        )
+    table = open_transcripts_table(table_root, num_buckets)
 
     metrics: list[dict[str, Any]] = []
 
@@ -187,18 +186,9 @@ def run_stream(
     listener = _Listener()
     spark.streams.addListener(listener)
     try:
-        stream = (
-            spark.readStream.schema(event_stream_schema())
-            .option("maxFilesPerTrigger", str(max_files_per_trigger))
-            .parquet(os.path.join(feed_dir, "v*", "batch=*"))
-        )
-        query = (
-            stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+        _start_feed_stream(
+            spark, feed_dir, checkpoint_dir, max_files_per_trigger, handle, availableNow=True
+        ).awaitTermination()
     finally:
         spark.streams.removeListener(listener)
         # the feed is exhausted: wait out any in-flight async compaction so

@@ -39,7 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datachain_spark.lake.table import LakeTable
+from datachain_spark.lake.table import BUCKET_COL, LakeTable
 from datachain_spark.udf import (
     Lifecycle,
     bind_setup,
@@ -1172,46 +1172,19 @@ class Chain:
             dprops["dataset.description"] = description
         if attrs is not None:
             dprops["dataset.attrs"] = list(attrs)
-        out_dir = table.data_dir(f"save={table.current_version() + 1}")
         snap_keys = table.snapshot().key_cols
         if snap_keys:
-            # bucketed write: same deterministic bucket expr as the CDC
-            # apply path, one output dir per bucket (mirrors compact())
-            bucketed = df.withColumn("__bucket", table.bucket_expr(snap_keys[0]))
-            (
-                bucketed.repartition(table.num_buckets, "__bucket")
-                .write.mode("overwrite")
-                .partitionBy("__bucket")
-                .parquet(out_dir)
-            )
-            replace: dict[int, list[str]] = {}
-            for entry in sorted(os.listdir(out_dir)):
-                if not entry.startswith("__bucket="):
-                    continue
-                b = int(entry.split("=", 1)[1])
-                bdir = os.path.join(out_dir, entry)
-                replace[b] = sorted(
-                    os.path.relpath(os.path.join(bdir, f), table.root)
-                    for f in os.listdir(bdir)
-                    if f.endswith(".parquet")
-                )
-            # replace EVERY bucket (absent ones become empty) so save stays
-            # full-snapshot semantics even on a pre-existing table
-            for b in range(table.num_buckets):
-                replace.setdefault(b, [])
-            table.commit(
-                replace_bucket_files=replace, schema=df.schema, tag=ver, props=dprops
-            )
+            # bucketed write: the deterministic bucket expr of the CDC
+            # apply path, so the dataset is a merge target
+            seg = df.withColumn(BUCKET_COL, table.bucket_expr(snap_keys[0]))
+            seg = seg.repartition(table.num_buckets, BUCKET_COL)
         else:
-            df.write.mode("overwrite").parquet(out_dir)
-            files = [
-                os.path.relpath(os.path.join(out_dir, f), table.root)
-                for f in sorted(os.listdir(out_dir))
-                if f.endswith(".parquet")
-            ]
-            table.commit(
-                replace_bucket_files={0: files}, schema=df.schema, tag=ver, props=dprops
-            )
+            seg = df.withColumn(BUCKET_COL, F.lit(0))
+        # replace EVERY bucket (absent ones become empty) so save stays
+        # full-snapshot semantics even on a pre-existing table
+        replace: dict[int, list[str]] = {b: [] for b in range(table.num_buckets)}
+        replace.update(table.write_segment(seg, f"save={table.current_version() + 1}"))
+        table.commit(replace_bucket_files=replace, schema=df.schema, tag=ver, props=dprops)
         return read_dataset(df.sparkSession, name, catalog_root=cat_root)
 
     def merge_into(

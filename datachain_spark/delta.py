@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datachain_spark.diff import A, D, M, diff
-from datachain_spark.lake.table import LakeTable
+from datachain_spark.lake.table import BUCKET_COL, LakeTable
 
 
 def delta_update(
@@ -86,18 +86,12 @@ def delta_update(
         keep = keep.join(deleted_keys, on, "left_anti")
     new_result = keep.unionByName(recomputed, allowMissingColumns=True)
 
-    out_dir = result.data_dir(f"delta={result.current_version() + 1}")
-    new_result.write.mode("overwrite").parquet(out_dir)
-    import os
-
-    files = [
-        os.path.relpath(os.path.join(out_dir, f), result.root)
-        for f in sorted(os.listdir(out_dir))
-        if f.endswith(".parquet")
-    ]
+    files = result.write_segment(
+        new_result.withColumn(BUCKET_COL, F.lit(0)), f"delta={result.current_version() + 1}"
+    )
     deps[source.root] = latest_src
     return result.commit(
-        replace_bucket_files={0: files},
+        replace_bucket_files={0: files.get(0, [])},
         schema=new_result.schema,
         props={
             "source_version": latest_src,

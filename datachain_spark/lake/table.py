@@ -28,6 +28,15 @@ while an input of `n_parts * WRITE_TASK_TARGET_BYTES` or more keeps one
 task per combo. Neither the file layout nor the plan depends on the
 session's parallelism.
 
+File layout: `LakeTable.write_segment` is the only writer of data files.
+Each call writes one WRITE UNIT, a directory under `data/` named for its
+writer: `job=<job>/batch=<n>` (cdc.apply_batch), `compact=<v>`
+(compaction), `save=<v>` (Chain.save), `delta=<v>` (delta_update) and
+`dedup=<id>` (incremental_dedup's fingerprint registry). Inside a unit,
+rows sit in `__bucket=<b>/*.parquet`; a snapshot maps each bucket to its
+table-relative file paths. Every version after the first is derived from
+a source snapshot by one helper (`_derive`).
+
 This reproduces the reference's dataset-versioning pillar
 (/root/reference/src/datachain/dataset.py:240-360 — per-version physical
 tables; /root/reference/src/datachain/catalog/catalog.py:796-890 — version
@@ -64,6 +73,7 @@ itself — immutable manifests + immutable data files — ports unchanged.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import threading
@@ -86,6 +96,9 @@ META_FIELDS = [
     T.StructField(LSN_COL, T.LongType(), True),
     T.StructField(DELETED_COL, T.BooleanType(), True),
 ]
+# Column holding a row's bucket id in a frame handed to write_segment; the
+# write turns it into the `__bucket=<b>` directory level, not a file column.
+BUCKET_COL = "__bucket"
 
 # Input bytes per write task (write_tasks). Measured at local[4] on a
 # 4-core VM, applying 0.27-1.36 MB of cdc_replay-shaped parquet into 32
@@ -168,10 +181,10 @@ class Snapshot:
             sort_keys=True,
         )
 
-    @staticmethod
-    def from_json(s: str) -> "Snapshot":
+    @classmethod
+    def from_json(cls, s: str) -> "Snapshot":
         d = json.loads(s)
-        return Snapshot(
+        return cls(
             version=d["version"],
             parent=d["parent"],
             schema_json=d["schema"],
@@ -265,6 +278,46 @@ class LakeTable:
             opts[f"parquet.bloom.filter.enabled#{c}"] = "true"
             opts[f"parquet.bloom.filter.expected.ndv#{c}"] = ndv
         return opts
+
+    # ---------- data files ----------
+    def write_segment(self, df: DataFrame, unit: str) -> dict[int, list[str]]:
+        """Write `df` as the write unit `data/<unit>` and return its files,
+        bucket -> table-relative parquet paths (module docstring). Each row's
+        bucket id comes from its `BUCKET_COL` column; the caller partitions
+        `df` as it wants its files laid out (one task writes one file per
+        bucket it holds). Overwrites an earlier, uncommitted attempt."""
+        (
+            df.write.mode("overwrite")
+            .options(**self.parquet_write_options())
+            .partitionBy(BUCKET_COL)
+            .parquet(self.data_dir(unit))
+        )
+        files = self.segment_files(unit)
+        if files is None:  # the session turned Spark's _SUCCESS marker off
+            raise RuntimeError(f"the parquet write of {unit} left no _SUCCESS marker")
+        return files
+
+    def segment_files(self, unit: str) -> dict[int, list[str]] | None:
+        """Files of a finished write unit as write_segment returns them
+        (buckets without files are left out), or None if `unit` holds no
+        finished write: Spark's job commit writes `_SUCCESS` last, so a unit
+        without it was never written or its writer crashed mid-write."""
+        unit_dir = self.data_dir(unit)
+        if not os.path.exists(os.path.join(unit_dir, "_SUCCESS")):
+            return None
+        files: dict[int, list[str]] = {}
+        for entry in os.listdir(unit_dir):
+            if not entry.startswith(f"{BUCKET_COL}="):
+                continue
+            bdir = os.path.join(unit_dir, entry)
+            fl = sorted(
+                os.path.relpath(os.path.join(bdir, f), self.root)
+                for f in os.listdir(bdir)
+                if f.endswith(".parquet")
+            )
+            if fl:
+                files[int(entry.split("=", 1)[1])] = fl
+        return files
 
     @staticmethod
     def exists(root: str) -> bool:
@@ -367,13 +420,28 @@ class LakeTable:
         sel = snap.buckets if buckets is None else {b: snap.buckets.get(b, []) for b in buckets}
         return [os.path.join(self.root, p) for fl in sel.values() for p in fl]
 
+    @staticmethod
+    def _read_schema(snap: Snapshot) -> T.StructType:
+        """A snapshot's data files as read: the payload schema plus the
+        per-row metadata columns (explicit, so pre-evolution files surface
+        later-added columns as null)."""
+        return T.StructType(list(snap.schema.fields) + META_FIELDS)
+
+    @staticmethod
+    def _with_change_type(df: DataFrame) -> DataFrame:
+        """Changelog rows: the tombstone marker becomes `_change_type`."""
+        is_delete = F.coalesce(F.col(DELETED_COL), F.lit(False))
+        return df.withColumn(
+            "_change_type", F.when(is_delete, F.lit("delete")).otherwise(F.lit("upsert"))
+        ).drop(DELETED_COL)
+
     def _read_raw(
         self,
         spark: SparkSession,
         snap: Snapshot,
         buckets: list[int] | None,
     ) -> DataFrame:
-        read_schema = T.StructType(list(snap.schema.fields) + META_FIELDS)
+        read_schema = self._read_schema(snap)
         files = self._files(snap, buckets)
         if not files:
             return local_frame(spark, read_schema)
@@ -540,16 +608,14 @@ class LakeTable:
             ]
             if not added:
                 continue
-            read_schema = T.StructType(list(snap.schema.fields) + META_FIELDS)
             parts.append(
-                spark.read.schema(read_schema)
+                spark.read.schema(self._read_schema(snap))
                 .parquet(*added)
                 .withColumn("_commit_version", F.lit(v).cast("int"))
             )
         if not parts:
             schema = T.StructType(
-                list(self.snapshot(until).schema.fields)
-                + META_FIELDS
+                list(self._read_schema(self.snapshot(until)).fields)
                 + [T.StructField("_commit_version", T.IntegerType(), False)]
             )
             out = local_frame(spark, schema)
@@ -557,15 +623,7 @@ class LakeTable:
             out = parts[0]
             for p in parts[1:]:
                 out = out.unionByName(p, allowMissingColumns=True)
-        return (
-            out.withColumn(
-                "_change_type",
-                F.when(
-                    F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit("delete")
-                ).otherwise(F.lit("upsert")),
-            )
-            .drop(DELETED_COL)
-        )
+        return self._with_change_type(out)
 
     def stream_changes(
         self,
@@ -577,7 +635,7 @@ class LakeTable:
         upsert/delete the appliers commit, instead of re-diffing snapshots.
 
         Built on Spark's file-streaming source over the segment layout:
-        the `job=*/batch=*/bucket=*` glob picks up the appended change
+        the `job=*/batch=*/__bucket=*` glob picks up the appended change
         segments as they land and NEVER the `compact=*` rewrites, so
         compaction is invisible. The source's processed-file log gives
         exactly-once PER SEGMENT FILE; rows carry `_change_type` and
@@ -598,24 +656,44 @@ class LakeTable:
         Pre-evolution files surface later-added columns as NULL via the
         explicit read schema, which is pinned at stream START: restart
         the stream to pick up newer columns."""
-        read_schema = T.StructType(list(self.snapshot().schema.fields) + META_FIELDS)
-        reader = spark.readStream.schema(read_schema)
+        reader = spark.readStream.schema(self._read_schema(self.snapshot()))
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-        out = reader.parquet(
-            os.path.join(self.root, "data", "job=*", "batch=*", "bucket=*")
-        )
-        return (
-            out.withColumn(
-                "_change_type",
-                F.when(
-                    F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit("delete")
-                ).otherwise(F.lit("upsert")),
-            )
-            .drop(DELETED_COL)
-        )
+        out = reader.parquet(self.data_dir("job=*", "batch=*", f"{BUCKET_COL}=*"))
+        return self._with_change_type(out)
 
     # ---------- commit ----------
+    def _derive(
+        self, src: Snapshot, props: dict[str, Any] | None = None, **fields: Any
+    ) -> Snapshot:
+        """The next version (HEAD + 1) as a child of `src`: `src`'s content,
+        its committed-batch set and its `dataset.*`/`table.*` props (the
+        reference keeps a dataset's description/attrs on the dataset record,
+        not the version, dataset.py:423-424; `table.*` is the write config),
+        then `props` on top (a key mapped to None is removed). Per-commit
+        props such as {"compaction": True}, the tag and the ledger row are
+        not inherited; `fields` sets them and any other field. Callers hold
+        the commit lock."""
+        inherited = {k: v for k, v in src.props.items() if k.startswith(("dataset.", "table."))}
+        for k, v in (props or {}).items():
+            if v is None:
+                inherited.pop(k, None)
+            else:
+                inherited[k] = v
+        base: dict[str, Any] = {
+            "version": self.current_version() + 1,
+            "parent": src.version,
+            "buckets": dict(src.buckets),
+            "watermarks": dict(src.watermarks),
+            "dirty": dict(src.dirty),
+            "tag": None,
+            "ledger": None,
+            "committed": {j: [list(r) for r in rs] for j, rs in src.committed.items()},
+            "props": inherited,
+            "created_at": time.time(),
+        }
+        return dataclasses.replace(src, **{**base, **fields})
+
     def commit(
         self,
         append_bucket_files: dict[int, list[str]] | None = None,
@@ -641,14 +719,15 @@ class LakeTable:
         parent's files. Paths are relative to the table root. Commits are
         serialized under the table's commit lock."""
         with self._commit_lock:
-            parent = self.snapshot()
-            buckets = {b: list(fl) for b, fl in parent.buckets.items()}
-            dirty = dict(parent.dirty)
+            snap = self._derive(self.snapshot(), props=props, tag=tag, ledger=ledger)
+            if schema:
+                snap.schema_json = json.dumps(schema.jsonValue())
+            buckets, dirty = snap.buckets, snap.dirty
             for b, fl in (append_bucket_files or {}).items():
-                existing = buckets.setdefault(b, [])
+                existing = buckets.get(b, [])
                 if existing or b in has_deletes:
                     dirty[b] = True
-                existing.extend(fl)
+                buckets[b] = existing + list(fl)
             for b, fl in (replace_bucket_files or {}).items():
                 if compacted_from is not None and b in compacted_from:
                     eaten = set(compacted_from[b])
@@ -661,39 +740,10 @@ class LakeTable:
                 else:
                     buckets[b] = list(fl)
                     dirty[b] = False
-            watermarks = dict(parent.watermarks)
             for b, lsn in (watermark_updates or {}).items():
-                watermarks[b] = max(lsn, watermarks.get(b, -1))
-            committed = {j: [list(r) for r in rs] for j, rs in parent.committed.items()}
+                snap.watermarks[b] = max(lsn, snap.watermarks.get(b, -1))
             if ledger is not None and "job_id" in ledger and "batch_id" in ledger:
-                _add_committed(committed, str(ledger["job_id"]), int(ledger["batch_id"]))
-            # dataset-level metadata (description/attrs, stored under
-            # `dataset.*` keys; reference dataset.py:423-424 description +
-            # attrs live on the dataset record, not the version) is
-            # INHERITED across commits — a new save/apply/compaction must
-            # not wipe it. Per-commit props (e.g. {"compaction": True})
-            # stay per-commit.
-            merged_props = {
-                k: v
-                for k, v in parent.props.items()
-                if k.startswith(("dataset.", "table."))
-            }
-            merged_props.update(props or {})
-            snap = Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                schema_json=json.dumps(schema.jsonValue()) if schema else parent.schema_json,
-                num_buckets=parent.num_buckets,
-                key_cols=parent.key_cols,
-                buckets=buckets,
-                watermarks=watermarks,
-                dirty=dirty,
-                tag=tag,
-                ledger=ledger,
-                committed=committed,
-                props=merged_props,
-                created_at=time.time(),
-            )
+                _add_committed(snap.committed, str(ledger["job_id"]), int(ledger["batch_id"]))
             self._write_manifest(snap)
             return snap.version
 
@@ -703,65 +753,23 @@ class LakeTable:
         (/root/reference/src/datachain/dataset.py:419-448). Serialized
         under the commit lock like every other commit: a tag racing a
         concurrent apply/async-compaction commit must not both read the
-        same HEAD and claim the same version number."""
+        same HEAD and claim the same version number. Tagging an older
+        version makes its content HEAD again."""
         with self._commit_lock:
-            return self._tag_version_locked(tag, version)
-
-    def _tag_version_locked(self, tag: str, version: int | None = None) -> int:
-        src = self.snapshot(version)
-        snap = Snapshot(
-            version=self.current_version() + 1,
-            parent=src.version,
-            schema_json=src.schema_json,
-            num_buckets=src.num_buckets,
-            key_cols=src.key_cols,
-            buckets=dict(src.buckets),
-            watermarks=dict(src.watermarks),
-            dirty=dict(src.dirty),
-            tag=tag,
-            committed={j: [list(r) for r in rs] for j, rs in src.committed.items()},
-            props={
-                k: v
-                for k, v in src.props.items()
-                if k.startswith(("dataset.", "table."))
-            },
-            created_at=time.time(),
-        )
-        self._write_manifest(snap)
-        return snap.version
+            snap = self._derive(self.snapshot(version), tag=tag)
+            self._write_manifest(snap)
+            return snap.version
 
     def edit_props(self, updates: dict[str, Any]) -> int:
         """Metadata-only commit updating dataset-level props (the storage
         behind edit_dataset — reference catalog.py:1560-1582 update_dataset
         with description/attrs). A key mapped to None is REMOVED; all other
-        `dataset.*` keys are inherited. Serialized under the commit lock so
-        an edit racing an apply/compaction commit cannot clobber a version."""
+        `dataset.*` keys are inherited, and so is HEAD's tag. Serialized
+        under the commit lock so an edit racing an apply/compaction commit
+        cannot clobber a version."""
         with self._commit_lock:
             src = self.snapshot()
-            props = {
-                k: v
-                for k, v in src.props.items()
-                if k.startswith(("dataset.", "table."))
-            }
-            for k, v in updates.items():
-                if v is None:
-                    props.pop(k, None)
-                else:
-                    props[k] = v
-            snap = Snapshot(
-                version=self.current_version() + 1,
-                parent=src.version,
-                schema_json=src.schema_json,
-                num_buckets=src.num_buckets,
-                key_cols=src.key_cols,
-                buckets=dict(src.buckets),
-                watermarks=dict(src.watermarks),
-                dirty=dict(src.dirty),
-                tag=src.tag,
-                committed={j: [list(r) for r in rs] for j, rs in src.committed.items()},
-                props=props,
-                created_at=time.time(),
-            )
+            snap = self._derive(src, props=updates, tag=src.tag)
             self._write_manifest(snap)
             return snap.version
 
@@ -770,7 +778,6 @@ class LakeTable:
         self,
         spark: SparkSession,
         max_segments: int = 8,
-        files_per_bucket: int = 1,
         max_buckets: int | None = None,
         retain_tombstones: bool = True,
         zorder_by: list[str] | None = None,
@@ -816,34 +823,22 @@ class LakeTable:
             snap.key_cols,
             keep_tombstones=retain_tombstones,
         )
-        resolved = resolved.withColumn("bucket", self.bucket_expr())
-        out_dir = self.data_dir(f"compact={snap.version + 1}")
+        resolved = resolved.withColumn(BUCKET_COL, self.bucket_expr())
         # sized from the rewritten files' bytes (write_tasks); a bucket
-        # hashes to exactly one task, so it is still one output file
-        n_parts = write_tasks(max(1, len(todo) * files_per_bucket), input_bytes(raw))
-        out = resolved.repartition(n_parts, "bucket")
+        # hashes to exactly one task, so it is one output file
+        n_parts = write_tasks(len(todo), input_bytes(raw))
+        out = resolved.repartition(n_parts, BUCKET_COL)
         if zorder_by:
             from datachain_spark.operators.zorder import zorder_code
 
             out = (
                 out.withColumn("__z", zorder_code(resolved, zorder_by, stats_df=raw))
-                .sortWithinPartitions("bucket", "__z")
+                .sortWithinPartitions(BUCKET_COL, "__z")
                 .drop("__z")
             )
-        out.write.mode("overwrite").options(**self.parquet_write_options()).partitionBy(
-            "bucket"
-        ).parquet(out_dir)
+        # a bucket whose rows all resolved away keeps no files
         replace: dict[int, list[str]] = {b: [] for b in todo}
-        for entry in os.listdir(out_dir):
-            if not entry.startswith("bucket="):
-                continue
-            b = int(entry.split("=", 1)[1])
-            bdir = os.path.join(out_dir, entry)
-            replace[b] = sorted(
-                os.path.relpath(os.path.join(bdir, f), self.root)
-                for f in os.listdir(bdir)
-                if f.endswith(".parquet")
-            )
+        replace.update(self.write_segment(out, f"compact={snap.version + 1}"))
         # compacted_from = the exact input files this pass resolved: a
         # commit that lands between our snapshot read and this commit may
         # have appended NEW segments to `todo` buckets — those survive as
@@ -858,7 +853,6 @@ class LakeTable:
         self,
         spark: SparkSession,
         max_segments: int = 8,
-        files_per_bucket: int = 1,
         max_buckets: int | None = None,
         retain_tombstones: bool = True,
     ) -> bool:
@@ -884,8 +878,7 @@ class LakeTable:
                 max_workers=1, thread_name_prefix=f"compact-{os.path.basename(self.root)}"
             )
         self._compact_future = self._compact_pool.submit(
-            self.compact, spark, max_segments, files_per_bucket, max_buckets,
-            retain_tombstones,
+            self.compact, spark, max_segments, max_buckets, retain_tombstones
         )
         return True
 
@@ -973,17 +966,17 @@ class LakeTable:
 
     def remove_orphans(self, older_than: float = 3600.0) -> int:
         """Vacuum data files referenced by NO version manifest — the
-        Iceberg `remove_orphan_files` analog. A crash after a segment or
-        compaction write but before its manifest commit leaves a complete
-        `job=*/batch=*` or `compact=*` directory that no snapshot
-        references; `expire_versions` never touches those (it only deletes
-        files referenced by dropped versions), so without this they
+        Iceberg `remove_orphan_files` analog. A crash after a write but
+        before its manifest commit leaves a complete write unit that no
+        snapshot references; `expire_versions` never touches those (it only
+        deletes files referenced by dropped versions), so without this they
         accumulate forever.
 
-        The unit of vacuuming is a WRITE UNIT directory (one
-        `data/job=<j>/batch=<b>` segment dir or one `data/compact=<v>`
-        dir): a unit is orphaned iff no file under it appears in any
-        retained manifest. Units whose newest file is younger than
+        The unit of vacuuming is a WRITE UNIT directory (module docstring:
+        one `data/job=<j>/batch=<b>` segment dir, or any other top-level
+        `data/<unit>` dir such as `compact=<v>`, `save=<v>` or
+        `dedup=<id>`): a unit is orphaned iff no file under it appears in
+        any retained manifest. Units whose newest file is younger than
         `older_than` seconds are kept — they may belong to an in-flight
         write racing this vacuum (same safety window as Iceberg's
         `older_than`). Exception: an uncommitted segment dir that the
@@ -995,13 +988,7 @@ class LakeTable:
         Returns the number of files removed."""
         import shutil
 
-        vs = self.versions()
-        live = {
-            p
-            for v in vs
-            for fl in self.snapshot(v).buckets.values()
-            for p in fl
-        }
+        live = self._referenced(self.versions())
         cutoff = time.time() - older_than
         units: list[str] = []
         data_root = self.data_dir()
@@ -1009,14 +996,14 @@ class LakeTable:
             full = os.path.join(data_root, entry)
             if not os.path.isdir(full):
                 continue
-            if entry.startswith("compact="):
-                units.append(full)
-            elif entry.startswith("job="):
+            if entry.startswith("job="):
                 units.extend(
                     os.path.join(full, b)
                     for b in sorted(os.listdir(full))
                     if os.path.isdir(os.path.join(full, b))
                 )
+            else:
+                units.append(full)
         removed = 0
         for unit in units:
             files = [
@@ -1044,6 +1031,25 @@ class LakeTable:
                     pass
         return removed
 
+    def _referenced(self, versions: list[int]) -> set[str]:
+        """Every data file (table-relative) the given versions list."""
+        return {p for v in versions for fl in self.snapshot(v).buckets.values() for p in fl}
+
+    def _drop_versions(self, drop: list[int]) -> int:
+        """Remove the manifests of `drop` and every data file they list that
+        no other version references. Returns data files removed."""
+        live = self._referenced([v for v in self.versions() if v not in drop])
+        removed = 0
+        for v in drop:
+            for p in self._referenced([v]) - live:
+                fp = os.path.join(self.root, p)
+                if os.path.exists(fp):
+                    os.remove(fp)
+                    removed += 1
+            os.remove(self._manifest_path(v))
+            self._snap_cache.pop(v, None)
+        return removed
+
     def drop_version(self, version: int) -> int:
         """Remove ONE version's manifest plus any data files referenced by
         no surviving version (the reference's delete-a-dataset-version,
@@ -1060,24 +1066,7 @@ class LakeTable:
                 raise ValueError(
                     "cannot drop the only version; use delete_dataset(force=True)"
                 )
-            live = {
-                p
-                for v in vs
-                if v != version
-                for fl in self.snapshot(v).buckets.values()
-                for p in fl
-            }
-            removed = 0
-            for fl in self.snapshot(version).buckets.values():
-                for p in fl:
-                    if p not in live:
-                        fp = os.path.join(self.root, p)
-                        if os.path.exists(fp):
-                            os.remove(fp)
-                            removed += 1
-            os.remove(self._manifest_path(version))
-            self._snap_cache.pop(version, None)
-            return removed
+            return self._drop_versions([version])
 
     def expire_versions(self, keep_last: int = 10) -> int:
         """Vacuum: drop manifests (and data files referenced by no kept
@@ -1085,21 +1074,4 @@ class LakeTable:
         be >= 1 — HEAD (and the files it references) is always retained."""
         if keep_last < 1:
             raise ValueError("expire_versions requires keep_last >= 1 (HEAD must survive)")
-        vs = self.versions()
-        drop = vs[:-keep_last]
-        if not drop:
-            return 0
-        keep = vs[len(drop) :]
-        live = {p for v in keep for fl in self.snapshot(v).buckets.values() for p in fl}
-        removed = 0
-        for v in drop:
-            for fl in self.snapshot(v).buckets.values():
-                for p in fl:
-                    if p not in live:
-                        fp = os.path.join(self.root, p)
-                        if os.path.exists(fp):
-                            os.remove(fp)
-                            removed += 1
-            os.remove(self._manifest_path(v))
-            self._snap_cache.pop(v, None)
-        return removed
+        return self._drop_versions(self.versions()[:-keep_last])

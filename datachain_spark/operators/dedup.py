@@ -565,7 +565,7 @@ def incremental_dedup(
     the lake's exactly-once ledger: replaying a committed batch re-filters
     (idempotent reads) but never double-registers.
     """
-    from datachain_spark.lake.table import LakeTable
+    from datachain_spark.lake.table import BUCKET_COL, LakeTable
 
     spark = new_df.sparkSession
     fp_schema = T.StructType([T.StructField("fp", T.LongType(), False)])
@@ -589,9 +589,7 @@ def incremental_dedup(
     # bucket-pruned registry read: collect() is bounded by num_buckets ints
     touched = [
         r[0]
-        for r in firsts.select(
-            F.pmod("_fp", F.lit(reg.num_buckets)).cast("int").alias("b")
-        )
+        for r in firsts.select(reg.bucket_expr("_fp").alias("b"))
         .distinct()
         .collect()
     ]
@@ -622,28 +620,13 @@ def incremental_dedup(
     if update and not (
         batch_id is not None and reg.batch_committed(job_id, batch_id)
     ):
-        import os
         import uuid
 
-        out_dir = reg.data_dir(f"dedup={uuid.uuid4().hex[:8]}")
-        (
-            survivors.select(F.col("_fp").alias("fp"))
-            .withColumn("__bucket", F.pmod("fp", F.lit(reg.num_buckets)).cast("int"))
-            .repartition("__bucket")
-            .write.partitionBy("__bucket")
-            .mode("overwrite")
-            .parquet(out_dir)
+        fps = survivors.select(F.col("_fp").alias("fp"))
+        appends = reg.write_segment(
+            fps.withColumn(BUCKET_COL, reg.bucket_expr()).repartition(BUCKET_COL),
+            f"dedup={uuid.uuid4().hex[:8]}",
         )
-        appends: dict[int, list[str]] = {}
-        for d in sorted(os.listdir(out_dir)):
-            if not d.startswith("__bucket="):
-                continue
-            b = int(d.split("=")[1])
-            appends[b] = [
-                os.path.relpath(os.path.join(out_dir, d, f), reg.root)
-                for f in sorted(os.listdir(os.path.join(out_dir, d)))
-                if f.endswith(".parquet")
-            ]
         ledger = (
             {"job_id": job_id, "batch_id": int(batch_id)}
             if batch_id is not None

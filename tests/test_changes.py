@@ -13,7 +13,7 @@ from pyspark.sql import types as T
 from datachain_spark.cdc.apply import apply_batch, transcripts_schema_v1
 from datachain_spark.lake.table import LakeTable
 
-from tests.test_round5_fixes import _events_df
+from tests.test_lake_table import _events_df
 
 
 @pytest.fixture()

@@ -177,71 +177,6 @@ def test_jdbc_upsert_lowercase_table(spark, tmp_path):
     assert got == {1: "a", 2: "B!", 3: "c"}
 
 
-# ---------- async compaction ----------
-def test_commit_compacted_from_preserves_concurrent_appends(tmp_path):
-    """The concurrent-append window: a segment committed to a bucket AFTER
-    the compaction read must survive the compaction commit as a residual,
-    and the bucket must stay dirty."""
-    from pyspark.sql import types as T
-
-    from datachain_spark.lake.table import LakeTable
-
-    schema = T.StructType([T.StructField("k", T.StringType(), False)])
-    t = LakeTable.create(str(tmp_path / "t"), schema, key_cols=["k"], num_buckets=4)
-    t.commit(append_bucket_files={0: ["data/s1", "data/s2"]})
-    # compaction reads snapshot here (inputs s1, s2) ... meanwhile:
-    t.commit(append_bucket_files={0: ["data/s3"]})
-    # ... compaction commits its resolved output of s1+s2
-    t.commit(
-        replace_bucket_files={0: ["data/c1"]},
-        compacted_from={0: ["data/s1", "data/s2"]},
-        props={"compaction": True},
-    )
-    snap = t.snapshot()
-    assert snap.buckets[0] == ["data/c1", "data/s3"]  # s3 survived
-    assert snap.dirty[0] is True  # residual still needs LWW resolve
-    # whole-list replace (no residual) turns the bucket clean
-    t.commit(
-        replace_bucket_files={0: ["data/c2"]},
-        compacted_from={0: ["data/c1", "data/s3"]},
-    )
-    snap = t.snapshot()
-    assert snap.buckets[0] == ["data/c2"] and snap.dirty[0] is False
-
-
-def test_async_compaction_replay_matches_oracle(spark, tmp_path):
-    """Forced near-every-batch ASYNC compaction (overlapped with the next
-    apply) must still converge to the exact oracle state, and the drained
-    table must actually have compacted."""
-    from datachain_spark.cdc.apply import replay_feed_dir
-    from datachain_spark.cdc.feed import FeedSpec, write_feed
-    from datachain_spark.cdc.normalize import normalize_text
-    from datachain_spark.cdc.oracle import oracle_replay
-
-    spec = FeedSpec(n_convs=30, hot_every=1000, hot_base=50, batch_size=120)
-    feed = str(tmp_path / "feed")
-    write_feed(spark, spec, feed)
-    table, metrics = replay_feed_dir(
-        spark, str(tmp_path / "t"), feed, num_buckets=8, max_segments=1,
-        compaction="async",
-    )
-    assert any(m.get("compaction_submitted") for m in metrics if "version" in m)
-    got = [
-        (r["conv_id"], r["turn_idx"], r["role"], r["text"], r["tool"])
-        for r in table.read(spark).orderBy("conv_id", "turn_idx").collect()
-    ]
-    exp = [
-        (c, ti, r, normalize_text(x), tool)
-        for (c, ti, r, x, tool) in oracle_replay(spec)
-    ]
-    assert got == exp
-    # drain happened inside replay_feed_dir; compaction really ran
-    assert any(
-        s.props.get("compaction")
-        for s in (table.snapshot(v) for v in table.versions())
-    )
-
-
 # ---------- read_storage with the persistent listing cache ----------
 def test_read_storage_cache_no_rewalk_within_ttl(spark, tmp_path):
     from datachain_spark.sources import storage as st

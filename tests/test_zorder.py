@@ -138,7 +138,7 @@ def test_compact_zorder_by_clusters_buckets(spark, tmp_path):
     one-conversation read skips other conversations' row groups)."""
     from datachain_spark.cdc.apply import apply_batch, transcripts_schema_v1
     from datachain_spark.lake.table import LakeTable
-    from tests.test_round5_fixes import _events_df
+    from tests.test_lake_table import _events_df
 
     root = str(tmp_path / "t")
     table = LakeTable.create(
