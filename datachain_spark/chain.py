@@ -22,7 +22,7 @@ row-wise Python in the relational path. A user of the reference maps:
 `.settings(...)` (reference lib/settings.py) is supported with
 Spark-mapped semantics — see the Settings dataclass: `parallel` sizes
 UDF-stage repartitioning, `namespace`/`project` qualify bare dataset
-names, `batch_size` defaults checkpoint chunking; the dispatcher knobs
+names, `batch_size` sizes checkpoint chunks; the dispatcher knobs
 the reference's multiprocess pool needed (workers/min_task_size/cache)
 are validated but advisory, because Spark executors are the dispatcher.
 """
@@ -43,12 +43,15 @@ from datachain_spark.lake.table import BUCKET_COL, LakeTable
 from datachain_spark.udf import (
     Lifecycle,
     bind_setup,
-    coerce_args,
+    gen_adapter,
     infer_output,
     infer_params,
     input_converters,
     is_model,
+    map_adapter,
+    model_cell,
     model_to_struct,
+    row_runner,
     spark_type_of,
 )
 
@@ -60,35 +63,6 @@ def _output_schema(output: dict[str, Any]) -> T.StructType:
     # (list[float], Optional[str]) or dataclass/NamedTuple models (nested
     # StructType) — see datachain_spark/udf.py
     return T.StructType([T.StructField(k, spark_type_of(v), True) for k, v in output.items()])
-
-
-def _model_cell(v: Any) -> Any:
-    """Model instance -> dict tree (what Arrow expects for struct cells)."""
-    import dataclasses as _dc
-
-    if _dc.is_dataclass(v) and not isinstance(v, type):
-        return {f.name: _model_cell(getattr(v, f.name)) for f in _dc.fields(v)}
-    if isinstance(v, tuple) and hasattr(v, "_fields"):
-        return {n: _model_cell(getattr(v, n)) for n in v._fields}
-    return v
-
-
-def _cell_value(cell: dict, name: str, names: Sequence[str]):
-    """UDF dict-output validation + default fill (reference lib/udf.py:
-    pydantic construction fills declared defaults and raises on fully
-    mismatched output). Missing declared signals fill as NULL — model
-    defaults were already applied at dataclass/NamedTuple construction —
-    but a non-empty dict sharing NO keys with the declared output is a
-    wiring error (typo'd names) and raises with the two key sets, instead
-    of silently storing an all-null row."""
-    if name in cell:
-        return cell[name]
-    if cell and not any(n in cell for n in names):
-        raise ValueError(
-            f"UDF output dict keys {sorted(cell)} match none of the declared "
-            f"output columns {list(names)}"
-        )
-    return None
 
 
 class SettingsError(ValueError):
@@ -109,8 +83,8 @@ class Settings:
       project:    read_dataset() — `settings(namespace="dev",
                   project="etl").save("x")` lands at dev.etl.x
                   (reference Settings.namespace/project).
-    - batch_size: default row-chunk size for checkpointed UDF commits
-                  (the reference's insert batch; our checkpoint_rows).
+    - batch_size: row-chunk size of checkpointed map/gen commits
+                  (the reference's insert batch; default 200,000).
     - cache / prefetch / workers / min_task_size: recorded and validated
       (reference types enforced) but advisory here — executor-local file
       caching and task sizing belong to Spark's scheduler; prefetch depth
@@ -551,12 +525,12 @@ class Chain:
         out._settings = self._settings.merged(**kw)
         return out
 
-    def _udf_input(self) -> DataFrame:
+    def _udf_input(self, df: DataFrame) -> DataFrame:
         """UDF-stage input with settings applied: `parallel=n` sizes the
         Arrow task wave (the reference's worker count) via repartition."""
         if self._settings.parallel:
-            return self.df.repartition(self._settings.parallel)
-        return self.df
+            return df.repartition(self._settings.parallel)
+        return df
 
     # ---------- delta guard (reference delta.py:27-45) ----------
     def as_delta(self, delta_unsafe: bool = False) -> "Chain":
@@ -841,7 +815,6 @@ class Chain:
         params: list[str] | None = None,
         checkpoint: str | None = None,
         checkpoint_on: Sequence[str] | None = None,
-        checkpoint_rows: int | None = None,
         **signal_map: Callable[..., Any],
     ) -> "Chain":
         """1:1 mapper. `fn` is called per row with `params` values (like the
@@ -861,118 +834,24 @@ class Chain:
           (lib/udf.py:241-249).
 
         `checkpoint=dir` enables ROW-LEVEL RESUME (reference
-        query/dataset.py:1221-1360): output is persisted in ~checkpoint_rows
-        committed chunks keyed by a content hash of `checkpoint_on` (default:
-        all input columns); a crashed run reprocesses only rows without
-        committed output. The key identifies a UNIT OF WORK: rows that are
-        duplicates under it are processed once and each receives the single
-        stored output (so `checkpoint_on` must functionally determine the
-        fn's inputs — see checkpoint.py for the 64-bit-collision caveat at
-        multi-billion-row scale). Requires a deterministic fn and upstream.
-        Materializes eagerly; concurrent resumes of one store are refused
-        via a pid lockfile."""
+        query/dataset.py:1221-1360): output is persisted in committed chunks
+        of ~`settings(batch_size=)` rows (default 200,000) keyed by a content
+        hash of `checkpoint_on` (default: all input columns); a crashed run
+        reprocesses only rows without committed output. The key identifies a
+        UNIT OF WORK: rows that are duplicates under it are processed once
+        and each receives the single stored output (so `checkpoint_on` must
+        functionally determine the fn's inputs — see checkpoint.py for the
+        64-bit-collision caveat at multi-billion-row scale). Requires a
+        deterministic fn and upstream. Materializes eagerly; concurrent
+        resumes of one store are refused via an exclusive file lock."""
         default_name = None
         if fn is None:
             if len(signal_map) != 1:
                 raise ValueError("map() needs a function or exactly one name=fn keyword")
             default_name, fn = next(iter(signal_map.items()))
-        fn = bind_setup(fn, self._setup)
-        in_cols = self.df.columns
-        use = params if params is not None else infer_params(fn, in_cols)
-        out_struct = (
-            output
-            if isinstance(output, T.StructType)
-            else _output_schema(output)
-            if output is not None
-            else infer_output(fn, default_name)
-        )
-        out_fields = list(out_struct.fields)
-        # an output signal named like an input column OVERWRITES it (the
-        # reference's signal replacement; pdf[name] = ... below replaces in
-        # place) — the schema must carry the name once, with the OUTPUT type
-        _out_names = {f.name for f in out_fields}
-        out_schema = T.StructType(
-            [f for f in self.df.schema.fields if f.name not in _out_names] + out_fields
-        )
-        expand = len(out_fields) > 1
-        # model-hinted params (file: File, ...) get struct-dict -> object
-        # coercion; None when no param is model-hinted (zero overhead)
-        convs = input_converters(fn, use)
-
-        if checkpoint is not None:
-            from datachain_spark.checkpoint import checkpointed_udf
-
-            names = [f.name for f in out_fields]
-
-            _struct_single = len(out_fields) == 1 and isinstance(
-                out_fields[0].dataType, T.StructType
-            )
-
-            def row_adapter(
-                proc, row, _expand=expand, _names=tuple(names), _struct_out=_struct_single,
-                _convs=convs,
-            ):
-                cell = _model_cell(proc(*coerce_args(_convs, row)))
-                if _expand:
-                    return [
-                        tuple(_cell_value(cell, n, _names) for n in _names)
-                        if isinstance(cell, dict)
-                        else tuple(cell)
-                    ]
-                if isinstance(cell, dict) and not _struct_out:
-                    return [(_cell_value(cell, _names[0], _names),)]
-                return [(cell,)]
-
-            return self._evolve(
-                checkpointed_udf(
-                    self.df,
-                    fn,
-                    row_adapter,
-                    out_struct,
-                    checkpoint,
-                    use,
-                    key_cols=list(checkpoint_on) if checkpoint_on else None,
-                    rows_per_commit=checkpoint_rows or self._settings.batch_size or 200_000,
-                    is_gen=False,
-                )
-            )
-
-        def run(batches):
-            with Lifecycle(fn) as proc:
-                for pdf in batches:
-                    res = [
-                        proc(*coerce_args(convs, row))
-                        for row in pdf[use].itertuples(index=False, name=None)
-                    ]
-                    if expand:
-                        cells = [_model_cell(r) for r in res]
-                        names = [f.name for f in out_fields]
-                        for i, f in enumerate(out_fields):
-                            pdf[f.name] = [
-                                _cell_value(c, f.name, names)
-                                if isinstance(c, dict)
-                                else c[i]
-                                for c in cells
-                            ]
-                    else:
-                        f0 = out_fields[0]
-                        # a dict cell is the VALUE only for a struct-typed
-                        # single output; for a scalar output it's a named-
-                        # signal mapping -> extract/validate by name
-                        take_dict = isinstance(f0.dataType, T.StructType)
-                        cells = [_model_cell(r) for r in res]
-                        pdf[f0.name] = [
-                            c
-                            if take_dict or not isinstance(c, dict)
-                            else _cell_value(c, f0.name, (f0.name,))
-                            for c in cells
-                        ]
-                    # overwritten columns keep their ORIGINAL pandas position;
-                    # reorder to the declared schema (mapInPandas matches by
-                    # position, not name)
-                    yield pdf[[f.name for f in out_schema.fields]]
-
-        return self._evolve(self._udf_input().mapInPandas(run, out_schema))
+        elif signal_map:
+            raise TypeError(f"map() got unexpected keyword arguments {sorted(signal_map)}")
+        return self._row_udf("map", fn, output, params, checkpoint, checkpoint_on, default_name)
 
     def map_batches(self, fn: Callable, output: dict[str, Any] | None = None) -> "Chain":
         """N:N pandas-DataFrame-in/out (reference BatchMapper,
@@ -990,7 +869,7 @@ class Chain:
                 for pdf in batches:
                     yield proc(pdf)
 
-        return self._evolve(self._udf_input().mapInPandas(run, out_schema))
+        return self._evolve(self._udf_input(self.df).mapInPandas(run, out_schema))
 
     def gen(
         self,
@@ -999,7 +878,6 @@ class Chain:
         params: list[str] | None = None,
         checkpoint: str | None = None,
         checkpoint_on: Sequence[str] | None = None,
-        checkpoint_rows: int | None = None,
     ) -> "Chain":
         """1:N generator (reference Generator, lib/udf.py:541-597): `fn`
         yields output tuples (or model instances) per input row; runs over
@@ -1009,33 +887,40 @@ class Chain:
         duplicate-key unit-of-work semantics); input rows whose outputs
         (possibly zero — recorded via an explicit marker) are committed are
         never re-generated."""
+        return self._row_udf("gen", fn, output, params, checkpoint, checkpoint_on)
+
+    def _row_udf(
+        self,
+        kind: str,
+        fn: Any,
+        output: dict[str, Any] | T.StructType | None,
+        params: list[str] | None,
+        checkpoint: str | None,
+        checkpoint_on: Sequence[str] | None,
+        default_name: str | None = None,
+    ) -> "Chain":
+        """The one row path of map (kind "map") and gen (kind "gen"), with
+        or without checkpoint=: both resolve the UDF signature here, and
+        every stage runs the kind's adapter through udf.row_runner over the
+        `parallel`-sized input."""
         import pandas as pd
 
         fn = bind_setup(fn, self._setup)
         use = params if params is not None else infer_params(fn, self.df.columns)
-        out_schema = (
+        out_struct = (
             output
             if isinstance(output, T.StructType)
             else _output_schema(output)
             if output is not None
-            else infer_output(fn)
+            else infer_output(fn, default_name)
         )
-        out_names = [f.name for f in out_schema.fields]
+        # model-hinted params (file: File, ...) get struct-dict -> object
+        # coercion; None when no param is model-hinted (zero overhead)
         convs = input_converters(fn, use)
+        adapter = (map_adapter if kind == "map" else gen_adapter)(out_struct, convs)
 
-        def _gen_cells(proc, row, _names=tuple(out_names), _convs=convs):
-            rows = []
-            for item in proc(*coerce_args(_convs, row)):
-                cell = _model_cell(item)
-                if isinstance(cell, dict):
-                    rows.append(tuple(_cell_value(cell, n, _names) for n in _names))
-                elif isinstance(cell, tuple):
-                    rows.append(cell)
-                elif len(_names) == 1:
-                    rows.append((cell,))
-                else:
-                    rows.append(tuple(cell))
-            return rows
+        def run(df: DataFrame, emit: Callable, schema: T.StructType) -> DataFrame:
+            return self._udf_input(df).mapInPandas(row_runner(fn, adapter, use, emit), schema)
 
         if checkpoint is not None:
             from datachain_spark.checkpoint import checkpointed_udf
@@ -1043,29 +928,38 @@ class Chain:
             return self._evolve(
                 checkpointed_udf(
                     self.df,
-                    fn,
-                    _gen_cells,
-                    out_schema,
+                    run,
+                    out_struct,
                     checkpoint,
                     use,
                     key_cols=list(checkpoint_on) if checkpoint_on else None,
-                    rows_per_commit=checkpoint_rows or self._settings.batch_size or 200_000,
-                    is_gen=True,
+                    rows_per_commit=self._settings.batch_size or 200_000,
+                    is_gen=kind == "gen",
                 )
             )
+        names = out_struct.names
+        if kind == "gen":
 
-        def run(batches):
-            with Lifecycle(fn) as proc:
-                for pdf in batches:
-                    # scalar (non-dict/tuple) yields wrap as 1-tuples inside
-                    # _gen_cells — tuple("hi") would shred a string into
-                    # characters and tuple(5) raises
-                    rows = []
-                    for row in pdf[use].itertuples(index=False, name=None):
-                        rows.extend(_gen_cells(proc, row))
-                    yield pd.DataFrame(rows, columns=out_names)
+            def gen_emit(pdf, outs):
+                return pd.DataFrame([t for o in outs for t in o], columns=names)
 
-        return self._evolve(self._udf_input().mapInPandas(run, out_schema))
+            return self._evolve(run(self.df, gen_emit, out_struct))
+        # an output signal named like an input column OVERWRITES it (the
+        # reference's signal replacement; pdf[name] = ... below replaces in
+        # place) — the schema must carry the name once, with the OUTPUT type
+        out_schema = T.StructType(
+            [f for f in self.df.schema.fields if f.name not in names] + out_struct.fields
+        )
+
+        def map_emit(pdf, outs):
+            for i, name in enumerate(names):
+                pdf[name] = [o[0][i] for o in outs]
+            # overwritten columns keep their ORIGINAL pandas position;
+            # reorder to the declared schema (mapInPandas matches by
+            # position, not name)
+            return pdf[out_schema.names]
+
+        return self._evolve(run(self.df, map_emit, out_schema))
 
     def agg(
         self,
@@ -1416,7 +1310,7 @@ def read_values(spark: SparkSession, **cols: list) -> Chain:
                     T.StructField(n, spark_type_of(type(vals[0])) if vals else T.StringType(), True)
                 )
         schema = T.StructType(fields)
-        rows = [tuple(_model_cell(v) for v in row) for row in zip(*cols.values())]
+        rows = [tuple(model_cell(v) for v in row) for row in zip(*cols.values())]
         return Chain(spark.createDataFrame(rows, schema))
     rows = list(zip(*cols.values()))
     return Chain(spark.createDataFrame(rows, names))

@@ -13,8 +13,8 @@ reference's behavior Spark-first:
 - The remaining work is processed in CHUNKS of ~`rows_per_commit` rows;
   each chunk is one distributed mapInPandas job whose output lands in its
   own `commit=<uuid>` parquet directory — the `_SUCCESS` marker is the
-  atomic commit point, exactly like the CDC segment writes
-  (cdc/apply.py:262-285).
+  atomic commit point, exactly like the lake's segment writes
+  (`LakeTable.segment_files`).
 - A chunk's files carry one row per OUTPUT row plus an explicit
   zero-output marker row per input key that produced nothing (`__n_out=0`)
   — so "processed" is recorded even for silent keys and a gen() that
@@ -48,21 +48,33 @@ is a pmod filter on the same hash, so resume cost is O(remaining), not
 O(done). The keyed input and the remaining set are persist()ed for the
 duration of the chunk loop, so the source is scanned once — not once per
 chunk (500 rescans of a 100M-row input at the default chunk size
-otherwise). A best-effort pid lockfile in the namespace refuses
-concurrent resumes of the same store (two resumers would run the same
-chunks twice; results would still dedupe by key, but the work and the
-commit dirs would not).
+otherwise).
+
+Each chunk job is the caller's own UDF stage (`udf.row_runner`, the same
+Arrow batch loop as the plain map/gen path, with the chunk repartitioned by
+the same `settings(parallel=)`); this module only adds the key and `__n_out`
+columns to its rows.
+
+Concurrent resumes of one store are refused by an exclusive, non-blocking
+`flock` on `<ns>/.resume_lock`, held for the chunk loop (two resumers would
+run the same chunks twice; results would still dedupe by key, but the work
+and the commit dirs would not). The kernel releases the lock when its
+holder exits or dies, so a crash leaves nothing stale behind; the lock is
+per open file, so two threads of one process exclude each other too. A
+fully committed rerun takes no lock. The lock is only as good as the file
+system's `flock` (local disks: exact).
 """
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import hashlib
 import json
 import math
 import os
-import time
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -91,129 +103,46 @@ def _committed_dirs(store_ns: str) -> list[str]:
 
 
 class CheckpointLockedError(RuntimeError):
-    """Another live process is resuming this checkpoint namespace."""
+    """Another resumer holds this checkpoint namespace."""
 
 
-class _NamespaceLock:
-    """Best-effort single-resumer guard: an O_EXCL pid lockfile in the
-    namespace dir. A lock owned by a DEAD pid is stale and taken over
-    (crash-safe); a live owner raises — two concurrent resumers would
-    each run the full chunk schedule (duplicate work + orphan commit
-    dirs, even though reads dedupe by key)."""
-
-    def __init__(self, ns: str):
-        self.path = os.path.join(ns, ".resume_lock")
-        self.held = False
-
-    @staticmethod
-    def _alive(pid: int) -> bool:
+@contextlib.contextmanager
+def _resume_lock(ns: str) -> Iterator[None]:
+    """Single-resumer guard (see the module docstring): an exclusive,
+    non-blocking flock on `<ns>/.resume_lock`. The lock belongs to this
+    open file description, so threads of one process exclude each other.
+    The file is never unlinked — a racer that opened the old inode would
+    then lock a different file than the next opener."""
+    fd = os.open(os.path.join(ns, ".resume_lock"), os.O_RDWR | os.O_CREAT, 0o644)
+    try:
         try:
-            os.kill(pid, 0)
-        except ProcessLookupError:
-            return False
-        except PermissionError:
-            return True  # exists, owned by someone else
-        return True
-
-    def acquire(self) -> None:
-        # claim = os.link(tmp-with-pid, lockfile): atomic AND the lockfile
-        # is never visible without its pid content (an O_EXCL create +
-        # separate write leaves a window where a racer reads an empty file
-        # and mistakes a live lock for stale)
-        tmp = f"{self.path}.pid.{os.getpid()}.{time.time_ns()}"
-        with open(tmp, "w") as fh:
-            fh.write(str(os.getpid()))
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            for _ in range(3):  # retries after stale-lock takeover races
-                try:
-                    os.link(tmp, self.path)
-                    self.held = True
-                    return
-                except FileExistsError:
-                    pass
-                try:
-                    with open(self.path) as fh:
-                        owner = int(fh.read().strip() or "-1")
-                except FileNotFoundError:
-                    continue  # holder released between link and read — retry
-                except (OSError, ValueError):
-                    owner = -1
-                if owner > 0 and self._alive(owner):
-                    raise CheckpointLockedError(
-                        f"checkpoint namespace is being resumed by live pid {owner} "
-                        f"({self.path}); concurrent resumes of one store duplicate work"
-                    ) from None
-                # stale: owner is dead. Take over via rename-aside CAS —
-                # exactly ONE racer's rename succeeds, so no racer can
-                # os.remove() a fresh lock another racer just created
-                # (the unlink-based takeover had exactly that hole).
-                aside = f"{self.path}.stale.{os.getpid()}.{time.time_ns()}"
-                try:
-                    os.rename(self.path, aside)
-                except FileNotFoundError:
-                    continue  # lost the CAS — retry against the new holder
-                # the rename applies to whatever file is there NOW, which
-                # may be a FRESH lock claimed since we read the dead owner
-                # (observed as a flaky two-holders test): re-verify the
-                # renamed file. A live pid means we stole a live lock —
-                # restore it by link (same inode, holder unaffected) and
-                # refuse. Residual window: a third contender claiming
-                # between our rename and the restore link orphans the
-                # restored holder — three live racers inside microseconds,
-                # accepted for a best-effort guard (documented).
-                try:
-                    with open(aside) as fh:
-                        owner2 = int(fh.read().strip() or "-1")
-                except (OSError, ValueError):
-                    owner2 = -1
-                if owner2 > 0 and owner2 != os.getpid() and self._alive(owner2):
-                    try:
-                        os.link(aside, self.path)
-                    except FileExistsError:
-                        pass
-                    os.remove(aside)
-                    raise CheckpointLockedError(
-                        f"checkpoint namespace is being resumed by live pid "
-                        f"{owner2} ({self.path}); lost the takeover race"
-                    ) from None
-                os.remove(aside)
-            raise CheckpointLockedError(f"could not acquire {self.path}")
-        finally:
-            try:
-                os.remove(tmp)
-            except FileNotFoundError:  # pragma: no cover
-                pass
-
-    def release(self) -> None:
-        if self.held:
-            try:
-                os.remove(self.path)
-            except FileNotFoundError:
-                pass
-            self.held = False
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            raise CheckpointLockedError(
+                f"checkpoint namespace {ns} is being resumed by another process "
+                "or thread; concurrent resumes of one store duplicate work"
+            ) from None
+        yield
+    finally:
+        os.close(fd)  # releases the lock
 
 
 def checkpointed_udf(
     df: DataFrame,
-    fn: Callable,
-    row_adapter: Callable,
+    run: Callable,
     out_struct: T.StructType,
     store: str,
     use: list[str],
-    key_cols: list[str] | None = None,
-    rows_per_commit: int = 200_000,
-    is_gen: bool = False,
+    key_cols: list[str] | None,
+    rows_per_commit: int,
+    is_gen: bool,
 ) -> DataFrame:
     """Run a per-row UDF with row-level resume; returns the output rows
     (map: out columns appended to the input via a KEY join; gen: out
-    columns only). `fn` is the user callable/Mapper (setup()/teardown()
-    honored once per worker via Lifecycle); `row_adapter(proc, row_tuple)
-    -> list[tuple]` yields the schema-ordered output tuples for one row."""
+    columns only). `run(df, emit, schema) -> DataFrame` is the caller's
+    UDF stage (udf.row_runner over its sized input); `emit(pdf, outs)`
+    here shapes each batch's per-row output tuples into keyed store rows."""
     import pandas as pd
-
-    from datachain_spark.udf import Lifecycle
 
     spark = df.sparkSession
     keys = list(key_cols) if key_cols else list(df.columns)
@@ -226,7 +155,14 @@ def checkpointed_udf(
         + [T.StructField(f.name, f.dataType, True) for f in out_struct.fields]
         + [T.StructField(NOUT_COL, T.IntegerType(), False)]
     )
-    out_names = [f.name for f in out_struct.fields]
+    nulls = (None,) * len(out_struct.fields)
+
+    def emit(pdf, outs):
+        rows = []
+        for key, out in zip(pdf[KEY_COL].tolist(), outs):
+            # no output -> an explicit zero-output marker: the key is DONE
+            rows.extend([(key, *o, len(out)) for o in out] or [(key, *nulls, 0)])
+        return pd.DataFrame(rows, columns=store_schema.names)
 
     def load_store() -> DataFrame:
         dirs = _committed_dirs(ns)
@@ -243,7 +179,15 @@ def checkpointed_udf(
     # the count below materializes the cache and decides the chunking
     remaining = remaining.persist()
     try:
-        _run_chunks(remaining, fn, row_adapter, out_struct, ns, use, rows_per_commit)
+        n_remaining = remaining.count()
+        if n_remaining:  # a fully committed resume takes no lock
+            n_chunks = max(1, math.ceil(n_remaining / rows_per_commit))
+            with _resume_lock(ns):
+                for i in range(n_chunks):
+                    chunk = remaining.filter(F.pmod(F.col(KEY_COL), F.lit(n_chunks)) == i)
+                    commit_dir = os.path.join(ns, f"commit={uuid.uuid4().hex[:12]}")
+                    # parquet job commit (_SUCCESS) is the atomic checkpoint point
+                    run(chunk, emit, store_schema).write.mode("overwrite").parquet(commit_dir)
     finally:
         # unpersist on EVERY exit — a CheckpointLockedError or a failed
         # chunk job must not leak the cached DataFrame for the session
@@ -262,67 +206,5 @@ def checkpointed_udf(
     produced = produced.dropDuplicates([KEY_COL])
     # output columns overwrite same-named input columns (matching the
     # non-checkpoint mapInPandas path, where pdf[name] = ... replaces)
-    collide = [c for c in keyed.columns if c != KEY_COL and c in set(out_names)]
+    collide = [c for c in keyed.columns if c != KEY_COL and c in set(out_struct.names)]
     return keyed.drop(*collide).join(produced, KEY_COL, "inner").drop(KEY_COL)
-
-
-def _run_chunks(
-    remaining: DataFrame,
-    fn: Callable,
-    row_adapter: Callable,
-    out_struct: T.StructType,
-    ns: str,
-    use: list[str],
-    rows_per_commit: int,
-) -> None:
-    """The locked chunk loop: count the remainder, acquire the namespace
-    lock, run one mapInPandas commit job per chunk."""
-    import pandas as pd
-
-    from datachain_spark.udf import Lifecycle
-
-    out_names = [f.name for f in out_struct.fields]
-    store_schema = T.StructType(
-        [T.StructField(KEY_COL, T.LongType(), False)]
-        + [T.StructField(f.name, f.dataType, True) for f in out_struct.fields]
-        + [T.StructField(NOUT_COL, T.IntegerType(), False)]
-    )
-    n_remaining = remaining.count()
-    lock = _NamespaceLock(ns)
-    if n_remaining:
-        lock.acquire()
-        n_chunks = max(1, math.ceil(n_remaining / rows_per_commit))
-
-        def make_runner():
-            def run(batches):
-                with Lifecycle(fn) as proc:
-                    for pdf in batches:
-                        rows = []
-                        key_vals = pdf[KEY_COL]
-                        for i, row in enumerate(
-                            pdf[use].itertuples(index=False, name=None)
-                        ):
-                            outs = row_adapter(proc, row)
-                            if outs:
-                                for o in outs:
-                                    rows.append((int(key_vals.iloc[i]), *o, len(outs)))
-                            else:
-                                # explicit zero-output marker: the key is DONE
-                                rows.append(
-                                    (int(key_vals.iloc[i]), *([None] * len(out_names)), 0)
-                                )
-                        yield pd.DataFrame(
-                            rows, columns=[KEY_COL, *out_names, NOUT_COL]
-                        )
-
-            return run
-
-        try:
-            for i in range(n_chunks):
-                chunk = remaining.filter(F.pmod(F.col(KEY_COL), F.lit(n_chunks)) == i)
-                out_rows = chunk.mapInPandas(make_runner(), store_schema)
-                commit_dir = os.path.join(ns, f"commit={uuid.uuid4().hex[:12]}")
-                # parquet job commit (_SUCCESS) is the atomic checkpoint point
-                out_rows.write.mode("overwrite").parquet(commit_dir)
-        finally:
-            lock.release()

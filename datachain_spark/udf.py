@@ -22,6 +22,9 @@ gives worker-lifetime resources setup()/teardown() hooks on its UDF classes
   setup/teardown) so map/gen/agg can run setup once per executor-python
   worker before the first batch and teardown after the last — not per
   row, not per batch.
+- `map_adapter`/`gen_adapter` turn a UDF's return value into output
+  tuples and `row_runner` is the one Arrow batch loop around them, shared
+  by map and gen with and without `checkpoint=`.
 """
 
 from __future__ import annotations
@@ -287,6 +290,92 @@ class Lifecycle:
         teardown = getattr(self.fn, "teardown", None)
         if callable(teardown):
             teardown()
+
+
+def model_cell(v: Any) -> Any:
+    """Model instance -> dict tree (what Arrow expects for struct cells)."""
+    if dataclasses.is_dataclass(v) and not isinstance(v, type):
+        return {f.name: model_cell(getattr(v, f.name)) for f in dataclasses.fields(v)}
+    if isinstance(v, tuple) and hasattr(v, "_fields"):
+        return {n: model_cell(getattr(v, n)) for n in v._fields}
+    return v
+
+
+def _cell_value(cell: dict, name: str, names: tuple[str, ...]) -> Any:
+    """UDF dict-output validation + default fill (reference lib/udf.py:
+    pydantic construction fills declared defaults and raises on fully
+    mismatched output). Missing declared signals fill as NULL — model
+    defaults were already applied at dataclass/NamedTuple construction —
+    but a non-empty dict sharing NO keys with the declared output is a
+    wiring error (typo'd names) and raises with the two key sets, instead
+    of silently storing an all-null row."""
+    if name in cell:
+        return cell[name]
+    if cell and not any(n in cell for n in names):
+        raise ValueError(
+            f"UDF output dict keys {sorted(cell)} match none of the declared "
+            f"output columns {list(names)}"
+        )
+    return None
+
+
+# ---------- the one row path of map/gen, with or without checkpoint= ----------
+# An adapter turns one input row into its schema-ordered output tuples:
+# `(proc, row) -> list[tuple]`; row_runner drives it over Arrow batches and
+# hands each batch's per-row results to an `emit(pdf, outs) -> pdf` that
+# shapes the frame (map columns, gen rows, or checkpoint-keyed rows).
+
+
+def map_adapter(out_struct: T.StructType, convs: list | None) -> Callable:
+    """1:1 adapter: exactly one output tuple per row."""
+    names = tuple(out_struct.names)
+    expand = len(names) > 1
+    # a dict cell is the VALUE only for a struct-typed single output; for a
+    # scalar output it's a named-signal mapping -> extract/validate by name
+    whole = not expand and isinstance(out_struct.fields[0].dataType, T.StructType)
+
+    def adapt(proc: Callable, row: tuple) -> list[tuple]:
+        cell = model_cell(proc(*coerce_args(convs, row)))
+        if isinstance(cell, dict) and not whole:
+            return [tuple(_cell_value(cell, n, names) for n in names)]
+        return [tuple(cell) if expand else (cell,)]
+
+    return adapt
+
+
+def gen_adapter(out_struct: T.StructType, convs: list | None) -> Callable:
+    """1:N adapter: one output tuple per yielded item (possibly none)."""
+    names = tuple(out_struct.names)
+
+    def adapt(proc: Callable, row: tuple) -> list[tuple]:
+        rows = []
+        for item in proc(*coerce_args(convs, row)):
+            cell = model_cell(item)
+            if isinstance(cell, dict):
+                rows.append(tuple(_cell_value(cell, n, names) for n in names))
+            elif isinstance(cell, tuple):
+                rows.append(cell)
+            elif len(names) == 1:
+                # tuple("hi") would shred a string into characters
+                rows.append((cell,))
+            else:
+                rows.append(tuple(cell))
+        return rows
+
+    return adapt
+
+
+def row_runner(fn: Any, adapter: Callable, use: list[str], emit: Callable) -> Callable:
+    """The mapInPandas function of every map/gen stage: setup()/teardown()
+    once per worker, the adapter per row, `emit` per batch."""
+
+    def run(batches):
+        with Lifecycle(fn) as proc:
+            for pdf in batches:
+                rows = pdf[use].itertuples(index=False, name=None)
+                yield emit(pdf, [adapter(proc, row) for row in rows])
+
+    return run
 
 
 class AbstractUDF:

@@ -48,12 +48,11 @@ print(f"after decontamination: {clean.count()}")
 def featurize(doc_id, text):
     return float(len(text.split()))  # stand-in for a slow model call
 
-final = Chain(clean).map(
+final = Chain(clean).settings(batch_size=200).map(
     featurize,
     output={"feat": float},
     params=["doc_id", "text"],
     checkpoint=str(work / "ckpt"),
-    checkpoint_rows=200,
 )
 print(f"curated + featurized: {final.count()} docs -> {work}")
 final.to_parquet(str(work / "curated"))

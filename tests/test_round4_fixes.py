@@ -1,113 +1,12 @@
-"""Round-4 fixes (ADVICE.md): checkpoint duplicate-key inflation, output
-column overwrite under checkpoint, concurrent-resume lock, unicode
-whitespace in the codegen normalizer, lower-case JDBC staging names."""
+"""Round-4 fixes (ADVICE.md): unicode whitespace in the codegen
+normalizer, lower-case JDBC staging names. The checkpoint duplicate-key,
+output-overwrite and resume-lock tests live in test_checkpoint_resume.py."""
 
 from __future__ import annotations
 
 import os
-import subprocess
-import sys
 
-import pytest
 from pyspark.sql import functions as F
-
-from datachain_spark import chain as dc
-from datachain_spark.checkpoint import CheckpointLockedError, _NamespaceLock
-
-
-# ---------- checkpointed map: duplicates under the key ----------
-def test_checkpoint_map_duplicate_rows_stay_1_to_1(spark, tmp_path):
-    # the ADVICE repro: ids [1,1,2] through plain map -> 3 rows; the
-    # pre-fix checkpoint path produced 5 (quadratic join inflation)
-    ch = dc.read_values(spark, id=[1, 1, 2])
-    store = str(tmp_path / "ckpt")
-
-    def f(id):
-        return id + 1
-
-    plain = ch.map(f, output={"out": int}, params=["id"])
-    ck = ch.map(f, output={"out": int}, params=["id"], checkpoint=store)
-    assert sorted(plain.to_values("out")) == [2, 2, 3]
-    assert sorted(ck.to_values("out")) == [2, 2, 3]
-    # and resume over the same store stays stable (no further inflation)
-    ck2 = ch.map(f, output={"out": int}, params=["id"], checkpoint=store)
-    assert sorted(ck2.to_values("out")) == [2, 2, 3]
-
-
-def test_checkpoint_gen_duplicate_keys_processed_once(spark, tmp_path):
-    # key semantics: duplicate-keyed rows are ONE unit of work for gen
-    ch = dc.read_values(spark, id=[1, 1, 2])
-    store = str(tmp_path / "ckpt")
-
-    def g(id):
-        yield (id * 10,)
-        yield (id * 10 + 1,)
-
-    out = ch.gen(g, output={"g": int}, params=["id"], checkpoint=store)
-    assert sorted(out.to_values("g")) == [10, 11, 20, 21]
-
-
-# ---------- checkpointed map: output column overwrites input ----------
-def test_checkpoint_map_output_overwrites_input_column(spark, tmp_path):
-    ch = dc.read_values(spark, id=[1, 2, 3], v=[1.0, 2.0, 3.0])
-    store = str(tmp_path / "ckpt")
-
-    def bump(v):
-        return float(v) * 10
-
-    plain = ch.map(bump, output={"v": float}, params=["v"])
-    ck = ch.map(bump, output={"v": float}, params=["v"], checkpoint=store)
-    assert sorted(plain.to_values("v")) == [10.0, 20.0, 30.0]
-    assert ck.df.columns.count("v") == 1  # no ambiguous duplicate column
-    assert sorted(ck.to_values("v")) == [10.0, 20.0, 30.0]
-
-
-# ---------- concurrent-resume lock ----------
-def test_checkpoint_concurrent_resume_refused_and_stale_takeover(spark, tmp_path):
-    ch = dc.read_values(spark, id=[1, 2, 3])
-    store = str(tmp_path / "ckpt")
-
-    def f(id):
-        return id + 1
-
-    # pre-compute the namespace by running once (also commits everything)
-    ch.map(f, output={"out": int}, params=["id"], checkpoint=store)
-    ns = os.path.join(store, os.listdir(store)[0])
-
-    # a LIVE process holds the lock -> a fresh (uncommitted) resume refuses
-    holder = subprocess.Popen([sys.executable, "-c", "import time; time.sleep(120)"])
-    try:
-        with open(os.path.join(ns, ".resume_lock"), "w") as fh:
-            fh.write(str(holder.pid))
-        # same store+schema but remaining work: new input rows
-        ch2 = dc.read_values(spark, id=[7, 8])
-        with pytest.raises(CheckpointLockedError):
-            ch2.map(f, output={"out": int}, params=["id"], checkpoint=store).count()
-        # fully-committed inputs never need the lock (read-only resume)
-        again = ch.map(f, output={"out": int}, params=["id"], checkpoint=store)
-        assert sorted(again.to_values("out")) == [2, 3, 4]
-    finally:
-        holder.kill()
-        holder.wait()
-
-    # the owner is DEAD now -> stale lock is taken over and work proceeds
-    out = dc.read_values(spark, id=[7, 8]).map(
-        f, output={"out": int}, params=["id"], checkpoint=store
-    )
-    assert sorted(out.to_values("out")) == [8, 9]
-    assert not os.path.exists(os.path.join(ns, ".resume_lock"))  # released
-
-
-def test_namespace_lock_unit(tmp_path):
-    ns = str(tmp_path)
-    a = _NamespaceLock(ns)
-    a.acquire()
-    b = _NamespaceLock(ns)
-    with pytest.raises(CheckpointLockedError):
-        b.acquire()
-    a.release()
-    b.acquire()  # free after release
-    b.release()
 
 
 # ---------- codegen normalizer: unicode whitespace parity ----------

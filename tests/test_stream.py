@@ -12,6 +12,7 @@ from datachain_spark.cdc.feed import FeedSpec, write_feed
 from datachain_spark.cdc.normalize import normalize_text
 from datachain_spark.cdc.oracle import oracle_replay
 from datachain_spark.cdc.stream import run_stream
+from datachain_spark.lake.table import LakeTable
 
 SPEC = FeedSpec(n_convs=30, hot_every=1000, hot_base=50, batch_size=120)
 
@@ -161,3 +162,35 @@ def test_ledger_df_schema_and_listener(spark, feed_dir, tmp_path):
     # the Spark listener attached progress for applied epochs
     applied = [m for m in metrics if "version" in m]
     assert any(m.get("spark_progress") for m in applied)
+
+
+# ---------- run_stream drain errors surface on a live session ----------
+def test_session_stopped_probe(spark):
+    from datachain_spark.cdc.stream import _session_stopped
+
+    assert _session_stopped(spark) is False
+
+
+def test_drain_compaction_error_propagates_from_run_stream(spark, tmp_path):
+    """A genuine async-compaction failure at end-of-stream must raise, not
+    vanish into the injected-crash suppression path."""
+    feed = str(tmp_path / "feed")
+    write_feed(spark, FeedSpec(n_convs=6, batch_size=50), feed)
+
+    orig = LakeTable.drain_compaction
+
+    def boom(self):
+        raise RuntimeError("injected genuine compaction failure")
+
+    LakeTable.drain_compaction = boom
+    try:
+        with pytest.raises(RuntimeError, match="genuine compaction failure"):
+            run_stream(
+                spark,
+                str(tmp_path / "t"),
+                feed,
+                str(tmp_path / "ck"),
+                num_buckets=4,
+            )
+    finally:
+        LakeTable.drain_compaction = orig
