@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datachain_spark.cdc.normalize import normalize_text_expr, normalize_text_udf
+from datachain_spark.cdc.normalize import normalize_text_expr
 from datachain_spark.frames import input_bytes
 from datachain_spark.lake.table import BUCKET_COL, DELETED_COL, LSN_COL, LakeTable, write_tasks
 
@@ -211,7 +211,7 @@ def apply_batch(
     batch_id: int,
     files_per_bucket: int = 1,
     max_segments: int = 8,
-    normalize: bool | str = True,
+    normalize: bool = True,
     lsn_ordered: bool = False,
     compaction: str = "inline",
 ) -> dict[str, Any]:
@@ -337,17 +337,12 @@ def apply_batch(
         .filter(F.col("_keep"))
         .drop("_keep")
     )
-    # normalize=True/'expr': whitespace canonicalization (unicode-aware via
-    # the (?U) regex flag — identical collapse/strip semantics to
-    # normalize_text) fused into the post-dedup projection as a codegen
-    # expression, zero Python in the hot path. Sole divergence: no unicode
-    # NFC composition — normalize='arrow' is the vectorized pandas-UDF path
-    # WITH NFC, for feeds ingesting non-NFC-composed text.
+    # normalize: whitespace canonicalization (unicode-aware via the (?U)
+    # regex flag — identical collapse/strip semantics to normalize_text)
+    # fused into the post-dedup projection as a codegen expression, zero
+    # Python in the hot path. Sole divergence: no unicode NFC composition.
     if normalize and "text" in dedup.columns:
-        if normalize == "arrow":
-            dedup = dedup.withColumn("text", normalize_text_udf(F.col("text")))
-        else:
-            dedup = dedup.withColumn("text", normalize_text_expr(F.col("text")))
+        dedup = dedup.withColumn("text", normalize_text_expr(F.col("text")))
 
     # ---- merge-on-read segment: after-images + delete tombstones ----
     # target columns absent from this batch (e.g. a replayed pre-evolution
@@ -478,7 +473,6 @@ def replay_feed_dir(
     job_id: str = "replay",
     num_buckets: int = 32,
     upto_batch: int | None = None,
-    normalize: bool = True,
     max_segments: int = 8,
     compaction: str = "async",
 ) -> tuple[LakeTable, list[dict[str, Any]]]:
@@ -510,7 +504,6 @@ def replay_feed_dir(
                 events,
                 job_id,
                 batch_id,
-                normalize=normalize,
                 lsn_ordered=True,
                 max_segments=max_segments,
                 compaction=compaction,

@@ -1,10 +1,10 @@
-"""Vectorized text normalization — the Arrow-UDF stage of the CDC pipeline.
+"""Text normalization of the CDC pipeline: whitespace collapse + strip.
 
 Replaces the reference's row-at-a-time Python mappers
-(/root/reference/src/datachain/lib/udf.py:435-477) with a pandas UDF over
-Arrow batches: unicode NFC + whitespace collapse + strip. The scalar
-`normalize_text` is the single source of truth; the pytest oracle applies
-the same function, so engine and oracle agree by construction.
+(/root/reference/src/datachain/lib/udf.py:435-477) with one Catalyst
+expression, `normalize_text_expr`, fused into the apply's post-dedup
+projection. The scalar `normalize_text` (unicode NFC + whitespace collapse
++ strip) is its specification and the tests' oracle.
 """
 
 from __future__ import annotations
@@ -12,9 +12,7 @@ from __future__ import annotations
 import re
 import unicodedata
 
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 _WS = re.compile(r"\s+")
 
@@ -23,21 +21,6 @@ def normalize_text(s: str | None) -> str | None:
     if s is None:
         return None
     return _WS.sub(" ", unicodedata.normalize("NFC", s)).strip()
-
-
-def normalize_series(s: pd.Series) -> pd.Series:
-    """Vectorized batch normalization (shared by the pandas UDF and the
-    mapInPandas segment transform)."""
-    return (
-        s.map(lambda x: unicodedata.normalize("NFC", x), na_action="ignore")
-        .str.replace(_WS, " ", regex=True)
-        .str.strip()
-    )
-
-
-@F.pandas_udf(StringType())
-def normalize_text_udf(s: pd.Series) -> pd.Series:
-    return normalize_series(s)
 
 
 def normalize_text_expr(col):
@@ -51,11 +34,9 @@ def normalize_text_expr(col):
     removes — so strip parity holds too). The ONE remaining divergence
     from `normalize_text` is unicode NFC composition, which has no
     Catalyst expression: text that is not already NFC-composed stores
-    byte-different (canonically-equivalent) forms under this path —
-    pass `normalize='arrow'` to apply_batch for the full pandas-UDF path
-    with NFC. Measured: the Arrow stage was ~40% of the CDC apply stage
-    time and scaled worse across cores than codegen, hence codegen is the
-    default and NFC is the opt-in.
+    byte-different (canonically-equivalent) forms under this path.
+    Measured: a pandas-UDF stage with NFC was ~40% of the CDC apply stage
+    time and scaled worse across cores than codegen, so it was dropped.
 
     r6 fast path: the `(?U)\s+` replace was the single largest consumer of
     the CDC reduce stage (~7us/row — java.util.regex calls

@@ -16,6 +16,7 @@ source-agnostic.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 from typing import Any, Callable
@@ -26,17 +27,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from datachain_spark.cdc.apply import apply_batch, open_transcripts_table
 from datachain_spark.lake.table import LakeTable
-
-
-def _session_stopped(spark: SparkSession) -> bool:
-    """Best-effort 'is this session already torn down?' probe (used to
-    decide whether an end-of-stream compaction error is a real failure or
-    fallout of an injected mid-epoch stop)."""
-    try:
-        sc = spark.sparkContext
-        return sc._jsc is None or sc._jsc.sc().isStopped()
-    except Exception:
-        return True
 
 
 def event_stream_schema() -> T.StructType:
@@ -89,7 +79,6 @@ def tail_stream(
     num_buckets: int = 32,
     max_files_per_trigger: int = 4,
     interval: str = "500 milliseconds",
-    normalize: bool = True,
 ):
     """CONTINUOUS tailing: a processing-time-triggered stream that keeps
     following the feed directory as new binlog segments land (run_stream
@@ -107,7 +96,7 @@ def tail_stream(
         # table.drain_compaction() for a quiescent table
         m = apply_batch(
             batch_df.sparkSession, table, batch_df, job_id=job_id, batch_id=epoch_id,
-            normalize=normalize, compaction="async",
+            compaction="async",
         )
         m["epoch_id"] = epoch_id
         metrics.append(m)
@@ -126,20 +115,14 @@ def run_stream(
     job_id: str = "stream",
     num_buckets: int = 32,
     max_files_per_trigger: int = 1,
-    normalize: bool = True,
-    fail_before_epoch: int | None = None,
-    on_batch: Callable[[int, dict], None] | None = None,
 ) -> tuple[LakeTable, list[dict[str, Any]]]:
     """Run the feed to exhaustion (Trigger.AvailableNow). Returns the table
-    and per-microbatch metrics. `fail_before_epoch` injects a crash before
-    that epoch's merge commits — the resume test's kill switch."""
+    and per-microbatch metrics."""
     table = open_transcripts_table(table_root, num_buckets)
 
     metrics: list[dict[str, Any]] = []
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if fail_before_epoch is not None and epoch_id >= fail_before_epoch:
-            raise RuntimeError(f"injected crash before epoch {epoch_id}")
         t0 = time.monotonic()
         m = apply_batch(
             batch_df.sparkSession,
@@ -147,14 +130,11 @@ def run_stream(
             batch_df,
             job_id=job_id,
             batch_id=epoch_id,
-            normalize=normalize,
             compaction="async",
         )
         m["epoch_id"] = epoch_id
         m["seconds"] = time.monotonic() - t0
         metrics.append(m)
-        if on_batch:
-            on_batch(epoch_id, m)
 
     # StreamingQueryListener: Spark's own per-microbatch progress
     # (input rows, durations) — the engine-side complement of the
@@ -189,20 +169,19 @@ def run_stream(
         _start_feed_stream(
             spark, feed_dir, checkpoint_dir, max_files_per_trigger, handle, availableNow=True
         ).awaitTermination()
+    except BaseException:
+        # the stream failed: still wait out any in-flight async compaction,
+        # but report the stream's own error — a drain error (often fallout
+        # of the same failure) must not replace it
+        with contextlib.suppress(Exception):
+            table.drain_compaction()
+        raise
     finally:
         spark.streams.removeListener(listener)
-        # the feed is exhausted: wait out any in-flight async compaction so
-        # the returned table is quiescent (crash paths surface here too)
-        try:
-            table.drain_compaction()
-        except RuntimeError:
-            # suppress ONLY when the session itself is already stopped
-            # (injected-crash tests stop it mid-epoch, aborting the
-            # in-flight compaction job) — a genuine compaction failure on
-            # a live session must surface, not leave the table silently
-            # uncompacted
-            if not _session_stopped(spark):
-                raise
+    # the feed is exhausted: wait out any in-flight async compaction so the
+    # returned table is quiescent; a compaction failure here must surface,
+    # not leave the table silently uncompacted
+    table.drain_compaction()
     for m in metrics:
         m.setdefault("spark_progress", None)
     for p in progress:

@@ -22,9 +22,10 @@ row-wise Python in the relational path. A user of the reference maps:
 `.settings(...)` (reference lib/settings.py) is supported with
 Spark-mapped semantics — see the Settings dataclass: `parallel` sizes
 UDF-stage repartitioning, `namespace`/`project` qualify bare dataset
-names, `batch_size` sizes checkpoint chunks; the dispatcher knobs
-the reference's multiprocess pool needed (workers/min_task_size/cache)
-are validated but advisory, because Spark executors are the dispatcher.
+names, `batch_size` sizes checkpoint chunks. The knobs the reference's
+multiprocess pool needed (worker count, task size, cache, prefetch) are
+not settings here, because Spark executors are the dispatcher; passing
+one raises SettingsError.
 """
 
 from __future__ import annotations
@@ -85,29 +86,21 @@ class Settings:
                   (reference Settings.namespace/project).
     - batch_size: row-chunk size of checkpointed map/gen commits
                   (the reference's insert batch; default 200,000).
-    - cache / prefetch / workers / min_task_size: recorded and validated
-      (reference types enforced) but advisory here — executor-local file
-      caching and task sizing belong to Spark's scheduler; prefetch depth
-      is honored by sources/storage.prefetch_files when the caller wires
-      file fetching explicitly.
+
+    The reference's dispatcher knobs (worker count, task size, cache,
+    prefetch) are not settings: executor-local caching and task sizing
+    belong to Spark's scheduler, and file prefetch is
+    sources/storage.prefetch_files.
     """
 
-    cache: bool | None = None
-    prefetch: int | None = None
     parallel: int | None = None
-    workers: int | None = None
     namespace: str | None = None
     project: str | None = None
-    min_task_size: int | None = None
     batch_size: int | None = None
 
     def __post_init__(self) -> None:
         for fld, typ in (
-            ("cache", bool),
-            ("prefetch", int),
             ("parallel", int),
-            ("workers", int),
-            ("min_task_size", int),
             ("batch_size", int),
         ):
             v = getattr(self, fld)
@@ -518,9 +511,9 @@ class Chain:
 
     def settings(self, **kw) -> "Chain":
         """Attach execution settings (reference datachain.py .settings(),
-        lib/settings.py): cache, prefetch, parallel, workers, namespace,
-        project, min_task_size, batch_size — see Settings for how each
-        maps onto Spark. Settings propagate through every downstream op."""
+        lib/settings.py): parallel, namespace, project, batch_size — see
+        Settings for how each maps onto Spark; any other name raises
+        SettingsError. Settings propagate through every downstream op."""
         out = self._evolve(self.df)
         out._settings = self._settings.merged(**kw)
         return out

@@ -7,7 +7,8 @@ against the version last consumed, (2) re-apply the chain's transform to
 the diff (plus retry rows), (3) keep previous-result rows whose keys are
 not superseded and union the recomputed rows, (4) short-circuit when the
 diff is empty. Deletes are NOT propagated by the reference (delta.py:123);
-`propagate_deletes=True` extends it per the north rule.
+here a key deleted from the source is deleted from the result, per the
+north rule.
 
 Here versions are LakeTable snapshots; the transform is any
 DataFrame -> DataFrame function (Catalyst plan, not a Step list).
@@ -32,7 +33,6 @@ def delta_update(
     on: Sequence[str],
     compare: Sequence[str] | None = None,
     retry_predicate: F.Column | None = None,
-    propagate_deletes: bool = True,
 ) -> int | None:
     """Incrementally bring `result` up to date with `source`'s latest
     snapshot. Returns the new result version, or None when there was no
@@ -48,11 +48,8 @@ def delta_update(
     # version) pairs it was derived from (the reference resolves the
     # last-consumed source version through recorded dataset dependencies,
     # delta.py:188-237 + catalog.get_dataset_dependencies) — multi-input
-    # chains each find their own entry. `source_version` is kept as a
-    # legacy single-source alias.
+    # chains each find their own entry.
     deps = {d["source"]: d["version"] for d in res_snap.props.get("dependencies", [])}
-    if not deps and res_snap.props.get("source_version") is not None:
-        deps = {source.root: res_snap.props["source_version"]}
     last_src = deps.get(source.root)
 
     src_df = source.read(spark, version=latest_src)
@@ -65,9 +62,7 @@ def delta_update(
         prev_df = source.read(spark, version=last_src)
         d = diff(src_df, prev_df, on=on, compare=compare)
         changed = d.filter(F.col("diff_status").isin([A, M])).drop("diff_status")
-        deleted_keys = (
-            d.filter(F.col("diff_status") == D).select(*on) if propagate_deletes else None
-        )
+        deleted_keys = d.filter(F.col("diff_status") == D).select(*on)
 
     prev_result = result.read(spark)
     if retry_predicate is not None and set(prev_result.columns) >= set(on):
@@ -94,7 +89,6 @@ def delta_update(
         replace_bucket_files={0: files.get(0, [])},
         schema=new_result.schema,
         props={
-            "source_version": latest_src,
             "dependencies": [
                 {"source": s, "version": v} for s, v in sorted(deps.items())
             ],

@@ -383,7 +383,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_df: int = 1000,
-    algo: str = "index",
 ) -> DataFrame:
     """Exact n-gram Jaccard over LSH-free inverted-index candidates:
     explode shingles, self-join on shingle (the inverted index), count
@@ -404,29 +403,7 @@ def ngram_jaccard_pairs(
     odds ~|shingles|^2/2^64, immaterial for counting). The exploded rows
     shuffle exactly once (by shingle, for the self-join); per-doc set
     sizes aggregate with map-side combine and join onto the tiny PAIRS
-    output, and AQE broadcasts the stop-shingle side when it is small.
-
-    `algo` picks the candidate generator:
-    - 'index' (default): plain inverted-index self-join over every kept
-      shingle + count of shared shingles per pair. Fewer stages; measured
-      ~2x faster at sf0.1 (6-11s cold vs 14-20s) where the corpus is small
-      enough that prefix filtering's extra shuffle chain (doc_freq join,
-      rare-first sort, candidate distinct, verify joins) costs more than
-      the join rows it saves.
-    - 'prefix': PPJoin-style prefix filtering (Xiao et al.,
-      WWW'08; Vernica et al., SIGMOD'10 for the MapReduce shape). Each
-      kept set is put in a global rare-first canonical order (ascending
-      document frequency, ties by hash); for threshold t only the first
-      |A| - ceil(t*|A|) + 1 elements of each set are exploded into the
-      inverted index — two sets with J >= t MUST share a prefix element,
-      so the self-join output shrinks from sum(df_g^2) over ALL shingles
-      to the rare prefix only. A length filter (min size >= ceil(t*max
-      size), valid because inter >= t*max(|A'|,|B'|)) prunes inside the
-      join condition, and survivors are verified exactly with one
-      array_intersect over the two sorted kept arrays — exact, not
-      approximate. The win appears at corpus scale where posting lists
-      are long and sum(df_g^2) dominates; use it there.
-    Both return identical results; the exactness tests run both."""
+    output, and AQE broadcasts the stop-shingle side when it is small."""
     # Shape notes (re-measured this round, warm best-of-4 at sf0.1):
     # - per-doc sizes come from a map-side-combined groupBy(id) and join
     #   onto the TINY pairs output at the end — the exploded rows shuffle
@@ -451,92 +428,20 @@ def ngram_jaccard_pairs(
     if max_df is not None:
         sh = sh.join(doc_freq.filter(F.col("__df") > max_df), "g", "left_anti")
 
-    if algo == "prefix":
-        inter = _prefix_filtered_intersections(
-            sh.join(sizes, "id"), doc_freq, threshold
-        )
-    elif algo == "index":
-        l, r = sh.alias("l"), sh.alias("r")
-        inter = (
-            l.join(r, (F.col("l.g") == F.col("r.g")) & (F.col("l.id") < F.col("r.id")))
-            .groupBy(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-            .agg(F.count("*").alias("inter"))
-            .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-            .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        )
-    else:
-        raise ValueError(f"algo must be 'prefix' or 'index', got {algo!r}")
+    l, r = sh.alias("l"), sh.alias("r")
+    inter = (
+        l.join(r, (F.col("l.g") == F.col("r.g")) & (F.col("l.id") < F.col("r.id")))
+        .groupBy(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
+        .agg(F.count("*").alias("inter"))
+        .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
+        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
+    )
     return (
         inter.withColumn(
             "jaccard", F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
         )
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-    )
-
-
-def _prefix_filtered_intersections(
-    sh: DataFrame, doc_freq: DataFrame, threshold: float
-) -> DataFrame:
-    """Candidate pairs via prefix filtering + exact array_intersect verify.
-
-    Soundness (so the result is EXACT, matching the full inverted index):
-    for kept sets A', B' with J'(A',B') >= t, inter >= t*(|A|+|B|-inter)
-    >= t*|A'| and likewise >= t*|B'| (full sizes |A|>=|A'|). Hence
-    (1) inter >= ceil(t*max(|A'|,|B'|)) — so min(|A'|,|B'|) >=
-        ceil(t*max(...)): the length filter in the join condition;
-    (2) A' must contribute one of its first |A'| - ceil(t*|A'|) + 1
-        elements in ANY global total order shared with B' (the classic
-        prefix lemma) — the rare-first order (ascending doc frequency)
-        makes those contributed elements the LOW-df ones, so the
-        self-join's sum(prefix_df^2) collapses.
-    Verification is one O(|A'|+|B'|) array_intersect per surviving pair,
-    JVM-side. The doc_freq join for the canonical order is plain (AQE
-    broadcasts it when the vocabulary is small; at corpus scale it is a
-    shuffle join on the 8-byte shingle hash)."""
-    karr = (
-        sh.join(doc_freq, "g")
-        .groupBy("id", "sz")
-        .agg(F.sort_array(F.collect_list(F.struct("__df", "g"))).alias("sg"))
-        .select(
-            "id",
-            "sz",
-            F.transform("sg", lambda s: s["g"]).alias("kept"),
-            F.size("sg").alias("ksz"),
-        )
-    )
-    plen = F.col("ksz") - F.ceil(F.lit(threshold) * F.col("ksz")).cast("int") + F.lit(1)
-    pref = karr.select(
-        "id", "ksz", F.explode(F.slice("kept", F.lit(1), plen)).alias("g")
-    )
-    l, r = pref.alias("l"), pref.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.g") == F.col("r.g"))
-            & (F.col("l.id") < F.col("r.id"))
-            & (F.col("l.ksz") >= F.ceil(F.lit(threshold) * F.col("r.ksz")))
-            & (F.col("r.ksz") >= F.ceil(F.lit(threshold) * F.col("l.ksz"))),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
-    ka = karr.select(
-        F.col("id").alias("id_a"), F.col("sz").alias("sz_a"), F.col("kept").alias("__ka")
-    )
-    kb = karr.select(
-        F.col("id").alias("id_b"), F.col("sz").alias("sz_b"), F.col("kept").alias("__kb")
-    )
-    return (
-        cand.join(ka, "id_a")
-        .join(kb, "id_b")
-        .select(
-            "id_a",
-            "sz_a",
-            "id_b",
-            "sz_b",
-            F.size(F.array_intersect("__ka", "__kb")).alias("inter"),
-        )
     )
 
 
@@ -636,6 +541,10 @@ def incremental_dedup(
             reg.commit(append_bucket_files=appends, ledger=ledger)
         elif ledger:
             reg.commit(ledger=ledger)
+        # every batch appends one segment per touched bucket: compact the
+        # worst quarter of the buckets per batch, apply_batch's staggered
+        # policy, so segments per bucket stay bounded
+        reg.compact(spark, max_buckets=max(1, reg.num_buckets // 4))
     return survivors.drop("_fp")
 
 

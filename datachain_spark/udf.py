@@ -326,41 +326,44 @@ def _cell_value(cell: dict, name: str, names: tuple[str, ...]) -> Any:
 # shapes the frame (map columns, gen rows, or checkpoint-keyed rows).
 
 
+def output_row(item: Any, names: tuple[str, ...], struct_col: bool) -> tuple:
+    """One UDF output item -> its schema-ordered row; the one rule of map
+    and gen. A model instance becomes a dict. For a single struct-typed
+    column (`struct_col`) a dict is the column's VALUE unless it holds the
+    column's name; any other dict maps signal names to values. Any other
+    item is unpacked across several columns; for one column a 1-tuple is
+    the row and anything else is the value."""
+    cell = model_cell(item)
+    if isinstance(cell, dict):
+        if struct_col and names[0] not in cell:
+            return (cell,)
+        return tuple(_cell_value(cell, n, names) for n in names)
+    if len(names) > 1:
+        return tuple(cell)
+    # tuple("hi") would shred a string into characters
+    return cell if isinstance(cell, tuple) and len(cell) == 1 else (cell,)
+
+
+def _struct_col(out_struct: T.StructType) -> bool:
+    return len(out_struct) == 1 and isinstance(out_struct.fields[0].dataType, T.StructType)
+
+
 def map_adapter(out_struct: T.StructType, convs: list | None) -> Callable:
     """1:1 adapter: exactly one output tuple per row."""
-    names = tuple(out_struct.names)
-    expand = len(names) > 1
-    # a dict cell is the VALUE only for a struct-typed single output; for a
-    # scalar output it's a named-signal mapping -> extract/validate by name
-    whole = not expand and isinstance(out_struct.fields[0].dataType, T.StructType)
+    names, struct_col = tuple(out_struct.names), _struct_col(out_struct)
 
     def adapt(proc: Callable, row: tuple) -> list[tuple]:
-        cell = model_cell(proc(*coerce_args(convs, row)))
-        if isinstance(cell, dict) and not whole:
-            return [tuple(_cell_value(cell, n, names) for n in names)]
-        return [tuple(cell) if expand else (cell,)]
+        return [output_row(proc(*coerce_args(convs, row)), names, struct_col)]
 
     return adapt
 
 
 def gen_adapter(out_struct: T.StructType, convs: list | None) -> Callable:
     """1:N adapter: one output tuple per yielded item (possibly none)."""
-    names = tuple(out_struct.names)
+    names, struct_col = tuple(out_struct.names), _struct_col(out_struct)
 
     def adapt(proc: Callable, row: tuple) -> list[tuple]:
-        rows = []
-        for item in proc(*coerce_args(convs, row)):
-            cell = model_cell(item)
-            if isinstance(cell, dict):
-                rows.append(tuple(_cell_value(cell, n, names) for n in names))
-            elif isinstance(cell, tuple):
-                rows.append(cell)
-            elif len(names) == 1:
-                # tuple("hi") would shred a string into characters
-                rows.append((cell,))
-            else:
-                rows.append(tuple(cell))
-        return rows
+        return [output_row(item, names, struct_col) for item in proc(*coerce_args(convs, row))]
 
     return adapt
 

@@ -10,6 +10,7 @@ Mirrors the reference's delta/checkpoint test strategy
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from datachain_spark.cdc.apply import replay_feed_dir
 from datachain_spark.cdc.feed import FeedSpec, gen_events_df, gen_events_py, write_feed
@@ -213,22 +214,59 @@ def test_crash_between_write_and_commit(spark, feed_dir, oracle_rows, tmp_path):
 
 
 def test_normalize_expr_equals_arrow_on_ascii(spark):
-    """The codegen normalizer (default) and the Arrow NFC path agree on
-    the transcript feed contract (ASCII text); the expr path keeps Python
-    out of the hot loop entirely."""
-    from pyspark.sql import functions as F
-
-    from datachain_spark.cdc.normalize import (
-        normalize_text,
-        normalize_text_expr,
-        normalize_text_udf,
-    )
+    """The codegen normalizer agrees with normalize_text on the transcript
+    feed contract (ASCII text) and keeps Python out of the hot loop."""
+    from datachain_spark.cdc.normalize import normalize_text, normalize_text_expr
 
     texts = ["  a   b\tc  ", "x\n\ny", "", "single", "  lead", "trail  ", None]
     df = spark.createDataFrame([(t,) for t in texts], "t string")
-    out = df.select(
-        normalize_text_expr(F.col("t")).alias("e"),
-        normalize_text_udf(F.col("t")).alias("a"),
-    ).collect()
+    out = df.select(normalize_text_expr(F.col("t")).alias("e")).collect()
     for t, r in zip(texts, out):
-        assert r["e"] == r["a"] == normalize_text(t)
+        assert r["e"] == normalize_text(t)
+
+
+# ---------- codegen normalizer: unicode whitespace and space-run branches ----------
+def test_normalize_expr_unicode_whitespace_matches_python(spark):
+    from datachain_spark.cdc.normalize import normalize_text, normalize_text_expr
+
+    # NBSP, line/para separators, ideographic space, tabs — all already
+    # NFC-composed, so the expr (no NFC) must match normalize_text exactly
+    samples = [
+        "a b",
+        " x  y ",
+        "　lead and trail　",
+        " mixed\t  runs \n here ",
+        "plain ascii  only",
+        None,
+    ]
+    df = spark.createDataFrame([(s,) for s in samples], "t string")
+    got = [r["o"] for r in df.select(normalize_text_expr(F.col("t")).alias("o")).collect()]
+    assert got == [normalize_text(s) for s in samples]
+
+
+def test_normalize_expr_space_run_branches_match_python(spark):
+    """Branch boundaries of the graded ASCII collapse paths: runs of
+    exactly 2 spaces (literal replace branch), runs of 3+ (the '  +'
+    regex branch), control whitespace mixed in (the \\s+ branch), and the
+    trim-only path — every one must equal normalize_text byte-for-byte."""
+    from datachain_spark.cdc.normalize import normalize_text, normalize_text_expr
+
+    samples = [
+        "",
+        " ",
+        "  ",
+        "   ",
+        "    ",
+        "a  b",                 # single 2-run -> replace branch
+        "a  b  c",              # multiple 2-runs, non-overlap replace
+        "a   b",                # 3-run -> '  +' branch
+        "a    b  c",            # 4-run + 2-run in one row
+        "  lead and trail   ",  # runs at the edges interact with trim
+        "tok tok  (rev 3)",     # the feed's update-row shape
+        "a  b\tc",              # double space AND control ws -> \s+ branch
+        "café  x",         # non-ASCII with 2-run -> unicode branch
+        None,
+    ]
+    df = spark.createDataFrame([(s,) for s in samples], "t string")
+    got = [r["o"] for r in df.select(normalize_text_expr(F.col("t")).alias("o")).collect()]
+    assert got == [normalize_text(s) for s in samples]

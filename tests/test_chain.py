@@ -176,3 +176,58 @@ def test_collect_variants(ch):
     assert len(list(ch.to_iter())) == 5
     assert isinstance(ch.to_pandas(), pd.DataFrame)
     assert ch.select_except("grp").columns == ["id", "name", "v"]
+
+
+# ---------- to_pytorch shim ----------
+def test_to_pytorch_raises_without_torch(spark):
+    ch = dc.read_values(spark, id=[1, 2, 3])
+    try:
+        import torch  # noqa: F401
+
+        pytest.skip("torch present; ImportError path not reachable")
+    except ImportError:
+        pass
+    with pytest.raises(ImportError, match="torch"):
+        ch.to_pytorch()
+
+
+def test_to_pytorch_iterates_with_stub_torch(spark, monkeypatch):
+    """Exercise the IterableDataset logic with a minimal torch stand-in:
+    single-worker full iteration, then 2-worker sharding via chunk()."""
+    import sys
+    import types
+
+    torch_mod = types.ModuleType("torch")
+    utils_mod = types.ModuleType("torch.utils")
+    data_mod = types.ModuleType("torch.utils.data")
+
+    class IterableDataset:  # noqa: N801 - torch name
+        pass
+
+    worker = {"info": None}
+    data_mod.IterableDataset = IterableDataset
+    data_mod.get_worker_info = lambda: worker["info"]
+    torch_mod.utils = utils_mod
+    utils_mod.data = data_mod
+    for name, mod in [
+        ("torch", torch_mod),
+        ("torch.utils", utils_mod),
+        ("torch.utils.data", data_mod),
+    ]:
+        monkeypatch.setitem(sys.modules, name, mod)
+
+    ch = dc.read_values(spark, id=[1, 2, 3, 4], label=["a", "b", "c", "d"])
+    ds = ch.to_pytorch(transform=lambda rec: (rec["id"], rec["label"].upper()))
+    assert sorted(ds) == [(1, "A"), (2, "B"), (3, "C"), (4, "D")]
+
+    # two DataLoader workers: shards are disjoint and cover everything
+    class WInfo:
+        def __init__(self, wid, n):
+            self.id, self.num_workers = wid, n
+
+    shards = []
+    for wid in range(2):
+        worker["info"] = WInfo(wid, 2)
+        shards.append(sorted(r["id"] for r in ch.to_pytorch()))
+    assert sorted(shards[0] + shards[1]) == [1, 2, 3, 4]
+    assert set(shards[0]).isdisjoint(shards[1])

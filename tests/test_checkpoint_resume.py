@@ -240,23 +240,38 @@ def _udf_shape(name: str):
     def gen_none(id):
         return iter(())
 
+    def gen_struct(id):
+        yield Point(id, -id)
+
+    def gen_struct_named(id):
+        yield {"p": {"x": id, "y": -id}}
+
+    def gen_struct_value(id):
+        yield {"x": id, "y": -id}
+
     return {
         "map-scalar": ("map", lambda id: id * 2, {"out": int}, ["id"]),
         "map-dict": ("map", lambda id: {"a": id, "b": str(id)}, {"a": int, "b": str}, ["id"]),
         "map-model": ("map", lambda id: Pair(id, id + 1), {"lo": int, "hi": int}, ["id"]),
         "map-struct": ("map", lambda id: Point(id, -id), {"p": Point}, ["id"]),
+        "map-struct-named": ("map", lambda id: {"p": {"x": id, "y": -id}}, {"p": Point}, ["id"]),
+        "map-struct-value": ("map", lambda id: {"x": id, "y": -id}, {"p": Point}, ["id"]),
         "map-overwrite": ("map", lambda v: v * 10, {"v": float}, ["v"]),
         "gen-scalar": ("gen", gen_scalar, {"g": int}, ["id"]),
         "gen-tuple": ("gen", gen_tuple, {"a": int, "b": str}, ["id"]),
         "gen-dict": ("gen", gen_dict, {"a": int, "b": str}, ["id"]),
         "gen-none": ("gen", gen_none, {"g": int}, ["id"]),
+        "gen-struct": ("gen", gen_struct, {"p": Point}, ["id"]),
+        "gen-struct-named": ("gen", gen_struct_named, {"p": Point}, ["id"]),
+        "gen-struct-value": ("gen", gen_struct_value, {"p": Point}, ["id"]),
     }[name]
 
 
 @pytest.mark.parametrize(
     "shape",
-    ["map-scalar", "map-dict", "map-model", "map-struct", "map-overwrite",
-     "gen-scalar", "gen-tuple", "gen-dict", "gen-none"],
+    ["map-scalar", "map-dict", "map-model", "map-struct", "map-struct-named",
+     "map-struct-value", "map-overwrite", "gen-scalar", "gen-tuple", "gen-dict",
+     "gen-none", "gen-struct", "gen-struct-named", "gen-struct-value"],
 )
 def test_checkpoint_output_matches_plain(spark, tmp_path, shape):
     kind, fn, output, params = _udf_shape(shape)
@@ -268,6 +283,20 @@ def test_checkpoint_output_matches_plain(spark, tmp_path, shape):
     rows = sorted(map(tuple, plain.collect()))
     assert sorted(map(tuple, ck.collect())) == rows
     assert (len(rows) == 0) == (shape == "gen-none")
+
+
+@pytest.mark.parametrize("form", ["", "-named", "-value"])
+def test_map_and_gen_store_a_struct_output_alike(spark, form):
+    """One output rule for a single struct-typed column: map's return value
+    and gen's yielded item — a model instance, a dict holding the column's
+    name, or a dict that is the value — store the same struct."""
+    ch = dc.read_values(spark, id=[1, 2, 3])
+    got = []
+    for kind in ("map", "gen"):
+        _, fn, output, params = _udf_shape(f"{kind}-struct{form}")
+        out = getattr(ch, kind)(fn, output=output, params=params)
+        got.append(sorted((r.p.x, r.p.y) for r in out.df.select("p").collect()))
+    assert got == [[(1, -1), (2, -2), (3, -3)]] * 2
 
 
 def test_checkpoint_map_honors_parallel(spark, tmp_path):

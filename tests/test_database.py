@@ -76,3 +76,23 @@ def test_chain_to_database_and_back(spark, url):
     ch.to_database("T5", url, mode="overwrite", driver=DERBY_DRIVER)
     back = chain_read_db(spark, "SELECT * FROM T5", url, driver=DERBY_DRIVER)
     assert sorted(back.to_values("score")) == [0.5, 1.5, 2.5]
+
+
+# ---------- JDBC: lower-case table names through quoted staging ----------
+def test_jdbc_upsert_lowercase_table(spark, tmp_path):
+    from datachain_spark.sources.database import DERBY_DRIVER, read_database, to_database
+
+    url = f"jdbc:derby:{tmp_path}/db;create=true"
+    base = spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string")
+    to_database(base, "events_lc", url, mode="overwrite", driver=DERBY_DRIVER)
+    delta = spark.createDataFrame([(2, "B!"), (3, "c")], "id long, name string")
+    # pre-fix: the staging table's lower-case prefix was case-folded by the
+    # unquoted JDBC write and the quoted MERGE/DROP failed to resolve
+    to_database(delta, "events_lc", url, on_conflict=["id"], driver=DERBY_DRIVER)
+    got = {
+        r["id"]: r["name"]
+        for r in read_database(
+            spark, 'SELECT * FROM "events_lc"', url, driver=DERBY_DRIVER
+        ).collect()
+    }
+    assert got == {1: "a", 2: "B!", 3: "c"}

@@ -376,6 +376,27 @@ def test_dedup_registry_survives_staggered_compaction(spark, tmp_path):
     assert again.count() == 0
 
 
+def test_dedup_registry_segments_stay_bounded(spark, tmp_path):
+    """Each incremental_dedup batch appends a segment to every registry
+    bucket it touches; the registry is compacted after its commit, so a
+    bucket never holds more than max_segments + 1 segments, every
+    fingerprint survives the rewrites, and replaying a committed batch
+    still returns that batch's first-run survivors."""
+    from datachain_spark.operators.dedup import incremental_dedup
+
+    root = str(tmp_path / "reg")
+    docs = spark.createDataFrame(
+        [(i, f"distinct document {i}") for i in range(60)], "doc_id int, text string"
+    )
+    batches = [docs.filter(F.col("doc_id") % 12 == b) for b in range(12)]
+    for b, batch in enumerate(batches):
+        assert incremental_dedup(batch, root, num_buckets=1, batch_id=b).count() == 5
+        assert len(LakeTable(root).snapshot().buckets.get(0, [])) <= 9, b
+    assert incremental_dedup(docs, root, num_buckets=1, update=False).count() == 0
+    replayed = incremental_dedup(batches[10], root, num_buckets=1, batch_id=10)
+    assert sorted(r["doc_id"] for r in replayed.collect()) == [10, 22, 34, 46, 58]
+
+
 # ---------- one owner for the file layout and snapshot derivation ----------
 def test_only_lake_table_owns_the_file_layout():
     """No module under datachain_spark/ but lake/table.py builds a data

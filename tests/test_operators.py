@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from datachain_spark.diff import compare_and_split, diff
 from datachain_spark.operators.dedup import (
+    connected_components,
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -22,6 +23,7 @@ from datachain_spark.operators.similarity import (
     cosine_similarity,
     lsh_topk,
 )
+from datachain_spark.operators.skew import salted_agg
 from datachain_spark.operators.text import fingerprint, lang_id, quality_features, token_count
 
 
@@ -168,40 +170,6 @@ def test_ngram_jaccard_hot_shingle_cap(spark):
     uncapped = ngram_jaccard_pairs(df, threshold=0.01, max_df=None).count()
     capped = ngram_jaccard_pairs(df, threshold=0.01, max_df=4).count()
     assert uncapped > capped
-
-
-def test_ngram_jaccard_prefix_matches_index(spark):
-    """The PPJoin-style prefix-filtered generator must be EXACT: identical
-    (pair, jaccard) sets to the full inverted-index self-join, across
-    thresholds (prefix length depends on t) and with/without the hot-
-    shingle cap (the canonical order depends on doc frequency)."""
-    rows = [
-        (i, f"alpha beta gamma delta{i % 4} epsilon{i % 3} zeta{i} eta{i}")
-        for i in range(40)
-    ]
-    rows += [(100, "the quick brown fox jumps over the lazy dog today"),
-             (101, "the quick brown fox jumps over the lazy dog tonight"),
-             (102, "the quick brown fox leaps over the lazy dog today"),
-             (103, "completely different text with no overlap at all here")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    nonempty = 0
-    for threshold in (0.2, 0.5, 0.8):
-        for max_df in (None, 5):
-            a = {
-                (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-                for r in ngram_jaccard_pairs(
-                    df, threshold=threshold, max_df=max_df, algo="prefix"
-                ).collect()
-            }
-            b = {
-                (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-                for r in ngram_jaccard_pairs(
-                    df, threshold=threshold, max_df=max_df, algo="index"
-                ).collect()
-            }
-            assert a == b, (threshold, max_df, a ^ b)
-            nonempty += bool(b)
-    assert nonempty >= 3  # the equivalence isn't vacuous: most combos pair up
 
 
 def test_connected_components_transitive(spark):
@@ -796,3 +764,45 @@ def test_winnow_validation_and_invariance(spark):
     a = sorted(map(tuple, winnow_fingerprints(docs.repartition(1), hash_mode="md5").collect()))
     b = sorted(map(tuple, winnow_fingerprints(docs.repartition(8), hash_mode="md5").collect()))
     assert a == b and a
+
+
+# ---------- salted_agg salt_on and connected_components convergence ----------
+def test_salted_agg_salt_on_identity_column(spark):
+    # duplicate-heavy hot key: full-row hash sends all copies to ONE salt
+    # bucket; salting on the per-row event id spreads them
+    rows = [("hot", i, 1.0) for i in range(400)] + [("cold", 1000 + i, 2.0) for i in range(5)]
+    df = spark.createDataFrame(rows, ["user_id", "event_id", "value"])
+    out = salted_agg(
+        df,
+        "user_id",
+        {"n": ("count", "*"), "total": ("sum", "value"), "mean": ("avg", "value")},
+        salt=8,
+        salt_on="event_id",
+    )
+    got = {r["user_id"]: r for r in out.collect()}
+    assert got["hot"]["n"] == 400 and got["hot"]["total"] == 400.0 and got["hot"]["mean"] == 1.0
+    assert got["cold"]["n"] == 5 and got["cold"]["total"] == 10.0
+
+    # the partial stage really spreads the hot key's duplicate rows:
+    # identical payload rows land in >1 salt bucket when salted by event_id
+    dup = spark.createDataFrame([("hot", i) for i in range(64)], ["user_id", "event_id"])
+    n_buckets = (
+        dup.withColumn("s", F.pmod(F.xxhash64("event_id"), F.lit(8)))
+        .select("s")
+        .distinct()
+        .count()
+    )
+    assert n_buckets > 1
+
+
+def test_connected_components_warns_when_unconverged(spark):
+    # a path graph 0-1-2-...-9 has diameter 9; min-label propagation needs
+    # ~9 rounds, so max_iters=2 must warn instead of silently returning
+    # split components
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(9)], ["id_a", "id_b"])
+    with pytest.warns(RuntimeWarning, match="did not converge"):
+        labels = connected_components(pairs, max_iters=2)
+        labels.collect()
+    # and with enough rounds it converges silently to a single component
+    full = connected_components(pairs, max_iters=15)
+    assert full.select("component").distinct().count() == 1

@@ -2,7 +2,9 @@
 
 import pytest
 
+from datachain_spark import chain as dc
 from datachain_spark import semver
+from datachain_spark.chain import C, Chain
 
 
 @pytest.mark.parametrize(
@@ -51,3 +53,16 @@ def test_value_total_order_and_int64():
 )
 def test_compare(v1, v2, expected):
     assert semver.compare(v1, v2) == expected
+
+
+# ---------- PEP 440 ~= compatible release on saved datasets ----------
+def test_semver_compatible_release_pins_minor(spark, tmp_path):
+    cat = str(tmp_path / "cat")
+    base = dc.read_values(spark, id=[1, 2, 3])
+    Chain(base.df, catalog_root=cat).save("d", version="1.2.3")
+    Chain(base.filter(C("id") <= 2).df, catalog_root=cat).save("d", version="1.2.9")
+    Chain(base.filter(C("id") <= 1).df, catalog_root=cat).save("d", version="1.9.0")
+    # ~=1.2.3 means >=1.2.3,<1.3.0 — must NOT match 1.9.0
+    assert dc.read_dataset(spark, "d", version="~=1.2.3", catalog_root=cat).count() == 2
+    # ~=1.2 means >=1.2,<2.0 — 1.9.0 matches
+    assert dc.read_dataset(spark, "d", version="~=1.2", catalog_root=cat).count() == 1

@@ -60,8 +60,10 @@ def test_metrics_set_get_and_job_persistence(monkeypatch, tmp_path):
 
 
 def test_settings_validation_errors():
-    with pytest.raises(SettingsError):
-        Settings(cache="yes")
+    # the reference's dispatcher knobs are not settings here
+    for knob in ("cache", "prefetch", "workers", "min_task_size"):
+        with pytest.raises(SettingsError, match="unknown setting"):
+            Settings().merged(**{knob: 1})
     with pytest.raises(SettingsError):
         Settings(parallel="8")
     with pytest.raises(SettingsError):

@@ -244,3 +244,133 @@ def test_scrub_pii_and_decontaminate(spark):
     marked = decontaminate(corpus, bench, n=5, min_shared=1, mark_only=True)
     m = {r["doc_id"]: (r["contaminated"], r["n_shared"]) for r in marked.collect()}
     assert m[2] == (False, 0) and m[1][0] and m[3][0] and m[1][1] >= 1
+
+
+# ---------- listing cache, sharded read_hf, prefetch_files ----------
+def test_read_storage_cache_no_rewalk_within_ttl(spark, tmp_path):
+    from datachain_spark.sources import storage as st
+
+    src = tmp_path / "bucket"
+    src.mkdir()
+    (src / "a.txt").write_text("alpha")
+    (src / "b.txt").write_text("beta")
+    cache = str(tmp_path / "cache")
+
+    w0 = st.LISTING_WALKS
+    first = st.read_storage(spark, str(src), type="meta", cache_root=cache)
+    assert first.count() == 2
+    assert st.LISTING_WALKS == w0 + 1  # one real crawl
+    # second call within TTL: NO directory walk — and content reads (the
+    # binary/text types) drive off the cached paths, also walk-free
+    again = st.read_storage(spark, str(src), type="meta", cache_root=cache)
+    assert again.count() == 2
+    texts = st.read_storage(spark, str(src), type="text", cache_root=cache)
+    got = {r["file"]["path"]: r["text"] for r in texts.collect()}
+    assert got == {"a.txt": "alpha", "b.txt": "beta"}
+    assert st.LISTING_WALKS == w0 + 1  # still just the one crawl
+
+    # a file created after the crawl is INVISIBLE until update/TTL expiry
+    (src / "c.txt").write_text("gamma")
+    assert st.read_storage(spark, str(src), type="meta", cache_root=cache).count() == 2
+    # update=True forces a re-crawl
+    assert (
+        st.read_storage(spark, str(src), type="meta", cache_root=cache, update=True).count()
+        == 3
+    )
+    assert st.LISTING_WALKS == w0 + 2
+
+
+def test_read_storage_cache_ttl_expiry_recrawls(spark, tmp_path):
+    import json as _json
+
+    from datachain_spark.sources import storage as st
+
+    src = tmp_path / "bucket"
+    src.mkdir()
+    (src / "a.txt").write_text("x")
+    cache = str(tmp_path / "cache")
+    st.read_storage(spark, str(src), type="meta", cache_root=cache).count()
+    (src / "b.txt").write_text("y")
+
+    # age the cache entry past the TTL (backdate created_at on disk)
+    (cdir,) = [d for d in os.listdir(cache) if d.startswith("lst__")]
+    meta_path = os.path.join(cache, cdir, "_listing_meta.json")
+    with open(meta_path) as fh:
+        meta = _json.load(fh)
+    meta["created_at"] -= 5 * 3600
+    with open(meta_path, "w") as fh:
+        _json.dump(meta, fh)
+
+    w0 = st.LISTING_WALKS
+    fresh = st.read_storage(spark, str(src), type="meta", cache_root=cache)
+    assert fresh.count() == 2  # expired -> re-crawled, sees b.txt
+    assert st.LISTING_WALKS == w0 + 1
+
+
+def test_read_hf_large_split_shards_without_driver_copy(spark):
+    import pyarrow as pa
+
+    from datachain_spark.sources.hf import read_hf
+
+    n = 5000
+    table = pa.table({"id": list(range(n)), "txt": [f"t{i}" for i in range(n)]})
+
+    class NoPandasTable:
+        """Arrow backing that REFUSES a full driver materialization."""
+
+        num_rows = n
+        schema = table.schema
+
+        def to_batches(self):
+            return table.to_batches(max_chunksize=500)
+
+        def to_pandas(self):
+            raise AssertionError("full-split to_pandas() on a large dataset")
+
+    class FakeDataset:
+        features = {"id": None, "txt": None}
+        data = NoPandasTable()
+
+    import datachain_spark.sources.hf as hf_mod
+
+    old = hf_mod.SHARD_THRESHOLD_ROWS
+    hf_mod.SHARD_THRESHOLD_ROWS = 1000
+    try:
+        df = read_hf(spark, FakeDataset())
+        assert df.count() == n
+        assert df.rdd.getNumPartitions() > 1  # really distributed shards
+        got = {r["id"]: r["txt"] for r in df.filter("id < 5 or id >= 4995").collect()}
+        assert got[0] == "t0" and got[4999] == "t4999"
+    finally:
+        hf_mod.SHARD_THRESHOLD_ROWS = old
+
+
+def test_shard_arrow_to_parquet_rotates_files(tmp_path):
+    import pyarrow as pa
+
+    from datachain_spark.sources.hf import _shard_arrow_to_parquet
+
+    t = pa.table({"x": list(range(3000))})
+    n_shards = _shard_arrow_to_parquet(t, str(tmp_path / "sh"), rows_per_shard=1000)
+    assert n_shards == 3
+    assert len(list((tmp_path / "sh").glob("*.parquet"))) == 3
+
+
+def test_prefetch_files_concurrent_fetch_and_missing_null(spark, tmp_path):
+    from datachain_spark.sources.storage import prefetch_files, read_storage
+
+    src = tmp_path / "bucket"
+    src.mkdir()
+    for i in range(6):
+        (src / f"f{i}.bin").write_bytes(bytes([i]) * (i + 1))
+    listing = read_storage(spark, str(src), type="meta")
+    fetched = prefetch_files(listing, workers=4)
+    got = {r["file"]["path"]: bytes(r["data"]) for r in fetched.collect()}
+    assert got == {f"f{i}.bin": bytes([i]) * (i + 1) for i in range(6)}
+
+    # stale listing: a file deleted after the crawl -> NULL data, no crash
+    snap = listing.localCheckpoint()
+    (src / "f3.bin").unlink()
+    rows = {r["file"]["path"]: r["data"] for r in prefetch_files(snap).collect()}
+    assert rows["f3.bin"] is None
+    assert bytes(rows["f5.bin"]) == bytes([5]) * 6

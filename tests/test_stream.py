@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql.streaming import StreamingQueryException
 
+from datachain_spark.cdc import stream
 from datachain_spark.cdc.feed import FeedSpec, write_feed
 from datachain_spark.cdc.normalize import normalize_text
 from datachain_spark.cdc.oracle import oracle_replay
@@ -50,10 +51,24 @@ def test_stream_full_run_matches_oracle(spark, feed_dir, oracle_rows, tmp_path):
     assert all(m["seconds"] > 0 for m in metrics)
 
 
-def test_stream_crash_resume(spark, feed_dir, oracle_rows, tmp_path):
+def _crash_from_epoch(monkeypatch, epoch):
+    """Make every microbatch from `epoch` on fail before its merge commits."""
+    real = stream.apply_batch
+
+    def apply_or_crash(*args, **kw):
+        if kw["batch_id"] >= epoch:
+            raise RuntimeError(f"injected crash before epoch {kw['batch_id']}")
+        return real(*args, **kw)
+
+    monkeypatch.setattr(stream, "apply_batch", apply_or_crash)
+
+
+def test_stream_crash_resume(spark, feed_dir, oracle_rows, tmp_path, monkeypatch):
     root, ckpt = str(tmp_path / "t"), str(tmp_path / "ckpt")
+    _crash_from_epoch(monkeypatch, 2)
     with pytest.raises(StreamingQueryException):
-        run_stream(spark, root, feed_dir, ckpt, num_buckets=8, fail_before_epoch=2)
+        run_stream(spark, root, feed_dir, ckpt, num_buckets=8)
+    monkeypatch.undo()
     # restart from the same checkpoint — replayed epochs are absorbed by the
     # ledger/watermarks; the stream finishes the remaining files
     table, metrics = run_stream(spark, root, feed_dir, ckpt, num_buckets=8)
@@ -164,13 +179,7 @@ def test_ledger_df_schema_and_listener(spark, feed_dir, tmp_path):
     assert any(m.get("spark_progress") for m in applied)
 
 
-# ---------- run_stream drain errors surface on a live session ----------
-def test_session_stopped_probe(spark):
-    from datachain_spark.cdc.stream import _session_stopped
-
-    assert _session_stopped(spark) is False
-
-
+# ---------- run_stream: which error surfaces from the end-of-stream drain ----------
 def test_drain_compaction_error_propagates_from_run_stream(spark, tmp_path):
     """A genuine async-compaction failure at end-of-stream must raise, not
     vanish into the injected-crash suppression path."""
@@ -194,3 +203,18 @@ def test_drain_compaction_error_propagates_from_run_stream(spark, tmp_path):
             )
     finally:
         LakeTable.drain_compaction = orig
+
+
+def test_stream_error_wins_over_drain_error(spark, tmp_path, monkeypatch):
+    """When the stream itself fails and the compaction drain then fails
+    too, on a live session, the stream's own error is the one raised."""
+    feed = str(tmp_path / "feed")
+    write_feed(spark, FeedSpec(n_convs=6, batch_size=50), feed)
+    _crash_from_epoch(monkeypatch, 0)
+
+    def boom(self):
+        raise RuntimeError("injected compaction failure")
+
+    monkeypatch.setattr(LakeTable, "drain_compaction", boom)
+    with pytest.raises(StreamingQueryException, match="injected crash before epoch 0"):
+        run_stream(spark, str(tmp_path / "t"), feed, str(tmp_path / "ck"), num_buckets=4)

@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datachain_spark import chain as dc
 from datachain_spark.chain import DeltaDisabledError, read_values
 from datachain_spark.udf import infer_output, infer_params, model_to_struct, spark_type_of
 
@@ -238,3 +239,28 @@ def test_udf_single_scalar_output_dict_handling(spark):
 
     got = ch.map(lambda id: M(id), output={"m": M}, params=["id"]).df.collect()
     assert sorted(r["m"]["x"] for r in got) == [1, 2]
+
+
+# ---------- gen() scalar yields ----------
+def test_gen_scalar_int_yield(spark):
+    ch = dc.read_values(spark, n=[2, 3])
+
+    def expand(n) -> "__import__('typing').Iterator[int]":  # noqa: F821
+        for i in range(n):
+            yield i
+
+    out = ch.gen(expand, output={"i": int}, params=["n"]).to_values("i")
+    assert sorted(out) == [0, 0, 1, 1, 2]
+
+
+def test_gen_scalar_str_yield(spark):
+    # multi-char strings used to crash (tuple("hi") -> column-count
+    # mismatch); 1-char strings silently stored a shredded row
+    ch = dc.read_values(spark, word=["hi", "x"])
+
+    def echo(word):
+        yield word
+        yield word + "!"
+
+    out = ch.gen(echo, output={"s": str}, params=["word"]).to_values("s")
+    assert sorted(out) == ["hi", "hi!", "x", "x!"]
