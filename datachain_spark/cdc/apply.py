@@ -38,16 +38,14 @@ Scale notes:
   copy-on-write merge (read + anti-join + rewrite touched buckets) was
   measured 3x slower even at 2M events and is quadratic over a bulk
   replay — at 10^10 events it is infeasible.
-- LWW window partitions by the FULL key (conv_id, turn_idx) — hot
-  conversations (thousands of turns) do not skew it because turn_idx
-  spreads them.
-- The write repartitions on (bucket, salt(key)) with an explicit partition
-  count, so a hot conversation's bucket is spread over up to
-  `files_per_bucket` salted combos (skew mitigation, per the north rule)
-  and file counts stay bounded; compaction keeps segments-per-bucket
-  bounded. The partition count is sized from the batch's input bytes
-  (whole combos per task), so a small microbatch runs a few write tasks,
-  not one per combo.
+- The batch's one shuffle is the table's write layout (LakeTable.layout)
+  and the LWW dedup runs inside it (LakeTable.last_writer_wins). A combo
+  is (bucket, salt), the salt a hash of the FULL key (conv_id, turn_idx),
+  so a hot conversation's turns spread over up to `files_per_bucket`
+  salted combos (skew mitigation, per the north rule) and file counts stay
+  bounded. The task count is sized from the batch's input bytes, so a
+  small microbatch runs a few write tasks, not one per combo. Compaction
+  keeps segments-per-bucket bounded.
 - Zero driver-side Spark jobs besides the segment write itself: schema
   evolution and all lineage stats come from the just-written parquet
   footers (read in parallel threads), the ledger check is an O(1) lookup
@@ -61,53 +59,15 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datachain_spark.cdc.normalize import normalize_text_expr
-from datachain_spark.frames import input_bytes
-from datachain_spark.lake.table import BUCKET_COL, DELETED_COL, LSN_COL, LakeTable, write_tasks
+from datachain_spark.lake.table import BUCKET_COL, DELETED_COL, LSN_COL, LakeTable
 
 KEY_COLS = ["conv_id", "turn_idx"]
 META_COLS = {"lsn", "batch_id", "op", "batch"}
-
-# n_parts -> integer literals k_p with pmod(murmur3(k_p), n) == p
-_PKEY_CACHE: dict[int, list[int] | None] = {}
-
-
-def _perfect_partition_keys(spark: SparkSession, n: int) -> list[int] | None:
-    """PERFECT shuffle placement for the layout combos: repartition(n, cols)
-    hashes, and hashing B*fpb combo ids into B*fpb partitions is
-    balls-in-bins — measured for 64/64: 21 partitions empty, one holding 4
-    combos, i.e. the heaviest reduce/write task does 4x the mean work. At
-    4N cores the stage runs in ~2 waves and that skew lands directly on
-    the stage time (at N cores, 8 waves amortize it) — it was a visible
-    share of the 8->32 scaling gap. Fix: pick, once per session, integer
-    literals k_p with pmod(hash(k_p), n) == p (F.hash IS the partitioner's
-    Murmur3, seed 42); mapping combo c -> k_(c mod n) makes partition ==
-    combo mod n, whole combos per task. O(64n)-row driver probe, cached
-    per n (n divides the combo count, so a 32-combo layout probes at most
-    6 values of n per session)."""
-    if n not in _PKEY_CACHE:
-        rows = (
-            spark.range(64 * n)
-            .select(
-                F.col("id").cast("int").alias("k"),
-                F.pmod(F.hash(F.col("id").cast("int")), F.lit(n)).alias("p"),
-            )
-            .groupBy("p")
-            .agg(F.min("k").alias("k"))
-            .collect()
-        )
-        m = {r["p"]: r["k"] for r in rows}
-        # 64n candidates leave a residue unhit with probability ~(1-1/n)^(64n)
-        # ~= e^-64; fall back to plain combo hashing if it ever happens
-        _PKEY_CACHE[n] = (
-            [int(m[p]) for p in range(n)] if all(p in m for p in range(n)) else None
-        )
-    return _PKEY_CACHE[n]
-
 
 class SchemaDriftError(ValueError):
     """Incompatible schema change in the feed (an existing column changed
@@ -233,7 +193,7 @@ def apply_batch(
     target_schema = snap.schema
     # the merge key is the TABLE's (generic: merge_into targets any keyed
     # dataset); the transcripts flow created its tables with KEY_COLS
-    key_cols = snap.key_cols or KEY_COLS
+    key_cols = snap.key_cols
 
     # ---- schema drift check (metadata-only, no Spark job) ----
     # Structurally new payload columns are written into the segment and the
@@ -255,7 +215,7 @@ def apply_batch(
     cand_names = [f.name for f in cand_fields]
 
     # ---- bucket assignment (+ optional ordered-delivery stale filter) ----
-    ev = events.withColumn(BUCKET_COL, table.bucket_expr())
+    ev = events.withColumnRenamed("lsn", LSN_COL).withColumn(BUCKET_COL, table.bucket_expr())
     if lsn_ordered and snap.watermarks:
         # watermarks are O(num_buckets) driver-side metadata -> a literal
         # map expression beats a per-batch broadcast-join (no exchange,
@@ -267,7 +227,7 @@ def apply_batch(
             f"{int(b)},{int(lsn)}L" for b, lsn in sorted(snap.watermarks.items())
         )
         wm = F.expr(f"element_at(map({pairs}), {BUCKET_COL})")
-        ev = ev.filter(F.col("lsn") > F.coalesce(wm, F.lit(-1)))
+        ev = ev.filter(F.col(LSN_COL) > F.coalesce(wm, F.lit(-1)))
 
     # ---- last-writer-wins per key over lsn (fused with the write layout) ----
     # lsn is THE total order — identical to merge-on-read resolution
@@ -275,68 +235,22 @@ def apply_batch(
     # never depends on where a batch boundary fell. `ts` is payload, not
     # ordering.
     #
-    # ONE shuffle for dedup AND write: the batch is repartitioned once on
-    # (bucket, _salt) — both are functions of the key, so every copy of a
-    # key lands in one partition — then LWW is a partition-local sort
-    # (key asc, lsn desc) + keep-first-of-key lag filter, and the segment
-    # write below reuses this partitioning as the file layout (no second
-    # exchange). The classic alternative (row_number window partitioned by
-    # key, then repartition for the write) shuffles the batch TWICE and
-    # runs an extra 64-task stage; its map-side WindowGroupLimit pruning
-    # saves less than the second shuffle costs (events/key ~1.6 here).
+    # ONE shuffle for dedup AND write: the table's write layout puts every
+    # copy of a key in one partition (its combo is a function of the key),
+    # LWW is then partition-local, and the segment write below reuses that
+    # partitioning as the file layout (no second exchange). The classic
+    # alternative (row_number window partitioned by key, then repartition
+    # for the write) shuffles the batch TWICE and runs an extra 64-task
+    # stage; its map-side WindowGroupLimit pruning saves less than the
+    # second shuffle costs (events/key ~1.6 here).
     # Measured (2.4e6-event feed, 4 batches, this host, best-of-2):
     # local[1] 55.6s -> 44.9s (1.24x), local[4] 16.3s -> 13.8s (1.18x) —
     # and the removed exchange+stage was per-batch overhead, which is
     # exactly what bounds the sub-knee N->4N scaling pairs at small
     # batch sizes. Other alternatives previously measured slower: max_by
     # hash-agg (2.5x with the normalize stage), mapInPandas dedup (1.5x).
-    # combo id = bucket * fpb + salt — a pure function of the key. The
-    # layout (buckets x files_per_bucket combos) bounds the files per
-    # bucket; the TASK count is sized from the batch's input bytes, read
-    # from the file index before any job (lake/table.py write_tasks): a
-    # small microbatch is written by P tasks holding whole combos (combo c
-    # -> task c mod P) instead of one task per combo, so it stops paying
-    # n_parts task launches for a few hundred KB, and an input of
-    # n_parts * WRITE_TASK_TARGET_BYTES or more keeps one task per combo.
-    # P depends on the layout and the input bytes, never on the session's
-    # parallelism: the plan is identical at every cluster size (capping by
-    # defaultParallelism handed small clusters a cheaper plan and
-    # corrupted N-vs-4N scaling measurements).
-    n_combos = max(1, table.num_buckets * files_per_bucket)
-    n_parts = write_tasks(n_combos, input_bytes(events))
-    keys_sql = ",".join(f"`{c}`" for c in key_cols)
-    combo_sql = (
-        f"cast((cast({BUCKET_COL} as bigint) * {int(files_per_bucket)} "
-        f"+ pmod(xxhash64({keys_sql}), {int(files_per_bucket)})) as int)"
-    )
-    pkeys = _perfect_partition_keys(spark, n_parts)
-    if pkeys is not None:
-        # partition == combo mod n_parts exactly (no balls-in-bins skew;
-        # see _perfect_partition_keys). One parsed F.expr string: the
-        # F.array(*[F.lit(k) x n_combos]) form cost ~36ms of py4j round
-        # trips per batch at 64 partitions for the identical expression.
-        arr = ",".join(str(int(pkeys[c % n_parts])) for c in range(n_combos))
-        ev = ev.withColumn(
-            "_pkey", F.expr(f"element_at(array({arr}), {combo_sql} + 1)")
-        )
-    else:  # pragma: no cover - astronomically unlikely fallback
-        ev = ev.withColumn("_pkey", F.expr(combo_sql))
-    ev = ev.repartition(n_parts, "_pkey")
-    key_struct = F.struct(*[F.col(c) for c in key_cols])
-    # window over the _pkey partition: every copy of a key shares _pkey, and
-    # the (key asc, lsn desc) sort makes first-of-key the LWW winner even
-    # with many keys per partition. Partitioning by _pkey (not bucket/salt)
-    # lets Catalyst see the repartition satisfies the window's clustering —
-    # no second exchange.
-    w = Window.partitionBy("_pkey").orderBy(
-        *[F.col(c) for c in key_cols], F.col("lsn").desc()
-    )
-    prev_key = F.lag(key_struct).over(w)
-    dedup = (
-        ev.withColumn("_keep", prev_key.isNull() | (prev_key != key_struct))
-        .filter(F.col("_keep"))
-        .drop("_keep")
-    )
+    dedup = table.last_writer_wins(table.layout(ev, files_per_bucket=files_per_bucket))
+
     # normalize: whitespace canonicalization (unicode-aware via the (?U)
     # regex flag — identical collapse/strip semantics to normalize_text)
     # fused into the post-dedup projection as a codegen expression, zero
@@ -363,13 +277,11 @@ def apply_batch(
     # tombstone marker: true for deletes, NULL (not false) for upserts, so
     # the parquet footer null_count yields the delete count without a scan
     deleted_marker = F.when(is_del, F.lit(True)).otherwise(F.lit(None).cast("boolean"))
-    segment = dedup.select(
-        *payload, F.col("lsn").alias(LSN_COL), deleted_marker.alias(DELETED_COL), BUCKET_COL
-    )
+    segment = dedup.select(*payload, LSN_COL, deleted_marker.alias(DELETED_COL), BUCKET_COL)
 
     # ---- salted bucket-partitioned append (bounded files, skew-spread) ----
-    # the segment is ALREADY partitioned on (bucket, _salt) from the dedup
-    # shuffle above (the projection is narrow), so the write reuses it:
+    # the segment is ALREADY laid out by the dedup shuffle above (the
+    # projection is narrow), so the write reuses it:
     # each task writes one file per bucket it holds, a hot conversation's
     # bucket is written by up to `files_per_bucket` salted tasks, and file
     # counts stay bounded by the layout.

@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datachain_spark.lake.table import BUCKET_COL, LakeTable
+from datachain_spark.lake.table import LakeTable
 from datachain_spark.udf import (
     Lifecycle,
     bind_setup,
@@ -1059,19 +1059,10 @@ class Chain:
             dprops["dataset.description"] = description
         if attrs is not None:
             dprops["dataset.attrs"] = list(attrs)
-        snap_keys = table.snapshot().key_cols
-        if snap_keys:
-            # bucketed write: the deterministic bucket expr of the CDC
-            # apply path, so the dataset is a merge target
-            seg = df.withColumn(BUCKET_COL, table.bucket_expr(snap_keys[0]))
-            seg = seg.repartition(table.num_buckets, BUCKET_COL)
-        else:
-            seg = df.withColumn(BUCKET_COL, F.lit(0))
-        # replace EVERY bucket (absent ones become empty) so save stays
-        # full-snapshot semantics even on a pre-existing table
-        replace: dict[int, list[str]] = {b: [] for b in range(table.num_buckets)}
-        replace.update(table.write_segment(seg, f"save={table.current_version() + 1}"))
-        table.commit(replace_bucket_files=replace, schema=df.schema, tag=ver, props=dprops)
+        # a keyed layout buckets like the CDC apply, so the dataset is a
+        # merge target; save keeps full-snapshot semantics on an existing
+        # table (overwrite replaces every bucket)
+        table.overwrite(df, "save", tag=ver, props=dprops)
         return read_dataset(df.sparkSession, name, catalog_root=cat_root)
 
     def merge_into(

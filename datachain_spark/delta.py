@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datachain_spark.diff import A, D, M, diff
-from datachain_spark.lake.table import BUCKET_COL, LakeTable
+from datachain_spark.lake.table import LakeTable
 
 
 def delta_update(
@@ -81,13 +81,10 @@ def delta_update(
         keep = keep.join(deleted_keys, on, "left_anti")
     new_result = keep.unionByName(recomputed, allowMissingColumns=True)
 
-    files = result.write_segment(
-        new_result.withColumn(BUCKET_COL, F.lit(0)), f"delta={result.current_version() + 1}"
-    )
     deps[source.root] = latest_src
-    return result.commit(
-        replace_bucket_files={0: files.get(0, [])},
-        schema=new_result.schema,
+    return result.overwrite(
+        new_result,
+        "delta",
         props={
             "dependencies": [
                 {"source": s, "version": v} for s, v in sorted(deps.items())

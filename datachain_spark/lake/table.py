@@ -18,15 +18,16 @@ amortized, like Iceberg data compaction — after which reads are
 window-free again (per-bucket `dirty` flags track which buckets need
 resolution).
 
-Write-stage width: the layout (buckets x files_per_bucket) bounds the
-files a batch or compaction writes per bucket; the number of TASKS that
-write them is sized from the input's bytes, known from the file index
-before any job runs (`write_tasks`). A small microbatch is written by a
-few tasks that each hold whole (bucket, salt) combos instead of one task
-per combo, so the per-task launch cost stops dominating small batches,
-while an input of `n_parts * WRITE_TASK_TARGET_BYTES` or more keeps one
-task per combo. Neither the file layout nor the plan depends on the
-session's parallelism.
+Write shuffle: `layout` is the one shuffle of every table write. A row's
+combo is (bucket, salt), the salt a hash of its key over
+`files_per_bucket`, so a hot key's bucket spreads over that many files.
+The TASK count is sized from the input's bytes before any job runs
+(`write_tasks`): a small microbatch is written by a few tasks holding
+whole combos, an input of `n_parts * WRITE_TASK_TARGET_BYTES` or more by
+one task per combo, whatever the session's parallelism. A combo's task is
+its rank among the written combos mod that count, placed exactly, so a
+compaction of 8 scattered buckets stays balanced. `last_writer_wins` runs
+inside that partitioning: LWW and the write share one exchange.
 
 File layout: `LakeTable.write_segment` is the only writer of data files.
 Each call writes one WRITE UNIT, a directory under `data/` named for its
@@ -52,7 +53,7 @@ Scale notes (100 TB / 1000 executors):
   threshold in session.get_spark).
 - Bucket pruning: reads of K of B buckets scan only those buckets' files.
 - Apply is O(batch); compaction is O(dirty-bucket data), amortized across
-  batches and parallel over buckets.
+  batches and parallel over buckets; each is one shuffle.
 - Manifests are O(B * segments-per-bucket) JSON — driver-side metadata,
   the same regime as Iceberg manifest lists. `expire_versions` bounds
   history; compaction bounds segments-per-bucket.
@@ -82,7 +83,7 @@ from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -116,12 +117,51 @@ def write_tasks(n_parts: int, nbytes: int | None) -> int:
     """Task count of a write stage laid out as `n_parts` (bucket, salt)
     combos: the smallest divisor P of n_parts with
     P * WRITE_TASK_TARGET_BYTES >= nbytes, so every task holds whole combos
-    (combo c -> task c mod P) and a bucket's files still number at most
-    its salts. `n_parts` when the size is unknown or large."""
+    (the combo of rank r -> task r mod P) and a bucket's files still
+    number at most its salts. `n_parts` when the size is unknown or large."""
     if nbytes is None:
         return n_parts
     fits = (p for p in range(1, n_parts) if p * WRITE_TASK_TARGET_BYTES >= nbytes)
     return next((p for p in fits if n_parts % p == 0), n_parts)
+
+
+# A row's write task in a `layout` frame (write_segment drops it).
+TASK_COL = "__task"
+# n -> integer literals k_p with pmod(murmur3(k_p), n) == p
+_PKEY_CACHE: dict[int, list[int]] = {}
+
+
+def _perfect_partition_keys(spark: SparkSession, n: int) -> list[int]:
+    """Keys k_p with pmod(hash(k_p), n) == p (F.hash IS the partitioner's
+    Murmur3), so a row keyed k_p lands in partition p. Hashing 64 combo ids
+    into 64 partitions instead is balls-in-bins — measured: 21 partitions
+    empty, one holding 4 combos, a visible share of the 8->32 scaling gap.
+    Searched 64n candidates at a time over a driver-local frame (no Spark
+    job; a residue stays unhit with probability ~e^-64), cached per n."""
+    if n not in _PKEY_CACHE:
+        found: dict[int, int] = {}
+        lo = 0
+        while len(found) < n:
+            ks = local_frame(
+                spark, T.StructType([T.StructField("k", T.IntegerType())]),
+                {"k": list(range(lo, lo + 64 * n))},
+            )
+            for k, p in ks.select("k", F.pmod(F.hash("k"), F.lit(n))).collect():
+                found.setdefault(p, k)
+            lo += 64 * n
+        _PKEY_CACHE[n] = [found[p] for p in range(n)]
+    return _PKEY_CACHE[n]
+
+
+def place(df: DataFrame, task: str, n: int) -> DataFrame:
+    """`df` hash-partitioned into n partitions with each row in partition
+    `task` exactly (`task`: a SQL int expression in [0, n)), through the
+    row's perfect partition key in `TASK_COL`. One parsed F.expr string:
+    an F.array(*[F.lit(k) x n]) form cost ~36ms of py4j round trips at 64
+    partitions."""
+    keys = ",".join(map(str, _perfect_partition_keys(df.sparkSession, n)))
+    key = F.expr(f"element_at(array({keys}), {task} + 1)")
+    return df.withColumn(TASK_COL, key).repartition(n, TASK_COL)
 
 
 def _add_committed(committed: dict[str, list[list[int]]], job_id: str, batch_id: int) -> None:
@@ -280,14 +320,52 @@ class LakeTable:
         return opts
 
     # ---------- data files ----------
+    def layout(
+        self, df: DataFrame, buckets: list[int] | None = None, files_per_bucket: int = 1
+    ) -> DataFrame:
+        """The table's write shuffle (module docstring): `df` with its rows'
+        `BUCKET_COL` (kept if the caller set it) and `TASK_COL`, hash-
+        partitioned so each write task holds whole (bucket, salt) combos.
+        `buckets` are the buckets being written (default: all); a combo's
+        task is its rank among their combos mod the task count. A table
+        without key columns is one bucket, 0, written with no shuffle."""
+        snap = self.snapshot()
+        if not snap.key_cols:
+            return df.withColumn(BUCKET_COL, F.lit(0))
+        if BUCKET_COL not in df.columns:
+            df = df.withColumn(BUCKET_COL, self.bucket_expr())
+        fpb = int(files_per_bucket)
+        sel = range(snap.num_buckets) if buckets is None else sorted(buckets)
+        rank = {c: i for i, c in enumerate(b * fpb + s for b in sel for s in range(fpb))}
+        n = write_tasks(len(rank), input_bytes(df))
+        combo = BUCKET_COL
+        if fpb > 1:
+            keys_sql = ",".join(f"`{c}`" for c in snap.key_cols)
+            combo = f"{BUCKET_COL} * {fpb} + cast(pmod(xxhash64({keys_sql}), {fpb}) as int)"
+        tasks = ",".join(str(rank.get(c, 0) % n) for c in range(snap.num_buckets * fpb))
+        return place(df, f"element_at(array({tasks}), {combo} + 1)", n)
+
+    def last_writer_wins(self, df: DataFrame) -> DataFrame:
+        """Each key's latest row of a `layout` frame: sort each partition by
+        key, then `_lsn` descending (nulls last, as `_resolve`), and keep
+        the first row of each key. A key's copies share a task and the
+        window partitions by `TASK_COL`, so this adds no exchange."""
+        keys = self.snapshot().key_cols
+        key = F.struct(*[F.col(c) for c in keys])
+        w = Window.partitionBy(TASK_COL).orderBy(*[F.col(c) for c in keys], F.col(LSN_COL).desc())
+        prev = F.lag(key).over(w)
+        first = df.withColumn("__first", prev.isNull() | (prev != key))
+        return first.filter("__first").drop("__first")
+
     def write_segment(self, df: DataFrame, unit: str) -> dict[int, list[str]]:
         """Write `df` as the write unit `data/<unit>` and return its files,
         bucket -> table-relative parquet paths (module docstring). Each row's
-        bucket id comes from its `BUCKET_COL` column; the caller partitions
-        `df` as it wants its files laid out (one task writes one file per
-        bucket it holds). Overwrites an earlier, uncommitted attempt."""
+        bucket id comes from its `BUCKET_COL` column; `layout` partitions
+        `df` into the write's tasks (one task writes one file per bucket it
+        holds). Overwrites an earlier, uncommitted attempt."""
         (
-            df.write.mode("overwrite")
+            df.drop(TASK_COL)
+            .write.mode("overwrite")
             .options(**self.parquet_write_options())
             .partitionBy(BUCKET_COL)
             .parquet(self.data_dir(unit))
@@ -447,21 +525,13 @@ class LakeTable:
             return local_frame(spark, read_schema)
         return spark.read.schema(read_schema).parquet(*files)
 
-    def _resolve(
-        self, df: DataFrame, key_cols: list[str], keep_tombstones: bool = False
-    ) -> DataFrame:
-        """Merge-on-read LWW resolution: latest `_lsn` per key wins; drop
-        tombstones (`keep_tombstones=True` keeps a winning tombstone row —
-        the compaction path uses it to preserve delete ordering against
-        redelivered stale upserts). A key's segments all live in one
-        bucket, so the window shuffle is bucket-local data, never
+    def _resolve(self, df: DataFrame, key_cols: list[str]) -> DataFrame:
+        """Merge-on-read LWW resolution for reads of dirty buckets: latest
+        `_lsn` per key wins; tombstones drop. A key's segments all live in
+        one bucket, so the window shuffle is bucket-local data, never
         cross-key."""
-        from pyspark.sql import Window
-
         w = Window.partitionBy(*key_cols).orderBy(F.col(LSN_COL).desc())
-        keep = F.col("__rn") == 1
-        if not keep_tombstones:
-            keep = keep & ~F.coalesce(F.col(DELETED_COL), F.lit(False))
+        keep = (F.col("__rn") == 1) & ~F.coalesce(F.col(DELETED_COL), F.lit(False))
         return df.withColumn("__rn", F.row_number().over(w)).filter(keep).drop("__rn")
 
     def read(
@@ -747,6 +817,17 @@ class LakeTable:
             self._write_manifest(snap)
             return snap.version
 
+    def overwrite(
+        self, df: DataFrame, writer: str, tag: str | None = None, props: dict | None = None
+    ) -> int:
+        """Commit `df` as the table's whole content (Chain.save,
+        delta_update): one `layout` write as the unit `<writer>=<version>`,
+        then every bucket is replaced and the schema becomes `df`'s."""
+        unit = f"{writer}={self.current_version() + 1}"
+        replace: dict[int, list[str]] = {b: [] for b in range(self.num_buckets)}
+        replace.update(self.write_segment(self.layout(df), unit))
+        return self.commit(replace_bucket_files=replace, schema=df.schema, tag=tag, props=props)
+
     def tag_version(self, tag: str, version: int | None = None) -> int:
         """Create a tagged (semver) alias version — a metadata-only commit,
         mirroring the reference's dataset version registration
@@ -787,8 +868,10 @@ class LakeTable:
         worst offenders per call — so a steady append workload (every batch
         touches every bucket) pays a smooth, bounded compaction tax per
         batch instead of a periodic full-table rewrite. Parallel over
-        buckets (one Spark job). Returns the new version, or None if
-        nothing needed compaction.
+        buckets, in one shuffle: `layout` places each rewritten bucket on
+        one write task and `last_writer_wins` resolves it there, so the
+        bucket is one file. Returns the new version, or None if nothing
+        needed compaction.
 
         `retain_tombstones=True` (default) keeps each deleted key's WINNING
         tombstone row (`_deleted`, `_lsn`) in the compacted output instead
@@ -818,21 +901,15 @@ class LakeTable:
         if max_buckets is not None and len(todo) > max_buckets:
             todo = sorted(todo, key=lambda b: -len(snap.buckets[b]))[:max_buckets]
         raw = self._read_raw(spark, snap, todo)
-        resolved = self._resolve(
-            raw,
-            snap.key_cols,
-            keep_tombstones=retain_tombstones,
-        )
-        resolved = resolved.withColumn(BUCKET_COL, self.bucket_expr())
-        # sized from the rewritten files' bytes (write_tasks); a bucket
-        # hashes to exactly one task, so it is one output file
-        n_parts = write_tasks(len(todo), input_bytes(raw))
-        out = resolved.repartition(n_parts, BUCKET_COL)
+        # one exchange: a bucket is one combo, so it is one task and one file
+        out = self.last_writer_wins(self.layout(raw, buckets=todo))
+        if not retain_tombstones:
+            out = out.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
         if zorder_by:
             from datachain_spark.operators.zorder import zorder_code
 
             out = (
-                out.withColumn("__z", zorder_code(resolved, zorder_by, stats_df=raw))
+                out.withColumn("__z", zorder_code(out, zorder_by, stats_df=raw))
                 .sortWithinPartitions(BUCKET_COL, "__z")
                 .drop("__z")
             )

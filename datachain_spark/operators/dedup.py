@@ -470,7 +470,7 @@ def incremental_dedup(
     the lake's exactly-once ledger: replaying a committed batch re-filters
     (idempotent reads) but never double-registers.
     """
-    from datachain_spark.lake.table import BUCKET_COL, LakeTable
+    from datachain_spark.lake.table import LakeTable
 
     spark = new_df.sparkSession
     fp_schema = T.StructType([T.StructField("fp", T.LongType(), False)])
@@ -528,10 +528,7 @@ def incremental_dedup(
         import uuid
 
         fps = survivors.select(F.col("_fp").alias("fp"))
-        appends = reg.write_segment(
-            fps.withColumn(BUCKET_COL, reg.bucket_expr()).repartition(BUCKET_COL),
-            f"dedup={uuid.uuid4().hex[:8]}",
-        )
+        appends = reg.write_segment(reg.layout(fps), f"dedup={uuid.uuid4().hex[:8]}")
         ledger = (
             {"job_id": job_id, "batch_id": int(batch_id)}
             if batch_id is not None

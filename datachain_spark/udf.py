@@ -293,7 +293,14 @@ class Lifecycle:
 
 
 def model_cell(v: Any) -> Any:
-    """Model instance -> dict tree (what Arrow expects for struct cells)."""
+    """Model instance -> dict tree (what Arrow expects for struct cells),
+    also inside dict values and list items."""
+    if isinstance(v, (str, int, float, bytes, type(None))):
+        return v
+    if isinstance(v, dict):
+        return {k: model_cell(x) for k, x in v.items()}
+    if isinstance(v, list):
+        return [model_cell(x) for x in v]
     if dataclasses.is_dataclass(v) and not isinstance(v, type):
         return {f.name: model_cell(getattr(v, f.name)) for f in dataclasses.fields(v)}
     if isinstance(v, tuple) and hasattr(v, "_fields"):

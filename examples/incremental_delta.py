@@ -4,7 +4,6 @@ examples/incremental_processing/{delta.py,retry.py} rebuilt on Spark.
 Run: python examples/incremental_delta.py
 """
 
-import os
 import sys
 import tempfile
 from pathlib import Path
@@ -22,15 +21,7 @@ work = tempfile.mkdtemp(prefix="delta_example_")
 
 
 def save_version(table, rows, schema):
-    df = spark.createDataFrame(rows, schema)
-    out = table.data_dir(f"v{table.current_version() + 1}")
-    df.write.mode("overwrite").parquet(out)
-    files = [
-        os.path.relpath(os.path.join(out, f), table.root)
-        for f in sorted(os.listdir(out))
-        if f.endswith(".parquet")
-    ]
-    table.commit(replace_bucket_files={0: files}, schema=df.schema)
+    table.overwrite(spark.createDataFrame(rows, schema), "save")
 
 
 src = LakeTable.create(

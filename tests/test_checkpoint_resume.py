@@ -249,6 +249,9 @@ def _udf_shape(name: str):
     def gen_struct_value(id):
         yield {"x": id, "y": -id}
 
+    def gen_struct_named_model(id):
+        yield {"p": Point(id, -id)}
+
     return {
         "map-scalar": ("map", lambda id: id * 2, {"out": int}, ["id"]),
         "map-dict": ("map", lambda id: {"a": id, "b": str(id)}, {"a": int, "b": str}, ["id"]),
@@ -256,6 +259,7 @@ def _udf_shape(name: str):
         "map-struct": ("map", lambda id: Point(id, -id), {"p": Point}, ["id"]),
         "map-struct-named": ("map", lambda id: {"p": {"x": id, "y": -id}}, {"p": Point}, ["id"]),
         "map-struct-value": ("map", lambda id: {"x": id, "y": -id}, {"p": Point}, ["id"]),
+        "map-struct-named-model": ("map", lambda id: {"p": Point(id, -id)}, {"p": Point}, ["id"]),
         "map-overwrite": ("map", lambda v: v * 10, {"v": float}, ["v"]),
         "gen-scalar": ("gen", gen_scalar, {"g": int}, ["id"]),
         "gen-tuple": ("gen", gen_tuple, {"a": int, "b": str}, ["id"]),
@@ -264,6 +268,7 @@ def _udf_shape(name: str):
         "gen-struct": ("gen", gen_struct, {"p": Point}, ["id"]),
         "gen-struct-named": ("gen", gen_struct_named, {"p": Point}, ["id"]),
         "gen-struct-value": ("gen", gen_struct_value, {"p": Point}, ["id"]),
+        "gen-struct-named-model": ("gen", gen_struct_named_model, {"p": Point}, ["id"]),
     }[name]
 
 
@@ -285,11 +290,12 @@ def test_checkpoint_output_matches_plain(spark, tmp_path, shape):
     assert (len(rows) == 0) == (shape == "gen-none")
 
 
-@pytest.mark.parametrize("form", ["", "-named", "-value"])
+@pytest.mark.parametrize("form", ["", "-named", "-value", "-named-model"])
 def test_map_and_gen_store_a_struct_output_alike(spark, form):
     """One output rule for a single struct-typed column: map's return value
     and gen's yielded item — a model instance, a dict holding the column's
-    name, or a dict that is the value — store the same struct."""
+    name (its value a dict or a model instance), or a dict that is the
+    value — store the same struct."""
     ch = dc.read_values(spark, id=[1, 2, 3])
     got = []
     for kind in ("map", "gen"):

@@ -3,8 +3,6 @@ and multimodal binary-column plumbing."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from datachain_spark.delta import delta_update
@@ -13,15 +11,7 @@ from datachain_spark.operators.multimodal import decode_features, frame_sample, 
 
 
 def _save_version(spark, table: LakeTable, rows, schema):
-    df = spark.createDataFrame(rows, schema)
-    out = table.data_dir(f"v{table.current_version() + 1}")
-    df.write.mode("overwrite").parquet(out)
-    files = [
-        os.path.relpath(os.path.join(out, f), table.root)
-        for f in sorted(os.listdir(out))
-        if f.endswith(".parquet")
-    ]
-    table.commit(replace_bucket_files={0: files}, schema=df.schema)
+    table.overwrite(spark.createDataFrame(rows, schema), "save")
 
 
 def test_delta_update_incremental(spark, tmp_path):
@@ -91,6 +81,36 @@ def test_delta_update_multi_source_dependencies(spark, tmp_path):
     delta_update(spark, src_a, res, transform, on=["id"])
     got = sorted(tuple(r) for r in res.read(spark).collect())
     assert got == [(1, 2.0, 20.0), (100, 5.0, 50.0)]
+
+
+def test_delta_update_buckets_a_keyed_result(spark, tmp_path):
+    """A keyed result of several buckets gets each row in its key's bucket,
+    so point reads find every key, and each run replaces every bucket."""
+    schema = "id int, v double"
+    src = LakeTable.create(
+        str(tmp_path / "sk"), spark.createDataFrame([], schema).schema, key_cols=["id"], num_buckets=1
+    )
+    res = LakeTable.create(
+        str(tmp_path / "rk"), spark.createDataFrame([], "id int, v double, out double").schema,
+        key_cols=["id"], num_buckets=4,
+    )
+
+    def transform(df):
+        return df.withColumn("out", F.col("v") * 10)
+
+    ids = list(range(20))
+    _save_version(spark, src, [(i, float(i)) for i in ids], schema)
+    delta_update(spark, src, res, transform, on=["id"])
+    first = res.snapshot().buckets
+    assert len([b for b, fl in first.items() if fl]) > 1
+    assert sorted(r["id"] for r in res.read_keys(spark, ids).collect()) == ids
+
+    _save_version(spark, src, [(i, float(i) + 0.5) for i in ids], schema)
+    delta_update(spark, src, res, transform, on=["id"])
+    second = res.snapshot().buckets
+    assert all(set(second.get(b, [])).isdisjoint(fl) for b, fl in first.items())
+    got = sorted((r["id"], r["out"]) for r in res.read_keys(spark, ids).collect())
+    assert got == [(i, (i + 0.5) * 10) for i in ids]
 
 
 def test_delta_retry_rows(spark, tmp_path):

@@ -401,7 +401,10 @@ def test_dedup_registry_segments_stay_bounded(spark, tmp_path):
 def test_only_lake_table_owns_the_file_layout():
     """No module under datachain_spark/ but lake/table.py builds a data
     directory (`data_dir(`), names a bucket directory (`bucket=` or
-    `__bucket=`) or constructs a Snapshot; inside lake/table.py only
+    `__bucket=`), constructs a Snapshot or decides the write shuffle
+    (`write_tasks`, the partition keys); chain.py, delta.py and
+    operators/dedup.py name no `BUCKET_COL` and repartition for no table
+    write; inside lake/table.py only
     `create` builds one from scratch and only `_derive` builds one from
     another (`Snapshot(` or `dataclasses.replace(`)."""
     import ast
@@ -410,6 +413,7 @@ def test_only_lake_table_owns_the_file_layout():
     pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "datachain_spark")
     owner = os.path.join(pkg, "lake", "table.py")
     layout = re.compile(r"data_dir\(|(?<!\w)(?:__)?bucket=")
+    shuffle = re.compile(r"\bwrite_tasks\b|partition_keys|pmod\(\s*F\.hash|pmod\(hash")
     offenders = []
     for dp, _, fns in os.walk(pkg):
         for fn in fns:
@@ -419,6 +423,17 @@ def test_only_lake_table_owns_the_file_layout():
             src = open(path).read()
             offenders += [f"{path}: {m.group(0)}" for m in layout.finditer(src)]
             offenders += [f"{path}: Snapshot(" for _ in re.finditer(r"\bSnapshot\(", src)]
+            # the write shuffle: task sizing and partition keys
+            offenders += [f"{path}: {m.group(0)}" for m in shuffle.finditer(src)]
+    for mod in ("chain.py", "delta.py", os.path.join("operators", "dedup.py")):
+        src = open(os.path.join(pkg, mod)).read()
+        offenders += [f"{mod}: BUCKET_COL" for _ in re.finditer(r"\bBUCKET_COL\b", src)]
+        # a table write's repartition; chain.py keeps settings(parallel=)'s
+        offenders += [
+            f"{mod}: {line.strip()}"
+            for line in src.splitlines()
+            if ".repartition(" in line and "_settings.parallel" not in line
+        ]
     assert offenders == []
 
     tree = ast.parse(open(owner).read())

@@ -15,7 +15,8 @@ are under test, and a query's plan shape is scale-invariant):
   - the CDC apply is ONE shuffle end-to-end: its widest Spark job has at
     most two stages (map + reduce/write) — counted from the status
     tracker on a real apply, so a reintroduced second exchange fails;
-    its write stage is sized from the batch's input bytes;
+    its write stage is sized from the batch's input bytes, and the same
+    holds for compaction; the layout's partition keys run no job;
   - a full LakeTable read of many segment files starts no listing job;
   - the scan spread adds an exchange only to inputs of several task
     targets, and a repeated table read starts no schema-inference job.
@@ -174,7 +175,9 @@ def test_cdc_apply_is_one_shuffle(spark, tmp_path):
     the salted layout (files_per_bucket > 1), which writes a bucket that
     holds a hot conversation as one file per salt. Every table equals the
     LWW replay. A full read() of a table with more than
-    32 segment files runs no Spark job (no parallel file-listing job)."""
+    32 segment files runs no Spark job (no parallel file-listing job), and
+    compacting it is one shuffle too, leaving one file per compacted
+    bucket."""
     import collections
     import functools
 
@@ -260,3 +263,30 @@ def test_cdc_apply_is_one_shuffle(spark, tmp_path):
     assert len(small.read(spark).inputFiles()) > 32
     assert jobs_of(spark, "plan-audit-read", lambda: small.read(spark)) == []
     assert table_rows(small) == replay()
+
+    # compaction is one shuffle too, and a compacted bucket is one file
+    before = small.snapshot()
+    jobs = jobs_of(spark, "plan-audit-compact", lambda: small.compact(spark))
+    widest = max(len(j.stageIds) for j in jobs)
+    assert widest <= 2, f"compaction's widest job ran {widest} stages (>1 shuffle)"
+    after = small.snapshot()
+    assert after.version == before.version + 1
+    assert all(len(after.buckets[b]) == 1 for b, fl in before.buckets.items() if len(fl) > 8)
+    assert table_rows(small) == replay()
+
+
+def test_perfect_partition_keys_run_no_job(spark):
+    """The write layout's partition keys come from a driver-local frame: a
+    fresh task count runs no Spark job, and key p hashes to partition p."""
+    from pyspark.sql import functions as F
+
+    from datachain_spark.frames import local_frame
+    from datachain_spark.lake.table import _PKEY_CACHE, _perfect_partition_keys
+
+    n = 29
+    _PKEY_CACHE.pop(n, None)
+    keys = []
+    assert jobs_of(spark, "plan-audit-pkeys", lambda: keys.extend(_perfect_partition_keys(spark, n))) == []
+    frame = local_frame(spark, T.StructType([T.StructField("k", T.IntegerType())]), {"k": keys})
+    placed = frame.repartition(n, "k").select("k", F.spark_partition_id().alias("p")).collect()
+    assert sorted((r["p"], r["k"]) for r in placed) == list(enumerate(keys))

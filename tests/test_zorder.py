@@ -106,9 +106,9 @@ def test_zorder_string_column(spark, tmp_path):
     zdir = str(tmp_path / "zs")
     write_zordered(df, zdir, ["name", "v"], num_files=8)
     hit, total = zorder_file_overlap(zdir, "name", "user_010", "user_019")
-    # repartitionByRange samples its boundaries, so the exact file count
-    # jitters run-to-run; the claim is that a 5%-of-keyspace string range
-    # never touches more than ~half the files
+    # the file boundaries are the z-code's quantiles, the same in every
+    # session; the claim is that a 5%-of-keyspace string range never
+    # touches more than ~half the files
     assert total == 8 and hit <= 5, (hit, total)
     got = (
         spark.read.parquet(zdir)

@@ -40,77 +40,73 @@ def normrow(row):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    con = oracle_db(sf_dir)
+    spark = get_spark(cpus=8, shuffle_partitions=16)
+    failures = 0
+    for name in entrymod.queries():
+        if only and name not in only:
+            continue
+        try:
+            problems = check(spark, con, sf_dir, name)
+        except Exception as e:  # noqa: BLE001
+            problems = [f"error {type(e).__name__}: {e}"]
+        for p in problems:
+            print(f"FAIL {name}: {p}")
+        if problems:
+            failures += 1
+        else:
+            print(f"OK   {name}")
+    return 1 if failures else 0
+
+
+def oracle_db(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per test table of `sf_dir`."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-    spark = get_spark(cpus=8, shuffle_partitions=16)
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    failures = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        sql = oracles.get(name)
-        try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = sdf.collect()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error {type(e).__name__}: {e}")
-            failures += 1
-            continue
-        if sql is None:
-            print(f"ROWS-ONLY {name}: {len(srows)} rows, cols={scols}")
-            continue
-        try:
-            rel = con.sql(sql)
-            dcols = list(rel.columns)
-            dtypes = [str(t) for t in rel.types]
-            drows = rel.fetchall()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error {e}")
-            failures += 1
-            continue
-        ok = True
-        # The driver hashes TYPED values: duckdb HUGEINT (what sum(int)
-        # returns) renders differently from int64 even when the values are
-        # equal — exactly the round-1 sessionize/document_pipeline hash
-        # failures. Treat any HUGEINT/DECIMAL oracle column as a failure so
-        # the local gate catches it before the driver does.
-        exotic = [f"{c}:{t}" for c, t in zip(dcols, dtypes) if "HUGEINT" in t or "DECIMAL" in t]
-        if exotic:
-            print(f"FAIL {name}: oracle emits hash-hazard types {exotic} — CAST them")
-            ok = False
-        if sorted(scols) != sorted(dcols):
-            print(f"FAIL {name}: columns spark={sorted(scols)} duck={sorted(dcols)}")
-            ok = False
-        if len(srows) != len(drows):
-            print(f"FAIL {name}: rows spark={len(srows)} duck={len(drows)}")
-            ok = False
-        if ok:
-            order = sorted(scols)
-            sidx = [scols.index(c) for c in order]
-            didx = [dcols.index(c) for c in order]
-            sset = sorted(
-                normrow(tuple(r[i] for i in sidx)) for r in (tuple(x) for x in srows)
-            )
-            # duckdb timestamps come back tz-naive; spark rows via collect are
-            # naive too under UTC session — compare directly
-            dset = sorted(normrow(tuple(r[i] for i in didx)) for r in drows)
-            if sset != dset:
-                bad = next(
-                    (i for i, (a, b) in enumerate(zip(sset, dset)) if a != b), None
-                )
-                print(f"FAIL {name}: value mismatch at sorted-row {bad}:")
-                print(f"  spark: {sset[bad] if bad is not None else '?'}")
-                print(f"  duck : {dset[bad] if bad is not None else '?'}")
-                ok = False
-        if ok:
-            print(f"OK   {name}: {len(srows)} rows")
-        else:
-            failures += 1
-    return 1 if failures else 0
+    return con
+
+
+def check(spark, con: duckdb.DuckDBPyConnection, sf_dir: str, name: str) -> list[str]:
+    """How queries()[name] on Spark differs from oracle_sql()[name] on
+    `con` (oracle_db): row count, column names, hash-hazard oracle types
+    and order-insensitive values. Empty when they agree; errors raise."""
+    sql = entrymod.oracle_sql().get(name)
+    if sql is None:
+        return ["no oracle query"]
+    sdf = entrymod.queries()[name](spark, sf_dir)
+    scols, srows = sdf.columns, sdf.collect()
+    rel = con.sql(sql)
+    dcols, dtypes, drows = list(rel.columns), [str(t) for t in rel.types], rel.fetchall()
+    problems = []
+    # A gate that hashes TYPED values sees duckdb HUGEINT (what sum(int)
+    # returns) differ from int64 even when the values are equal — the
+    # round-1 sessionize/document_pipeline hash failures. Treat any
+    # HUGEINT/DECIMAL oracle column as a failure so it shows here first.
+    exotic = [f"{c}:{t}" for c, t in zip(dcols, dtypes) if "HUGEINT" in t or "DECIMAL" in t]
+    if exotic:
+        problems.append(f"oracle emits hash-hazard types {exotic} — CAST them")
+    if sorted(scols) != sorted(dcols):
+        problems.append(f"columns spark={sorted(scols)} duck={sorted(dcols)}")
+    if len(srows) != len(drows):
+        problems.append(f"rows spark={len(srows)} duck={len(drows)}")
+    if problems:
+        return problems
+    order = sorted(scols)
+    sidx = [scols.index(c) for c in order]
+    didx = [dcols.index(c) for c in order]
+    sset = sorted(normrow(tuple(r[i] for i in sidx)) for r in (tuple(x) for x in srows))
+    # duckdb timestamps come back tz-naive; spark rows via collect are
+    # naive too under UTC session — compare directly
+    dset = sorted(normrow(tuple(r[i] for i in didx)) for r in drows)
+    bad = next((i for i, (a, b) in enumerate(zip(sset, dset)) if a != b), None)
+    if bad is not None:
+        problems.append(
+            f"value mismatch at sorted-row {bad}:\n  spark: {sset[bad]}\n  duck : {dset[bad]}"
+        )
+    return problems
 
 
 if __name__ == "__main__":
