@@ -31,7 +31,6 @@ one raises SettingsError.
 from __future__ import annotations
 
 import os
-import re
 from collections.abc import Callable, Iterable, Sequence
 from dataclasses import dataclass, fields
 from typing import Any
@@ -981,11 +980,6 @@ class Chain:
     def persist(self) -> "Chain":
         return self._evolve(self.df.persist())
 
-    def _table(self, name: str) -> LakeTable:
-        from datachain_spark.namespaces import dataset_root
-
-        return LakeTable(dataset_root(self.catalog_root, name))
-
     def save(
         self,
         name: str | None = None,
@@ -998,9 +992,10 @@ class Chain:
     ) -> "Chain":
         """Materialize as a new version of dataset `name` (semver-tagged
         LakeTable snapshot; reference catalog.py:796-890 + dataset
-        versioning dataset.py:240-360). Auto-bumps the patch version
-        (`update_version=` picks major/minor/patch, reference
-        datachain.py:618-641).
+        versioning dataset.py:240-360). Without `version`, the highest tag
+        is bumped by `update_version` (major/minor/patch, reference
+        datachain.py:618-641; `LakeTable.next_tag`). A version the dataset
+        already has ("1.2.0" and "v1.2.0" alike) raises ValueError.
 
         `description`/`attrs` are DATASET-level metadata (reference
         dataset.py:423-424: they live on the dataset record, not the
@@ -1053,7 +1048,7 @@ class Chain:
                     f"dataset {name!r} already has key_cols="
                     f"{table.snapshot().key_cols}; cannot re-key on save"
                 )
-        ver = version or _next_semver(table, update_version)
+        ver = version or table.next_tag(update_version)
         dprops: dict = {}
         if description is not None:
             dprops["dataset.description"] = description
@@ -1237,25 +1232,6 @@ def _partial_struct(prefix: str, rests: list[str]) -> Column:
     return F.struct(*cols)
 
 
-def _next_semver(table: LakeTable, update_version: str = "patch") -> str:
-    if update_version not in ("major", "minor", "patch"):
-        raise ValueError(
-            f"update_version must be major/minor/patch, got {update_version!r}"
-        )
-    best = (0, 0, 0)
-    for v in table.versions():
-        tag = table.snapshot(v).tag
-        if tag and re.fullmatch(r"v\d+\.\d+\.\d+", tag):
-            best = max(best, tuple(int(x) for x in tag[1:].split(".")))
-    if best == (0, 0, 0):
-        return "v1.0.0"
-    if update_version == "major":
-        return f"v{best[0] + 1}.0.0"
-    if update_version == "minor":
-        return f"v{best[0]}.{best[1] + 1}.0"
-    return f"v{best[0]}.{best[1]}.{best[2] + 1}"
-
-
 # ---------- constructors (reference lib/dc/*.py) ----------
 def read_parquet(spark: SparkSession, path: str, **opts: str) -> Chain:
     return Chain(spark.read.options(**opts).parquet(path))
@@ -1317,10 +1293,11 @@ def read_dataset(
     project: str | None = None,
     as_of=None,
 ) -> Chain:
-    """Open a saved dataset at a version: an int snapshot id, an exact
-    semver tag ("v1.2.3" or "1.2.3"), or a SPECIFIER string like
-    ">=1.0.0,<2" / "~=1.2" resolving to the HIGHEST matching tag
-    (reference lib/dc/datasets.py:27-224 accepts the same forms).
+    """Open a saved dataset at a version (`LakeTable.resolve`): a snapshot
+    id (int or digit string), a tag ("v1.2.3" and "1.2.3" name the same
+    semver tag), or a SPECIFIER string like ">=1.0.0,<2" / "~=1.2"
+    resolving to the HIGHEST matching tag (reference
+    lib/dc/datasets.py:27-224 accepts the same forms).
     `name` may be fully qualified (`namespace.project.name`), or bare
     with explicit `namespace=`/`project=` (same reference signature).
     `as_of` (epoch float / datetime / ISO string) is timestamp time
@@ -1331,26 +1308,11 @@ def read_dataset(
         name = Settings(namespace=namespace, project=project).qualify(name)
 
     table = LakeTable(dataset_root(catalog_root, name))
-    if as_of is not None:
-        if version is not None:
-            raise ValueError("pass either version or as_of, not both")
-        version = table.version_at(as_of)
-    if isinstance(version, str) and any(version.startswith(p) for p in (">", "<", "=", "~", "!")):
-        version = _resolve_semver_spec(table, version)
-    ch = Chain(table.read(spark, version=version), catalog_root=catalog_root)
+    v = table.resolve(version, as_of)
+    ch = Chain(table.read(spark, version=v), catalog_root=catalog_root)
     # provenance for .name/.version/.dataset (reference datachain.py:316-339)
     ch._dataset_name = name
-    try:
-        v = (
-            table.current_version()
-            if version is None
-            else version
-            if isinstance(version, int)
-            else table.resolve_tag(version)
-        )
-        ch._dataset_version = table.snapshot(v).tag or v
-    except Exception:  # noqa: BLE001 - provenance is metadata sugar
-        ch._dataset_version = version
+    ch._dataset_version = table.snapshot(v).tag or v
     return ch
 
 
@@ -1358,55 +1320,6 @@ def _parse_name(name: str) -> tuple[str | None, str | None, str]:
     from datachain_spark.namespaces import parse_dataset_name
 
     return parse_dataset_name(name)
-
-
-def _resolve_semver_spec(table: LakeTable, spec: str) -> int:
-    """Resolve a comma-ANDed semver specifier against the table's tags and
-    return the snapshot id of the highest matching version."""
-
-    def parse(v: str) -> tuple[int, ...]:
-        v = v.lstrip("v")
-        parts = [int(x) for x in v.split(".") if x != ""]
-        return tuple(parts + [0] * (3 - len(parts)))
-
-    def matches(ver: tuple[int, ...], clause: str) -> bool:
-        clause = clause.strip()
-        for op in ("~=", ">=", "<=", "==", "!=", ">", "<", "="):
-            if clause.startswith(op):
-                rhs_raw = clause[len(op) :].strip()
-                rhs = parse(rhs_raw)
-                if op == "~=":
-                    # PEP 440 compatible release: pin all but the LAST given
-                    # component — ~=1.2.3 means >=1.2.3,<1.3.0 (not "same
-                    # major", which would let ~=1.2.3 match 1.9.0)
-                    given = len([x for x in rhs_raw.lstrip("v").split(".") if x != ""])
-                    pin = max(given - 1, 1)
-                    return ver >= rhs and ver[:pin] == rhs[:pin]
-                if op in ("==", "="):
-                    return ver == rhs
-                if op == "!=":
-                    return ver != rhs
-                if op == ">=":
-                    return ver >= rhs
-                if op == "<=":
-                    return ver <= rhs
-                if op == ">":
-                    return ver > rhs
-                return ver < rhs
-        return ver == parse(clause)
-
-    best: tuple[tuple[int, ...], int] | None = None
-    for v in table.versions():
-        tag = table.snapshot(v).tag
-        if not tag or not re.fullmatch(r"v?\d+(\.\d+){0,2}", tag):
-            continue
-        ver = parse(tag)
-        if all(matches(ver, c) for c in spec.split(",")):
-            if best is None or ver > best[0]:
-                best = (ver, v)
-    if best is None:
-        raise KeyError(f"no version of {table.root} matches specifier {spec!r}")
-    return best[1]
 
 
 class DatasetNotFoundError(KeyError):
@@ -1437,15 +1350,7 @@ def delete_dataset(
         shutil.rmtree(root)
         return
     table = LakeTable(root)
-    if version is None:
-        v = table.current_version()
-    elif isinstance(version, int):
-        v = version
-    elif any(version.startswith(p) for p in (">", "<", "=", "~", "!")):
-        v = _resolve_semver_spec(table, version)
-    else:
-        v = table.resolve_tag(version)
-    table.drop_version(v)
+    table.drop_version(table.resolve(version))
 
 
 def move_dataset(src: str, dest: str, catalog_root: str = DEFAULT_CATALOG) -> None:

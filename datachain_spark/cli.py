@@ -69,7 +69,7 @@ def _build_parser() -> argparse.ArgumentParser:
     ds_ls.add_argument("--catalog", default=None)
     ds_rm = ds_sub.add_parser("rm", help="delete a dataset version")
     ds_rm.add_argument("name")
-    ds_rm.add_argument("--version", default=None, help="snapshot id or semver")
+    ds_rm.add_argument("--version", default=None, help="snapshot id, tag or semver specifier")
     ds_rm.add_argument(
         "--force", action="store_true", help="delete every version"
     )
@@ -195,11 +195,8 @@ def main(argv: Sequence[str] | None = None, spark: SparkSession | None = None,
     if args.cmd == "show":
         from datachain_spark.chain import read_dataset
 
-        version = args.version
-        if version is not None and version.isdigit():
-            version = int(version)
         chain = read_dataset(
-            _spark(spark), args.name, version=version,
+            _spark(spark), args.name, version=args.version,
             catalog_root=_catalog(args.catalog),
         )
         df = chain.df
@@ -230,10 +227,7 @@ def main(argv: Sequence[str] | None = None, spark: SparkSession | None = None,
                     emit(n)
             return 0
         if args.ds_cmd == "rm":
-            version = args.version
-            if version is not None and version.isdigit():
-                version = int(version)
-            delete_dataset(args.name, catalog_root=root, version=version,
+            delete_dataset(args.name, catalog_root=root, version=args.version,
                            force=args.force)
             emit(f"removed {args.name}")
             return 0

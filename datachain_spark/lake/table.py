@@ -87,6 +87,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datachain_spark import semver
 from datachain_spark.frames import input_bytes, local_frame
 
 # Internal per-row metadata columns: LSN of the producing event, and the
@@ -424,11 +425,64 @@ class LakeTable:
                 self._snap_cache[v] = Snapshot.from_json(f.read())
         return self._snap_cache[v]
 
-    def resolve_tag(self, tag: str) -> int:
-        for v in reversed(self.versions()):
-            if self.snapshot(v).tag == tag:
-                return v
-        raise KeyError(f"tag {tag!r} not found in {self.root}")
+    def resolve(self, version: int | str | None = None, as_of=None) -> int:
+        """The snapshot id a version argument names: None is HEAD; an int or
+        digit string is that id; a specifier (">=1.0,<2", "~=1.2";
+        `semver.matches`) is the highest matching semver tag; any other
+        string is the newest live version with that tag ("1.2.0" and
+        "v1.2.0" are one tag). `as_of` is timestamp time travel."""
+        if as_of is not None:
+            if version is not None:
+                raise ValueError("pass either version or as_of, not both")
+            return self.version_at(as_of)
+        if version is None:
+            return self.current_version()
+        if isinstance(version, int) or version.isdecimal():
+            return int(version)
+        if semver.is_specifier(version):
+            hits = [
+                (p, v)
+                for v, t in self._tags()
+                if (p := semver.parse_tag(t)) and semver.matches(t, version)
+            ]
+            if not hits:
+                raise KeyError(f"no version of {self.root} matches specifier {version!r}")
+            return max(hits)[1]
+        hits = self._tagged(version)
+        if not hits:
+            raise KeyError(f"tag {version!r} not found in {self.root}")
+        return hits[-1]
+
+    def _tags(self) -> list[tuple[int, str]]:
+        """(version, tag) of every live tagged version, oldest first."""
+        return [(v, t) for v in self.versions() if (t := self.snapshot(v).tag)]
+
+    def _tagged(self, tag: str) -> list[int]:
+        """Live versions carrying `tag`: two semver tags are one tag when
+        their values are equal, a free-form tag matches exactly."""
+        key = semver.parse_tag(tag) or tag
+        return [v for v, t in self._tags() if (semver.parse_tag(t) or t) == key]
+
+    def _refuse_taken(self, tag: str | None) -> None:
+        if tag is not None and (taken := self._tagged(tag)):
+            raise ValueError(f"tag {tag!r} is already on version {taken[-1]} of {self.root}")
+
+    def next_tag(self, update_version: str = "patch") -> str:
+        """The highest live semver tag ("1.2.3" or "v1.2.3") bumped by
+        `update_version` (major/minor/patch), as "v<major>.<minor>.<patch>";
+        "v1.0.0" when no version carries a semver tag."""
+        if update_version not in ("major", "minor", "patch"):
+            raise ValueError(f"update_version must be major/minor/patch, got {update_version!r}")
+        parsed = [p for _, t in self._tags() if (p := semver.parse_tag(t))]
+        if not parsed:
+            return "v1.0.0"
+        major, minor, patch = max(parsed)
+        bumped = {
+            "major": (major + 1, 0, 0),
+            "minor": (major, minor + 1, 0),
+            "patch": (major, minor, patch + 1),
+        }[update_version]
+        return "v" + semver.create(*bumped)
 
     def version_at(self, ts) -> int:
         """Timestamp time travel (Delta's TIMESTAMP AS OF / Iceberg's
@@ -542,20 +596,15 @@ class LakeTable:
         with_meta: bool = False,
         as_of=None,
     ) -> DataFrame:
-        """Read a snapshot (optionally bucket-pruned / time-travel; `as_of`
-        = timestamp time travel via version_at).
+        """Read the snapshot `resolve(version, as_of)` names (a snapshot id,
+        a tag, a semver specifier or timestamp time travel; HEAD by
+        default), optionally bucket-pruned.
 
         The explicit schema makes old files (pre-evolution) surface added
         columns as null — Iceberg-style union-by-name on read. Buckets
         flagged dirty get LWW resolution; compacted buckets scan straight
         through (no window)."""
-        if as_of is not None:
-            if version is not None:
-                raise ValueError("pass either version or as_of, not both")
-            version = self.version_at(as_of)
-        if isinstance(version, str):
-            version = self.resolve_tag(version)
-        snap = self.snapshot(version)
+        snap = self.snapshot(self.resolve(version, as_of))
         sel = sorted(snap.buckets) if buckets is None else buckets
         dirty = [b for b in sel if snap.dirty.get(b)]
         clean = [b for b in sel if not snap.dirty.get(b)]
@@ -786,9 +835,10 @@ class LakeTable:
         makes compaction safe to run CONCURRENTLY with appends (Iceberg's
         rewrite-files validation, done set-wise here). Without it the swap
         is whole-list (bucket turns clean). Untouched buckets inherit the
-        parent's files. Paths are relative to the table root. Commits are
-        serialized under the table's commit lock."""
+        parent's files. Paths are relative to the table root. Commits, and
+        the refusal of a `tag` a live version carries, hold the commit lock."""
         with self._commit_lock:
+            self._refuse_taken(tag)
             snap = self._derive(self.snapshot(), props=props, tag=tag, ledger=ledger)
             if schema:
                 snap.schema_json = json.dumps(schema.jsonValue())
@@ -822,7 +872,9 @@ class LakeTable:
     ) -> int:
         """Commit `df` as the table's whole content (Chain.save,
         delta_update): one `layout` write as the unit `<writer>=<version>`,
-        then every bucket is replaced and the schema becomes `df`'s."""
+        then every bucket is replaced and the schema becomes `df`'s. A taken
+        `tag` is refused before any file is written."""
+        self._refuse_taken(tag)
         unit = f"{writer}={self.current_version() + 1}"
         replace: dict[int, list[str]] = {b: [] for b in range(self.num_buckets)}
         replace.update(self.write_segment(self.layout(df), unit))
@@ -835,8 +887,10 @@ class LakeTable:
         under the commit lock like every other commit: a tag racing a
         concurrent apply/async-compaction commit must not both read the
         same HEAD and claim the same version number. Tagging an older
-        version makes its content HEAD again."""
+        version makes its content HEAD again. A tag that a live version
+        already carries is refused."""
         with self._commit_lock:
+            self._refuse_taken(tag)
             snap = self._derive(self.snapshot(version), tag=tag)
             self._write_manifest(snap)
             return snap.version

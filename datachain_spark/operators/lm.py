@@ -239,8 +239,8 @@ def ccnet_buckets(
 
     The cut points are two exact interpolated percentiles of the round-6
     per-doc log-probs, collected as O(1) driver metadata and compared as
-    plan literals — one extra pass over the scores, zero extra shuffles
-    beyond lm_logprob's. Cross-engine determinism: doc scores are round-6
+    plan literals: exact cuts take one scoring pass for the percentile and
+    one in the returned plan, no shuffle beyond lm_logprob's. Cross-engine determinism: doc scores are round-6
     quantized, and an interpolated percentile either equals a quantized
     value exactly (equal neighbors) or falls strictly between two of
     them, so a 1-ulp interpolation difference between engines can never
@@ -255,17 +255,11 @@ def ccnet_buckets(
         keep_cols=keep_cols,
         alpha=alpha,
         broadcast_lm=broadcast_lm,
-    ).persist()
+    )
     # best-first fractions -> logprob-axis percentiles (higher lp = better)
     fr = F.array(F.lit(1.0 - head), F.lit(1.0 - tail))
-    try:
-        cuts = scored.agg(F.percentile("lm_logprob", fr).alias("c")).collect()[0]["c"]
-        c_head, c_tail = float(cuts[0]), float(cuts[1])
-    finally:
-        # the cache existed for the percentile collect; the returned plan
-        # can recompute (r5 ADVICE: don't leak cached partitions across
-        # repeated calls in a long-lived session)
-        scored.unpersist()
+    cuts = scored.agg(F.percentile("lm_logprob", fr).alias("c")).collect()[0]["c"]
+    c_head, c_tail = float(cuts[0]), float(cuts[1])
     bucket = (
         F.when(F.col("lm_logprob") >= F.lit(c_head), F.lit("head"))
         .when(F.col("lm_logprob") >= F.lit(c_tail), F.lit("middle"))

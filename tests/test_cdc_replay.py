@@ -131,7 +131,7 @@ def test_version_tags_and_time_travel(spark, feed_dir, tmp_path):
     applied = [m for m in metrics if "version" in m]
     v_first = applied[0]["version"]
     table.tag_version("v1.0.0", v_first)
-    assert table.resolve_tag("v1.0.0") == table.current_version()
+    assert table.resolve("v1.0.0") == table.current_version()
     tagged = table.read(spark, version="v1.0.0")
     direct = table.read(spark, version=v_first)
     assert sorted(map(tuple, tagged.collect())) == sorted(map(tuple, direct.collect()))

@@ -160,6 +160,13 @@ def test_save_read_dataset_versioning(spark, ch, tmp_path):
 
     with _pytest.raises(KeyError, match="specifier"):
         dc.read_dataset(spark, "pets", version=">=9", catalog_root=cat)
+    # an auto tag also resolves without its "v"; a digit string is a
+    # snapshot id, like the int (snapshot 0 is the empty table)
+    assert dc.read_dataset(spark, "pets", version="1.0.0", catalog_root=cat).count() == 5
+    by_str = dc.read_dataset(spark, "pets", version="2", catalog_root=cat)
+    by_int = dc.read_dataset(spark, "pets", version=2, catalog_root=cat)
+    assert by_str.count() == by_int.count() == 2
+    assert by_str.version == by_int.version == "v1.0.1"
 
 
 def test_read_csv_json_parquet_roundtrip(spark, ch, tmp_path):

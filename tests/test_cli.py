@@ -87,6 +87,26 @@ def test_cli_show_and_datasets(spark, catalog):
     assert run(spark, "datasets", "ls", "--catalog", catalog) == []
 
 
+def test_cli_passes_version_strings_to_the_resolver(spark, catalog):
+    """--version is passed through as given: a snapshot id, an auto tag
+    without its "v", or the tag as saved all name the same versions."""
+    smaller = dc.read_values(spark, id=[9], name=["z"])
+    Chain(smaller.df, catalog_root=catalog).save("pets")  # v1.0.1
+    assert run(spark, "show", "pets", "--version", "1.0.1", "--catalog", catalog)[1:] == [
+        "9\tz"
+    ]
+    assert len(run(spark, "show", "pets", "--version", "1", "--catalog", catalog)) == 4
+    assert len(run(spark, "show", "pets", "--version", "v1.0.0", "--catalog", catalog)) == 4
+
+    out = run(spark, "datasets", "rm", "pets", "--version", "v1.0.0", "--catalog", catalog)
+    assert out == ["removed pets"]
+    with pytest.raises(KeyError):
+        main(["show", "pets", "--version", "1.0.0", "--catalog", catalog], spark=spark)
+    assert run(spark, "show", "pets", "--catalog", catalog)[1:] == ["9\tz"]
+    run(spark, "datasets", "rm", "pets", "--version", "2", "--catalog", catalog)
+    assert run(spark, "show", "pets", "--catalog", catalog) == ["id\tname"]
+
+
 def test_cli_gc(spark, catalog):
     from datachain_spark.namespaces import dataset_root
 

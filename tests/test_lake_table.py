@@ -398,6 +398,29 @@ def test_dedup_registry_segments_stay_bounded(spark, tmp_path):
 
 
 # ---------- one owner for the file layout and snapshot derivation ----------
+def test_only_lake_table_and_semver_interpret_a_version():
+    """chain.py and cli.py hand a version argument to `LakeTable.resolve` /
+    `next_tag` as given: no digit test, no tag regex or "v" stripping, no
+    specifier operator; the resolvers they replaced are gone."""
+    import ast
+    import re
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "datachain_spark")
+    offenders = []
+    for mod in ("chain.py", "cli.py"):
+        for node in ast.walk(ast.parse(open(os.path.join(pkg, mod)).read())):
+            name = getattr(node, "attr", None) or getattr(node, "name", None)
+            if name in ("isdigit", "isdecimal", "resolve_tag", "_next_semver", "_resolve_semver_spec"):
+                offenders.append(f"{mod}: {name}")
+            value = getattr(node, "value", None) if isinstance(node, ast.Constant) else None
+            if isinstance(value, str) and (
+                value in ("v", "~", "!", "<", ">", "~=", ">=", "<=", "==", "!=") or "\\d" in value
+            ):
+                offenders.append(f"{mod}: {value!r}")
+    assert offenders == []
+    assert not hasattr(LakeTable, "resolve_tag")
+
+
 def test_only_lake_table_owns_the_file_layout():
     """No module under datachain_spark/ but lake/table.py builds a data
     directory (`data_dir(`), names a bucket directory (`bucket=` or

@@ -190,7 +190,7 @@ def test_delete_dataset_version_keeps_files_shared_with_survivors(spark, tmp_pat
 
     # drop the unshared old version: its files really go away
     t = LakeTable(dataset_root(root, "ds"))
-    removed = t.drop_version(t.resolve_tag("1.0.0"))
+    removed = t.drop_version(t.resolve("1.0.0"))
     assert removed >= 1
     head = dc.read_dataset(spark, "ds", catalog_root=root)
     assert sorted(head.to_values("id")) == [3]
