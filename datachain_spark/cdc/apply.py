@@ -39,24 +39,20 @@ Scale notes:
   measured 3x slower even at 2M events and is quadratic over a bulk
   replay — at 10^10 events it is infeasible.
 - The batch's one shuffle is the table's write layout (LakeTable.layout)
-  and the LWW dedup runs inside it (LakeTable.last_writer_wins). A combo
-  is (bucket, salt), the salt a hash of the FULL key (conv_id, turn_idx),
-  so a hot conversation's turns spread over up to `files_per_bucket`
-  salted combos (skew mitigation, per the north rule) and file counts stay
-  bounded. The task count is sized from the batch's input bytes, so a
-  small microbatch runs a few write tasks, not one per combo. Compaction
-  keeps segments-per-bucket bounded.
-- Zero driver-side Spark jobs besides the segment write itself: schema
+  and the LWW dedup runs inside it (LakeTable.last_writer_wins): each
+  write task holds whole buckets. The task count is sized from the
+  batch's input bytes, so a small microbatch runs a few write tasks, not
+  one per bucket. Compaction keeps segments-per-bucket bounded.
+- The commit is LakeTable.append, the table's one exactly-once batch
+  append: zero Spark jobs besides the segment write itself. Schema
   evolution and all lineage stats come from the just-written parquet
-  footers (read in parallel threads), the ledger check is an O(1) lookup
-  in the HEAD snapshot, and watermarks are metadata.
+  footers, the ledger check is an O(1) lookup in the HEAD snapshot, and
+  watermarks are metadata.
 """
 
 from __future__ import annotations
 
 import os
-import time
-from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -104,72 +100,12 @@ def _payload_fields(events: DataFrame) -> list[T.StructField]:
     return [f for f in events.schema.fields if f.name not in META_COLS]
 
 
-def _one_file_stats(path: str, cand_cols: list[str]) -> dict[str, Any]:
-    """Footer metadata of one segment file: row count, max `_lsn`, tombstone
-    count (non-null `_deleted`), and non-null counts for candidate
-    evolution columns. Parquet `num_values` INCLUDES nulls; non-null counts
-    come from the statistics null_count."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    names = [md.schema.column(i).name for i in range(md.num_columns)]
-    idx = {n: i for i, n in enumerate(names)}
-    out: dict[str, Any] = {"n": md.num_rows, "hwm": -1, "n_del": 0, "cand": dict.fromkeys(cand_cols, 0)}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-
-        def nonnull(col: str) -> int:
-            c = g.column(idx[col])
-            s = c.statistics
-            if s is not None and s.null_count is not None:
-                return c.num_values - s.null_count
-            return c.num_values  # stats absent: conservative (assume data)
-
-        lsn_s = g.column(idx[LSN_COL]).statistics
-        if lsn_s is not None and lsn_s.max is not None:
-            out["hwm"] = max(out["hwm"], lsn_s.max)
-        out["n_del"] += nonnull(DELETED_COL)
-        for c in cand_cols:
-            if c in idx:
-                out["cand"][c] += nonnull(c)
-    return out
-
-
-def _segment_footer_stats(
-    table_root: str, files: dict[int, list[str]], cand_cols: list[str] | None = None
-) -> dict[int, dict[str, Any]]:
-    """Per-bucket {n, n_del, hwm, cand} of a segment's files (bucket ->
-    table-relative paths, as LakeTable.write_segment returns them) from
-    parquet footer metadata — driver-side, parallel over files (footer reads
-    release the GIL in pyarrow). At 10^10 scale this is O(files) footer
-    reads of the just-written segment (page-cache-hot), the same trick
-    Iceberg uses for its manifest column stats; on a real cluster the
-    equivalent is a tiny stats job or Iceberg's write-time metrics."""
-    cand_cols = cand_cols or []
-    stats = {
-        b: {"n": 0, "n_del": 0, "hwm": -1, "cand": dict.fromkeys(cand_cols, 0)} for b in files
-    }
-    work = [(b, os.path.join(table_root, p)) for b, fl in files.items() for p in fl]
-    if not work:
-        return stats
-    with ThreadPoolExecutor(max_workers=min(16, len(work))) as ex:
-        for (b, _), st in zip(work, ex.map(lambda w: _one_file_stats(w[1], cand_cols), work)):
-            s = stats[b]
-            s["n"] += st["n"]
-            s["n_del"] += st["n_del"]
-            s["hwm"] = max(s["hwm"], st["hwm"])
-            for c in cand_cols:
-                s["cand"][c] += st["cand"][c]
-    return stats
-
-
 def apply_batch(
     spark: SparkSession,
     table: LakeTable,
     events: DataFrame,
     job_id: str,
     batch_id: int,
-    files_per_bucket: int = 1,
     max_segments: int = 8,
     normalize: bool = True,
     lsn_ordered: bool = False,
@@ -181,11 +117,8 @@ def apply_batch(
     LWW-by-lsn at read (or dropped pre-write when `lsn_ordered=True` — see
     module docstring for the delivery-order contract).
 
-    compaction='inline' runs the amortized MOR compaction pass before
-    returning; 'async' hands it to the table's background worker so its
-    job-submission gaps overlap the next batch (call
-    table.drain_compaction() when the feed drains); 'off' skips it
-    (caller compacts on its own schedule)."""
+    The commit, and `compaction` ('inline', 'async' or 'off') after it,
+    are LakeTable.append's."""
     if table.batch_committed(job_id, batch_id):
         return {"batch_id": batch_id, "skipped": "ledger"}
 
@@ -212,7 +145,6 @@ def apply_batch(
                 )
         else:
             cand_fields.append(T.StructField(f.name, f.dataType, True))
-    cand_names = [f.name for f in cand_fields]
 
     # ---- bucket assignment (+ optional ordered-delivery stale filter) ----
     ev = events.withColumnRenamed("lsn", LSN_COL).withColumn(BUCKET_COL, table.bucket_expr())
@@ -236,9 +168,9 @@ def apply_batch(
     # ordering.
     #
     # ONE shuffle for dedup AND write: the table's write layout puts every
-    # copy of a key in one partition (its combo is a function of the key),
-    # LWW is then partition-local, and the segment write below reuses that
-    # partitioning as the file layout (no second exchange). The classic
+    # copy of a key in one partition (its bucket is a function of the key),
+    # LWW is then partition-local, and the segment write (LakeTable.append)
+    # reuses that partitioning as the file layout (no second exchange). The classic
     # alternative (row_number window partitioned by key, then repartition
     # for the write) shuffles the batch TWICE and runs an extra 64-task
     # stage; its map-side WindowGroupLimit pruning saves less than the
@@ -249,7 +181,7 @@ def apply_batch(
     # exactly what bounds the sub-knee N->4N scaling pairs at small
     # batch sizes. Other alternatives previously measured slower: max_by
     # hash-agg (2.5x with the normalize stage), mapInPandas dedup (1.5x).
-    dedup = table.last_writer_wins(table.layout(ev, files_per_bucket=files_per_bucket))
+    dedup = table.last_writer_wins(table.layout(ev))
 
     # normalize: whitespace canonicalization (unicode-aware via the (?U)
     # regex flag — identical collapse/strip semantics to normalize_text)
@@ -279,67 +211,6 @@ def apply_batch(
     deleted_marker = F.when(is_del, F.lit(True)).otherwise(F.lit(None).cast("boolean"))
     segment = dedup.select(*payload, LSN_COL, deleted_marker.alias(DELETED_COL), BUCKET_COL)
 
-    # ---- salted bucket-partitioned append (bounded files, skew-spread) ----
-    # the segment is ALREADY laid out by the dedup shuffle above (the
-    # projection is narrow), so the write reuses it:
-    # each task writes one file per bucket it holds, a hot conversation's
-    # bucket is written by up to `files_per_bucket` salted tasks, and file
-    # counts stay bounded by the layout.
-    # crash-recovery fast path (the reference's continue-from-partial,
-    # query/dataset.py:1221-1360, at segment granularity): if a previous
-    # attempt crashed AFTER fully writing this (job,batch) segment but
-    # BEFORE the manifest commit, reuse the files instead of recomputing —
-    # inputs are identical because the parent snapshot never advanced.
-    unit = f"job={job_id}/batch={batch_id:09d}"
-    new_bucket_files = table.segment_files(unit)
-    if new_bucket_files is None:
-        new_bucket_files = table.write_segment(segment, unit)
-
-    # ---- lineage + evolution from parquet footers (driver-side, zero
-    # Spark jobs): rows_in = num_rows, per-bucket hwm = max(_lsn) column
-    # stat, deletes and candidate-column data = non-null counts ----
-    bstats = _segment_footer_stats(table.root, new_bucket_files, cand_names)
-    if not bstats:
-        return {"batch_id": batch_id, "skipped": "stale"}  # no-change short-circuit
-
-    new_fields = [
-        f for f in cand_fields if any(s["cand"][f.name] > 0 for s in bstats.values())
-    ]
-    evolved_schema = (
-        T.StructType(list(target_schema.fields) + new_fields) if new_fields else None
-    )
-
-    touched = sorted(bstats)
-    watermark_updates = {b: s["hwm"] for b, s in bstats.items()}
-    rows_in = sum(s["n"] for s in bstats.values())
-    rows_deleted = sum(s["n_del"] for s in bstats.values())
-    rows_upserted = rows_in - rows_deleted
-    buckets_with_deletes = {b for b, s in bstats.items() if s["n_del"]}
-
-    ledger = {
-        "job_id": job_id,
-        "batch_id": batch_id,
-        "rows_in": rows_in,
-        "rows_upserted": rows_upserted,
-        "rows_deleted": rows_deleted,
-        "committed_at": time.time(),
-        "partitions": [
-            {"partition_id": int(b), "high_watermark_lsn": int(s["hwm"])}
-            for b, s in sorted(bstats.items())
-        ],
-    }
-    version = table.commit(
-        append_bucket_files=new_bucket_files,
-        has_deletes=buckets_with_deletes,
-        schema=evolved_schema,
-        watermark_updates=watermark_updates,
-        ledger=ledger,
-    )
-    # amortized MOR compaction: staggered — at most a quarter of the
-    # buckets per apply, worst (most segments) first, so the compaction tax
-    # per batch is bounded and smooth instead of a periodic full rewrite;
-    # 'async' overlaps it with the next batch (commit-lock + compacted_from
-    # residuals make that safe — lake/table.py compact_async)
     # tombstone retention: under unordered delivery a redelivered stale
     # upsert can land AFTER compaction, so compaction must keep each deleted
     # key's winning tombstone for LWW to beat it at read (lake/table.py
@@ -347,35 +218,16 @@ def apply_batch(
     # drops every redelivery pre-write — any tombstone at-or-below the
     # watermark is unraceable and can be erased (keeps the ordered replay
     # path free of accumulating tombstones).
-    retain_tombstones = not lsn_ordered
-    compacted: int | bool | None
-    if compaction == "async":
-        compacted = table.compact_async(
-            spark,
-            max_segments=max_segments,
-            max_buckets=max(1, table.num_buckets // 4),
-            retain_tombstones=retain_tombstones,
-        )
-    elif compaction == "off":
-        compacted = None
-    else:
-        compacted = table.compact(
-            spark,
-            max_segments=max_segments,
-            max_buckets=max(1, table.num_buckets // 4),
-            retain_tombstones=retain_tombstones,
-        )
-    return {
-        "batch_id": batch_id,
-        "version": version,
-        "rows_in": rows_in,
-        "rows_upserted": rows_upserted,
-        "rows_deleted": rows_deleted,
-        "buckets_touched": len(touched),
-        "evolved": [f.name for f in new_fields],
-        "compacted_version": None if compaction != "inline" else compacted,
-        **({"compaction_submitted": bool(compacted)} if compaction == "async" else {}),
-    }
+    return table.append(
+        spark,
+        segment,
+        job_id,
+        batch_id,
+        new_fields=cand_fields,
+        compaction=compaction,
+        max_segments=max_segments,
+        retain_tombstones=not lsn_ordered,
+    )
 
 
 def replay_feed_dir(

@@ -2,8 +2,8 @@
 
 An Iceberg-style snapshot store built from scratch (no Iceberg jars are
 available in this environment): every commit writes an immutable JSON
-manifest listing the parquet segment files of each hash bucket; the
-manifest rename is the atomic commit point.
+manifest listing the parquet segment files of each hash bucket; linking
+the manifest into `versions/` is the atomic commit point.
 
 Write path = **merge-on-read** (Iceberg MOR semantics): a CDC batch
 APPENDS one segment per touched bucket containing upsert after-images and
@@ -18,22 +18,30 @@ amortized, like Iceberg data compaction — after which reads are
 window-free again (per-bucket `dirty` flags track which buckets need
 resolution).
 
-Write shuffle: `layout` is the one shuffle of every table write. A row's
-combo is (bucket, salt), the salt a hash of its key over
-`files_per_bucket`, so a hot key's bucket spreads over that many files.
-The TASK count is sized from the input's bytes before any job runs
-(`write_tasks`): a small microbatch is written by a few tasks holding
-whole combos, an input of `n_parts * WRITE_TASK_TARGET_BYTES` or more by
-one task per combo, whatever the session's parallelism. A combo's task is
-its rank among the written combos mod that count, placed exactly, so a
+Write shuffle: `layout` is the one shuffle of every table write, and each
+write task holds whole buckets. The TASK count is sized from the input's
+bytes before any job runs (`write_tasks`): a small microbatch is written
+by a few tasks, an input of `n_parts * WRITE_TASK_TARGET_BYTES` or more by
+one task per bucket, whatever the session's parallelism. A bucket's task
+is its rank among the written buckets mod that count, placed exactly, so a
 compaction of 8 scattered buckets stays balanced. `last_writer_wins` runs
 inside that partitioning: LWW and the write share one exchange.
 
+Exactly-once append: `append` is the one batch commit protocol, used by
+cdc.apply_batch and by incremental_dedup's fingerprint registry. It
+writes the batch's unit `job=<job>/batch=<n>`, or reuses it when an
+earlier attempt wrote it and crashed before its commit. It then reads
+per-bucket rows, tombstones, the high-watermark LSN and candidate-column
+non-null counts from the new files' parquet footers (no Spark job),
+evolves the schema by the candidate columns that carry data, commits with
+the batch's ledger row, and runs the staggered compaction (inline, async
+or off). A caller checks `batch_committed` first, so a committed batch is
+skipped before any work.
+
 File layout: `LakeTable.write_segment` is the only writer of data files.
 Each call writes one WRITE UNIT, a directory under `data/` named for its
-writer: `job=<job>/batch=<n>` (cdc.apply_batch), `compact=<v>`
-(compaction), `save=<v>` (Chain.save), `delta=<v>` (delta_update) and
-`dedup=<id>` (incremental_dedup's fingerprint registry). Inside a unit,
+writer: `job=<job>/batch=<n>` (`append`), `compact=<v>` (compaction),
+`save=<v>` (Chain.save) and `delta=<v>` (delta_update). Inside a unit,
 rows sit in `__bucket=<b>/*.parquet`; a snapshot maps each bucket to its
 table-relative file paths. Every version after the first is derived from
 a source snapshot by one helper (`_derive`).
@@ -64,9 +72,11 @@ Scale notes (100 TB / 1000 executors):
   so `batch_committed` is an O(1) driver-side dict lookup instead of an
   O(versions) manifest scan — and it survives `expire_versions`.
 
-Durability assumption: the atomic commit point is POSIX `rename(2)` of the
-manifest into `versions/` (plus `os.listdir` for version discovery), which
-is atomic-and-visible on local disks, NFS, and HDFS-like stores. On S3-style
+Durability assumption: the atomic commit point is POSIX `link(2)` of the
+fully written, fsynced manifest into `versions/` (`_write_manifest`; plus
+`os.listdir` for version discovery). Unlike rename(2), link(2) fails if
+the version exists, so two committers cannot both claim one. It is
+atomic-and-visible on local disks, NFS, and HDFS-like stores. On S3-style
 object stores this protocol needs a real catalog (conditional PUT /
 compare-and-swap, as Iceberg's catalog layer provides); the table format
 itself — immutable manifests + immutable data files — ports unchanged.
@@ -81,7 +91,7 @@ import threading
 import time
 from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -115,11 +125,11 @@ WRITE_TASK_TARGET_BYTES = 256 * 1024
 
 
 def write_tasks(n_parts: int, nbytes: int | None) -> int:
-    """Task count of a write stage laid out as `n_parts` (bucket, salt)
-    combos: the smallest divisor P of n_parts with
-    P * WRITE_TASK_TARGET_BYTES >= nbytes, so every task holds whole combos
-    (the combo of rank r -> task r mod P) and a bucket's files still
-    number at most its salts. `n_parts` when the size is unknown or large."""
+    """Task count of a write stage of `n_parts` buckets: the smallest
+    divisor P of n_parts with P * WRITE_TASK_TARGET_BYTES >= nbytes, so
+    every task holds whole buckets (the bucket of rank r -> task r mod P)
+    and a bucket is still one file. `n_parts` when the size is unknown or
+    large."""
     if nbytes is None:
         return n_parts
     fits = (p for p in range(1, n_parts) if p * WRITE_TASK_TARGET_BYTES >= nbytes)
@@ -163,6 +173,64 @@ def place(df: DataFrame, task: str, n: int) -> DataFrame:
     keys = ",".join(map(str, _perfect_partition_keys(df.sparkSession, n)))
     key = F.expr(f"element_at(array({keys}), {task} + 1)")
     return df.withColumn(TASK_COL, key).repartition(n, TASK_COL)
+
+
+def _one_file_stats(path: str, cand_cols: list[str]) -> dict[str, Any]:
+    """Footer metadata of one segment file: row count, max `_lsn`, tombstone
+    count (non-null `_deleted`), and non-null counts for candidate
+    evolution columns. Parquet `num_values` INCLUDES nulls; non-null counts
+    come from the statistics null_count."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    names = [md.schema.column(i).name for i in range(md.num_columns)]
+    idx = {n: i for i, n in enumerate(names)}
+    out: dict[str, Any] = {"n": md.num_rows, "hwm": -1, "n_del": 0, "cand": dict.fromkeys(cand_cols, 0)}
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+
+        def nonnull(col: str) -> int:
+            c = g.column(idx[col])
+            s = c.statistics
+            if s is not None and s.null_count is not None:
+                return c.num_values - s.null_count
+            return c.num_values  # stats absent: conservative (assume data)
+
+        lsn_s = g.column(idx[LSN_COL]).statistics
+        if lsn_s is not None and lsn_s.max is not None:
+            out["hwm"] = max(out["hwm"], lsn_s.max)
+        out["n_del"] += nonnull(DELETED_COL)
+        for c in cand_cols:
+            if c in idx:
+                out["cand"][c] += nonnull(c)
+    return out
+
+
+def _segment_footer_stats(
+    table_root: str, files: dict[int, list[str]], cand_cols: list[str]
+) -> dict[int, dict[str, Any]]:
+    """Per-bucket {n, n_del, hwm, cand} of a segment's files (bucket ->
+    table-relative paths, as LakeTable.write_segment returns them) from
+    parquet footer metadata — driver-side, parallel over files (footer reads
+    release the GIL in pyarrow). At 10^10 scale this is O(files) footer
+    reads of the just-written segment (page-cache-hot), the same trick
+    Iceberg uses for its manifest column stats; on a real cluster the
+    equivalent is a tiny stats job or Iceberg's write-time metrics."""
+    stats = {
+        b: {"n": 0, "n_del": 0, "hwm": -1, "cand": dict.fromkeys(cand_cols, 0)} for b in files
+    }
+    work = [(b, os.path.join(table_root, p)) for b, fl in files.items() for p in fl]
+    if not work:
+        return stats
+    with ThreadPoolExecutor(max_workers=min(16, len(work))) as ex:
+        for (b, _), st in zip(work, ex.map(lambda w: _one_file_stats(w[1], cand_cols), work)):
+            s = stats[b]
+            s["n"] += st["n"]
+            s["n_del"] += st["n_del"]
+            s["hwm"] = max(s["hwm"], st["hwm"])
+            for c in cand_cols:
+                s["cand"][c] += st["cand"][c]
+    return stats
 
 
 def _add_committed(committed: dict[str, list[list[int]]], job_id: str, batch_id: int) -> None:
@@ -321,30 +389,23 @@ class LakeTable:
         return opts
 
     # ---------- data files ----------
-    def layout(
-        self, df: DataFrame, buckets: list[int] | None = None, files_per_bucket: int = 1
-    ) -> DataFrame:
+    def layout(self, df: DataFrame, buckets: list[int] | None = None) -> DataFrame:
         """The table's write shuffle (module docstring): `df` with its rows'
         `BUCKET_COL` (kept if the caller set it) and `TASK_COL`, hash-
-        partitioned so each write task holds whole (bucket, salt) combos.
-        `buckets` are the buckets being written (default: all); a combo's
-        task is its rank among their combos mod the task count. A table
-        without key columns is one bucket, 0, written with no shuffle."""
+        partitioned so each write task holds whole buckets. `buckets` are
+        the buckets being written (default: all); a bucket's task is its
+        rank among them mod the task count. A table without key columns is
+        one bucket, 0, written with no shuffle."""
         snap = self.snapshot()
         if not snap.key_cols:
             return df.withColumn(BUCKET_COL, F.lit(0))
         if BUCKET_COL not in df.columns:
             df = df.withColumn(BUCKET_COL, self.bucket_expr())
-        fpb = int(files_per_bucket)
         sel = range(snap.num_buckets) if buckets is None else sorted(buckets)
-        rank = {c: i for i, c in enumerate(b * fpb + s for b in sel for s in range(fpb))}
+        rank = {b: i for i, b in enumerate(sel)}
         n = write_tasks(len(rank), input_bytes(df))
-        combo = BUCKET_COL
-        if fpb > 1:
-            keys_sql = ",".join(f"`{c}`" for c in snap.key_cols)
-            combo = f"{BUCKET_COL} * {fpb} + cast(pmod(xxhash64({keys_sql}), {fpb}) as int)"
-        tasks = ",".join(str(rank.get(c, 0) % n) for c in range(snap.num_buckets * fpb))
-        return place(df, f"element_at(array({tasks}), {combo} + 1)", n)
+        tasks = ",".join(str(rank.get(b, 0) % n) for b in range(snap.num_buckets))
+        return place(df, f"element_at(array({tasks}), {BUCKET_COL} + 1)", n)
 
     def last_writer_wins(self, df: DataFrame) -> DataFrame:
         """Each key's latest row of a `layout` frame: sort each partition by
@@ -1020,6 +1081,91 @@ class LakeTable:
         fut, self._compact_future = self._compact_future, None
         return fut.result() if fut is not None else None
 
+    # ---------- exactly-once append and ledger ----------
+    def append(
+        self,
+        spark: SparkSession,
+        segment: DataFrame,
+        job_id: str,
+        batch_id: int,
+        new_fields: Sequence[T.StructField] = (),
+        compaction: str = "inline",
+        max_segments: int = 8,
+        retain_tombstones: bool = True,
+    ) -> dict[str, Any]:
+        """Append one batch exactly once (module docstring) and return its
+        lineage metrics, which the commit also stores as the batch's ledger
+        row. `segment` is the batch laid out by `layout`, with `_lsn` and
+        `_deleted`; the caller has checked `batch_committed`. `new_fields`
+        are columns the table lacks: the schema gains those the written rows
+        carry data in. A batch that writes no row commits nothing and
+        returns {"skipped": "stale"}.
+
+        compaction='inline' runs one staggered compaction pass before
+        returning: at most a quarter of the buckets, most segments first,
+        so the compaction tax per batch is bounded and smooth instead of a
+        periodic full rewrite. 'async' hands that pass to the background
+        worker so it overlaps the next batch (call drain_compaction() when
+        the feed drains); 'off' skips it (the caller compacts on its own
+        schedule). `retain_tombstones` is compact()'s."""
+        # a crash after the write but before the commit leaves the finished
+        # unit: reuse it (the reference's continue-from-partial,
+        # query/dataset.py:1221-1360, at segment granularity); its inputs
+        # are the same because the table never advanced
+        unit = f"job={job_id}/batch={batch_id:09d}"
+        files = self.segment_files(unit)
+        if files is None:
+            files = self.write_segment(segment, unit)
+        # lineage and evolution from the footers, no Spark job: rows =
+        # num_rows, hwm = max(_lsn), deletes and candidate-column data =
+        # non-null counts
+        stats = _segment_footer_stats(self.root, files, [f.name for f in new_fields])
+        if not stats:
+            return {"batch_id": batch_id, "skipped": "stale"}
+        evolved = [f for f in new_fields if any(s["cand"][f.name] for s in stats.values())]
+        rows_in = sum(s["n"] for s in stats.values())
+        rows_deleted = sum(s["n_del"] for s in stats.values())
+        counts = {
+            "rows_in": rows_in,
+            "rows_upserted": rows_in - rows_deleted,
+            "rows_deleted": rows_deleted,
+        }
+        ledger = {
+            "job_id": job_id,
+            "batch_id": batch_id,
+            **counts,
+            "committed_at": time.time(),
+            "partitions": [
+                {"partition_id": int(b), "high_watermark_lsn": int(s["hwm"])}
+                for b, s in sorted(stats.items())
+            ],
+        }
+        version = self.commit(
+            append_bucket_files=files,
+            has_deletes={b for b, s in stats.items() if s["n_del"]},
+            schema=T.StructType(self.schema.fields + evolved) if evolved else None,
+            watermark_updates={b: s["hwm"] for b, s in stats.items()},
+            ledger=ledger,
+        )
+        policy = {
+            "max_segments": max_segments,
+            "max_buckets": max(1, self.num_buckets // 4),
+            "retain_tombstones": retain_tombstones,
+        }
+        out = {
+            "batch_id": batch_id,
+            "version": version,
+            **counts,
+            "buckets_touched": len(stats),
+            "evolved": [f.name for f in evolved],
+            "compacted_version": None,
+        }
+        if compaction == "async":
+            out["compaction_submitted"] = self.compact_async(spark, **policy)
+        elif compaction != "off":
+            out["compacted_version"] = self.compact(spark, **policy)
+        return out
+
     # ---------- exactly-once ledger ----------
     def batch_committed(self, job_id: str, batch_id: int) -> bool:
         """Has (job_id, batch_id) already been applied? O(1): the HEAD
@@ -1105,16 +1251,14 @@ class LakeTable:
 
         The unit of vacuuming is a WRITE UNIT directory (module docstring:
         one `data/job=<j>/batch=<b>` segment dir, or any other top-level
-        `data/<unit>` dir such as `compact=<v>`, `save=<v>` or
-        `dedup=<id>`): a unit is orphaned iff no file under it appears in
-        any retained manifest. Units whose newest file is younger than
-        `older_than` seconds are kept — they may belong to an in-flight
-        write racing this vacuum (same safety window as Iceberg's
-        `older_than`). Exception: an uncommitted segment dir that the
-        crash-recovery fast path could still legitimately reuse
-        (cdc/apply.py reuses a fully-written `job=/batch=` dir whose
-        batch is NOT in the ledger) is also deleted once past the window —
-        the retry recomputes it, which is always correct.
+        `data/<unit>` dir such as `compact=<v>` or `save=<v>`): a unit is
+        orphaned iff no file under it appears in any retained manifest.
+        Units whose newest file is younger than `older_than` seconds are
+        kept — they may belong to an in-flight write racing this vacuum
+        (same safety window as Iceberg's `older_than`). An uncommitted
+        `job=/batch=` unit that `append` could still reuse (its batch is
+        NOT in the ledger) is also deleted once past the window — the retry
+        rewrites it, which is always correct.
 
         Returns the number of files removed."""
         import shutil
@@ -1167,18 +1311,21 @@ class LakeTable:
         return {p for v in versions for fl in self.snapshot(v).buckets.values() for p in fl}
 
     def _drop_versions(self, drop: list[int]) -> int:
-        """Remove the manifests of `drop` and every data file they list that
-        no other version references. Returns data files removed."""
+        """Remove the manifests of `drop`, then every data file they list
+        that no other version references: a crash in between leaves only
+        orphans for `remove_orphans`, never a live manifest listing a
+        missing file. Returns data files removed."""
         live = self._referenced([v for v in self.versions() if v not in drop])
-        removed = 0
+        dead = self._referenced(drop) - live
         for v in drop:
-            for p in self._referenced([v]) - live:
-                fp = os.path.join(self.root, p)
-                if os.path.exists(fp):
-                    os.remove(fp)
-                    removed += 1
             os.remove(self._manifest_path(v))
             self._snap_cache.pop(v, None)
+        removed = 0
+        for p in sorted(dead):
+            fp = os.path.join(self.root, p)
+            if os.path.exists(fp):
+                os.remove(fp)
+                removed += 1
         return removed
 
     def drop_version(self, version: int) -> int:

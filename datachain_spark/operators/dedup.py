@@ -466,12 +466,16 @@ def incremental_dedup(
     the batch's fingerprints touch at most num_buckets buckets, and only
     THOSE registry buckets are read for the anti-join — batch-sized work,
     not corpus-sized. Within-batch duplicates keep the lowest id (one
-    fingerprint shuffle). With `job_id`/`batch_id`, registry updates ride
-    the lake's exactly-once ledger: replaying a committed batch re-filters
-    (idempotent reads) but never double-registers.
+    fingerprint shuffle). Registering (`update=True`) needs a `batch_id`:
+    the survivors' fingerprints go through `LakeTable.append`, the lake's
+    exactly-once batch append, so a retry after a crash reuses the written
+    fingerprints and replaying a committed batch re-filters (idempotent
+    reads) but never double-registers.
     """
-    from datachain_spark.lake.table import LakeTable
+    from datachain_spark.lake.table import DELETED_COL, LSN_COL, LakeTable
 
+    if update and batch_id is None:
+        raise ValueError("incremental_dedup(update=True) needs a batch_id to register under")
     spark = new_df.sparkSession
     fp_schema = T.StructType([T.StructField("fp", T.LongType(), False)])
     if LakeTable.exists(registry_root):
@@ -502,13 +506,15 @@ def incremental_dedup(
     # and duplicate fps on the build side of a left_anti are free — the
     # resolve pass would add a window shuffle per batch for nothing.
     # A REPLAYED committed batch time-travels to the registry state just
-    # before its own commit, so resume returns the SAME survivors it
-    # returned the first time instead of filtering them against themselves.
+    # before its own commit (found through the ledger), so resume returns
+    # the SAME survivors it returned the first time instead of filtering
+    # them against themselves.
     snap = reg.snapshot()
-    if batch_id is not None and reg.batch_committed(job_id, batch_id):
-        for v in reg.versions():
-            led = reg.snapshot(v).ledger
-            if led and led.get("job_id") == job_id and led.get("batch_id") == batch_id:
+    committed = batch_id is not None and reg.batch_committed(job_id, batch_id)
+    if committed:
+        for r in reg.ledger_rows():
+            if (r["job_id"], r["batch_id"]) == (job_id, batch_id):
+                v = r["version"]
                 snap = reg.snapshot(v - 1) if v > reg.versions()[0] else None
                 break
         if snap is None:  # this batch made the very first commit
@@ -522,26 +528,13 @@ def incremental_dedup(
         # another — persist so the scan+hash+anti-join runs once per batch
         survivors = survivors.persist()
 
-    if update and not (
-        batch_id is not None and reg.batch_committed(job_id, batch_id)
-    ):
-        import uuid
-
-        fps = survivors.select(F.col("_fp").alias("fp"))
-        appends = reg.write_segment(reg.layout(fps), f"dedup={uuid.uuid4().hex[:8]}")
-        ledger = (
-            {"job_id": job_id, "batch_id": int(batch_id)}
-            if batch_id is not None
-            else None
+    if update and not committed:
+        fps = survivors.select(
+            F.col("_fp").alias("fp"),
+            F.lit(batch_id).cast("long").alias(LSN_COL),
+            F.lit(None).cast("boolean").alias(DELETED_COL),
         )
-        if appends:
-            reg.commit(append_bucket_files=appends, ledger=ledger)
-        elif ledger:
-            reg.commit(ledger=ledger)
-        # every batch appends one segment per touched bucket: compact the
-        # worst quarter of the buckets per batch, apply_batch's staggered
-        # policy, so segments per bucket stay bounded
-        reg.compact(spark, max_buckets=max(1, reg.num_buckets // 4))
+        reg.append(spark, reg.layout(fps), job_id, batch_id)
     return survivors.drop("_fp")
 
 

@@ -165,6 +165,64 @@ def test_write_manifest_duplicate_version_fails_loudly(tmp_path):
     ]  # tmp cleaned up
 
 
+# ---------- a crash while dropping versions ----------
+def test_a_crash_while_dropping_versions_leaves_no_missing_file(tmp_path, monkeypatch):
+    """expire_versions and drop_version remove the manifests before the
+    data files: whichever os.remove call the process dies at, every file a
+    live manifest of a fresh LakeTable lists still exists (what is left
+    behind are orphans for remove_orphans)."""
+    import itertools
+
+    schema = T.StructType([T.StructField("k", T.StringType(), False)])
+
+    def build(root):
+        t = LakeTable.create(root, schema, key_cols=["k"], num_buckets=2)
+
+        def files(*names):
+            for name in names:
+                os.makedirs(os.path.join(root, "data", name))
+                open(os.path.join(root, "data", name, "part-0.parquet"), "w").close()
+            return {b: [f"data/{name}/part-0.parquet"] for b, name in enumerate(names)}
+
+        t.commit(append_bucket_files=files("a"))  # v1: bucket 0 = [a]
+        t.commit(append_bucket_files=files("b", "c"))  # v2: [a, b], [c]
+        t.commit(replace_bucket_files=files("d", "e"))  # v3: [d], [e]
+
+    real_remove = os.remove
+    ops = {
+        "expire": lambda t: t.expire_versions(keep_last=1),  # drops v0-v2
+        "drop_head": lambda t: t.drop_version(3),
+    }
+    for name, op in ops.items():
+        for k in itertools.count(1):
+            root = str(tmp_path / f"{name}{k}")
+            build(root)
+            calls = []
+
+            def remove(path, *a, k=k, calls=calls, **kw):
+                calls.append(path)
+                if len(calls) == k:
+                    raise OSError(f"injected crash at os.remove call {k}")
+                real_remove(path, *a, **kw)
+
+            monkeypatch.setattr(os, "remove", remove)
+            try:
+                op(LakeTable(root))
+                crashed = False
+            except OSError:
+                crashed = True
+            finally:
+                monkeypatch.setattr(os, "remove", real_remove)
+            fresh = LakeTable(root)
+            for v in fresh.versions():
+                for fl in fresh.snapshot(v).buckets.values():
+                    for p in fl:
+                        assert os.path.exists(os.path.join(root, p)), (name, k, v, p)
+            if not crashed:
+                break
+        assert k > 3, name  # the manifests and at least two data files
+
+
 # ---------- async compaction ----------
 def test_commit_compacted_from_preserves_concurrent_appends(tmp_path):
     """The concurrent-append window: a segment committed to a bucket AFTER
@@ -397,6 +455,52 @@ def test_dedup_registry_segments_stay_bounded(spark, tmp_path):
     assert sorted(r["doc_id"] for r in replayed.collect()) == [10, 22, 34, 46, 58]
 
 
+def test_dedup_registry_batch_crashed_before_its_commit_is_reused(spark, tmp_path, monkeypatch):
+    """A registry batch that dies after its fingerprints are written but
+    before its commit is run again under the same batch_id: the retry
+    reuses the written unit (one unit per batch, no orphan), returns the
+    survivors the first run would have returned, and commits the batch to
+    the registry's ledger."""
+    from datachain_spark.operators.dedup import incremental_dedup
+
+    root = str(tmp_path / "reg")
+    first = spark.createDataFrame([(i, f"doc {i}") for i in range(10)], "doc_id int, text string")
+    incremental_dedup(first, root, num_buckets=4, batch_id=0).unpersist()
+    # docs 5-9 are known, doc 20 repeats doc 12 inside the batch
+    second = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(5, 20)] + [(20, "doc 12")], "doc_id int, text string"
+    )
+    expected = list(range(10, 20))
+
+    def crash(self, *a, **k):
+        raise RuntimeError("injected crash before the registry commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(LakeTable, "commit", crash)
+        with pytest.raises(RuntimeError, match="registry commit"):
+            incremental_dedup(second, root, num_buckets=4, batch_id=1)
+    units = os.path.join(root, "data", "job=incremental_dedup")
+    assert sorted(os.listdir(units)) == ["batch=000000000", "batch=000000001"]
+    crashed_files = sorted(os.listdir(os.path.join(units, "batch=000000001")))
+
+    for _ in range(2):  # the retry, then a replay of the committed batch
+        again = incremental_dedup(second, root, num_buckets=4, batch_id=1)
+        assert sorted(r["doc_id"] for r in again.collect()) == expected
+        again.unpersist()
+    assert os.listdir(os.path.join(root, "data")) == ["job=incremental_dedup"]
+    assert sorted(os.listdir(units)) == ["batch=000000000", "batch=000000001"]
+    assert sorted(os.listdir(os.path.join(units, "batch=000000001"))) == crashed_files
+
+    reg = LakeTable(root)
+    ledger = reg.ledger_df(spark)
+    assert sorted({r["batch_id"] for r in ledger.collect()}) == [0, 1]
+    assert ledger.filter("batch_id = 1").agg(F.max("rows_in")).first()[0] == len(expected)
+    live = {p for v in reg.versions() for fl in reg.snapshot(v).buckets.values() for p in fl}
+    assert reg.remove_orphans(older_than=0) == 0
+    assert all(os.path.exists(os.path.join(root, p)) for p in live)
+    assert incremental_dedup(second, root, update=False).count() == 0
+
+
 # ---------- one owner for the file layout and snapshot derivation ----------
 def test_only_lake_table_and_semver_interpret_a_version():
     """chain.py and cli.py hand a version argument to `LakeTable.resolve` /
@@ -471,3 +575,41 @@ def test_only_lake_table_owns_the_file_layout():
 
     assert builders("Snapshot") == {"create"}
     assert builders("dataclasses.replace") == {"_derive"}
+
+
+def test_only_lake_table_appends_a_batch():
+    """The exactly-once batch append is `LakeTable.append`'s alone: no
+    module under datachain_spark/ but lake/table.py names a write unit
+    (`job=`, `dedup=`), commits a ledger row (`commit(..., ledger=)`) or
+    runs a compaction pass (`.compact(`, `.compact_async(`), and cdc/ and
+    operators/dedup.py read no parquet footers (`pyarrow.parquet`)."""
+    import ast
+    import re
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "datachain_spark")
+    owner = os.path.join(pkg, "lake", "table.py")
+    unit_or_compact = re.compile(r"\b(?:job|dedup)=|\.compact(?:_async)?\(")
+    offenders = []
+    for dp, _, fns in os.walk(pkg):
+        for fn in fns:
+            path = os.path.join(dp, fn)
+            if not fn.endswith(".py") or path == owner:
+                continue
+            src = open(path).read()
+            offenders += [f"{path}: {m.group(0)}" for m in unit_or_compact.finditer(src)]
+            offenders += [
+                f"{path}: commit(ledger=)"
+                for node in ast.walk(ast.parse(src))
+                if isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "commit"
+                and any(k.arg == "ledger" for k in node.keywords)
+            ]
+    footer_free = [os.path.join(pkg, "operators", "dedup.py")] + [
+        os.path.join(pkg, "cdc", fn) for fn in os.listdir(os.path.join(pkg, "cdc"))
+    ]
+    offenders += [
+        f"{path}: pyarrow.parquet"
+        for path in footer_free
+        if path.endswith(".py") and "pyarrow.parquet" in open(path).read()
+    ]
+    assert offenders == []

@@ -169,16 +169,13 @@ def test_cdc_apply_is_one_shuffle(spark, tmp_path):
     via the status tracker, so a second shuffle fails loudly.
 
     The write stage is sized from the batch's input bytes: a small batch
-    runs fewer tasks than the layout's combos and still writes at most
+    runs fewer tasks than the table's buckets and still writes at most
     one file per touched bucket; a batch of n_parts *
-    WRITE_TASK_TARGET_BYTES or more runs exactly n_parts tasks, also under
-    the salted layout (files_per_bucket > 1), which writes a bucket that
-    holds a hot conversation as one file per salt. Every table equals the
-    LWW replay. A full read() of a table with more than
+    WRITE_TASK_TARGET_BYTES or more runs exactly n_parts tasks. Every
+    table equals the LWW replay. A full read() of a table with more than
     32 segment files runs no Spark job (no parallel file-listing job), and
     compacting it is one shuffle too, leaving one file per compacted
     bucket."""
-    import collections
     import functools
 
     from datachain_spark.cdc import FeedSpec, write_feed
@@ -203,14 +200,12 @@ def test_cdc_apply_is_one_shuffle(spark, tmp_path):
     ]
     tracker = spark.sparkContext.statusTracker()
 
-    def apply_tasks(table, events, batch_id, **kw):
+    def apply_tasks(table, events, batch_id):
         """Write-stage task count of one apply, after the one-shuffle check."""
         jobs = jobs_of(
             spark,
             f"plan-audit-apply-{table.root}-{batch_id}",
-            lambda: apply_batch(
-                spark, table, events, "plan-audit", batch_id, compaction="off", **kw
-            ),
+            lambda: apply_batch(spark, table, events, "plan-audit", batch_id, compaction="off"),
         )
         assert jobs, "apply must run under the job group"
         widest = max(len(j.stageIds) for j in jobs)
@@ -235,7 +230,7 @@ def test_cdc_apply_is_one_shuffle(spark, tmp_path):
 
     small = new_table("small", 8)
     assert input_bytes(frames[0]) < WRITE_TASK_TARGET_BYTES
-    assert apply_tasks(small, frames[0], 0) < 8  # n_parts = num_buckets x files_per_bucket
+    assert apply_tasks(small, frames[0], 0) < 8  # n_parts = num_buckets
     assert all(len(fl) <= 1 for fl in small.snapshot().buckets.values())
     assert table_rows(small) == replay(0)
 
@@ -244,18 +239,6 @@ def test_cdc_apply_is_one_shuffle(spark, tmp_path):
     big = new_table("big", 4)
     assert apply_tasks(big, whole, 0) == 4
     assert table_rows(big) == replay()
-
-    # the salted layout: 2 buckets x files_per_bucket=2 is 4 combos, one
-    # write task each; a hot conversation's turns spread over both salts
-    salted = new_table("salted", 2)
-    assert apply_tasks(salted, whole, 0, files_per_bucket=2) == 4
-    files = salted.snapshot().buckets
-    assert all(len(fl) <= 2 for fl in files.values())
-    turns = collections.Counter(c for c, *_ in replay())
-    hot = [c for c, n in turns.items() if n > 100]
-    assert hot
-    assert all(len(files[b]) == 2 for b in set(salted.buckets_for(spark, hot).values()))
-    assert table_rows(salted) == replay()
 
     # the rest of the feed batch by batch: a table of many segment files
     for b, events in enumerate(frames[1:], start=1):
