@@ -1,7 +1,8 @@
 """LakeTable and its commit protocol: compaction (tombstone retention,
 concurrent appends, async passes), version commits (tag races, duplicate
-manifests), crash recovery and the orphan vacuum, and the guard that keeps
-the file layout and snapshot derivation in lake/table.py."""
+manifests), crash recovery (dropped versions, the dedup registry's append)
+and the orphan vacuum, and the guards that keep the file layout, snapshot
+derivation and the batch append in lake/table.py."""
 
 from __future__ import annotations
 
