@@ -350,7 +350,7 @@ def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread(_t(spark, sf_dir, "documents"), "doc_id").filter(F.col("doc_id") < 2000)
     return (
-        minhash_lsh_pairs(docs, threshold=0.9, hash_mode="md5")
+        minhash_lsh_pairs(docs, threshold=0.9)
         .select("id_a", "id_b", "n_match")
         .orderBy("id_a", "id_b")
     )
@@ -363,7 +363,7 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datachain_spark.operators.dedup import simhash_near_dups
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
-    return simhash_near_dups(docs, max_hamming=3, hash_mode="md5").orderBy("id_a", "id_b")
+    return simhash_near_dups(docs, max_hamming=3).orderBy("id_a", "id_b")
 
 
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -374,7 +374,7 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datachain_spark.operators.dedup import connected_components, minhash_lsh_pairs
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 2000)
-    pairs = minhash_lsh_pairs(docs, threshold=0.9, hash_mode="md5")
+    pairs = minhash_lsh_pairs(docs, threshold=0.9)
     comp = connected_components(pairs)
     return comp.select(F.col("id").alias("doc_id"), F.col("component").alias("cluster_id")).orderBy(
         "doc_id"
@@ -397,7 +397,7 @@ def embedding_near_dup_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     allv = emb.unionByName(
         emb.select((F.col("vec_id") + 10000).alias("vec_id"), "embedding")
     )
-    out = embedding_near_dups(allv, dim=64, threshold=0.95, hash_mode="md5")
+    out = embedding_near_dups(allv, dim=64, threshold=0.95)
     return out.select(
         "id_a", "id_b", F.round("cos_sim", 3).alias("cos_sim")
     ).orderBy("id_a", "id_b")
@@ -437,7 +437,7 @@ def lsh_topk_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    out = lsh_topk(emb, qs, dim=64, k=3, n_planes=4, hash_mode="md5")
+    out = lsh_topk(emb, qs, dim=64, k=3, n_planes=4)
     return out.select(
         "q_id", "vec_id", F.round("cos_sim", 3).alias("cos_sim"), "rk"
     ).orderBy("q_id", "rk")
@@ -459,7 +459,7 @@ def ivf_topk_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    cents = train_centroids_kmeans(emb, k=4, iters=2, hash_mode="md5", round_to=6)
+    cents = train_centroids_kmeans(emb, k=4, iters=2, round_to=6)
     out = ivf_topk(emb, qs, cents, k=3, nprobe=2)
     return out.select(
         "q_id", "vec_id", F.round("cos_sim", 3).alias("cos_sim"), "rk"
@@ -491,7 +491,7 @@ def semantic_dedup_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     allv = emb.unionByName(
         emb.select((F.col("vec_id") + 10000).alias("vec_id"), "embedding")
     )
-    cents = train_centroids_kmeans(allv, k=4, iters=2, hash_mode="md5", round_to=6)
+    cents = train_centroids_kmeans(allv, k=4, iters=2, round_to=6)
     out = semantic_dedup(allv, cents, eps=0.95)
     return out.select(
         "vec_id", "cell", F.round("centroid_dist", 3).alias("centroid_dist"), "kept"
@@ -1579,12 +1579,13 @@ def winnow_fingerprints_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     al. 2003) — per doc, the rightmost-min hash of each w=4 window of
     word-3-gram hashes with its global gram position: the local
     fingerprinting guarantee (any shared >= w+k-1-word run yields a
-    shared hash) that exact-hash dedup lacks. md5 hash mode so the oracle
-    recomputes every hash; ONE explode is the only data movement."""
+    shared hash) that exact-hash dedup lacks. The hashes are md5-derived
+    (`hash60`, the oracle's `_MD5I`) so the oracle recomputes every hash;
+    ONE explode is the only data movement."""
     from datachain_spark.operators.dedup import winnow_fingerprints
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-    return winnow_fingerprints(docs, k=3, w=4, hash_mode="md5").orderBy(
+    return winnow_fingerprints(docs, k=3, w=4).orderBy(
         "doc_id", "pos", "fp"
     )
 
@@ -1605,7 +1606,7 @@ def winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.concat(F.lit("prefix "), F.col("text")).alias("text"),
     )
-    fps = winnow_fingerprints(docs.unionByName(planted), k=3, w=4, hash_mode="md5")
+    fps = winnow_fingerprints(docs.unionByName(planted), k=3, w=4)
     a = fps.select(F.col("doc_id").alias("id_a"), "fp")
     b = fps.select(F.col("doc_id").alias("id_b"), "fp")
     return (
@@ -1959,7 +1960,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 _EN = "'the','and','of','to','a','in','is','it','that','for'"
 _ES = "'el','la','de','que','y','en','un','es','se','no'"
-_NORM = "regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')"
+_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 # md5-derived 60-bit hash, bit-identical to Spark's
 # conv(substring(md5(s),1,15),16,10) — shared by the minhash/simhash oracles
 _MD5I = "CAST(('0x' || substr(md5({s}), 1, 15)) AS BIGINT)"
@@ -2030,7 +2031,7 @@ def _embedding_near_dup_oracle_sql() -> str:
     """Hyperplane signatures recomputed from first principles: plane(p,i)
     = ((md5int('p#i') mod 2001) - 1000)/1000, bit p = sign(v . plane_p) —
     identical arithmetic (and identical left-to-right double accumulation
-    order) to operators/similarity.hyperplane_signature(hash_mode='md5')."""
+    order) to operators/similarity.hyperplane_signature."""
     h = "CAST(('0x' || substr(md5(printf('%d#%d', {p}, i)), 1, 15)) AS BIGINT)"
     planes = " + ".join(
         "(CASE WHEN list_sum(list_transform(range(64), "
@@ -2731,7 +2732,7 @@ def oracle_sql() -> dict[str, str]:
         "incremental_dedup_batches": """
             WITH n AS (
               SELECT doc_id,
-                     regexp_replace(trim(lower(text)), '\\s+', ' ', 'g') AS t
+                     trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
               FROM documents
             ),
             b1 AS (SELECT t FROM n WHERE doc_id % 2 = 0),
@@ -2931,8 +2932,8 @@ def oracle_sql() -> dict[str, str]:
             -- pos = p + j - 1; DISTINCT collapses repeated selections
             WITH norm AS (
               SELECT doc_id,
-                     regexp_split_to_array(regexp_replace(trim(lower(text)),
-                       '\s+', ' ', 'g'), ' ') AS toks
+                     regexp_split_to_array(trim(regexp_replace(lower(text),
+                       '\s+', ' ', 'g')), ' ') AS toks
               FROM documents WHERE doc_id < 60
             ),
             grams AS (
@@ -2974,8 +2975,8 @@ def oracle_sql() -> dict[str, str]:
             ),
             norm AS (
               SELECT doc_id,
-                     regexp_split_to_array(regexp_replace(trim(lower(text)),
-                       '\s+', ' ', 'g'), ' ') AS toks
+                     regexp_split_to_array(trim(regexp_replace(lower(text),
+                       '\s+', ' ', 'g')), ' ') AS toks
               FROM base
             ),
             grams AS (
@@ -3051,10 +3052,10 @@ def oracle_sql() -> dict[str, str]:
             ),
             toks AS (
               SELECT conv_id, example_idx,
-                     list_distinct(string_split(regexp_replace(trim(lower(target)),
-                                   '\s+', ' ', 'g'), ' ')) AS tgt,
-                     list_distinct(string_split(regexp_replace(trim(lower(context)),
-                                   '\s+', ' ', 'g'), ' ')) AS ctx
+                     list_distinct(string_split(trim(regexp_replace(lower(target),
+                                   '\s+', ' ', 'g')), ' ')) AS tgt,
+                     list_distinct(string_split(trim(regexp_replace(lower(context),
+                                   '\s+', ' ', 'g')), ' ')) AS ctx
               FROM pairs
             )
             SELECT conv_id, example_idx,
@@ -3529,11 +3530,11 @@ def oracle_sql() -> dict[str, str]:
             -- total order as Spark's min(struct(id,pos))
             WITH d AS (
               SELECT doc_id,
-                     string_split(regexp_replace(trim(lower(
+                     string_split(trim(regexp_replace(lower(
                        text || ' ' || 'shared span block '
                             || CAST(doc_id % 5 AS VARCHAR)
                             || ' alpha beta gamma delta epsilon'
-                     )), '\\s+', ' ', 'g'), ' ') AS t
+                     ), '\\s+', ' ', 'g')), ' ') AS t
               FROM documents WHERE doc_id < 1200
             ), w0 AS (
               SELECT doc_id,
@@ -3654,7 +3655,7 @@ def oracle_sql() -> dict[str, str]:
         "gopher_repetition": r"""
             WITH tk AS (
               SELECT doc_id,
-                     string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' ') AS t
+                     string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS t
               FROM documents
             ),
             grams AS (

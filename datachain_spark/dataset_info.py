@@ -95,8 +95,8 @@ def datasets_info(
         table = LakeTable(dataset_root(root, full_name))
         versions = table.versions()
         head = table.snapshot()
-        tags = [t for v in versions if (t := table.snapshot(v).tag)]
-        tag = tags[-1] if tags else None
+        tags = table.tags()
+        tag = tags[-1][1] if tags else None
         created = table.snapshot(versions[0]).created_at or None
         n, size = _live_stats(table)
         ds_attrs = [str(a) for a in (head.props or {}).get("dataset.attrs", [])]

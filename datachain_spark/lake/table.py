@@ -503,7 +503,7 @@ class LakeTable:
         if semver.is_specifier(version):
             hits = [
                 (p, v)
-                for v, t in self._tags()
+                for v, t in self.tags()
                 if (p := semver.parse_tag(t)) and semver.matches(t, version)
             ]
             if not hits:
@@ -514,7 +514,7 @@ class LakeTable:
             raise KeyError(f"tag {version!r} not found in {self.root}")
         return hits[-1]
 
-    def _tags(self) -> list[tuple[int, str]]:
+    def tags(self) -> list[tuple[int, str]]:
         """(version, tag) of every live tagged version, oldest first."""
         return [(v, t) for v in self.versions() if (t := self.snapshot(v).tag)]
 
@@ -522,7 +522,7 @@ class LakeTable:
         """Live versions carrying `tag`: two semver tags are one tag when
         their values are equal, a free-form tag matches exactly."""
         key = semver.parse_tag(tag) or tag
-        return [v for v, t in self._tags() if (semver.parse_tag(t) or t) == key]
+        return [v for v, t in self.tags() if (semver.parse_tag(t) or t) == key]
 
     def _refuse_taken(self, tag: str | None) -> None:
         if tag is not None and (taken := self._tagged(tag)):
@@ -534,7 +534,7 @@ class LakeTable:
         "v1.0.0" when no version carries a semver tag."""
         if update_version not in ("major", "minor", "patch"):
             raise ValueError(f"update_version must be major/minor/patch, got {update_version!r}")
-        parsed = [p for _, t in self._tags() if (p := semver.parse_tag(t))]
+        parsed = [p for _, t in self.tags() if (p := semver.parse_tag(t))]
         if not parsed:
             return "v1.0.0"
         major, minor, patch = max(parsed)
@@ -960,14 +960,10 @@ class LakeTable:
         """Metadata-only commit updating dataset-level props (the storage
         behind edit_dataset — reference catalog.py:1560-1582 update_dataset
         with description/attrs). A key mapped to None is REMOVED; all other
-        `dataset.*` keys are inherited, and so is HEAD's tag. Serialized
-        under the commit lock so an edit racing an apply/compaction commit
-        cannot clobber a version."""
-        with self._commit_lock:
-            src = self.snapshot()
-            snap = self._derive(src, props=updates, tag=src.tag)
-            self._write_manifest(snap)
-            return snap.version
+        `dataset.*` keys are inherited. The commit is untagged, so a tag
+        stays on the one version it names, and a HEAD read after an edit
+        reports the snapshot id as its `.version`."""
+        return self.commit(props=updates)
 
     # ---------- compaction ----------
     def compact(

@@ -20,14 +20,20 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datachain_spark.frames import spread
+from datachain_spark.operators import hash60
 
 # 2^31-1: keeps a*h+b far below int64 overflow under ANSI mode while
 # leaving minhash collision probability ~1/2^31 per permutation
 MERSENNE = (1 << 31) - 1
+# the job every fingerprint-registry batch commits under
+_REGISTRY_JOB = "incremental_dedup"
 
 
 def normalize_for_dedup(text: Column) -> Column:
-    return F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")
+    """Lowercase, collapse every whitespace run to one space, then trim:
+    collapsing first turns an edge tab or newline into a space that the
+    trim removes, so splitting on " " never yields an empty token."""
+    return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -51,8 +57,8 @@ def sliding_ngrams(toks: Column, n: int) -> Column:
     token per match, yielding exactly the size-n+1 n-grams in order.
     PRECONDITION: tokens are non-empty and whitespace-free — true of every
     construction path in this package (regex token classes exclude
-    ``\\s``; the split paths split a trimmed single-space-collapsed
-    string), making ``array_join(toks, ' ')`` a reversible encoding.
+    ``\\s``; the split paths split `normalize_for_dedup` output),
+    making ``array_join(toks, ' ')`` a reversible encoding.
 
     This replaces a chain of n zip_with over shifted slices: higher-order
     functions are CodegenFallback, so the chain ran its concat lambda
@@ -81,20 +87,6 @@ def shingles(text: Column, n: int = 3) -> Column:
     return F.when(k >= 1, F.array_distinct(sliding_ngrams(toks, n))).otherwise(empty)
 
 
-def _base_hash(s: Column, hash_mode: str) -> Column:
-    """Per-shingle/token hash in [0, MERSENNE). `xxhash64` is the fast
-    production path; `md5` (first 15 hex chars as int) is bit-identical in
-    DuckDB — CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) — so the driver
-    oracle can recompute signatures from first principles."""
-    if hash_mode == "xxhash64":
-        return F.pmod(F.xxhash64(s), F.lit(MERSENNE))
-    if hash_mode == "md5":
-        return F.pmod(
-            F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"), F.lit(MERSENNE)
-        )
-    raise ValueError(f"unknown hash_mode {hash_mode!r}")
-
-
 def minhash_from_base(base: Column, num_hashes: int = 32) -> Column:
     """MinHash signature from a materialized base-hash array: per
     permutation i, min over (a_i * h + b_i) mod M. The a/b constants are
@@ -112,16 +104,14 @@ def minhash_from_base(base: Column, num_hashes: int = 32) -> Column:
     return F.array(*sigs)
 
 
-def minhash_signature(
-    text: Column, num_hashes: int = 32, n: int = 3, hash_mode: str = "xxhash64"
-) -> Column:
+def minhash_signature(text: Column, num_hashes: int = 32, n: int = 3) -> Column:
     """MinHash signature straight from text. NOTE: when used in a single
     projection this recomputes the shingle array per permutation (Catalyst
     does not CSE across higher-order functions) — prefer materializing the
     base hashes in a separate projection (see minhash_lsh_pairs, which is
     32x faster that way)."""
     sh = shingles(text, n)
-    base = F.transform(sh, lambda s: _base_hash(s, hash_mode))
+    base = F.transform(sh, lambda s: F.pmod(hash60(s), F.lit(MERSENNE)))
     return minhash_from_base(base, num_hashes)
 
 
@@ -133,7 +123,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     n: int = 3,
     threshold: float = 0.6,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded LSH over MinHash.
 
@@ -147,8 +136,9 @@ def minhash_lsh_pairs(
     threshold has fewer mismatching components than bands, so by
     pigeonhole at least one band matches completely and the pair is
     ALWAYS a candidate — the banded output equals brute-force all-pairs
-    filtered by threshold, exactly. With hash_mode='md5' the signatures
-    themselves are DuckDB-reproducible, closing the loop."""
+    filtered by threshold, exactly. The shingle hashes are `hash60` mod
+    2^31-1, so the signatures themselves are DuckDB-reproducible (the
+    oracle's `_MD5I`), closing the loop."""
     rows_per_band = num_hashes // bands
     # two projection stages: materialize the per-shingle base hashes ONCE,
     # then take the 32 permutation-mins over that array — Catalyst does not
@@ -156,7 +146,9 @@ def minhash_lsh_pairs(
     # formulation recomputes shingling per permutation (measured 10x slower)
     base = spread(df, id_col).select(
         F.col(id_col).alias("id"),
-        F.transform(shingles(F.col(text_col), n), lambda s: _base_hash(s, hash_mode)).alias("_base"),
+        F.transform(
+            shingles(F.col(text_col), n), lambda s: F.pmod(hash60(s), F.lit(MERSENNE))
+        ).alias("_base"),
     )
     sig = base.select("id", minhash_from_base(F.col("_base"), num_hashes).alias("sig"))
     # band key = variadic xxhash64 over the band's signature components
@@ -209,28 +201,21 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash(text: Column, bits: int = 64, n: int = 1, hash_mode: str = "xxhash64") -> Column:
+def simhash(text: Column) -> Column:
     """SimHash: sign-sum of token-hash bits. Computed JVM-side by summing
-    (+1/-1) per bit over the token array with aggregate(). With
-    hash_mode='md5' the token hash has 60 random bits (15 md5 hex chars);
-    pass bits=60 so every voted bit is meaningful — hamming distances are
-    then DuckDB-reproducible from first principles."""
+    (+1/-1) per bit over the distinct-token array with aggregate(). The
+    token hash is `hash60`, so all 60 voted bits are random and hamming
+    distances are DuckDB-reproducible from first principles (`_MD5I`)."""
     toks = F.array_distinct(F.split(normalize_for_dedup(text), " "))
-    if hash_mode == "md5":
-        hashes = F.transform(
-            toks, lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
-        )
-    else:
-        hashes = F.transform(toks, lambda t: F.xxhash64(t))
+    hashes = F.transform(toks, hash60)
     out = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(60):
         vote = F.aggregate(
             hashes,
             F.lit(0).cast("long"),
             lambda acc, h: acc
             + F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
         )
-        # JVM shiftleft(1L, 63) wraps to Long.MIN_VALUE — exactly the bit we want
         out = out.bitwiseOR(
             F.when(vote > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long"))
         )
@@ -242,20 +227,17 @@ def simhash_near_dups(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs by SimHash: block on 4 16-bit chunks (a pair within
     hamming distance 3 must agree on at least one chunk — pigeonhole), then
     verify exact hamming distance with bit_count(xor). Because max_hamming
     < number of chunks, blocking has 100% recall: the output is EXACTLY
     all pairs with hamming <= max_hamming, so a brute-force oracle
-    (DuckDB all-pairs over the same signatures, hash_mode='md5') matches
-    value-for-value."""
-    bits = 60 if hash_mode == "md5" else 64
+    (DuckDB all-pairs over the same signatures) matches value-for-value."""
     df = spread(df, id_col)
     h = df.select(
         F.col(id_col).alias("id"),
-        simhash(F.col(text_col), bits=bits, hash_mode=hash_mode).alias("sh"),
+        simhash(F.col(text_col)).alias("sh"),
     )
     chunks = h.select(
         "id",
@@ -362,13 +344,12 @@ def near_dup_cluster_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.9,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """The full near-dup DEDUP (not just pair finding): MinHash+LSH pairs
     -> connected components -> keep the minimum-id document per cluster
     (plus every unpaired document). This is the operator a 100 TB corpus
     pipeline actually runs; pairs alone are an intermediate."""
-    pairs = minhash_lsh_pairs(df, text_col, id_col, threshold=threshold, hash_mode=hash_mode)
+    pairs = minhash_lsh_pairs(df, text_col, id_col, threshold=threshold)
     comp = connected_components(pairs)
     losers = comp.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
@@ -452,7 +433,6 @@ def incremental_dedup(
     id_col: str = "doc_id",
     num_buckets: int = 64,
     update: bool = True,
-    job_id: str = "incremental_dedup",
     batch_id: int | None = None,
 ) -> DataFrame:
     """Streaming-corpus exact dedup: drop documents whose (normalized)
@@ -470,7 +450,9 @@ def incremental_dedup(
     the survivors' fingerprints go through `LakeTable.append`, the lake's
     exactly-once batch append, so a retry after a crash reuses the written
     fingerprints and replaying a committed batch re-filters (idempotent
-    reads) but never double-registers.
+    reads) but never double-registers. A registry has one batch-id
+    sequence: every fingerprint row carries the id of the batch that
+    registered it as its `_lsn`, which compaction keeps.
     """
     from datachain_spark.lake.table import DELETED_COL, LSN_COL, LakeTable
 
@@ -505,23 +487,16 @@ def incremental_dedup(
     # raw segment read (no LWW window): anti-join needs fp EXISTENCE only,
     # and duplicate fps on the build side of a left_anti are free — the
     # resolve pass would add a window shuffle per batch for nothing.
-    # A REPLAYED committed batch time-travels to the registry state just
-    # before its own commit (found through the ledger), so resume returns
-    # the SAME survivors it returned the first time instead of filtering
-    # them against themselves.
     snap = reg.snapshot()
-    committed = batch_id is not None and reg.batch_committed(job_id, batch_id)
+    committed = batch_id is not None and reg.batch_committed(_REGISTRY_JOB, batch_id)
+    known = reg._read_raw(spark, snap, [b for b in touched if b in snap.buckets])
     if committed:
-        for r in reg.ledger_rows():
-            if (r["job_id"], r["batch_id"]) == (job_id, batch_id):
-                v = r["version"]
-                snap = reg.snapshot(v - 1) if v > reg.versions()[0] else None
-                break
-        if snap is None:  # this batch made the very first commit
-            return firsts.drop("_fp")
-    known = reg._read_raw(
-        spark, snap, [b for b in touched if b in snap.buckets]
-    ).select("fp")
+        # a REPLAYED batch filters against every fingerprint but its own:
+        # earlier batches' rows are what filtered its first run, and a later
+        # batch never registers a fingerprint this batch already had, so
+        # resume returns the SAME survivors, with or without expired versions
+        known = known.filter(F.col(LSN_COL) != batch_id)
+    known = known.select("fp")
     survivors = firsts.join(known, firsts["_fp"] == known["fp"], "left_anti")
     if update:
         # the registry write below is one action and the caller's read is
@@ -534,7 +509,7 @@ def incremental_dedup(
             F.lit(batch_id).cast("long").alias(LSN_COL),
             F.lit(None).cast("boolean").alias(DELETED_COL),
         )
-        reg.append(spark, reg.layout(fps), job_id, batch_id)
+        reg.append(spark, reg.layout(fps), _REGISTRY_JOB, batch_id)
     return survivors.drop("_fp")
 
 
@@ -547,7 +522,6 @@ def run_dedup_stream(
     schema: T.StructType,
     text_col: str = "text",
     id_col: str = "doc_id",
-    job_id: str = "dedup_stream",
     max_files_per_trigger: int = 4,
 ) -> list[dict]:
     """Streaming corpus ingest with exactly-once dedup: a file-source
@@ -556,10 +530,10 @@ def run_dedup_stream(
     with the same checkpoint resumes where it left off — already-ingested
     documents stay deduped because the REGISTRY persists across runs,
     and a replayed epoch is safe end-to-end: Structured Streaming
-    re-delivers the identical file set, incremental_dedup time-travels to
-    its pre-commit registry state (same survivors), and the epoch-keyed
-    overwrite makes the output write idempotent. Run-to-exhaustion
-    (availableNow); returns per-epoch metrics."""
+    re-delivers the identical file set, incremental_dedup filters it
+    against every fingerprint but its own (same survivors), and the
+    epoch-keyed overwrite makes the output write idempotent.
+    Run-to-exhaustion (availableNow); returns per-epoch metrics."""
     import os
 
     metrics: list[dict] = []
@@ -570,7 +544,6 @@ def run_dedup_stream(
             registry_root,
             text_col=text_col,
             id_col=id_col,
-            job_id=job_id,
             batch_id=epoch_id,
         )
         surv.drop("_fp", "__bucket").write.mode("overwrite").parquet(
@@ -690,7 +663,6 @@ def winnow_fingerprints(
     id_col: str = "doc_id",
     k: int = 3,
     w: int = 4,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken 2003,
     'Winnowing: Local Algorithms for Document Fingerprinting', SIGMOD —
@@ -712,8 +684,8 @@ def winnow_fingerprints(
     operators/transcripts.py). Output: (id_col, pos, fp) — pos is the
     1-based k-gram index the fingerprint hash came from.
 
-    hash_mode='md5' makes every hash bit-reproducible in DuckDB (the
-    _base_hash oracle recipe); 'xxhash64' is the fast production path."""
+    The k-gram hash is `hash60` mod 2^31-1, the minhash shingle hash, so
+    every fingerprint is bit-reproducible in DuckDB (`_MD5I`)."""
     if k < 1 or w < 1:
         raise ValueError("k and w must be >= 1")
     toks = F.split(normalize_for_dedup(F.col(text_col)), " ")
@@ -721,7 +693,7 @@ def winnow_fingerprints(
     grams = F.when(n_grams >= 1, sliding_ngrams(toks, k)).otherwise(
         F.array().cast("array<string>")
     )
-    hashes = F.transform(grams, lambda g: _base_hash(g, hash_mode))
+    hashes = F.transform(grams, lambda g: F.pmod(hash60(g), F.lit(MERSENNE)))
     n_win = F.size(hashes) - (w - 1)
 
     # per-window rightmost argmin as a zip_with chain: state struct

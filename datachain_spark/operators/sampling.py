@@ -8,7 +8,7 @@ admissible sampler is one with ZERO shuffle: a per-group window
 source through a single task's sort. Instead every operator here is a
 deterministic hash-threshold Bernoulli filter:
 
-    keep row  ⇔  md5_60bit(id) mod RESOLUTION  <  threshold(group)
+    keep row  ⇔  hash60(id) mod RESOLUTION  <  threshold(group)
 
 which is a pure map-side codegen predicate — no shuffle, no state, and
 the SAME rows are selected on 1 executor or 1000, at sf0.001 or 100 TB
@@ -32,6 +32,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datachain_spark.operators import hash60
 from datachain_spark.operators.text import token_count
 
 #: Threshold resolution: fractions are quantized to 1/RESOLUTION steps —
@@ -41,12 +42,10 @@ RESOLUTION = 1_000_000
 
 
 def hash_bucket(id_col: Column, resolution: int = RESOLUTION) -> Column:
-    """Deterministic uniform bucket in [0, resolution): md5-derived 60-bit
-    integer mod resolution. Engine-portable (md5 is identical everywhere);
-    DuckDB form: ``CAST(('0x'||substr(md5(CAST(id AS VARCHAR)),1,15)) AS
-    BIGINT) % resolution``."""
-    h60 = F.conv(F.substring(F.md5(id_col.cast("string")), 1, 15), 16, 10).cast("long")
-    return F.pmod(h60, F.lit(int(resolution)))
+    """Deterministic uniform bucket in [0, resolution): `hash60` of the id
+    string mod resolution. Engine-portable (md5 is identical everywhere);
+    DuckDB form: ``_MD5I`` over ``CAST(id AS VARCHAR)``, ``% resolution``."""
+    return F.pmod(hash60(id_col.cast("string")), F.lit(int(resolution)))
 
 
 def _threshold(frac: float) -> int:
@@ -181,12 +180,10 @@ def dsir_grams(text: Column) -> Column:
 
 
 def dsir_bucket(gram: Column, n_buckets: int) -> Column:
-    """Feature hashing: gram -> bucket in [0, n_buckets). md5-derived
-    60-bit integer (engine-portable: DuckDB form
-    ``CAST(('0x'||substr(md5(g),1,15)) AS BIGINT) % B``) so the driver
-    oracle reproduces the exact bucketing."""
-    h60 = F.conv(F.substring(F.md5(gram), 1, 15), 16, 10).cast("long")
-    return F.pmod(h60, F.lit(int(n_buckets)))
+    """Feature hashing: gram -> bucket in [0, n_buckets): `hash60` of the
+    gram mod B (engine-portable: DuckDB form ``_MD5I`` over g, ``% B``) so
+    the driver oracle reproduces the exact bucketing."""
+    return F.pmod(hash60(gram), F.lit(int(n_buckets)))
 
 
 def dsir_bucket_counts(

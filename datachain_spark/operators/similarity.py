@@ -18,6 +18,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datachain_spark.operators import hash60
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -74,23 +76,15 @@ def brute_force_topk(
     )
 
 
-def hyperplane_signature(
-    vec: Column, dim: int, n_planes: int = 16, hash_mode: str = "xxhash64"
-) -> Column:
+def hyperplane_signature(vec: Column, dim: int, n_planes: int = 16) -> Column:
     """Random-hyperplane LSH signature as an int: bit p = sign(v . h_p),
-    with deterministic pseudo-random planes h_p[i] = ((hash(p,i) mod
-    2001) - 1000) / 1000 — reproducible across runs and languages.
-    hash_mode='md5' derives the plane from md5(printf('%d#%d', p, i)),
-    bit-identical in DuckDB, so signatures (and thus LSH candidate sets)
-    are oracle-reproducible."""
+    with deterministic pseudo-random planes h_p[i] = ((hash60('p#i') mod
+    2001) - 1000) / 1000 — reproducible across runs and languages. The
+    DuckDB form hashes printf('%d#%d', p, i) with `_MD5I`, so signatures
+    (and thus LSH candidate sets) are oracle-reproducible."""
 
     def plane(p: int, i: Column) -> Column:
-        if hash_mode == "md5":
-            h = F.conv(
-                F.substring(F.md5(F.format_string(f"{p}#%d", i.cast("int"))), 1, 15), 16, 10
-            ).cast("long")
-        else:
-            h = F.xxhash64(F.lit(p), i)
+        h = hash60(F.format_string(f"{p}#%d", i.cast("int")))
         return (F.pmod(h, F.lit(2001)) - 1000) / 1000.0
 
     def dot_with_plane(p: int):
@@ -120,15 +114,12 @@ def embedding_near_dups(
     n_planes: int = 12,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: hyperplane-LSH bucket
     self-join (only same-signature vectors are scored — near-identical
     vectors collide with high probability), then exact cosine filter.
     O(collisions), never all-pairs."""
-    sig = df.withColumn(
-        "__sig", hyperplane_signature(F.col(vec_col), dim, n_planes, hash_mode)
-    )
+    sig = df.withColumn("__sig", hyperplane_signature(F.col(vec_col), dim, n_planes))
     l, r = sig.alias("l"), sig.alias("r")
     return (
         l.join(
@@ -169,29 +160,19 @@ def ivf_assign(
     return df.withColumn(out_col, F.transform(ranked, lambda s: s["cell"]))
 
 
-def _id_hash(col: Column, hash_mode: str) -> Column:
-    """Deterministic id hash for seeding. `md5` is bit-identical in DuckDB
-    (CAST('0x' || substr(md5(printf('%d', id)), 1, 15) AS BIGINT)) so the
-    driver oracle reproduces the exact seed set."""
-    if hash_mode == "md5":
-        return F.conv(
-            F.substring(F.md5(F.format_string("%d", col.cast("long"))), 1, 15), 16, 10
-        ).cast("long")
-    return F.xxhash64(col)
-
-
 def train_centroids_by_hash(
     df: DataFrame,
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    hash_mode: str = "xxhash64",
 ) -> list[list[float]]:
     """Deterministic seeding: pick k spread-out corpus vectors by hash
-    rank. Used directly for cheap IVF, and as the init for
+    rank, the rank key being `hash60` of the decimal id (DuckDB: `_MD5I`
+    over printf('%d', id)), so an oracle reproduces the exact seed set.
+    Used directly for cheap IVF, and as the init for
     train_centroids_kmeans."""
     rows = (
-        df.withColumn("__h", _id_hash(F.col(id_col), hash_mode))
+        df.withColumn("__h", hash60(F.format_string("%d", F.col(id_col).cast("long"))))
         .orderBy("__h")
         .limit(k)
         .select(vec_col)
@@ -206,7 +187,6 @@ def train_centroids_kmeans(
     iters: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    hash_mode: str = "xxhash64",
     round_to: int | None = None,
 ) -> list[list[float]]:
     """Distributed Lloyd's k-means over the embedding column, pure
@@ -223,7 +203,7 @@ def train_centroids_kmeans(
     differ in the last ulp across cluster sizes / retries; quantizing makes
     the trained centroids (and every downstream assignment) deterministic —
     and lets a DuckDB oracle reproduce the iteration exactly."""
-    centroids = train_centroids_by_hash(df, k, id_col, vec_col, hash_mode)
+    centroids = train_centroids_by_hash(df, k, id_col, vec_col)
     dim = len(centroids[0]) if centroids else 0
     for _ in range(iters):
         assigned = ivf_assign(df, centroids, vec_col, nprobe=1).withColumn(
@@ -314,8 +294,7 @@ def semantic_dedup(
     Determinism: centroid distances and pair similarities are rounded to
     `round_to` decimals before any comparison, so rank order and the
     drop set are reproducible across cluster sizes — and in a DuckDB
-    oracle (pass centroids from train_centroids_kmeans(round_to=6,
-    hash_mode='md5')). Exact duplicates tie on distance and resolve by
+    oracle (pass centroids from train_centroids_kmeans(round_to=6)). Exact duplicates tie on distance and resolve by
     id, keeping the lowest id.
 
     Returns one row per input doc: (id, cell, centroid_dist, kept 0/1).
@@ -367,17 +346,14 @@ def lsh_topk(
     vec_col: str = "embedding",
     query_id_col: str = "q_id",
     query_vec_col: str = "q_vec",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Approximate top-k: score only corpus vectors whose hyperplane
     signature matches the query's (single-probe). At 100 TB the bucket join
     is an equi-join shuffle on the signature — no broadcast of the corpus,
-    no all-pairs. hash_mode='md5' makes the planes DuckDB-reproducible."""
-    c = corpus.withColumn(
-        "__sig", hyperplane_signature(F.col(vec_col), dim, n_planes, hash_mode)
-    )
+    no all-pairs. The `hash60` planes are DuckDB-reproducible."""
+    c = corpus.withColumn("__sig", hyperplane_signature(F.col(vec_col), dim, n_planes))
     q = queries.withColumn(
-        "__sig", hyperplane_signature(F.col(query_vec_col), dim, n_planes, hash_mode)
+        "__sig", hyperplane_signature(F.col(query_vec_col), dim, n_planes)
     )
     scored = (
         c.join(q, "__sig")

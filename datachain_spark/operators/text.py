@@ -17,6 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datachain_spark.operators.dedup import normalize_for_dedup, sliding_ngrams
+
 # Tiny built-in stopword lists for the n-gram/stopword language heuristic.
 EN_STOPWORDS = ["the", "and", "of", "to", "a", "in", "is", "it", "that", "for"]
 ES_STOPWORDS = ["el", "la", "de", "que", "y", "en", "un", "es", "se", "no"]
@@ -68,8 +70,7 @@ def fingerprint(df: DataFrame, text_col: str = "text", out_col: str = "fp") -> D
     """Document fingerprint: md5 of the whitespace-normalized, lowercased
     text — the exact-dedup key. md5 (not xxhash64) so DuckDB can replicate
     it for the oracle; both are JVM builtins."""
-    norm = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
-    return df.withColumn(out_col, F.md5(norm))
+    return df.withColumn(out_col, F.md5(normalize_for_dedup(F.col(text_col))))
 
 
 # PII patterns chosen to behave identically under Java regex (Spark) and
@@ -98,9 +99,7 @@ def gram_occurrences(text: Column, n: int) -> Column:
     """Word n-gram array WITH duplicates (unlike dedup.shingles, which is
     distinct) — repetition signals need occurrence counts. Documents with
     fewer than n tokens yield an empty array."""
-    from datachain_spark.operators.dedup import sliding_ngrams
-
-    toks = F.split(F.regexp_replace(F.trim(F.lower(text)), r"\s+", " "), " ")
+    toks = F.split(normalize_for_dedup(text), " ")
     k = F.size(toks) - (n - 1)
     return F.when(k >= 1, sliding_ngrams(toks, n)).otherwise(
         F.array().cast("array<string>")

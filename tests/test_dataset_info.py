@@ -1,5 +1,7 @@
 """datasets_info() tests (reference DatasetInfo surface)."""
 
+import os
+
 import datachain_spark as dc
 from datachain_spark.chain import Chain
 from datachain_spark.dataset_info import datasets_info
@@ -85,6 +87,33 @@ def test_edit_dataset_metadata_and_rename(spark, tmp_path):
     # metadata traveled with the rename
     info = datasets_info(spark, cat).collect()[0]
     assert info["name"] == "clean" and info["description"] == "cleaned"
+
+
+def test_edit_props_leaves_the_tag_on_its_version(spark, tmp_path):
+    """An edit is an untagged metadata commit: the tag stays on the one
+    version it names, dropping that version frees the tag, and the edit
+    adds no user-facing version."""
+    import pytest
+    from pyspark.sql import types as T
+
+    from datachain_spark.lake.table import LakeTable
+
+    cat = str(tmp_path / "cat")
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    table = LakeTable.create(os.path.join(cat, "d"), schema, key_cols=[], num_buckets=1)
+    tagged = table.tag_version("1.0.0")
+    before = datasets_info(spark, cat).collect()[0]["num_versions"]
+
+    edit = table.edit_props({"dataset.description": "edited"})
+    assert table.tags() == [(tagged, "1.0.0")]
+    assert table.resolve("1.0.0") == tagged and table.resolve() == edit
+    info = datasets_info(spark, cat).collect()[0]
+    assert info["num_versions"] == before and info["description"] == "edited"
+    assert dc.read_dataset(spark, "d", catalog_root=cat).version == edit
+
+    table.drop_version(table.resolve("1.0.0"))
+    with pytest.raises(KeyError):
+        table.resolve("1.0.0")
 
 
 def test_datasets_attrs_filtering(spark, tmp_path):

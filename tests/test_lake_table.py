@@ -502,6 +502,36 @@ def test_dedup_registry_batch_crashed_before_its_commit_is_reused(spark, tmp_pat
     assert incremental_dedup(second, root, update=False).count() == 0
 
 
+def test_dedup_registry_replay_after_expiry(spark, tmp_path):
+    """A committed registry batch replayed after compaction and
+    `expire_versions` dropped the version that committed it still returns
+    its first-run survivors: the replay filters against HEAD's fingerprints
+    minus the ones it registered itself (their `_lsn` is its batch id)."""
+    from datachain_spark.operators.dedup import incremental_dedup
+
+    root = str(tmp_path / "reg")
+    batches = [
+        spark.createDataFrame([(i, f"doc {i}") for i in ids], "doc_id int, text string")
+        for ids in (range(0, 5), range(3, 8))
+    ]
+    first = []
+    for b, batch in enumerate(batches):
+        s = incremental_dedup(batch, root, num_buckets=2, batch_id=b)
+        first.append(sorted(r["doc_id"] for r in s.collect()))
+        s.unpersist()
+    assert first == [[0, 1, 2, 3, 4], [5, 6, 7]]
+    reg = LakeTable(root)
+    assert reg.compact(spark, max_segments=0) is not None
+    reg.expire_versions(keep_last=1)
+    assert len(reg.versions()) == 1
+
+    for b, batch in enumerate(batches):
+        again = incremental_dedup(batch, root, num_buckets=2, batch_id=b)
+        assert sorted(r["doc_id"] for r in again.collect()) == first[b], b
+        again.unpersist()
+    assert len(reg.versions()) == 1  # a replay registers nothing
+
+
 # ---------- one owner for the file layout and snapshot derivation ----------
 def test_only_lake_table_and_semver_interpret_a_version():
     """chain.py and cli.py hand a version argument to `LakeTable.resolve` /
@@ -541,7 +571,8 @@ def test_only_lake_table_owns_the_file_layout():
     pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "datachain_spark")
     owner = os.path.join(pkg, "lake", "table.py")
     layout = re.compile(r"data_dir\(|(?<!\w)(?:__)?bucket=")
-    shuffle = re.compile(r"\bwrite_tasks\b|partition_keys|pmod\(\s*F\.hash|pmod\(hash")
+    # `hash(` is the partitioner's murmur3; `hash60(` is the sketch hash
+    shuffle = re.compile(r"\bwrite_tasks\b|partition_keys|pmod\(\s*(?:F\.)?hash\(")
     offenders = []
     for dp, _, fns in os.walk(pkg):
         for fn in fns:

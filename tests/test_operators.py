@@ -100,15 +100,13 @@ def test_shingles(spark):
 
 
 def test_minhash_finds_exact_and_near_dups(spark, docs):
-    pairs = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(docs, threshold=0.9).collect()}
-    assert (0, 1) in pairs and (0, 2) in pairs and (1, 2) in pairs
-    assert not any(4 in p for p in pairs)
-
-
-def test_minhash_md5_mode_matches_duckdb_semantics(spark, docs):
-    """md5 hash_mode finds the same exact-dup structure and its n_match for
-    identical docs is the full signature length."""
-    rows = {(r["id_a"], r["id_b"]): r["n_match"] for r in minhash_lsh_pairs(docs, threshold=0.9, hash_mode="md5").collect()}
+    """The exact-dup structure is found, and n_match for identical docs is
+    the full signature length."""
+    rows = {
+        (r["id_a"], r["id_b"]): r["n_match"]
+        for r in minhash_lsh_pairs(docs, threshold=0.9).collect()
+    }
+    assert (0, 1) in rows and (0, 2) in rows and (1, 2) in rows
     assert rows[(0, 1)] == 32 and rows[(0, 2)] == 32
     assert not any(4 in p for p in rows)
 
@@ -131,12 +129,36 @@ def test_simhash_near_dups(spark, docs):
     assert not any(4 in p for p in pairs)
 
 
-def test_simhash_md5_mode(spark, docs):
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_near_dups(docs, hash_mode="md5").collect()
-    }
-    assert pairs[(0, 1)] == 0 and pairs[(0, 2)] == 0
+def test_the_sketch_hash_is_written_once():
+    """The sketching operators share one hash: no module under
+    datachain_spark/ names a hash-mode option, and the md5 -> 60-bit
+    expression (a `conv(...)` call over `md5(...)`) is written once, in
+    `hash60`."""
+    import ast
+    import os
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "datachain_spark")
+
+    def calls(node, name):
+        return isinstance(node, ast.Call) and getattr(node.func, "attr", None) == name
+
+    mode_option = "_".join(("hash", "mode"))  # spelled apart: this file is searched too
+    with_mode, md5_convs, hash60_lines = [], [], None
+    for dp, _, fns in os.walk(pkg):
+        for fn in (f for f in fns if f.endswith(".py")):
+            path = os.path.join(dp, fn)
+            src = open(path).read()
+            if mode_option in src:
+                with_mode.append(path)
+            for node in ast.walk(ast.parse(src)):
+                if calls(node, "conv") and any(calls(c, "md5") for c in ast.walk(node)):
+                    md5_convs.append((os.path.relpath(path, pkg), node.lineno))
+                if isinstance(node, ast.FunctionDef) and node.name == "hash60":
+                    hash60_lines = (os.path.relpath(path, pkg), node.lineno, node.end_lineno)
+    assert with_mode == []
+    assert len(md5_convs) == 1 and hash60_lines is not None
+    (where, line), (home, lo, hi) = md5_convs[0], hash60_lines
+    assert where == home and lo <= line <= hi
 
 
 def test_ngram_jaccard(spark, docs):
@@ -579,15 +601,29 @@ def test_incremental_dedup_registry(spark, tmp_path):
 
 
 def test_incremental_dedup_normalizes_whitespace_case(spark, tmp_path):
-    from datachain_spark.operators.dedup import incremental_dedup
+    """Case and every whitespace run normalize away, edge tabs and newlines
+    included, so no empty token reaches sliding_ngrams."""
+    from datachain_spark.operators.dedup import incremental_dedup, winnow_fingerprints
 
     root = str(tmp_path / "fp_reg2")
     b1 = spark.createDataFrame([(1, "Hello  World")], "doc_id long, text string")
     incremental_dedup(b1, root, batch_id=0).collect()
-    b2 = spark.createDataFrame([(2, " hello world ")], "doc_id long, text string")
+    edges = [" hello world ", "\thello world", "hello world\n", "\n Hello\tWorld \t"]
+    b2 = spark.createDataFrame([(2 + i, t) for i, t in enumerate(edges)], "doc_id long, text string")
     s = incremental_dedup(b2, root, batch_id=1)
-    assert s.collect() == []  # same doc under normalization
+    assert s.collect() == []  # the same doc under normalization, each of them
     s.unpersist()
+
+    clean = "foo bar baz qux"
+    texts = [clean, "\tFoo bar baz qux", "foo bar baz qux\n", "\n\tfoo  bar\tbaz qux \n"]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    for n, want in [(1, clean.split(" ")), (3, ["foo bar baz", "bar baz qux"])]:
+        got = [r[0] for r in df.select(shingles(F.col("text"), n)).orderBy("doc_id").collect()]
+        assert got == [want] * len(texts), n  # no empty token
+    fps = {}
+    for r in winnow_fingerprints(df, k=1, w=2).collect():
+        fps.setdefault(r["doc_id"], set()).add((r["pos"], r["fp"]))
+    assert [fps[i] for i in range(len(texts))] == [fps[0]] * len(texts)
 
 
 def test_run_dedup_stream_resume_across_runs(spark, tmp_path):
@@ -699,7 +735,7 @@ def test_semantic_dedup_greedy_keep_farthest(spark):
 
 # ---------- winnowing fingerprints (Schleimer et al. 2003) ----------
 def _winnow_py(text: str, k: int, w: int) -> set:
-    """Pure-python reference: md5-mode hashes, rightmost-min windows."""
+    """Pure-python reference: hash60 hashes, rightmost-min windows."""
     import hashlib
     import re
 
@@ -727,7 +763,7 @@ def test_winnow_matches_python_reference(spark):
         (5, "a b c d"),  # grams (k=3): 2 < w -> no full window
     ]
     df = spark.createDataFrame(texts, "doc_id: int, text: string")
-    got = winnow_fingerprints(df, k=3, w=4, hash_mode="md5").collect()
+    got = winnow_fingerprints(df, k=3, w=4).collect()
     by_doc = {}
     for r in got:
         by_doc.setdefault(r["doc_id"], set()).add((r["pos"], r["fp"]))
@@ -761,8 +797,8 @@ def test_winnow_validation_and_invariance(spark):
     docs = spark.read.parquet(os.path.join(sf, "documents.parquet")).limit(50)
     with _pytest.raises(ValueError):
         winnow_fingerprints(docs, k=0)
-    a = sorted(map(tuple, winnow_fingerprints(docs.repartition(1), hash_mode="md5").collect()))
-    b = sorted(map(tuple, winnow_fingerprints(docs.repartition(8), hash_mode="md5").collect()))
+    a = sorted(map(tuple, winnow_fingerprints(docs.repartition(1)).collect()))
+    b = sorted(map(tuple, winnow_fingerprints(docs.repartition(8)).collect()))
     assert a == b and a
 
 
