@@ -100,13 +100,16 @@ def test_shingles(spark):
 
 
 def test_minhash_finds_exact_and_near_dups(spark, docs):
-    """The exact-dup structure is found, and n_match for identical docs is
+    pairs = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(docs, threshold=0.9).collect()}
+    assert (0, 1) in pairs and (0, 2) in pairs and (1, 2) in pairs
+    assert not any(4 in p for p in pairs)
+
+
+def test_minhash_md5_mode_matches_duckdb_semantics(spark, docs):
+    """The md5-derived sketch hash (the only one) finds the same exact-dup
+    structure as the DuckDB reference, and its n_match for identical docs is
     the full signature length."""
-    rows = {
-        (r["id_a"], r["id_b"]): r["n_match"]
-        for r in minhash_lsh_pairs(docs, threshold=0.9).collect()
-    }
-    assert (0, 1) in rows and (0, 2) in rows and (1, 2) in rows
+    rows = {(r["id_a"], r["id_b"]): r["n_match"] for r in minhash_lsh_pairs(docs, threshold=0.9).collect()}
     assert rows[(0, 1)] == 32 and rows[(0, 2)] == 32
     assert not any(4 in p for p in rows)
 
@@ -127,6 +130,13 @@ def test_simhash_near_dups(spark, docs):
     pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in simhash_near_dups(docs).collect()}
     assert pairs[(0, 1)] == 0 and pairs[(0, 2)] == 0  # normalized-identical
     assert not any(4 in p for p in pairs)
+
+
+def test_simhash_md5_mode(spark, docs):
+    """SimHash over the md5-derived token hash (the only one) puts the
+    normalized-identical docs at hamming distance 0."""
+    pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in simhash_near_dups(docs).collect()}
+    assert pairs[(0, 1)] == 0 and pairs[(0, 2)] == 0
 
 
 def test_the_sketch_hash_is_written_once():
