@@ -1628,10 +1628,9 @@ def _bpe_oracle(num_merges: int) -> str:
     right greedy scan of operators/bpe.merge_pair_py, which fit_bpe
     applies on the driver."""
     parts = [
-        r"""
+        f"""
         WITH tok AS (
-          SELECT unnest(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                                    w -> len(w) > 0)) AS w
+          SELECT unnest({_words('lower(text)')}) AS w
           FROM documents
         ),
         v0 AS (
@@ -1961,6 +1960,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 _EN = "'the','and','of','to','a','in','is','it','that','for'"
 _ES = "'el','la','de','que','y','en','un','es','se','no'"
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+
+
+def _words(x: str) -> str:
+    """The DuckDB twin of `operators.words`: the maximal runs of
+    non-whitespace characters of `x`, so empty or all-whitespace text has
+    no token and edge whitespace adds none. Every whitespace tokenization
+    in these oracles is this one fragment."""
+    return f"regexp_extract_all({x}, '\\S+')"
 # md5-derived 60-bit hash, bit-identical to Spark's
 # conv(substring(md5(s),1,15),16,10) — shared by the minhash/simhash oracles
 _MD5I = "CAST(('0x' || substr(md5({s}), 1, 15)) AS BIGINT)"
@@ -1980,7 +1987,7 @@ def _minhash_oracle_sql() -> str:
     return f"""
         WITH norm AS (
           SELECT doc_id AS id,
-                 regexp_split_to_array({_NORM}, ' ') AS toks
+                 {_words('lower(text)')} AS toks
           FROM documents WHERE doc_id < 2000
         ),
         grams AS (
@@ -2073,7 +2080,7 @@ def _simhash_oracle_sql() -> str:
     return f"""
         WITH toks AS (
           SELECT doc_id AS id,
-                 list_distinct(regexp_split_to_array({_NORM}, ' ')) AS ts
+                 list_distinct({_words('lower(text)')}) AS ts
           FROM documents WHERE doc_id < 1000
         ),
         hashed AS (
@@ -2118,7 +2125,7 @@ def _decontaminate_oracle_sql() -> str:
     the benchmark slice."""
     return f"""
         WITH norm AS (
-          SELECT doc_id, regexp_split_to_array({_NORM}, ' ') AS toks
+          SELECT doc_id, {_words('lower(text)')} AS toks
           FROM documents
         ),
         grams AS (
@@ -2157,7 +2164,7 @@ def _ngram_jaccard_oracle_sql() -> str:
     0.5) to dodge any float-division edge."""
     return f"""
         WITH norm AS (
-          SELECT doc_id AS id, regexp_split_to_array({_NORM}, ' ') AS toks
+          SELECT doc_id AS id, {_words('lower(text)')} AS toks
           FROM documents WHERE doc_id < 2000
         ),
         grams AS (
@@ -2467,23 +2474,19 @@ def oracle_sql() -> dict[str, str]:
         "text_quality": f"""
             SELECT doc_id,
                    length(text) AS n_chars_m,
-                   CASE WHEN length(trim(text)) = 0 THEN 0
-                        ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
+                   len({_words('text')}) AS n_tokens,
                    round(length(regexp_replace(text, '\\s+', '', 'g'))
-                         / greatest(CASE WHEN length(trim(text)) = 0 THEN 0
-                                         ELSE len(regexp_split_to_array(trim(text), '\\s+')) END, 1), 4)
-                     AS avg_token_len,
+                         / greatest(len({_words('text')}), 1), 4) AS avg_token_len,
                    round((length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')))
                          / greatest(length(text), 1), 4) AS punct_ratio,
-                   len(list_intersect(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                                      [{_EN}])) AS distinct_stopwords
+                   len(list_intersect({_words('lower(text)')}, [{_EN}])) AS distinct_stopwords
             FROM documents WHERE doc_id < 3000 ORDER BY doc_id
         """,
         "lang_id_heuristic": f"""
             WITH scored AS (
               SELECT doc_id,
-                     len(list_intersect(regexp_split_to_array(trim(lower(text)), '\\s+'), [{_EN}])) AS en,
-                     len(list_intersect(regexp_split_to_array(trim(lower(text)), '\\s+'), [{_ES}])) AS es
+                     len(list_intersect({_words('lower(text)')}, [{_EN}])) AS en,
+                     len(list_intersect({_words('lower(text)')}, [{_ES}])) AS es
               FROM documents
             )
             SELECT CASE WHEN en > es THEN 'en' WHEN es > en THEN 'es' ELSE 'und' END AS lang_pred,
@@ -2514,16 +2517,13 @@ def oracle_sql() -> dict[str, str]:
         "document_pipeline": f"""
             WITH scored AS (
               SELECT *,
-                     CASE WHEN length(trim(text)) = 0 THEN 0
-                          ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
+                     len({_words('text')}) AS n_tokens,
                      length(regexp_replace(text, '\\s+', '', 'g'))
-                       / greatest(CASE WHEN length(trim(text)) = 0 THEN 0
-                                       ELSE len(regexp_split_to_array(trim(text), '\\s+')) END, 1)
-                       AS avg_token_len,
+                       / greatest(len({_words('text')}), 1) AS avg_token_len,
                      (length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')))
                        / greatest(length(text), 1) AS punct_ratio,
-                     len(list_intersect(regexp_split_to_array(trim(lower(text)), '\\s+'), [{_EN}])) AS en,
-                     len(list_intersect(regexp_split_to_array(trim(lower(text)), '\\s+'), [{_ES}])) AS es
+                     len(list_intersect({_words('lower(text)')}, [{_EN}])) AS en,
+                     len(list_intersect({_words('lower(text)')}, [{_ES}])) AS es
               FROM documents
             ),
             kept AS (
@@ -2747,11 +2747,9 @@ def oracle_sql() -> dict[str, str]:
             WHERE t NOT IN (SELECT t FROM b1)
             ORDER BY doc_id
         """,
-        "corpus_token_stats": """
+        "corpus_token_stats": f"""
             WITH t AS (
-              SELECT lang,
-                     CASE WHEN length(trim(text)) = 0 THEN 0
-                          ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS toks
+              SELECT lang, len({_words('text')}) AS toks
               FROM documents
             )
             SELECT lang,
@@ -2925,15 +2923,13 @@ def oracle_sql() -> dict[str, str]:
                    turns[tidx[ex]].text AS target
             FROM f ORDER BY conv_id, example_idx
         """,
-        "winnow_fingerprints_docs": r"""
+        "winnow_fingerprints_docs": rf"""
             -- same 3-gram md5 base hashes (the minhash oracle recipe),
             -- w=4 windows, rightmost min via list_position on the
             -- REVERSED window: j = w + 1 - reversed-position, global
             -- pos = p + j - 1; DISTINCT collapses repeated selections
             WITH norm AS (
-              SELECT doc_id,
-                     regexp_split_to_array(trim(regexp_replace(lower(text),
-                       '\s+', ' ', 'g')), ' ') AS toks
+              SELECT doc_id, {_words('lower(text)')} AS toks
               FROM documents WHERE doc_id < 60
             ),
             grams AS (
@@ -2964,7 +2960,7 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT DISTINCT doc_id, pos, fp FROM sel ORDER BY doc_id, pos, fp
         """,
-        "winnow_overlap_pairs": r"""
+        "winnow_overlap_pairs": rf"""
             -- winnow oracle over docs + planted prefix-shifted copies,
             -- then the same hash equi-join pair count
             WITH base AS (
@@ -2974,9 +2970,7 @@ def oracle_sql() -> dict[str, str]:
               FROM documents WHERE doc_id < 40 AND doc_id % 4 = 0
             ),
             norm AS (
-              SELECT doc_id,
-                     regexp_split_to_array(trim(regexp_replace(lower(text),
-                       '\s+', ' ', 'g')), ' ') AS toks
+              SELECT doc_id, {_words('lower(text)')} AS toks
               FROM base
             ),
             grams AS (
@@ -3008,7 +3002,7 @@ def oracle_sql() -> dict[str, str]:
             HAVING count(DISTINCT a.fp) >= 2
             ORDER BY id_a, id_b
         """,
-        "sft_echo_overlap": r"""
+        "sft_echo_overlap": rf"""
             -- expand oracle's context/target + normalized distinct-token
             -- intersection (normalize = lower/trim/collapse-whitespace,
             -- the dedup-shingle recipe)
@@ -3052,10 +3046,8 @@ def oracle_sql() -> dict[str, str]:
             ),
             toks AS (
               SELECT conv_id, example_idx,
-                     list_distinct(string_split(trim(regexp_replace(lower(target),
-                                   '\s+', ' ', 'g')), ' ')) AS tgt,
-                     list_distinct(string_split(trim(regexp_replace(lower(context),
-                                   '\s+', ' ', 'g')), ' ')) AS ctx
+                     list_distinct({_words('lower(target)')}) AS tgt,
+                     list_distinct({_words('lower(context)')}) AS ctx
               FROM pairs
             )
             SELECT conv_id, example_idx,
@@ -3065,7 +3057,7 @@ def oracle_sql() -> dict[str, str]:
                         ELSE 0.0 END AS echo_frac
             FROM toks ORDER BY conv_id, example_idx
         """,
-        "truncate_context_budget": r"""
+        "truncate_context_budget": rf"""
             -- identical reverse-ordered running suffix token sum; the
             -- last turn (rn = 1) always survives
             WITH t AS (
@@ -3076,9 +3068,7 @@ def oracle_sql() -> dict[str, str]:
             ),
             k AS (
               SELECT conv_id, turn_idx, role,
-                     CAST(CASE WHEN len(trim(txt)) = 0 THEN 0
-                          ELSE len(regexp_split_to_array(trim(txt), '\s+'))
-                          END AS BIGINT) AS n_tok
+                     CAST(len({_words('txt')}) AS BIGINT) AS n_tok
               FROM t
             ),
             w AS (
@@ -3524,18 +3514,17 @@ def oracle_sql() -> dict[str, str]:
               AND value BETWEEN 20.0 AND 80.0
             ORDER BY event_id
         """,
-        "dedup_spans_corpus": """
+        "dedup_spans_corpus": f"""
             -- identical window/first-occurrence/coverage pipeline; the
             -- winner per span is (doc_id,pos)-lexicographic first, same
             -- total order as Spark's min(struct(id,pos))
             WITH d AS (
-              SELECT doc_id,
-                     string_split(trim(regexp_replace(lower(
-                       text || ' ' || 'shared span block '
-                            || CAST(doc_id % 5 AS VARCHAR)
-                            || ' alpha beta gamma delta epsilon'
-                     ), '\\s+', ' ', 'g')), ' ') AS t
-              FROM documents WHERE doc_id < 1200
+              SELECT doc_id, {_words('lower(x)')} AS t
+              FROM (SELECT doc_id,
+                           text || ' ' || 'shared span block '
+                                || CAST(doc_id % 5 AS VARCHAR)
+                                || ' alpha beta gamma delta epsilon' AS x
+                    FROM documents WHERE doc_id < 1200)
             ), w0 AS (
               SELECT doc_id,
                      unnest(list_transform(range(0, greatest(len(t) - 7, 0)),
@@ -3586,14 +3575,11 @@ def oracle_sql() -> dict[str, str]:
                               ELSE 0 END
             ORDER BY doc_id
         """,
-        "token_budget_mixture": """
+        "token_budget_mixture": f"""
             -- thresholds re-derived from the data with the identical
             -- float-op sequence: budget * (w/Sum_w) * 1e6 / group_tokens
             WITH tok AS (
-              SELECT source,
-                     CASE WHEN length(trim(text)) = 0 THEN 0
-                          ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-                     END AS toks
+              SELECT source, len({_words('text')}) AS toks
               FROM documents
             ), gt AS (
               SELECT source, CAST(sum(toks) AS BIGINT) AS gtoks
@@ -3652,10 +3638,10 @@ def oracle_sql() -> dict[str, str]:
             SELECT printf('doc_%06d', doc_id) AS key, text AS txt, lang AS cls
             FROM documents WHERE doc_id < 200 ORDER BY key
         """,
-        "gopher_repetition": r"""
+        "gopher_repetition": rf"""
             WITH tk AS (
               SELECT doc_id,
-                     string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS t
+                     {_words('lower(text)')} AS t
               FROM documents
             ),
             grams AS (
@@ -3683,9 +3669,8 @@ def oracle_sql() -> dict[str, str]:
         "gopher_quality_filter": rf"""
             WITH s AS (
               SELECT doc_id, text,
-                     CASE WHEN length(trim(text)) = 0 THEN 0
-                          ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_words,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS tk
+                     len({_words('text')}) AS n_words,
+                     {_words('lower(text)')} AS tk
               FROM documents
             ),
             m AS (

@@ -15,8 +15,8 @@ row_number window over `_lsn` within each bucket (a key's history lives
 in exactly one bucket, so resolution never crosses bucket boundaries).
 `compact()` rewrites multi-segment buckets to a single resolved segment —
 amortized, like Iceberg data compaction — after which reads are
-window-free again (per-bucket `dirty` flags track which buckets need
-resolution).
+window-free again (a bucket needs resolution exactly when its files span
+more than one write unit: `Snapshot.dirty`).
 
 Write shuffle: `layout` is the one shuffle of every table write, and each
 write task holds whole buckets. The TASK count is sized from the input's
@@ -258,7 +258,6 @@ class Snapshot:
     key_cols: list[str]
     buckets: dict[int, list[str]]  # bucket -> relative parquet segment paths
     watermarks: dict[int, int]  # bucket -> high-watermark LSN applied
-    dirty: dict[int, bool] = field(default_factory=dict)  # bucket needs LWW resolve
     tag: str | None = None
     ledger: dict[str, Any] | None = None  # commit-manifest row (exactly-once)
     # job_id -> merged [lo, hi] committed-batch ranges (exactly-once lookup)
@@ -270,6 +269,16 @@ class Snapshot:
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(json.loads(self.schema_json))
 
+    @property
+    def dirty(self) -> dict[int, bool]:
+        """Bucket -> needs LWW resolution on read: its files span more than
+        one write unit (a path's part before `/__bucket=`; a path without
+        one is its own unit). A unit holds at most one row per key, so a
+        single-unit bucket needs only its tombstones filtered."""
+        return {
+            b: len({p.split("/__bucket=")[0] for p in fl}) > 1 for b, fl in self.buckets.items()
+        }
+
     def to_json(self) -> str:
         return json.dumps(
             {
@@ -280,7 +289,6 @@ class Snapshot:
                 "key_cols": self.key_cols,
                 "buckets": {str(k): v for k, v in self.buckets.items()},
                 "watermarks": {str(k): v for k, v in self.watermarks.items()},
-                "dirty": {str(k): v for k, v in self.dirty.items()},
                 "tag": self.tag,
                 "ledger": self.ledger,
                 "committed": self.committed,
@@ -301,7 +309,6 @@ class Snapshot:
             key_cols=d.get("key_cols", []),
             buckets={int(k): v for k, v in d["buckets"].items()},
             watermarks={int(k): v for k, v in d.get("watermarks", {}).items()},
-            dirty={int(k): v for k, v in d.get("dirty", {}).items()},
             tag=d.get("tag"),
             ledger=d.get("ledger"),
             committed=d.get("committed") or {},
@@ -662,13 +669,14 @@ class LakeTable:
         default), optionally bucket-pruned.
 
         The explicit schema makes old files (pre-evolution) surface added
-        columns as null — Iceberg-style union-by-name on read. Buckets
-        flagged dirty get LWW resolution; compacted buckets scan straight
-        through (no window)."""
+        columns as null — Iceberg-style union-by-name on read. Dirty
+        buckets (`Snapshot.dirty`) get LWW resolution; single-unit buckets
+        scan straight through (no window)."""
         snap = self.snapshot(self.resolve(version, as_of))
         sel = sorted(snap.buckets) if buckets is None else buckets
-        dirty = [b for b in sel if snap.dirty.get(b)]
-        clean = [b for b in sel if not snap.dirty.get(b)]
+        needs_lww = snap.dirty
+        dirty = [b for b in sel if needs_lww.get(b)]
+        clean = [b for b in sel if not needs_lww.get(b)]
         parts = []
         if clean:
             # clean (compacted) buckets are LWW-resolved but MAY carry
@@ -865,7 +873,6 @@ class LakeTable:
             "parent": src.version,
             "buckets": dict(src.buckets),
             "watermarks": dict(src.watermarks),
-            "dirty": dict(src.dirty),
             "tag": None,
             "ledger": None,
             "committed": {j: [list(r) for r in rs] for j, rs in src.committed.items()},
@@ -879,23 +886,20 @@ class LakeTable:
         append_bucket_files: dict[int, list[str]] | None = None,
         replace_bucket_files: dict[int, list[str]] | None = None,
         compacted_from: dict[int, list[str]] | None = None,
-        has_deletes: set[int] | frozenset[int] = frozenset(),
         schema: T.StructType | None = None,
         watermark_updates: dict[int, int] | None = None,
         ledger: dict[str, Any] | None = None,
         tag: str | None = None,
         props: dict[str, Any] | None = None,
     ) -> int:
-        """Commit a new version. `append_bucket_files` adds MOR segments
-        (bucket turns dirty if it already had data or the segment carries
-        tombstones); `replace_bucket_files` swaps a bucket's segment list
-        (compaction). With `compacted_from` (the exact input files the
-        compaction resolved), only THOSE files are replaced: segments
-        appended to the bucket after the compaction read survive as
-        residuals and the bucket stays dirty iff any exist — this is what
-        makes compaction safe to run CONCURRENTLY with appends (Iceberg's
-        rewrite-files validation, done set-wise here). Without it the swap
-        is whole-list (bucket turns clean). Untouched buckets inherit the
+        """Commit a new version. `append_bucket_files` adds MOR segments;
+        `replace_bucket_files` swaps a bucket's segment list (compaction).
+        With `compacted_from` (the exact input files the compaction
+        resolved), only THOSE files are replaced: segments appended to the
+        bucket after the compaction read survive as residuals (so the
+        bucket stays dirty) — this is what makes compaction safe to run
+        CONCURRENTLY with appends (Iceberg's rewrite-files validation, done
+        set-wise here). Without it the swap is whole-list. Untouched buckets inherit the
         parent's files. Paths are relative to the table root. Commits, and
         the refusal of a `tag` a live version carries, hold the commit lock."""
         with self._commit_lock:
@@ -903,24 +907,16 @@ class LakeTable:
             snap = self._derive(self.snapshot(), props=props, tag=tag, ledger=ledger)
             if schema:
                 snap.schema_json = json.dumps(schema.jsonValue())
-            buckets, dirty = snap.buckets, snap.dirty
+            buckets = snap.buckets
             for b, fl in (append_bucket_files or {}).items():
-                existing = buckets.get(b, [])
-                if existing or b in has_deletes:
-                    dirty[b] = True
-                buckets[b] = existing + list(fl)
+                buckets[b] = buckets.get(b, []) + list(fl)
             for b, fl in (replace_bucket_files or {}).items():
                 if compacted_from is not None and b in compacted_from:
                     eaten = set(compacted_from[b])
                     residual = [p for p in buckets.get(b, []) if p not in eaten]
                     buckets[b] = list(fl) + residual
-                    # residual segments postdate the compaction read: the
-                    # union still needs LWW resolution (and may carry
-                    # tombstones against compacted rows)
-                    dirty[b] = bool(residual)
                 else:
                     buckets[b] = list(fl)
-                    dirty[b] = False
             for b, lsn in (watermark_updates or {}).items():
                 snap.watermarks[b] = max(lsn, snap.watermarks.get(b, -1))
             if ledger is not None and "job_id" in ledger and "batch_id" in ledger:
@@ -1138,7 +1134,6 @@ class LakeTable:
         }
         version = self.commit(
             append_bucket_files=files,
-            has_deletes={b for b, s in stats.items() if s["n_del"]},
             schema=T.StructType(self.schema.fields + evolved) if evolved else None,
             watermark_updates={b: s["hwm"] for b, s in stats.items()},
             ledger=ledger,

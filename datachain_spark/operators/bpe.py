@@ -36,12 +36,15 @@ training-data pipeline. The work splits by size:
 from __future__ import annotations
 
 import heapq
+import re
 from collections import defaultdict
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from datachain_spark.operators import WORDS, words
 
 __all__ = ["fit_bpe", "bpe_encode", "merge_pair_py"]
 
@@ -72,10 +75,11 @@ def word_vocab(
     t = F.col(text_col)
     if lowercase:
         t = F.lower(t)
-    words = docs.select(F.explode(F.split(F.trim(t), r"\s+")).alias("w")).filter(
-        F.length("w") > 0
+    vocab = (
+        docs.select(F.explode(words(t)).alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("freq"))
     )
-    vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
     return vocab.withColumn("syms", F.split(F.col("w"), "")).drop("w")
 
 
@@ -152,11 +156,12 @@ def bpe_encode(
     out_col: str = "bpe_tokens",
     lowercase: bool = True,
 ) -> DataFrame:
-    """Tokenize text with a learned merge table: whitespace-split words,
-    then apply merges lowest-rank-first per word (the standard BPE apply).
-    Arrow-batched pandas UDF; the rank dict is closure-captured (O(K),
-    broadcast-sized)."""
+    """Tokenize text with a learned merge table: the whitespace words
+    `word_vocab` trains on (`WORDS`), then merges lowest-rank-first per
+    word (the standard BPE apply). Arrow-batched pandas UDF; the rank dict
+    is closure-captured (O(K), broadcast-sized)."""
     ranks = {(m["left_sym"], m["right_sym"]): i for i, m in enumerate(merges)}
+    word_re = re.compile(WORDS, re.ASCII)
 
     def encode_word(w: str) -> list[str]:
         syms = list(w)
@@ -176,9 +181,8 @@ def bpe_encode(
         def doc(text: str | None) -> list[str]:
             if text is None:
                 return []
-            t = text.strip().lower() if lowercase else text.strip()
             out: list[str] = []
-            for w in t.split():
+            for w in word_re.findall(text.lower() if lowercase else text):
                 out.extend(encode_word(w))
             return out
 

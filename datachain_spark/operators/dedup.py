@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datachain_spark.frames import spread
-from datachain_spark.operators import hash60
+from datachain_spark.operators import hash60, sliding_ngrams, words
 
 # 2^31-1: keeps a*h+b far below int64 overflow under ANSI mode while
 # leaving minhash collision probability ~1/2^31 per permutation
@@ -31,8 +31,9 @@ _REGISTRY_JOB = "incremental_dedup"
 
 def normalize_for_dedup(text: Column) -> Column:
     """Lowercase, collapse every whitespace run to one space, then trim:
-    collapsing first turns an edge tab or newline into a space that the
-    trim removes, so splitting on " " never yields an empty token."""
+    the string the exact-dedup fingerprints (md5, xxhash64) hash, so text
+    that differs only in case or whitespace gets one fingerprint. Not a
+    tokenizer: the token operators use `words`."""
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
@@ -49,42 +50,10 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def sliding_ngrams(toks: Column, n: int) -> Column:
-    """Space-joined word n-grams of a token array (callers guard
-    size(toks) >= n; n == 1 is the tokens themselves), extracted by ONE
-    codegen regex pass over the space-joined token string: the lookahead
-    captures each overlapping n-token window while consuming a single
-    token per match, yielding exactly the size-n+1 n-grams in order.
-    PRECONDITION: tokens are non-empty and whitespace-free — true of every
-    construction path in this package (regex token classes exclude
-    ``\\s``; the split paths split `normalize_for_dedup` output),
-    making ``array_join(toks, ' ')`` a reversible encoding.
-
-    This replaces a chain of n zip_with over shifted slices: higher-order
-    functions are CodegenFallback, so the chain ran its concat lambda
-    through interpreted expression trees per element and allocated n
-    intermediate arrays per row. Corpus-wide exact array equality was
-    verified for n in {2,3,5,13,50} before adopting; the n-gram-heavy
-    queries sped up where shingling dominates (minhash 0.62s -> 0.46s at
-    the 10x profile replica) and none regressed. (The earlier trap still
-    documented for history: NEVER capture `toks` inside a transform
-    lambda — an outer expression captured in a higher-order-function
-    lambda is re-evaluated PER ELEMENT, measured 6.7x slower.)"""
-    if n == 1:
-        return toks
-    pat = r"(?=((?:\S+ ){%d}\S+))\S+" % (n - 1)
-    return F.regexp_extract_all(F.array_join(toks, " "), F.lit(pat), 1)
-
-
 def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingle array (distinct), JVM-side via slice/zip_with.
-    Documents with fewer than n tokens yield an empty array — the guard
-    matters because Spark's sequence(1, 0) DESCENDS to [1, 0] and
-    slice(_, 0, _) throws."""
-    toks = F.split(normalize_for_dedup(text), " ")
-    k = F.size(toks) - (n - 1)
-    empty = F.array().cast("array<string>")
-    return F.when(k >= 1, F.array_distinct(sliding_ngrams(toks, n))).otherwise(empty)
+    """Distinct word n-gram shingles of the lowered text (`words`, then
+    `sliding_ngrams`); a document with fewer than n tokens has none."""
+    return F.array_distinct(sliding_ngrams(words(F.lower(text)), n))
 
 
 def minhash_from_base(base: Column, num_hashes: int = 32) -> Column:
@@ -206,7 +175,7 @@ def simhash(text: Column) -> Column:
     (+1/-1) per bit over the distinct-token array with aggregate(). The
     token hash is `hash60`, so all 60 voted bits are random and hamming
     distances are DuckDB-reproducible from first principles (`_MD5I`)."""
-    toks = F.array_distinct(F.split(normalize_for_dedup(text), " "))
+    toks = F.array_distinct(words(F.lower(text)))
     hashes = F.transform(toks, hash60)
     out = F.lit(0).cast("long")
     for b in range(60):
@@ -609,24 +578,18 @@ def dedup_spans(
     ~1/2^64) can only over-delete a colliding span, never corrupt
     reassembly — offsets come from the doc's own rows.
     """
-    toks = F.split(normalize_for_dedup(F.col(text_col)), " ")
+    toks = words(F.lower(F.col(text_col)))
     base = df.select(
         F.col(id_col).alias("__id"),
         toks.alias("__t"),
         F.size(toks).alias("__n"),
     )
-    # zip_with-chain windows (sliding_ngrams), NOT slice(__t, i+1, k)
-    # inside a transform lambda: ProjectCollapse substitutes __t back to
-    # the tokenization expression, and a captured outer expression in a
-    # higher-order lambda re-evaluates PER ELEMENT — the whole regex split
-    # once per window position. Guard: empty window list when n < k.
-    whashes = F.when(
-        F.col("__n") >= k,
-        F.transform(
-            sliding_ngrams(F.col("__t"), k),
-            lambda s: F.xxhash64(s),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
+    # hash the sliding_ngrams windows, NOT slice(__t, i+1, k) inside a
+    # transform lambda: ProjectCollapse substitutes __t back to the
+    # tokenization expression, and a captured outer expression in a
+    # higher-order lambda re-evaluates PER ELEMENT — the whole regex
+    # tokenization once per window position
+    whashes = F.transform(sliding_ngrams(F.col("__t"), k), lambda s: F.xxhash64(s))
     win = base.select("__id", F.posexplode(whashes).alias("__pos", "__h"))
     firsts = (
         win.groupBy("__h")
@@ -688,11 +651,7 @@ def winnow_fingerprints(
     every fingerprint is bit-reproducible in DuckDB (`_MD5I`)."""
     if k < 1 or w < 1:
         raise ValueError("k and w must be >= 1")
-    toks = F.split(normalize_for_dedup(F.col(text_col)), " ")
-    n_grams = F.size(toks) - (k - 1)
-    grams = F.when(n_grams >= 1, sliding_ngrams(toks, k)).otherwise(
-        F.array().cast("array<string>")
-    )
+    grams = sliding_ngrams(words(F.lower(F.col(text_col))), k)
     hashes = F.transform(grams, lambda g: F.pmod(hash60(g), F.lit(MERSENNE)))
     n_win = F.size(hashes) - (w - 1)
 

@@ -27,25 +27,19 @@ Scale shape (the 100 TB audit):
   is rounded to 6 decimals (the dsir_select discipline), so the DuckDB
   driver oracle reproduces values exactly despite summation-order drift.
 
-Tokenization matches the dsir oracle token class ([a-z]+|[0-9]+|punct on
-lowercased text) so one SQL CTE serves both operators' oracles.
+Tokenization is `text.word_tokens` on lowercased text, the dsir
+tokenization, so one SQL CTE serves both operators' oracles.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datachain_spark.operators.dedup import sliding_ngrams
-
-TOKEN_RE = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
-
-
-def lm_tokens(text: Column) -> Column:
-    """Lowercased word/number/punct tokens (codegen regexp_extract_all)."""
-    return F.regexp_extract_all(F.lower(text), F.lit(TOKEN_RE), 0)
+from datachain_spark.operators import sliding_ngrams
+from datachain_spark.operators.text import word_tokens
 
 
 @dataclass
@@ -73,18 +67,15 @@ def fit_bigram_lm(
     """Fit unigram+bigram count tables on `ref`. One explode->hash-agg
     shuffle per order; totals are a single O(1) driver aggregate (the
     same collect both scoring branches need as plan literals)."""
-    toks = lm_tokens(F.col(text_col))
+    toks = word_tokens(F.lower(F.col(text_col)))
     t = ref.select(toks.alias("__ts"))
     uni = (
         t.select(F.explode("__ts").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    k = F.size("__ts") - F.lit(1)
-    empty = F.array().cast("array<string>")
-    bi_arr = F.when(k >= 1, sliding_ngrams(F.col("__ts"), 2)).otherwise(empty)
     bi = (
-        t.select(F.explode(bi_arr).alias("bg"))
+        t.select(F.explode(sliding_ngrams(F.col("__ts"), 2)).alias("bg"))
         .groupBy("bg")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -122,14 +113,14 @@ def lm_logprob(
     evidence and are excluded (same contract as dsir_select)."""
     if lm.total <= 0:
         raise ValueError("LM fitted on an empty corpus")
-    toks = lm_tokens(F.col(text_col))
+    toks = word_tokens(F.lower(F.col(text_col)))
     n = F.size(toks)
     empty_s = F.array().cast("array<string>")
     # Position-ordered per-token JOIN KEYS, [w0, "w0 w1", "w1 w2", ...]:
     # element 0 is the context-free first token (never contains a space —
-    # lm_tokens' classes exclude \s), the rest ARE the bigram join keys,
+    # word_tokens' classes exclude \s), the rest ARE the bigram join keys,
     # extracted in ONE codegen regex pass over the space-joined tokens
-    # (the lookahead trick of dedup.sliding_ngrams). This replaces the
+    # (`sliding_ngrams`). This replaces the
     # arrays_zip (prev, cur) struct array + per-row concat join key —
     # measured as the dominant increment of the scoring pass (+1.33s of
     # 2.1s at the 10x replica; full scoring 2.10s -> 1.40s, score-exact
@@ -137,11 +128,8 @@ def lm_logprob(
     # so the per-doc float-sum accumulates in the same sequence. A
     # zero-token doc yields an empty array and explode drops it (same
     # contract as before).
-    bigrams = F.regexp_extract_all(
-        F.array_join(toks, " "), F.lit(r"(?=(\S+ \S+))\S+"), 1
-    )
     keys = F.when(
-        n >= 1, F.concat(F.array(F.element_at(toks, 1)), bigrams)
+        n >= 1, F.concat(F.array(F.element_at(toks, 1)), sliding_ngrams(toks, 2))
     ).otherwise(empty_s)
 
     keep = [F.col(c) for c in keep_cols]
@@ -162,7 +150,7 @@ def lm_logprob(
     # the JVM exactly as the previous per-row expression did.
     tv = F.lit(lm.total + lm.vocab)
     maybe_b = F.broadcast if broadcast_lm else (lambda df: df)
-    first_w = F.split(F.col("bg"), " ", 2)[0]
+    first_w = F.substring_index(F.col("bg"), " ", 1)
     bi2 = maybe_b(
         lm.bi.select(F.col("bg"), F.col("c").alias("__cbi"), first_w.alias("__w"))
         .join(lm.uni.select(F.col("w").alias("__w"), F.col("c").alias("__cp")), "__w")

@@ -33,20 +33,17 @@ from __future__ import annotations
 import re
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datachain_spark.operators.text import word_tokens
-
-# must stay in lockstep with word_tokens (operators/text.py) — applied to
-# LOWERED text, so the letter class needs only a-z
-_TOKEN_RE = re.compile(r"[a-z]+|[0-9]+|[^a-z0-9\s]")
+from datachain_spark.operators.text import WORD_TOKENS, word_tokens
 
 
 def tokenize_query(query: str) -> list[str]:
     """Query-side tokenization, identical to the document side (lowered
-    word_tokens regex), distinct terms in first-seen order."""
-    return list(dict.fromkeys(_TOKEN_RE.findall(query.lower())))
+    word_tokens regex; re.ASCII gives `\\s` Java's ASCII meaning),
+    distinct terms in first-seen order."""
+    return list(dict.fromkeys(re.findall(WORD_TOKENS, query.lower(), re.ASCII)))
 
 
 def build_text_index(
@@ -96,6 +93,21 @@ def corpus_norms(df: DataFrame, text_col: str = "text") -> tuple[int, float]:
     return int(row["n"]), float(row["avgdl"])
 
 
+def _bm25_terms(n_docs: int, avgdl: float, k1: float, b: float) -> tuple[Column, Column]:
+    """BM25's two factors over a term's `df` and a posting's `tf` and `dl`
+    columns: idf = ln(1 + (N - df + 0.5) / (df + 0.5)) and the saturated,
+    length-normalized tf = tf (k1 + 1) / (tf + k1 (1 - b + b dl / avgdl))."""
+    idf = F.log(
+        F.lit(1.0)
+        + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+    )
+    tf = F.col("tf").cast("double")
+    tfn = (tf * F.lit(k1 + 1.0)) / (
+        tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
+    )
+    return idf, tfn
+
+
 def bm25_search(
     postings: DataFrame,
     n_docs: int,
@@ -115,14 +127,7 @@ def bm25_search(
         raise ValueError("query has no tokens")
     hits = postings.filter(F.col("term").isin(terms))
     dfreq = hits.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    tf = F.col("tf").cast("double")
-    tfn = (tf * F.lit(k1 + 1.0)) / (
-        tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-    )
+    idf, tfn = _bm25_terms(n_docs, avgdl, k1, b)
     scored = (
         hits.join(F.broadcast(dfreq.withColumn("_idf", idf).select("term", "_idf")), "term")
         .groupBy("doc_id")
@@ -178,14 +183,7 @@ def bm25_topk(
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     dfreq = F.count(F.lit(1)).over(Window.partitionBy("term"))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    tf = F.col("tf").cast("double")
-    tfn = (tf * F.lit(k1 + 1.0)) / (
-        tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-    )
+    idf, tfn = _bm25_terms(n_docs, avgdl, k1, b)
     scored = (
         hits.withColumn("df", dfreq)
         .groupBy("doc_id")

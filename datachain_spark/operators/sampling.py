@@ -32,8 +32,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from datachain_spark.operators import hash60
-from datachain_spark.operators.text import token_count
+from datachain_spark.operators import hash60, sliding_ngrams
+from datachain_spark.operators.text import token_count, word_tokens
 
 #: Threshold resolution: fractions are quantized to 1/RESOLUTION steps —
 #: quantization error (<1e-6) is far below sampling noise at any corpus
@@ -157,26 +157,8 @@ def dsir_grams(text: Column) -> Column:
     """Unigram + bigram occurrence array (the paper's hashed n-gram
     feature set), lowered word_tokens; docs with <2 tokens contribute
     unigrams only. Pure codegen."""
-    from datachain_spark.operators.text import word_tokens
-
     toks = word_tokens(F.lower(text))
-    # Bigrams via ONE codegen regex pass over the space-joined token
-    # string instead of slice/slice/zip_with: higher-order functions are
-    # CodegenFallback, so the zip_with lambda ran `concat(a, ' ', b)`
-    # through interpreted expression trees per element and allocated
-    # three intermediate arrays per row — measured as the single largest
-    # increment of the scoring pass (+1.43s of 2.3s at the 10x profile
-    # replica). Tokens can never contain whitespace (word_tokens'
-    # classes exclude \s), so `array_join(toks, ' ')` is a reversible
-    # encoding and the lookahead pattern captures each overlapping
-    # `tok[i] tok[i+1]` pair while consuming one token per match —
-    # exactly the n-1 bigrams, in order, single-space-joined. Corpus-wide
-    # exact array equality with the zip_with form was verified before
-    # adopting; scoring-pass A/B: 2.34s -> 0.91s.
-    bigrams = F.regexp_extract_all(
-        F.array_join(toks, " "), F.lit(r"(?=(\S+ \S+))\S+"), 1
-    )
-    return F.concat(toks, bigrams)
+    return F.concat(toks, sliding_ngrams(toks, 2))
 
 
 def dsir_bucket(gram: Column, n_buckets: int) -> Column:

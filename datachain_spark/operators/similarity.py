@@ -63,6 +63,15 @@ def brute_force_topk(
     (ANN query batches are small); per-query ranking is a window over the
     scored pairs. Excludes self-matches when ids collide."""
     pairs = corpus.join(F.broadcast(queries))
+    return _rank_topk(pairs, k, id_col, vec_col, query_id_col, query_vec_col)
+
+
+def _rank_topk(
+    pairs: DataFrame, k: int, id_col: str, vec_col: str, query_id_col: str, query_vec_col: str
+) -> DataFrame:
+    """The shared tail of every top-k search over (query, candidate) pairs:
+    score `cos_sim`, drop the self-match, rank per query by (cos_sim desc,
+    id asc) and keep ranks <= k as (query id, id, cos_sim, rk)."""
     scored = pairs.select(
         F.col(query_id_col),
         F.col(id_col),
@@ -251,21 +260,7 @@ def ivf_topk(
     q = ivf_assign(queries, centroids, query_vec_col, nprobe=nprobe).select(
         query_id_col, query_vec_col, F.explode("__cell").alias("__cell")
     )
-    scored = (
-        c.join(q, "__cell")
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            cosine_similarity(F.col(vec_col), F.col(query_vec_col)).alias("cos_sim"),
-        )
-        .filter(F.col(query_id_col) != F.col(id_col))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rk")
-    )
+    return _rank_topk(c.join(q, "__cell"), k, id_col, vec_col, query_id_col, query_vec_col)
 
 
 def semantic_dedup(
@@ -355,18 +350,4 @@ def lsh_topk(
     q = queries.withColumn(
         "__sig", hyperplane_signature(F.col(query_vec_col), dim, n_planes)
     )
-    scored = (
-        c.join(q, "__sig")
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            cosine_similarity(F.col(vec_col), F.col(query_vec_col)).alias("cos_sim"),
-        )
-        .filter(F.col(query_id_col) != F.col(id_col))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rk")
-    )
+    return _rank_topk(c.join(q, "__sig"), k, id_col, vec_col, query_id_col, query_vec_col)

@@ -17,22 +17,25 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from datachain_spark.operators.dedup import normalize_for_dedup, sliding_ngrams
+from datachain_spark.operators import sliding_ngrams, words
+from datachain_spark.operators.dedup import normalize_for_dedup
 
 # Tiny built-in stopword lists for the n-gram/stopword language heuristic.
 EN_STOPWORDS = ["the", "and", "of", "to", "a", "in", "is", "it", "that", "for"]
 ES_STOPWORDS = ["el", "la", "de", "que", "y", "en", "un", "es", "se", "no"]
+# a word token: a letter run, a digit run or one other non-space character.
+# retrieval.tokenize_query compiles it for the query side
+WORD_TOKENS = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
 def token_count(text: Column) -> Column:
-    """Whitespace tokenization — size(split(trim(x), '\\s+'))."""
-    t = F.trim(text)
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
+    """Number of whitespace tokens (`operators.words`)."""
+    return F.size(words(text))
 
 
 def word_tokens(text: Column) -> Column:
     """BPE-ish regex tokenization: words, numbers, or single punctuation."""
-    return F.regexp_extract_all(text, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0)
+    return F.regexp_extract_all(text, F.lit(WORD_TOKENS), 0)
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -40,7 +43,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     (the classic pre-training quality filters), all JVM-side."""
     t = F.col(text_col)
     n_tok = token_count(t)
-    toks = F.split(F.trim(F.lower(t)), r"\s+")
+    toks = words(F.lower(t))
     stop_hits = F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in EN_STOPWORDS])))
     punct = F.length(t) - F.length(F.regexp_replace(t, r"[^\w\s]", ""))
     return df.withColumns(
@@ -57,7 +60,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 def lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
     """Stopword-vote language heuristic: count distinct EN vs ES stopwords
     among the document's tokens; ties/empty → 'und'."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    toks = words(F.lower(F.col(text_col)))
     en = F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in EN_STOPWORDS])))
     es = F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in ES_STOPWORDS])))
     return df.withColumn(
@@ -99,11 +102,7 @@ def gram_occurrences(text: Column, n: int) -> Column:
     """Word n-gram array WITH duplicates (unlike dedup.shingles, which is
     distinct) — repetition signals need occurrence counts. Documents with
     fewer than n tokens yield an empty array."""
-    toks = F.split(normalize_for_dedup(text), " ")
-    k = F.size(toks) - (n - 1)
-    return F.when(k >= 1, sliding_ngrams(toks, n)).otherwise(
-        F.array().cast("array<string>")
-    )
+    return sliding_ngrams(words(F.lower(text)), n)
 
 
 def repetition_signals(
@@ -183,7 +182,7 @@ def gopher_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     each signal plus the conjunction `gopher_pass` so pipelines can both
     filter and audit which rule fired."""
     t = F.col(text_col)
-    toks = F.split(F.trim(F.lower(t)), r"\s+")
+    toks = words(F.lower(t))
     n_words = token_count(t)
     nw = F.greatest(n_words, F.lit(1))
     mean_wl = F.length(F.regexp_replace(t, r"\s+", "")) / nw

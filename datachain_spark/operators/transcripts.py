@@ -19,7 +19,7 @@ mega-conversation cannot overflow.
 
 Expression-evaluation discipline (two distinct traps, both measured):
 1. An expression captured INSIDE a higher-order-function lambda
-   re-evaluates per element (see dedup.sliding_ngrams) — pass arrays as
+   re-evaluates per element (see operators.sliding_ngrams) — pass arrays as
    HOF *arguments*, which evaluate once per row.
 2. withColumn is NOT an evaluation barrier: Catalyst collapses adjacent
    projections, so an intermediate array column referenced from a later
@@ -140,7 +140,7 @@ def conversation_stats(
     Same plan as render_conversations: ONE groupBy(conv) shuffle, then
     whole-stage-codegen array expressions; consecutive-role comparison is
     zip_with over shifted slices (never a lambda-captured computed array —
-    see dedup.sliding_ngrams)."""
+    see operators.sliding_ngrams)."""
     turn = F.struct(
         F.col(order_col).alias("o"),
         F.col(role_col).alias("role"),
@@ -310,7 +310,7 @@ def echo_overlap(
     out; targets shorter than n words score 0.0, nothing to copy).
 
     Pure whole-stage codegen, ZERO shuffles: two shingle builds
-    (dedup.shingles — zip_with chains, no lambda-captured tokenization)
+    (dedup.shingles — one regex pass each, no lambda-captured tokenization)
     and one array_intersect per row. Composes directly after
     expand_sft_examples; round-6 so the fraction is cross-engine exact."""
     from datachain_spark.operators.dedup import shingles

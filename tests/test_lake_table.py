@@ -256,6 +256,27 @@ def test_commit_compacted_from_preserves_concurrent_appends(tmp_path):
     assert snap.buckets[0] == ["data/c2"] and snap.dirty[0] is False
 
 
+def test_dirty_is_derived_from_write_units(tmp_path):
+    """A bucket needs LWW resolution exactly when its files span more than
+    one write unit (the path before `/__bucket=`); no flag is stored."""
+    import json
+
+    from pyspark.sql import types as T
+
+    from datachain_spark.lake.table import LakeTable
+
+    schema = T.StructType([T.StructField("k", T.StringType(), False)])
+    t = LakeTable.create(str(tmp_path / "t"), schema, key_cols=["k"], num_buckets=4)
+    part = "data/job=j/batch={:09d}/__bucket={}/part-{}.parquet"
+    t.commit(append_bucket_files={0: [part.format(0, 0, 0), part.format(0, 0, 1)]})
+    t.commit(append_bucket_files={1: [part.format(1, 1, 0)]})
+    assert t.snapshot().dirty == {0: False, 1: False}
+    t.commit(append_bucket_files={1: [part.format(2, 1, 0)]})
+    snap = t.snapshot()
+    assert snap.dirty == {0: False, 1: True}
+    assert "dirty" not in json.loads(snap.to_json())
+
+
 def test_async_compaction_replay_matches_oracle(spark, tmp_path):
     """Forced near-every-batch ASYNC compaction (overlapped with the next
     apply) must still converge to the exact oracle state, and the drained

@@ -10,7 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from datachain_spark.diff import compare_and_split, diff
+from datachain_spark.operators import hash60
 from datachain_spark.operators.dedup import (
+    MERSENNE,
     connected_components,
     exact_dedup,
     minhash_lsh_pairs,
@@ -237,6 +239,114 @@ def test_token_count_and_quality(spark):
     assert q["n_tokens"] == 5
     assert q["distinct_stopwords"] >= 2  # the, and, a
     assert q["punct_ratio"] > 0
+
+
+# empty, all-whitespace and edge tab/newline text: none of these shapes is
+# in the test tables, so the oracles cannot see them
+EDGE_TEXTS = ["", " \t ", "\tFoo bar", "foo bar\n", "x \t\n y"]
+
+
+def _edge_docs(spark):
+    return spark.createDataFrame(list(enumerate(EDGE_TEXTS)), "doc_id long, text string")
+
+
+def test_edge_text_has_no_empty_token(spark):
+    """A token is a maximal non-whitespace run: an edge tab or newline adds
+    no token, and wordless text has no token, no shingle and simhash 0."""
+    from datachain_spark.operators.dedup import simhash, winnow_fingerprints
+    from datachain_spark.operators.text import gram_occurrences
+
+    df = _edge_docs(spark)
+    t = F.col("text")
+    rows = df.select(
+        token_count(t).alias("n"),
+        shingles(t, 1).alias("s1"),
+        shingles(t, 2).alias("s2"),
+        gram_occurrences(t, 1).alias("g1"),
+        simhash(t).alias("sh"),
+    ).orderBy("doc_id").collect()
+    assert [r["n"] for r in rows] == [0, 0, 2, 2, 2]
+    assert [sorted(r["s1"]) for r in rows] == [[], [], ["bar", "foo"], ["bar", "foo"], ["x", "y"]]
+    assert [r["s2"] for r in rows] == [[], [], ["foo bar"], ["foo bar"], ["x y"]]
+    assert [r["g1"] for r in rows] == [r["s1"] for r in rows]
+    assert rows[0]["sh"] == rows[1]["sh"] == 0
+    assert rows[2]["sh"] == rows[3]["sh"] != 0
+
+    q = quality_features(df).orderBy("doc_id").collect()
+    assert [r["n_tokens"] for r in q] == [0, 0, 2, 2, 2]
+    assert [r["avg_token_len"] for r in q] == [0.0, 0.0, 3.0, 3.0, 1.0]
+
+    # one fingerprint per 1-gram window; wordless docs have none, and no
+    # fingerprint is the hash of an empty token
+    fps = winnow_fingerprints(df, k=1, w=1).groupBy("doc_id").count().collect()
+    assert sorted((r["doc_id"], r["count"]) for r in fps) == [(2, 2), (3, 2), (4, 2)]
+    empty_fp = spark.range(1).select(
+        F.pmod(hash60(F.lit("")), F.lit(MERSENNE)).alias("h")
+    ).first()["h"]
+    assert winnow_fingerprints(df, k=1, w=1).filter(F.col("fp") == empty_fp).count() == 0
+
+
+def test_edge_text_words_match_the_oracle_fragment(spark):
+    """The oracles' DuckDB whitespace-token fragment gives the same arrays
+    as `words`, raw and lowered."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+    from datachain_spark.operators import words
+
+    with duckdb.connect() as con:
+        con.execute("CREATE TABLE d (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO d VALUES (?, ?)", list(enumerate(EDGE_TEXTS)))
+        for x, col in (("text", F.col("text")), ("lower(text)", F.lower(F.col("text")))):
+            sql = f"SELECT {entrymod._words(x)} FROM d ORDER BY doc_id"
+            want = [r[0] for r in con.execute(sql).fetchall()]
+            got = [r[0] for r in _edge_docs(spark).orderBy("doc_id").select(words(col)).collect()]
+            assert got == want, x
+    assert want == [[], [], ["foo", "bar"], ["foo", "bar"], ["x", "y"]]
+
+
+def test_only_the_tokenizer_module_tokenizes():
+    """Every whitespace tokenization and lookahead n-gram pattern in
+    datachain_spark/operators/ lives in its __init__.py (`words`,
+    `sliding_ngrams`), so each token is non-empty and whitespace-free as
+    `sliding_ngrams` requires. No other operator module calls `split` with a
+    whitespace separator (or a bare `.split()`) or holds a string with
+    `\\S` or `(?=` outside a docstring."""
+    import ast
+    import os
+    import re
+
+    ops = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "datachain_spark", "operators"
+    )
+    whitespace = re.compile(r"\s+|\\s\+?|\[\\s\]\+?")
+    offenders = []
+    for fn in sorted(os.listdir(ops)):
+        if not fn.endswith(".py") or fn == "__init__.py":
+            continue
+        tree = ast.parse(open(os.path.join(ops, fn)).read())
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef))
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and ast.unparse(node.func).endswith("split"):
+                seps = [a for a in node.args if isinstance(a, ast.Constant)]
+                bare = not node.args and not node.keywords
+                if bare or any(whitespace.fullmatch(str(a.value)) for a in seps):
+                    offenders.append(f"{fn}:{node.lineno}: {ast.unparse(node)}")
+            elif (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in docstrings
+                and ("\\S" in node.value or "(?=" in node.value)
+            ):
+                offenders.append(f"{fn}:{node.lineno}: {node.value!r}")
+    assert offenders == []
 
 
 def test_lang_id(spark):
