@@ -1968,6 +1968,8 @@ def _words(x: str) -> str:
     no token and edge whitespace adds none. Every whitespace tokenization
     in these oracles is this one fragment."""
     return f"regexp_extract_all({x}, '\\S+')"
+
+
 # md5-derived 60-bit hash, bit-identical to Spark's
 # conv(substring(md5(s),1,15),16,10) — shared by the minhash/simhash oracles
 _MD5I = "CAST(('0x' || substr(md5({s}), 1, 15)) AS BIGINT)"
